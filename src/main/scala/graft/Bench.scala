@@ -342,20 +342,27 @@ object Bench {
     val fmt = classOf[graft.sources.FlowGen].getName
     val rates = scala.collection.mutable.Buffer[(String, Double)]()
     // Temp checkpoint dirs are deleted after each run — a bench session
-    // makes dozens of runs and must not accumulate them.
-    def rmTree(path: String): Unit = {
-      import scala.jdk.CollectionConverters._
-      val root = java.nio.file.Paths.get(path)
-      if (java.nio.file.Files.exists(root))
-        java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    }
+    // makes dozens of runs and must not accumulate them. Best-effort: an
+    // IO error is logged per path and never propagates, so a cleanup
+    // failure can neither mark a good run FAILED nor abort later runs.
+    def rmTree(path: String): Unit =
+      try {
+        import scala.jdk.CollectionConverters._
+        val root = java.nio.file.Paths.get(path)
+        if (java.nio.file.Files.exists(root))
+          java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverse
+            .foreach(p => java.nio.file.Files.deleteIfExists(p))
+      } catch {
+        // Files.walk's iterator wraps IO errors in UncheckedIOException.
+        case e @ (_: java.io.IOException | _: java.io.UncheckedIOException) =>
+          System.err.println(s"[bench-stream] cleanup of $path failed: $e")
+      }
     // Stream lambdas REGISTER their checkpoint dirs here instead of
     // deleting inline; [[timedN]] flushes after the clock stops, so the
     // deletion cost never lands in a reported rows/s figure.
     val pendingRm = scala.collection.mutable.Buffer[String]()
     def rmLater(path: String): Unit = pendingRm += path
-    def flushRm(): Unit = { pendingRm.foreach(rmTree); pendingRm.clear() }
+    def flushRm(): Unit = try pendingRm.foreach(rmTree) finally pendingRm.clear()
     def timedN(name: String, warmN: Int, n: Int)(run: Int => Long): Unit =
       try {
         run(warmN)

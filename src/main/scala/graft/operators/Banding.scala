@@ -104,7 +104,9 @@ object Banding {
     * `y.doc_id` — e.g. the self-join's `x.doc_id < y.doc_id` or the
     * replay guard's `=!=`). No verify stage: callers whose verify
     * artifact does NOT ride in the band rows (Jaccard over shingle
-    * sets) join this against their set store.
+    * sets) join this against their set store. `carry` columns of `y`
+    * (e.g. a side tag of a unioned `y`) ride along and take part in
+    * the distinct.
     */
   def candidatePairs(
       x: DataFrame,
@@ -114,10 +116,11 @@ object Banding {
       outB: String = "doc_b",
       docPred: Option[Column] = None,
       idCol: String = "doc_id",
+      carry: Seq[String] = Nil,
   ): DataFrame =
     x.as("x")
       .join(y.as("y"), joinCond(keys, docPred))
-      .select(col(s"x.$idCol").as(outA), col(s"y.$idCol").as(outB))
+      .select(col(s"x.$idCol").as(outA) +: col(s"y.$idCol").as(outB) +: carry.map(c => col(s"y.$c")): _*)
       .distinct()
 
   /** The ordered self-join face of [[candidatePairs]]. */

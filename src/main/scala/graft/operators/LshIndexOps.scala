@@ -1,6 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.{ExecutionException, Executors}
+
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 
 /** The PERSISTED MinHash-LSH index artifact — the storage-side design
@@ -27,18 +31,79 @@ object LshIndexOps {
   /** The signature/band frame (doc_id, sh, bk) — the data both persisted
     * tables derive from. Same hash family and band layout as
     * [[DedupOps.minhashLshPairs]], so pairs computed from the index are
-    * identical to the single-pass operator's.
+    * identical to the single-pass operator's. `carry` columns (computed
+    * from the input row) ride between `sh` and `bk`, so one
+    * materialisation serves every later read of the batch.
     */
-  private def indexFrame(docs: DataFrame, n: Int, k: Int, bands: Int): DataFrame = {
-    val rowsPerBand = k / bands
+  private def indexFrame(docs: DataFrame, n: Int, k: Int, bands: Int, carry: Column*): DataFrame =
     docs
-      .select(col("doc_id"), array_sort(HashOps.shingleHashes(col("text"), n)).as("sh"))
-      .select(col("doc_id"), col("sh"), HashOps.minhashSignature(col("sh"), k).as("sig"))
+      .select(col("doc_id") +: array_sort(HashOps.shingleHashes(col("text"), n)).as("sh") +: carry: _*)
+      .withColumn("bk", HashOps.bandKeys(HashOps.minhashSignature(col("sh"), k), bands, k / bands))
+
+  /** An arriving batch materialised ONCE with everything its dedup,
+    * verdict and appends read: (doc_id, sh, text_md5, n_tok, bk).
+    */
+  private def batchFrame(batch: DataFrame, n: Int, k: Int, bands: Int): DataFrame =
+    indexFrame(batch, n, k, bands, metaCols: _*).localCheckpoint()
+
+  /** (doc_id, band_idx, band_key) rows of an index frame. */
+  private def bandRows(idx: DataFrame): DataFrame =
+    idx.select(col("doc_id"), posexplode(col("bk")).as(Seq("band_idx", "band_key")))
+
+  private val BandKeys = Seq("band_idx", "band_key")
+
+  /** Exact Jaccard of candidate pairs (new_doc_id, dup_of, …): the
+    * arriving side's sets come from `idx`, the matched side's from
+    * `sets` (dup_of, sh_b, …) joined on `on`; pairs under `threshold`
+    * drop. Returns (new_doc_id, dup_of, jaccard).
+    */
+  private def verify(
+      candidates: DataFrame,
+      idx: DataFrame,
+      sets: DataFrame,
+      on: Seq[String],
+      threshold: Double,
+  ): DataFrame = {
+    val c = graft.expressions.SortedIntersectCount(col("sh_a"), col("sh_b"))
+    candidates
+      .join(idx.select(col("doc_id").as("new_doc_id"), col("sh").as("sh_a")), "new_doc_id")
+      .join(sets, on)
       .select(
-        col("doc_id"),
-        col("sh"),
-        HashOps.bandKeys(col("sig"), bands, rowsPerBand).as("bk"),
+        col("new_doc_id"),
+        col("dup_of"),
+        (c.cast("double") / (size(col("sh_a")) + size(col("sh_b")) - c)).as("jaccard"),
       )
+      .filter(col("jaccard") >= threshold)
+  }
+
+  /** A batch's verified matches against the stored index AND against
+    * lower-id docs of the same batch, found by ONE candidate join and
+    * ONE verify join over tagged unions (`src` 0 = stored rows, 1 =
+    * batch rows) rather than two unioned pipelines. `storedPred` filters
+    * stored candidates (it may read `x.doc_id` / `y.doc_id`). `src`
+    * takes part in the candidate distinct, so a pair matched on both
+    * sides (a replayed keeper, stored and in the batch) yields one row
+    * per side. Returns (new_doc_id, dup_of, jaccard).
+    */
+  private def batchMatches(
+      idx: DataFrame,
+      storedBands: DataFrame,
+      storedSets: DataFrame,
+      storedPred: Column,
+      threshold: Double,
+  ): DataFrame = {
+    val batchBands = bandRows(idx)
+    val candidates = Banding.candidatePairs(
+      batchBands,
+      storedBands.select(col("doc_id"), col("band_idx"), col("band_key"), lit(0).as("src"))
+        .unionByName(batchBands.withColumn("src", lit(1))),
+      BandKeys, "new_doc_id", "dup_of",
+      docPred = Some(
+        when(col("y.src") === 0, storedPred).otherwise(col("y.doc_id") < col("x.doc_id"))),
+      carry = Seq("src"))
+    val sets = storedSets.select(col("doc_id").as("dup_of"), col("sh").as("sh_b"), lit(0).as("src"))
+      .unionByName(idx.select(col("doc_id").as("dup_of"), col("sh").as("sh_b"), lit(1).as("src")))
+    verify(candidates, idx, sets, Seq("dup_of", "src"), threshold)
   }
 
   /** Builds and publishes the two index tables:
@@ -149,19 +214,18 @@ object LshIndexOps {
     * incremental appends never need a relabel pass.
     */
   def writeMetaTable(docs: DataFrame, buckets: Int, prefix: String): Unit = {
-    textMeta(docs)
+    docs.select(col("doc_id") +: metaCols: _*)
       .write.mode("overwrite")
       .bucketBy(buckets, "doc_id").sortBy("doc_id")
       .saveAsTable(s"${prefix}_meta")
     docs.sparkSession.catalog.refreshTable(s"${prefix}_meta")
   }
 
-  private def textMeta(docs: DataFrame): DataFrame =
-    docs.select(
-      col("doc_id"),
-      md5(col("text")).as("text_md5"),
-      size(TextOps.tokens(col("text"))).cast("long").as("n_tok"),
-    )
+  /** The `_meta` columns beside doc_id, computed from `text`. */
+  private def metaCols: Seq[Column] = Seq(
+    md5(col("text")).as("text_md5"),
+    size(TextOps.tokens(col("text"))).cast("long").as("n_tok"),
+  )
 
   /** The UPLOAD-TIME admission verdict for TEXT — the per-arrival
     * decision a corpus pipeline makes before admitting a document,
@@ -174,7 +238,11 @@ object LshIndexOps {
     * band table Jaccard-verifies a match (dup_of = the stored item at
     * the best (jaccard DESC, doc_id ASC) — a deterministic arg-max),
     * then the `too_short` token floor, else `keep`. Stored text is
-    * never re-read; the bucketed band side never shuffles.
+    * never re-read; the bucketed band side never shuffles. The batch is
+    * materialised once, and both match kinds fold into one arg-min over
+    * (kind, -jaccard, dup_of) — exact (kind 0) before near (kind 1),
+    * then the highest Jaccard, then the smallest stored id — joined back
+    * to the batch once.
     */
   def uploadVerdict(
       spark: SparkSession,
@@ -186,31 +254,26 @@ object LshIndexOps {
       threshold: Double,
       minTok: Long,
   ): DataFrame = {
-    val bm = textMeta(batch).localCheckpoint()
-    val ex = bm
-      .select(col("doc_id"), col("text_md5"))
+    val bm = batchFrame(batch, n, k, bands)
+    val exact = bm
       .join(
         IndexCatalog.readLive(spark, s"${prefix}_meta")
-          .select(col("text_md5"), col("doc_id").as("stored_id")),
+          .select(col("text_md5"), col("doc_id").as("dup_of")),
         Seq("text_md5"))
+      .select(col("doc_id"), lit(0).as("kind"), lit(0.0).as("nj"), col("dup_of"))
+    val near = storedMatches(spark, prefix, bm, threshold)
+      .select(col("new_doc_id").as("doc_id"), lit(1).as("kind"), (-col("jaccard")).as("nj"), col("dup_of"))
+    val best = exact.unionByName(near)
       .groupBy(col("doc_id"))
-      .agg(min(col("stored_id")).as("exact_of"))
-    val near = dedupAgainstIndex(spark, prefix, batch, n, k, bands, threshold)
-      .groupBy(col("new_doc_id").as("doc_id"))
-      // Deterministic arg-max: highest jaccard wins, ties to the
-      // smallest stored id (min over (-jaccard, doc_id) structs).
-      .agg(min(struct((-col("jaccard")).as("nj"), col("dup_of"))).as("m"))
-      .select(col("doc_id"), col("m.dup_of").as("near_of"))
-    bm.join(ex, Seq("doc_id"), "left")
-      .join(near, Seq("doc_id"), "left")
+      .agg(min(struct(col("kind"), col("nj"), col("dup_of"))).as("m"))
+    bm.join(best, Seq("doc_id"), "left")
       .select(
         col("doc_id"),
-        when(col("exact_of").isNotNull, lit("exact_dup"))
-          .when(col("near_of").isNotNull, lit("near_dup"))
+        when(col("m.kind") === 0, lit("exact_dup"))
+          .when(col("m.kind") === 1, lit("near_dup"))
           .when(col("n_tok") < minTok, lit("too_short"))
           .otherwise(lit("keep")).as("status"),
-        when(col("exact_of").isNotNull, col("exact_of"))
-          .otherwise(col("near_of")).as("dup_of"),
+        col("m.dup_of").as("dup_of"),
       )
       .orderBy("doc_id")
   }
@@ -289,6 +352,7 @@ object LshIndexOps {
     * prior partial append) and the merge is idempotent, so a crashed
     * replay converges (LshIndexSpec asserts bit-equality to a
     * from-scratch rebuild after N batches and replay as a no-op).
+    * `buckets` is unused, as in [[dedupBatchAndGrow]].
     */
   def ingestBatchAndMaintain(
       spark: SparkSession,
@@ -300,36 +364,11 @@ object LshIndexOps {
       buckets: Int,
       threshold: Double,
   ): Unit = {
-    val idx = indexFrame(batch, n, k, bands).localCheckpoint()
+    val idx = batchFrame(batch, n, k, bands)
     val batchIds = idx.select(col("doc_id")).distinct().localCheckpoint()
-    val batchBands = idx
-      .select(col("doc_id"), posexplode(col("bk")).as(Seq("band_idx", "band_key")))
-    val keys = Seq("band_idx", "band_key")
-    val storedBands = spark.table(s"${prefix}_bands")
-      .join(batchIds, Seq("doc_id"), "left_anti")
-    val storedSets = spark.table(s"${prefix}_docs")
-      .join(batchIds, Seq("doc_id"), "left_anti")
-      .select(col("doc_id").as("dup_of"), col("sh").as("sh_b"))
-    val c = graft.expressions.SortedIntersectCount(col("sh_a"), col("sh_b"))
-    def verified(candidates: DataFrame, rightSets: DataFrame): DataFrame =
-      candidates
-        .join(idx.select(col("doc_id").as("new_doc_id"), col("sh").as("sh_a")), "new_doc_id")
-        .join(rightSets, "dup_of")
-        .select(
-          col("new_doc_id"),
-          col("dup_of"),
-          (c.cast("double") / (size(col("sh_a")) + size(col("sh_b")) - c)).as("jaccard"),
-        )
-        .filter(col("jaccard") >= threshold)
-    val vsStored = verified(
-      Banding.candidatePairs(batchBands, storedBands, keys, "new_doc_id", "dup_of"),
-      storedSets)
-    val withinBatch = verified(
-      Banding.candidatePairs(
-        batchBands, batchBands, keys, "new_doc_id", "dup_of",
-        docPred = Some(col("y.doc_id") < col("x.doc_id"))),
-      idx.select(col("doc_id").as("dup_of"), col("sh").as("sh_b")))
-    val pairs = vsStored.unionByName(withinBatch)
+    def stored(table: String): DataFrame =
+      spark.table(s"${prefix}_$table").join(batchIds, Seq("doc_id"), "left_anti")
+    val pairs = batchMatches(idx, stored("bands"), stored("docs"), lit(true), threshold)
       .select(
         least(col("new_doc_id"), col("dup_of")).as("doc_a"),
         greatest(col("new_doc_id"), col("dup_of")).as("doc_b"))
@@ -347,9 +386,7 @@ object LshIndexOps {
     val newRows = idx
       .join(spark.table(s"${prefix}_docs").select("doc_id"), Seq("doc_id"), "left_anti")
       .localCheckpoint()
-    appendKeepers(
-      spark, prefix, newRows, buckets, crashAfter = "",
-      metaFor(spark, prefix, batch, newRows))
+    appendKeepers(spark, prefix, newRows, crashAfter = "")
   }
 
   /** Incremental dedup — the reason a pipeline PERSISTS the index: new
@@ -367,26 +404,26 @@ object LshIndexOps {
       k: Int,
       bands: Int,
       threshold: Double,
-  ): DataFrame = {
-    val idx = indexFrame(batch, n, k, bands).localCheckpoint()
-    val batchBands = idx
-      .select(col("doc_id"), posexplode(col("bk")).as(Seq("band_idx", "band_key")))
-    val candidates = Banding.candidatePairs(
-      batchBands, IndexCatalog.readLive(spark, s"${prefix}_bands"),
-      Seq("band_idx", "band_key"), "new_doc_id", "dup_of")
-    val storedSets = IndexCatalog.readLive(spark, s"${prefix}_docs")
-    val c = graft.expressions.SortedIntersectCount(col("sh_a"), col("sh_b"))
-    candidates
-      .join(idx.select(col("doc_id").as("new_doc_id"), col("sh").as("sh_a")), "new_doc_id")
-      .join(storedSets.select(col("doc_id").as("dup_of"), col("sh").as("sh_b")), "dup_of")
-      .select(
-        col("new_doc_id"),
-        col("dup_of"),
-        (c.cast("double") / (size(col("sh_a")) + size(col("sh_b")) - c)).as("jaccard"),
-      )
-      .filter(col("jaccard") >= threshold)
+  ): DataFrame =
+    storedMatches(spark, prefix, indexFrame(batch, n, k, bands).localCheckpoint(), threshold)
       .orderBy("new_doc_id", "dup_of")
-  }
+
+  /** [[dedupAgainstIndex]] over an already-materialised index frame. */
+  private def storedMatches(
+      spark: SparkSession,
+      prefix: String,
+      idx: DataFrame,
+      threshold: Double,
+  ): DataFrame =
+    verify(
+      Banding.candidatePairs(
+        bandRows(idx), IndexCatalog.readLive(spark, s"${prefix}_bands"),
+        BandKeys, "new_doc_id", "dup_of"),
+      idx,
+      IndexCatalog.readLive(spark, s"${prefix}_docs")
+        .select(col("doc_id").as("dup_of"), col("sh").as("sh_b")),
+      Seq("dup_of"),
+      threshold)
 
   /** Index maintenance: rewrite both index tables at `newBuckets`
     * physical buckets. Content is preserved bit-for-bit — physical
@@ -405,10 +442,12 @@ object LshIndexOps {
     * [[IndexCatalog.swapStaged]]'s rename-first sequence (live →
     * `_old`, staged → live, drop `_old`), so a crash mid-swap leaves a
     * recovery copy rather than a dangling live name and the
-    * reader-visible hole is the rename instants only. Streaming ingest
-    * into the index must be restarted with the new bucket count after
-    * a rebucket (an append with the old count would fail the
-    * bucket-spec match, not corrupt the table).
+    * reader-visible hole is the rename instants only. A running
+    * streaming ingest needs no restart: [[dedupBatchAndGrow]] and
+    * [[ingestBatchAndMaintain]] append through `insertInto`, which
+    * writes with the live table's own bucket and sort spec, so the
+    * first batch after the swap already lands at the new count (their
+    * `buckets` argument no longer steers appends).
     */
   def rebucket(spark: SparkSession, prefix: String, newBuckets: Int): Unit =
     IndexCatalog.swapStaged(spark, stageRebucket(spark, prefix, newBuckets))
@@ -506,6 +545,13 @@ object LshIndexOps {
     * dup frame is MATERIALIZED before the append mutates the tables it
     * reads — a lazy plan would see the batch's own rows in the stored
     * bands and flag everything as its own duplicate.
+    *
+    * Per micro-batch the batch is hashed and materialised once (with
+    * its meta columns), stored and within-batch matches come from one
+    * candidate join and one verify join ([[batchMatches]]), and
+    * [[appendKeepers]] overlaps the bands and meta appends (SCALE.md
+    * gives the job count). `buckets` is unused — appends follow the
+    * tables' live bucket spec (see [[rebucket]]).
     */
   def dedupBatchAndGrow(
       spark: SparkSession,
@@ -518,63 +564,24 @@ object LshIndexOps {
       threshold: Double,
       crashAfter: String = "",
   ): DataFrame = {
-    val idx = indexFrame(batch, n, k, bands).localCheckpoint()
-    val batchBands = idx
-      .select(col("doc_id"), posexplode(col("bk")).as(Seq("band_idx", "band_key")))
-    val c = graft.expressions.SortedIntersectCount(col("sh_a"), col("sh_b"))
-    def verified(candidates: DataFrame, rightSets: DataFrame): DataFrame =
-      candidates
-        .join(idx.select(col("doc_id").as("new_doc_id"), col("sh").as("sh_a")), "new_doc_id")
-        .join(rightSets, "dup_of")
-        .select(
-          col("new_doc_id"),
-          col("dup_of"),
-          (c.cast("double") / (size(col("sh_a")) + size(col("sh_b")) - c)).as("jaccard"),
-        )
-        .filter(col("jaccard") >= threshold)
-    val keys = Seq("band_idx", "band_key")
-    val vsIndex = verified(
-      Banding.candidatePairs(
-        batchBands, spark.table(s"${prefix}_bands"), keys, "new_doc_id", "dup_of",
-        // A replayed batch (failure after the append committed but
-        // before the streaming checkpoint) finds its own keepers in
-        // the stored bands; without this guard each collides with
-        // itself and comes back as a false (doc, doc, 1.0) dup row.
-        docPred = Some(col("x.doc_id") =!= col("y.doc_id"))),
-      spark.table(s"${prefix}_docs").select(col("doc_id").as("dup_of"), col("sh").as("sh_b")),
-    )
-    val withinBatch = verified(
-      Banding.candidatePairs(
-        batchBands, batchBands, keys, "new_doc_id", "dup_of",
-        docPred = Some(col("y.doc_id") < col("x.doc_id"))),
-      idx.select(col("doc_id").as("dup_of"), col("sh").as("sh_b")),
-    )
-    val dups = vsIndex.unionByName(withinBatch).localCheckpoint()
+    val idx = batchFrame(batch, n, k, bands)
+    val docs = spark.table(s"${prefix}_docs")
+    val dups = batchMatches(
+      idx, spark.table(s"${prefix}_bands"), docs,
+      // A replayed batch (failure after the append committed but
+      // before the streaming checkpoint) finds its own keepers in
+      // the stored bands; without this guard each collides with
+      // itself and comes back as a false (doc, doc, 1.0) dup row.
+      col("x.doc_id") =!= col("y.doc_id"),
+      threshold,
+    ).localCheckpoint()
     val kept = idx
-      .join(dups.select(col("new_doc_id").as("doc_id")).distinct(), Seq("doc_id"), "left_anti")
-      .join(spark.table(s"${prefix}_docs").select("doc_id"), Seq("doc_id"), "left_anti")
+      .join(dups.select(col("new_doc_id").as("doc_id")), Seq("doc_id"), "left_anti")
+      .join(docs.select("doc_id"), Seq("doc_id"), "left_anti")
       .localCheckpoint()
-    appendKeepers(spark, prefix, kept, buckets, crashAfter, metaFor(spark, prefix, batch, kept))
+    appendKeepers(spark, prefix, kept, crashAfter)
     dups
   }
-
-  /** The admitted keepers' `_meta` rows, when the prefix carries the
-    * artifact (the MediaIndexOps meta-maintenance discipline): they
-    * ride the SAME ledgered commit, so the upload-time digest probe
-    * sees incrementally-admitted documents and an exact copy replayed
-    * later is labeled `exact_dup` — not `near_dup` at jaccard 1.
-    */
-  private def metaFor(
-      spark: SparkSession,
-      prefix: String,
-      batch: DataFrame,
-      kept: DataFrame,
-  ): Option[DataFrame] =
-    if (spark.catalog.tableExists(s"${prefix}_meta"))
-      Some(
-        textMeta(batch.join(kept.select("doc_id"), Seq("doc_id"), "left_semi"))
-          .localCheckpoint())
-    else None
 
   /** Micro-batches with at most this many distinct doc_ids use a
     * driver-side id list for the rare crash-repair presence probe
@@ -583,36 +590,69 @@ object LshIndexOps {
     */
   private[graft] val ProbeIdCap = 100000
 
-  /** Appends the batch's keepers to both index tables, crash-repairably
-    * (the [[SearchIndexOps.indexBatch]] intent/commit discipline).
-    * Bands are written FIRST and docs LAST: the docs table is the
-    * membership table [[dedupBatchAndGrow]]'s `kept` anti-join reads,
-    * so its append is the batch's doc-level commit marker — a replay
-    * of a crash-before-docs batch recomputes the identical kept set
-    * (keepers never verify against each other, so their own bands in
-    * the store add no dup rows — the self-collision guard covers exact
-    * replays), while the old docs-first order made a crash-between
-    * UNREPAIRABLE: the keepers vanished from `kept` with their bands
-    * never written, silently missing every future duplicate of them.
+  /** Runs the independent appends of one batch: `a` on an internal
+    * thread (started with the caller's session and local properties, so
+    * its jobs belong to the caller's SQL execution), `b` on this one.
+    * Returns once BOTH have finished — no write is left running behind
+    * a failure of `b` — and rethrows a failure, `a`'s when both fail.
+    */
+  private def concurrently(spark: SparkSession)(a: => Unit)(b: => Unit): Unit = {
+    val fa = SQLExecution.withThreadLocalCaptured(castToImpl(spark), appendPool)(a)
+    val rb = scala.util.Try(b)
+    try fa.get()
+    catch { case e: ExecutionException => throw e.getCause }
+    rb.get
+  }
+
+  private lazy val appendPool = Executors.newCachedThreadPool { (r: Runnable) =>
+    val t = new Thread(r, "lsh-index-append")
+    t.setDaemon(true)
+    t
+  }
+
+  /** Appends the batch's keepers to the index tables, crash-repairably
+    * (the [[SearchIndexOps.indexBatch]] intent/commit discipline), and
+    * their `(doc_id, text_md5, n_tok)` rows to `_meta` when the prefix
+    * carries it (the MediaIndexOps meta-maintenance discipline: the
+    * upload-time digest probe then sees incrementally-admitted documents,
+    * so an exact copy replayed later is labeled `exact_dup` — not
+    * `near_dup` at jaccard 1).
+    *
+    * The bands and meta appends run CONCURRENTLY ([[concurrently]]), and
+    * docs is written LAST: the docs table is the membership table
+    * [[dedupBatchAndGrow]]'s `kept` anti-join reads, so its append is
+    * the batch's doc-level commit marker — a replay of a crash before
+    * docs recomputes the identical kept set (keepers never verify
+    * against each other, so their own bands in the store add no dup
+    * rows — the self-collision guard covers exact replays), while a
+    * docs-first order made a crash between UNREPAIRABLE: the keepers
+    * vanished from `kept` with their bands never written, silently
+    * missing every future duplicate of them. A crash before the docs
+    * append can therefore leave any subset of {bands, meta} landed.
     * The `<prefix>_batches` ledger (batch key = min kept doc_id,
     * reproducible across replays) records intent before the appends
     * and commit after; a replay that finds intent-without-commit
-    * presence-guards each append (bands/docs by the bounded kept-id
-    * list — parquet row-group stats skip every file but the crashed
-    * append's own) so exactly the missing table is re-appended.
-    * `crashAfter` is the spec's fault-injection seam.
+    * presence-guards each append (by the bounded kept-id list — parquet
+    * row-group stats skip every file but the crashed append's own) so
+    * exactly the missing tables are re-appended.
+    *
+    * Appends go through `insertInto`, i.e. the table's OWN bucket and
+    * sort spec — they follow the live bucket count across a
+    * [[rebucket]] with no catalog lookup here.
+    *
+    * `crashAfter` is the spec's fault-injection seam, named by what
+    * lands before the injected crash: "bands" (bands only), "meta-only"
+    * (meta only), "meta" (bands and meta).
     */
   private def appendKeepers(
       spark: SparkSession,
       prefix: String,
       kept: DataFrame,
-      buckets: Int,
       crashAfter: String,
-      keptMeta: Option[DataFrame] = None,
   ): Unit = {
-    if (kept.isEmpty) return // nothing to append → no ledger entry needed
-    val bkRow = kept.agg(min(col("doc_id"))).first()
-    val batchKey = bkRow.getLong(0)
+    val stats = kept.agg(count(lit(1)), min(col("doc_id"))).head()
+    if (stats.getLong(0) == 0) return // nothing to append → no ledger entry needed
+    val batchKey = stats.getLong(1)
     val ledger = s"${prefix}_batches"
     if (!spark.catalog.tableExists(ledger))
       spark.sql(s"CREATE TABLE $ledger (batch_key BIGINT, phase STRING) USING parquet")
@@ -625,43 +665,29 @@ object LshIndexOps {
       spark.sql(s"INSERT INTO $ledger VALUES ($batchKey, 'intent')")
       spark.catalog.refreshTable(ledger)
     }
-    // One kept-id collect per REPAIR, shared by both table probes
+    // One kept-id collect per REPAIR, shared by every table probe
     // (lazy inside the probe — the fast path never pays it).
     val probe = new IndexCatalog.PresenceProbe(spark, kept, ProbeIdCap)
-    def present(table: String): Boolean = probe(s"${prefix}_$table")
-    if (!repairing || !present("bands")) {
-      kept
-        .select(col("doc_id"), posexplode(col("bk")).as(Seq("band_idx", "band_key")))
-        .write.mode("append")
-        .bucketBy(buckets, "band_idx", "band_key")
-        .saveAsTable(s"${prefix}_bands")
+    def missing(table: String): Boolean = !repairing || !probe(s"${prefix}_$table")
+    def append(table: String, rows: DataFrame): Unit = {
+      rows.write.mode("append").insertInto(s"${prefix}_$table")
       // The session caches each table's resolved relation (file listing
       // included) on first read; without an explicit refresh the NEXT
       // batch's candidate join would silently run against the
       // pre-append file set and miss every cross-batch duplicate.
-      spark.catalog.refreshTable(s"${prefix}_bands")
+      spark.catalog.refreshTable(s"${prefix}_$table")
     }
-    if (crashAfter == "bands")
-      throw new IllegalStateException("injected crash after bands append")
-    keptMeta.foreach { m =>
-      if (!repairing || !present("meta")) {
-        m.write.mode("append")
-          .bucketBy(IndexCatalog.tableBuckets(spark, s"${prefix}_meta"), "doc_id")
-          .sortBy("doc_id")
-          .saveAsTable(s"${prefix}_meta")
-        spark.catalog.refreshTable(s"${prefix}_meta")
-      }
+    val bands = crashAfter != "meta-only" && missing("bands")
+    val meta = crashAfter != "bands" &&
+      spark.catalog.tableExists(s"${prefix}_meta") && missing("meta")
+    concurrently(spark) {
+      if (bands) append("bands", bandRows(kept))
+    } {
+      if (meta) append("meta", kept.select(col("doc_id"), col("text_md5"), col("n_tok")))
     }
-    if (crashAfter == "meta")
-      throw new IllegalStateException("injected crash after meta append")
-    if (!repairing || !present("docs")) {
-      kept
-        .select(col("doc_id"), col("sh"))
-        .write.mode("append")
-        .bucketBy(buckets, "doc_id").sortBy("doc_id")
-        .saveAsTable(s"${prefix}_docs")
-      spark.catalog.refreshTable(s"${prefix}_docs")
-    }
+    if (crashAfter.nonEmpty)
+      throw new IllegalStateException(s"injected crash after $crashAfter append")
+    if (missing("docs")) append("docs", kept.select(col("doc_id"), col("sh")))
     spark.sql(s"INSERT INTO $ledger VALUES ($batchKey, 'commit')")
     spark.catalog.refreshTable(ledger)
   }

@@ -1370,10 +1370,16 @@ object SimilarityOps {
       val divisor = math.pow(nSeeds.toDouble, b).toLong
       acc + element_at(col("lut"), expr(s"pq_code div ${divisor}L % $nSeeds").cast("int") + lit(b * nSeeds))
     }
+    // A (blk, code) key missing from the LUT makes its element_at NULL,
+    // and so the whole sum: fail loudly rather than rank a NULL
+    // distance. coalesce returns the sum itself whenever it is set, so
+    // the no-miss path stays bit-equal.
+    val checkedDist = coalesce(
+      approxDist, raise_error(lit("ivfPqResidualTopK: pq code missing from the query LUT")))
     val scored = corpusCodes
       .join(lut, Seq("cell"))
       .filter(col("query_id") =!= col("vec_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), approxDist.as("approx_dist"))
+      .select(col("query_id"), col("vec_id").as("neighbor_id"), checkedDist.as("approx_dist"))
     rankTopK(scored, "approx_dist", ascending = true, k)
   }
 }

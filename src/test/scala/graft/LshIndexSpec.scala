@@ -227,6 +227,148 @@ class LshIndexSpec extends SparkSpec {
       "repaired meta must equal the uninterrupted run's — exactly-once under crash/replay")
   }
 
+  test("crash with meta landed but not bands is repaired on replay: bands appended once, meta never doubled") {
+    // The bands and meta appends run concurrently, so a crash before
+    // the docs commit marker can also leave meta landed without bands.
+    import spark.implicits._
+    val prefix = "lshcrashmetaonly"
+    val cleanPrefix = "lshcrashmetaonlyref"
+    Seq(prefix, cleanPrefix).foreach(p => Seq("_docs", "_bands", "_meta", "_batches")
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $p$t")))
+    val all = Tables.documents(spark, Sf).select("doc_id", "text")
+    val stored = all.filter(col("doc_id") % 5 =!= 0)
+    val batch = all.filter(col("doc_id") % 5 === 0)
+    Seq(prefix, cleanPrefix).foreach { p =>
+      LshIndexOps.writeIndex(stored, N, K, Bands, buckets = 4, prefix = p)
+      LshIndexOps.writeMetaTable(stored, buckets = 4, prefix = p)
+    }
+    def rows(p: String, t: String) = spark.table(s"$p$t").count()
+    val (bandsBefore, metaBefore) = (rows(prefix, "_bands"), rows(prefix, "_meta"))
+    intercept[IllegalStateException] {
+      LshIndexOps.dedupBatchAndGrow(
+        spark, prefix, batch, N, K, Bands, buckets = 4, threshold = Threshold,
+        crashAfter = "meta-only")
+    }
+    val metaAfterCrash = rows(prefix, "_meta")
+    assert(rows(prefix, "_bands") == bandsBefore, "the injected state has no bands appended")
+    assert(metaAfterCrash > metaBefore, "the injected state has the meta rows appended")
+    assert(spark.table(s"${prefix}_batches").filter(col("phase") === "commit").isEmpty)
+    val replayDups = LshIndexOps.dedupBatchAndGrow(
+      spark, prefix, batch, N, K, Bands, buckets = 4, threshold = Threshold)
+      .as[(Long, Long, Double)].collect().toSet
+    val kept = metaAfterCrash - metaBefore
+    assert(rows(prefix, "_meta") == metaAfterCrash, "repair must not re-append meta")
+    assert(rows(prefix, "_bands") == bandsBefore + kept * Bands,
+      "repair appends the keepers' bands exactly once")
+    val cleanDups = LshIndexOps.dedupBatchAndGrow(
+      spark, cleanPrefix, batch, N, K, Bands, buckets = 4, threshold = Threshold)
+      .as[(Long, Long, Double)].collect().toSet
+    assert(replayDups == cleanDups, "replayed dups must equal the uninterrupted run's")
+    Seq("_docs", "_bands", "_meta").foreach { t =>
+      val (repaired, clean) = (spark.table(s"$prefix$t"), spark.table(s"$cleanPrefix$t"))
+      assert(repaired.exceptAll(clean).isEmpty && clean.exceptAll(repaired).isEmpty,
+        s"repaired $t must equal the uninterrupted run's")
+    }
+  }
+
+  test("appends stay bucketed across a rebucket: the grown band self-join is exchange-free, each append adds at most one file per bucket") {
+    val prefix = "lshappendbkt"
+    val buckets = 4
+    def bucketsOf(t: String) = spark.sessionState.catalog
+      .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(t))
+      .bucketSpec.map(_.numBuckets).getOrElse(0)
+    Seq("_docs", "_bands", "_meta", "_batches")
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $prefix$t"))
+    val all = Tables.documents(spark, Sf).select("doc_id", "text")
+    LshIndexOps.writeIndex(all.filter(col("doc_id") % 3 === 0), N, K, Bands, buckets, prefix)
+    LshIndexOps.writeMetaTable(all.filter(col("doc_id") % 3 === 0), buckets, prefix)
+    val tables = Seq("_docs", "_bands", "_meta").map(prefix + _)
+    def files(): Map[String, Int] = tables.map { t =>
+      spark.catalog.refreshTable(t)
+      t -> spark.table(t).inputFiles.length
+    }.toMap
+    assert(LshIndexOps.fileStats(spark, prefix).count() == 2)
+    Seq(1, 2).foreach { r =>
+      // The second append follows a rebucket of docs and bands while the
+      // caller still passes the old count: appends take the live spec.
+      if (r == 2) LshIndexOps.rebucket(spark, prefix, 2 * buckets)
+      val before = files()
+      val rowsBefore = spark.table(s"${prefix}_docs").count()
+      LshIndexOps.dedupBatchAndGrow(
+        spark, prefix, all.filter(col("doc_id") % 3 === r), N, K, Bands, buckets, Threshold)
+      assert(spark.table(s"${prefix}_docs").count() > rowsBefore, s"append $r admitted no keepers")
+      val after = files()
+      tables.foreach { t =>
+        assert(after(t) - before(t) <= bucketsOf(t),
+          s"append $r added ${after(t) - before(t)} files to $t (buckets = ${bucketsOf(t)})")
+      }
+    }
+    val broadcastBefore = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val bandsDf = spark.table(s"${prefix}_bands")
+      val joined = bandsDf.as("x").join(
+        bandsDf.as("y"),
+        col("x.band_idx") === col("y.band_idx") &&
+          col("x.band_key") === col("y.band_key") &&
+          col("x.doc_id") < col("y.doc_id"),
+      ).select(col("x.doc_id"), col("y.doc_id"))
+      assert(!joined.queryExecution.executedPlan.toString.contains("Exchange"),
+        "the grown band self-join must not shuffle")
+      // Every appended row sits in the file of its own bucket: the
+      // exchange-free join finds exactly the pairs of an unbucketed read.
+      val bucketed = joined.collect().toSet
+      spark.conf.set("spark.sql.sources.bucketing.enabled", "false")
+      val unbucketed = try joined.collect().toSet
+      finally spark.conf.unset("spark.sql.sources.bucketing.enabled")
+      assert(bucketed.nonEmpty && bucketed == unbucketed)
+    } finally {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", broadcastBefore)
+      spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
+    }
+  }
+
+  test("text upload verdict ranking: exact before near, then highest Jaccard, then the smallest stored id") {
+    import spark.implicits._
+    val prefix = "lshverdictrank"
+    Seq("_docs", "_bands", "_meta", "_batches")
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $prefix$t"))
+    val rnd = new scala.util.Random(7)
+    def text(): Array[String] = Array.fill(100)(Iterator.fill(6)(('a' + rnd.nextInt(26)).toChar).mkString)
+    def edit(words: Array[String], at: Int*): String =
+      words.indices.map(i => if (at.contains(i)) s"edit$i" else words(i)).mkString(" ")
+    val t = text() // stored exactly twice (ids 5, 10) and near-copied at id 1
+    val b = text() // stored exactly twice (ids 20, 30); near-copied at id 15
+    val probeNear = edit(b, 50) // one edit from ids 20/30, three from id 15
+    val storedDocs = Seq(
+      1L -> edit(t, 40), 5L -> t.mkString(" "), 10L -> t.mkString(" "),
+      15L -> edit(b, 20, 50, 80), 20L -> b.mkString(" "), 30L -> b.mkString(" "),
+    ).toDF("doc_id", "text")
+    LshIndexOps.writeIndex(storedDocs, N, K, Bands, buckets = 4, prefix = prefix)
+    LshIndexOps.writeMetaTable(storedDocs, buckets = 4, prefix = prefix)
+    val probes = Seq(
+      100L -> t.mkString(" "), // exact copy of 5 and 10, near copy of 1
+      101L -> probeNear,
+      102L -> "too few tokens here",
+      103L -> text().mkString(" "),
+    ).toDF("doc_id", "text")
+    val got = LshIndexOps.uploadVerdict(spark, prefix, probes, N, K, Bands, Threshold, minTok = 10L)
+      .as[(Long, String, Option[Long])].collect().toSeq
+    assert(got == Seq(
+      (100L, "exact_dup", Some(5L)),
+      (101L, "near_dup", Some(20L)),
+      (102L, "too_short", None),
+      (103L, "keep", None)))
+    // The near probe really matches every candidate it is ranked against.
+    val near = LshIndexOps.dedupAgainstIndex(spark, prefix, probes, N, K, Bands, Threshold)
+      .as[(Long, Long, Double)].collect()
+    assert(near.filter(_._1 == 100L).map(_._2).toSet == Set(1L, 5L, 10L))
+    val j = near.filter(_._1 == 101L).map(r => r._2 -> r._3).toMap
+    assert(j.keySet == Set(15L, 20L, 30L) && j(20L) == j(30L) && j(15L) < j(20L))
+  }
+
   test("streaming dedup restart: replayed batch adds no keepers twice, no self-dups, converges to the uninterrupted run") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
