@@ -486,8 +486,7 @@ object Bench {
       import org.apache.spark.sql.functions.col
       import spark.implicits._
       val prefix = s"benchmedia${mediaGen.incrementAndGet()}"
-      Seq("fps", "chunks", "batches")
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${prefix}_$t"))
+      Seq("fps", "chunks").foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${prefix}_$t"))
       val media = graft.operators.MultimodalOps
         .encodeMedia(Tables.documents(spark, sfDir).orderBy("doc_id").limit(n))
         .select(col("doc_id"), col("media_type"), col("payload"))
@@ -508,8 +507,8 @@ object Bench {
       try arrivals.grouped(math.max(1, arrivals.length / 4)).foreach { w =>
         in.addData(w.toSeq); q.processAllAvailable()
       } finally { q.stop(); rmLater(ckpt) }
-      Seq("fps", "chunks", "batches")
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${prefix}_$t"))
+      Seq("fps", "chunks").foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${prefix}_$t"))
+      graft.operators.IndexCatalog.dropLedger(spark, prefix)
       dupRows
     }
 
@@ -524,8 +523,7 @@ object Bench {
       import org.apache.spark.sql.functions.col
       import spark.implicits._
       val prefix = s"benchtext${mediaGen.incrementAndGet()}"
-      Seq("docs", "bands", "batches")
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${prefix}_$t"))
+      Seq("docs", "bands").foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${prefix}_$t"))
       val docs = Tables.documents(spark, sfDir)
         .select(col("doc_id"), col("text")).orderBy("doc_id").limit(n)
       val arrivals = docs.as[(Long, String)].collect().sortBy(_._1)
@@ -543,8 +541,8 @@ object Bench {
       try arrivals.grouped(math.max(1, arrivals.length / 4)).foreach { w =>
         in.addData(w.toSeq); q.processAllAvailable()
       } finally { q.stop(); rmLater(ckpt) }
-      Seq("docs", "bands", "batches")
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${prefix}_$t"))
+      Seq("docs", "bands").foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${prefix}_$t"))
+      graft.operators.IndexCatalog.dropLedger(spark, prefix)
       dupRows
     }
 
@@ -602,7 +600,7 @@ object Bench {
       // the default DB would collide with a prior JVM's orphaned
       // warehouse directory (LOCATION_ALREADY_EXISTS).
       val pre = Tables.tempIndexDb(spark, "bench", "vecingest")
-      Seq("codebook", "vectors", "cellstats", "tombstones", "batches")
+      Seq("codebook", "vectors", "cellstats", "tombstones")
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${pre}_$t"))
       val emb = Tables.embeddings(spark, sfDir)
       graft.operators.VectorIndexOps.writeIndex(
@@ -618,7 +616,7 @@ object Bench {
         val rows = (0 until n).map(i => (off + i, base(i % base.length)._2))
         // foreachBatch ids restart at 0 per checkpoint; the ledger must
         // restart with them or every repeat run would no-op.
-        spark.sql(s"DROP TABLE IF EXISTS ${pre}_batches")
+        graft.operators.IndexCatalog.dropLedger(spark, pre)
         implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
         val in = org.apache.spark.sql.execution.streaming.runtime
           .MemoryStream[(Long, Array[Float])]
@@ -655,7 +653,7 @@ object Bench {
       import org.apache.spark.sql.functions.col
       import spark.implicits._
       val pre = Tables.tempIndexDb(spark, "bench", "searchingest")
-      Seq("postings", "lexicon", "meta", "docs", "batches")
+      Seq("postings", "lexicon", "meta", "docs")
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${pre}_$t"))
       val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
       graft.operators.SearchIndexOps.writeIndex(docs, buckets = 8, prefix = pre)
@@ -664,7 +662,7 @@ object Bench {
       timedN("search_ingest", warmN = 400, n = searchRows) { n =>
         val off = idGen.getAndAdd(n.toLong)
         val rows = (0 until n).map(i => (off + i, base(i % base.length)._2))
-        spark.sql(s"DROP TABLE IF EXISTS ${pre}_batches")
+        graft.operators.IndexCatalog.dropLedger(spark, pre)
         implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
         val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
         val ckpt = java.nio.file.Files.createTempDirectory("bench_searching").toFile.getAbsolutePath

@@ -346,9 +346,7 @@ object GraphOps {
       maxGroupSize: Int = 1000,
       buckets: Int = 32,
   ): Unit = {
-    // A rebuilt artifact is a fresh generation — a stale grow ledger
-    // would make growEdgeTable skip the new generation's batches.
-    spark.sql(s"DROP TABLE IF EXISTS ${table}_batches")
+    IndexCatalog.dropLedger(spark, table)
     rows
       .select(col(groupCol).cast("long").as("g"), col(keyCol).cast("long").as("k"))
       .distinct()
@@ -395,7 +393,7 @@ object GraphOps {
     *   4. `${table}_deg` refreshes as a staged overwrite — O(|V|),
     *      computed exchange-free off the bucketed edge table.
     *
-    * The `${table}_batches` intent/commit ledger short-circuits
+    * The ingest ledger ([[IndexCatalog.ledgered]]) short-circuits
     * committed batches. The batch key is `batchId` when the caller
     * supplies one (the natural identity a scheduler or ingest pipeline
     * already carries — the dd/mm ingest-ledger shape); otherwise it is
@@ -431,15 +429,6 @@ object GraphOps {
       .distinct()
       .localCheckpoint()
     if (batchMembers.isEmpty) return
-    val ledger = s"${table}_batches"
-    // Pre-content-key ledgers (batch_g/batch_k columns) belong to a
-    // retired generation of the artifact; rebuilding the ledger is
-    // safe because every batch it recorded is fully committed (the
-    // old key was only consulted, never repaired, across schemas).
-    if (spark.catalog.tableExists(ledger) && !spark.table(ledger).columns.contains("batch_key"))
-      spark.sql(s"DROP TABLE $ledger")
-    if (!spark.catalog.tableExists(ledger))
-      spark.sql(s"CREATE TABLE $ledger (batch_key STRING, phase STRING) USING parquet")
     // Explicit ids and content keys live in disjoint namespaces so a
     // small scheduler id can never collide with a content hash.
     val batchKey = batchId match {
@@ -453,120 +442,111 @@ object GraphOps {
           .first().getDecimal(0)
         s"h:$h"
     }
-    val phases = spark.table(ledger)
-      .filter(col("batch_key") === batchKey)
-      .select(col("phase")).collect().map(_.getString(0)).toSet
-    if (phases.contains("commit")) return
-    val replaying = phases.contains("intent")
-    if (!replaying) {
-      spark.sql(s"INSERT INTO $ledger VALUES ('$batchKey', 'intent')")
-      spark.catalog.refreshTable(ledger)
+    IndexCatalog.ledgered(spark, table, batchKey) { replaying =>
+      val stored = spark.table(membersT)
+      val affected = batchMembers.select(col("g")).distinct()
+      // Members of the touched groups as of BEFORE the batch — the
+      // anti-join excludes any rows a crashed prior attempt appended.
+      val preAff = stored
+        .join(affected, Seq("g"), "left_semi")
+        .join(batchMembers, Seq("g", "k"), "left_anti")
+      val fresh = batchMembers.join(preAff, Seq("g", "k"), "left_anti")
+      val postAff = preAff.unionByName(fresh).localCheckpoint()
+      val postSizes = postAff.groupBy(col("g")).agg(count(lit(1)).as("gs"))
+      // Crossing = a group whose TRUE pre-batch membership was sane (and
+      // big enough, ≥ 2, to have emitted an edge) pushed over the cap by
+      // this batch; its stored edges must be retracted via the rebuild
+      // path. On the common first-attempt path the stored table IS the
+      // pre-batch truth, so its raw per-group counts decide exactly —
+      // in particular a batch that RE-SENDS existing members still
+      // counts them (the exclusion-trick counts undercounted here, and a
+      // batch re-sending ALL of a group's members dropped it from the
+      // inner join entirely, silently skipping the retraction). Only a
+      // replay of a crashed attempt can have appended batch rows into
+      // `stored`; there the raw count is polluted UPWARD and the
+      // excluded count is biased DOWNWARD, so the true pre-size sits
+      // between them and the bracket [excluded ≤ cap, raw ≥ 2] catches
+      // every genuine crossing — at worst it triggers a spurious
+      // rebuild, which converges to the identical truth (rebuilds are
+      // always semantically correct; the test only exists to keep them
+      // rare).
+      val over = postSizes.filter(col("gs") > maxGroupSize)
+      val preRawSizes = stored
+        .join(affected, Seq("g"), "left_semi")
+        .groupBy(col("g")).agg(count(lit(1)).as("pgs"))
+      val crossed =
+        if (!replaying)
+          over.join(preRawSizes, Seq("g"))
+            .filter(col("pgs") >= 2 && col("pgs") <= maxGroupSize)
+        else
+          over.join(preRawSizes, Seq("g"))
+            .join(
+              preAff.groupBy(col("g")).agg(count(lit(1)).as("pgs_excl")),
+              Seq("g"), "left")
+            .filter(col("pgs") >= 2 && coalesce(col("pgs_excl"), lit(0L)) <= maxGroupSize)
+      val mustRebuild = !crossed.isEmpty
+      // Both append frames materialize BEFORE any table mutates.
+      val memberAppend = batchMembers
+        .join(stored, Seq("g", "k"), "left_anti")
+        .localCheckpoint()
+      val sane = postSizes.filter(col("gs") <= maxGroupSize).select(col("g"))
+      // Candidate left side: on the first attempt only the truly-new
+      // members can witness a new edge (a re-sent member's pairs are all
+      // stored — overlapping batches pay for their new rows only); on a
+      // replay the crashed attempt may have appended members WITHOUT
+      // their edges, so the full batch re-candidates (the stored-edge
+      // anti-join keeps it idempotent either way).
+      val candLeft = if (replaying) fresh else memberAppend
+      val cand = candLeft
+        .join(sane, Seq("g"), "left_semi")
+        .select(col("g"), col("k").as("src"))
+        .join(postAff.select(col("g"), col("k").as("dst")), "g")
+        .filter(col("src") =!= col("dst"))
+        .select(col("src"), col("dst"))
+      val edgeAppend =
+        if (mustRebuild) None
+        else
+          Some(
+            cand.unionAll(cand.select(col("dst").as("src"), col("src").as("dst")))
+              .distinct()
+              .join(spark.table(table), Seq("src", "dst"), "left_anti")
+              .localCheckpoint())
+      val buckets = IndexCatalog.tableBuckets(spark, membersT)
+      if (!memberAppend.isEmpty) {
+        memberAppend
+          .write.mode("append")
+          .bucketBy(buckets, "g")
+          .saveAsTable(membersT)
+        spark.catalog.refreshTable(membersT)
+      }
+      // Spec fault-injection seam (the LshIndexOps/SearchIndexOps
+      // crashAfter discipline): die between the member append and the
+      // edge mutation, the exact window the replay bracket exists for.
+      if (crashAfter == "members")
+        throw new IllegalStateException("injected crash after members append")
+      if (mustRebuild) {
+        // The rare retraction path: rebuild the edge set from the
+        // membership ground truth (now including this batch), staged and
+        // rename-swapped so readers are served throughout.
+        IndexCatalog.swapStaged(
+          spark,
+          Seq(IndexCatalog.stageTableFrom(
+            spark, table,
+            edgesFromMembers(spark.table(membersT), maxGroupSize),
+            Seq("src"), Seq("src"), IndexCatalog.tableBuckets(spark, table))))
+        spark.catalog.refreshTable(table)
+      } else edgeAppend.filter(!_.isEmpty).foreach { ea =>
+        ea.write.mode("append")
+          .bucketBy(IndexCatalog.tableBuckets(spark, table), "src").sortBy("src")
+          .saveAsTable(table)
+        spark.catalog.refreshTable(table)
+      }
+      // Second seam: die between the edge mutation and the _deg refresh
+      // + commit — the replay must converge without double-appending.
+      if (crashAfter == "edges")
+        throw new IllegalStateException("injected crash after edge append")
+      refreshDegTable(spark, table)
     }
-    val stored = spark.table(membersT)
-    val affected = batchMembers.select(col("g")).distinct()
-    // Members of the touched groups as of BEFORE the batch — the
-    // anti-join excludes any rows a crashed prior attempt appended.
-    val preAff = stored
-      .join(affected, Seq("g"), "left_semi")
-      .join(batchMembers, Seq("g", "k"), "left_anti")
-    val fresh = batchMembers.join(preAff, Seq("g", "k"), "left_anti")
-    val postAff = preAff.unionByName(fresh).localCheckpoint()
-    val postSizes = postAff.groupBy(col("g")).agg(count(lit(1)).as("gs"))
-    // Crossing = a group whose TRUE pre-batch membership was sane (and
-    // big enough, ≥ 2, to have emitted an edge) pushed over the cap by
-    // this batch; its stored edges must be retracted via the rebuild
-    // path. On the common first-attempt path the stored table IS the
-    // pre-batch truth, so its raw per-group counts decide exactly —
-    // in particular a batch that RE-SENDS existing members still
-    // counts them (the exclusion-trick counts undercounted here, and a
-    // batch re-sending ALL of a group's members dropped it from the
-    // inner join entirely, silently skipping the retraction). Only a
-    // replay of a crashed attempt can have appended batch rows into
-    // `stored`; there the raw count is polluted UPWARD and the
-    // excluded count is biased DOWNWARD, so the true pre-size sits
-    // between them and the bracket [excluded ≤ cap, raw ≥ 2] catches
-    // every genuine crossing — at worst it triggers a spurious
-    // rebuild, which converges to the identical truth (rebuilds are
-    // always semantically correct; the test only exists to keep them
-    // rare).
-    val over = postSizes.filter(col("gs") > maxGroupSize)
-    val preRawSizes = stored
-      .join(affected, Seq("g"), "left_semi")
-      .groupBy(col("g")).agg(count(lit(1)).as("pgs"))
-    val crossed =
-      if (!replaying)
-        over.join(preRawSizes, Seq("g"))
-          .filter(col("pgs") >= 2 && col("pgs") <= maxGroupSize)
-      else
-        over.join(preRawSizes, Seq("g"))
-          .join(
-            preAff.groupBy(col("g")).agg(count(lit(1)).as("pgs_excl")),
-            Seq("g"), "left")
-          .filter(col("pgs") >= 2 && coalesce(col("pgs_excl"), lit(0L)) <= maxGroupSize)
-    val mustRebuild = !crossed.isEmpty
-    // Both append frames materialize BEFORE any table mutates.
-    val memberAppend = batchMembers
-      .join(stored, Seq("g", "k"), "left_anti")
-      .localCheckpoint()
-    val sane = postSizes.filter(col("gs") <= maxGroupSize).select(col("g"))
-    // Candidate left side: on the first attempt only the truly-new
-    // members can witness a new edge (a re-sent member's pairs are all
-    // stored — overlapping batches pay for their new rows only); on a
-    // replay the crashed attempt may have appended members WITHOUT
-    // their edges, so the full batch re-candidates (the stored-edge
-    // anti-join keeps it idempotent either way).
-    val candLeft = if (replaying) fresh else memberAppend
-    val cand = candLeft
-      .join(sane, Seq("g"), "left_semi")
-      .select(col("g"), col("k").as("src"))
-      .join(postAff.select(col("g"), col("k").as("dst")), "g")
-      .filter(col("src") =!= col("dst"))
-      .select(col("src"), col("dst"))
-    val edgeAppend =
-      if (mustRebuild) None
-      else
-        Some(
-          cand.unionAll(cand.select(col("dst").as("src"), col("src").as("dst")))
-            .distinct()
-            .join(spark.table(table), Seq("src", "dst"), "left_anti")
-            .localCheckpoint())
-    val buckets = IndexCatalog.tableBuckets(spark, membersT)
-    if (!memberAppend.isEmpty) {
-      memberAppend
-        .write.mode("append")
-        .bucketBy(buckets, "g")
-        .saveAsTable(membersT)
-      spark.catalog.refreshTable(membersT)
-    }
-    // Spec fault-injection seam (the LshIndexOps/SearchIndexOps
-    // crashAfter discipline): die between the member append and the
-    // edge mutation, the exact window the replay bracket exists for.
-    if (crashAfter == "members")
-      throw new IllegalStateException("injected crash after members append")
-    if (mustRebuild) {
-      // The rare retraction path: rebuild the edge set from the
-      // membership ground truth (now including this batch), staged and
-      // rename-swapped so readers are served throughout.
-      IndexCatalog.swapStaged(
-        spark,
-        Seq(IndexCatalog.stageTableFrom(
-          spark, table,
-          edgesFromMembers(spark.table(membersT), maxGroupSize),
-          Seq("src"), Seq("src"), IndexCatalog.tableBuckets(spark, table))))
-      spark.catalog.refreshTable(table)
-    } else edgeAppend.filter(!_.isEmpty).foreach { ea =>
-      ea.write.mode("append")
-        .bucketBy(IndexCatalog.tableBuckets(spark, table), "src").sortBy("src")
-        .saveAsTable(table)
-      spark.catalog.refreshTable(table)
-    }
-    // Second seam: die between the edge mutation and the _deg refresh
-    // + commit — the replay must converge without double-appending.
-    if (crashAfter == "edges")
-      throw new IllegalStateException("injected crash after edge append")
-    refreshDegTable(spark, table)
-    spark.sql(s"INSERT INTO $ledger VALUES ('$batchKey', 'commit')")
-    spark.catalog.refreshTable(ledger)
   }
 
   /** Refresh `${table}_deg` from the current edge set — a staged

@@ -2,23 +2,111 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StringType
 
-/** Catalog lookups shared by the persisted-index families
-  * ([[LshIndexOps]], [[SearchIndexOps]], [[VectorIndexOps]]) — one
-  * implementation of the rebucket-survival rule: appends MUST read the
-  * live bucket count from the catalog rather than take it as a
-  * parameter, because a hard-coded count goes stale the moment a
-  * rebucket runs and the next append then fails the bucket-spec match
-  * (killing a running streaming ingest, which survives a mid-stream
-  * rebucket precisely because of this lookup).
+/** Catalog lookups and the crash-repair ingest ledger shared by the
+  * persisted-index families ([[LshIndexOps]], [[SearchIndexOps]],
+  * [[MediaIndexOps]], [[VectorIndexOps]] and [[GraphOps]]' growable
+  * edge table) — one implementation of the rebucket-survival rule:
+  * appends MUST follow the live bucket spec (an `insertInto`, which
+  * takes the table's own spec, or a [[tableBuckets]] lookup) rather
+  * than take a bucket count as a parameter, because a hard-coded count
+  * goes stale the moment a rebucket runs and the next append then
+  * fails the bucket-spec match (killing a running streaming ingest,
+  * which survives a mid-stream rebucket precisely because of this
+  * rule).
   */
 private[graft] object IndexCatalog {
 
-  /** The crash-repair presence probe every intent/commit ingest ledger
-    * shares ([[LshIndexOps]], [[MediaIndexOps]], [[SearchIndexOps]]):
-    * "does `table` already hold any of this batch's rows?" — presence
-    * of one row implies the whole batch landed there, because each
-    * table append is a single atomic job commit. The batch's bounded
+  /** Batches with at most this many distinct ids use a driver-side id
+    * list for the crash-repair [[PresenceProbe]] and Search's replay
+    * guard (a bounded collect — metadata-scale); larger batches fall
+    * back to a distributed semi-join.
+    */
+  val ProbeIdCap = 100000
+
+  /** The ingest ledger's table name for an index family's `owner`
+    * (an index prefix, or a growable edge table's name).
+    */
+  def ledgerTable(owner: String): String = s"${owner}_batches"
+
+  /** Drop `owner`'s ingest ledger. Every rebuild calls this: a rebuilt
+    * index is a fresh artifact, and a stale ledger would make the
+    * family's ingest skip legitimate batches of the new generation.
+    */
+  def dropLedger(spark: SparkSession, owner: String): Unit =
+    spark.sql(s"DROP TABLE IF EXISTS ${ledgerTable(owner)}")
+
+  /** Run one batch's appends at most once to completion — the
+    * intent/commit ingest ledger that makes every family's
+    * `foreachBatch` sink idempotent under at-least-once delivery.
+    *
+    * The `<owner>_batches(batch_key STRING, phase STRING)` table
+    * (created lazily) holds one `intent` and one `commit` row per
+    * applied batch. `batchKey` must be reproducible across checkpoint
+    * replays: LSH, Search and Media pass their min doc_id, Vector its
+    * `foreachBatch` id, Graph an `id:`/`h:` scheduler-id or content
+    * key. A key with a `commit` row short-circuits (a replay of a
+    * committed batch is a no-op). Otherwise an `intent` row is written,
+    * `appends` runs, and a `commit` row is written — two single-row
+    * writes around the work, each followed by a refresh so the next
+    * batch's phase read sees it.
+    *
+    * A replay that finds `intent` without `commit` — a crash in the
+    * middle — calls `appends(true)`: the caller then guards each table
+    * append by a presence probe ([[PresenceProbe]], or its own tag
+    * probe) so exactly the missing appends re-run and nothing lands
+    * twice. Each append must therefore be one atomic job commit whose
+    * presence proves the whole append landed; the residual exposure is
+    * that single-append atomicity, the engine-level floor without a
+    * transactional table format (Iceberg/Delta). A crash after the
+    * appends but before the commit row leaves a dangling `intent`: the
+    * replay either repairs it (every probe finds its table present) or,
+    * when the caller's own membership guard filters the replay to
+    * empty before it reaches the ledger, leaves it inert — batch keys
+    * are unique, so no later batch matches it.
+    *
+    * A pre-existing `<owner>_batches` table of any other schema (a
+    * retired ledger generation, or a foreign table under the name)
+    * fails with an error naming it: the ledger is never dropped or
+    * reinterpreted silently.
+    *
+    * The ledger grows two small files per batch and is read once per
+    * batch; compaction or a keyed store belongs here alone.
+    */
+  def ledgered(spark: SparkSession, owner: String, batchKey: String)(
+      appends: Boolean => Unit,
+  ): Unit = {
+    val ledger = ledgerTable(owner)
+    if (!spark.catalog.tableExists(ledger))
+      spark.sql(s"CREATE TABLE $ledger (batch_key STRING, phase STRING) USING parquet")
+    val stored = spark.table(ledger)
+    val columns = stored.schema.map(f => f.name -> f.dataType)
+    if (columns != Seq("batch_key" -> StringType, "phase" -> StringType))
+      throw new IllegalStateException(
+        s"$ledger is not an ingest ledger (batch_key STRING, phase STRING): " +
+          s"found (${stored.schema.toDDL}); drop it or rebuild the index")
+    val phases = stored
+      .filter(col("batch_key") === batchKey)
+      .select(col("phase")).collect().map(_.getString(0)).toSet
+    if (phases.contains("commit")) return
+    val repairing = phases.contains("intent")
+    if (!repairing) {
+      spark.sql(s"INSERT INTO $ledger VALUES ('$batchKey', 'intent')")
+      spark.catalog.refreshTable(ledger)
+    }
+    appends(repairing)
+    spark.sql(s"INSERT INTO $ledger VALUES ('$batchKey', 'commit')")
+    spark.catalog.refreshTable(ledger)
+  }
+
+  /** The crash-repair presence probe the ledger users share
+    * ([[LshIndexOps]], [[MediaIndexOps]], [[SearchIndexOps]],
+    * [[VectorIndexOps]]; [[GraphOps]]' grow steps are idempotent
+    * anti-joins and need none): "does `table` already hold any of this
+    * batch's rows?" — presence of one row implies the whole batch
+    * landed there, because each table append is a single atomic job
+    * commit. The batch's bounded
     * doc_id list is collected ONCE per repair (lazily — the fresh-batch
     * fast path never pays it), not once per probed table, and pushed
     * into each probed scan as an IN-list (bucket pruning + parquet
@@ -29,7 +117,7 @@ private[graft] object IndexCatalog {
   final class PresenceProbe(
       spark: SparkSession,
       batch: DataFrame,
-      cap: Int,
+      cap: Int = ProbeIdCap,
       idCol: String = "doc_id",
   ) {
     private lazy val ids: Seq[Long] = batch

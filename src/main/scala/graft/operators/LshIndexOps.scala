@@ -118,10 +118,7 @@ object LshIndexOps {
       buckets: Int,
       prefix: String,
   ): Unit = {
-    // A rebuilt index is a fresh artifact — a stale ingest ledger
-    // would make [[dedupBatchAndGrow]] skip legitimate batches of the
-    // new generation.
-    docs.sparkSession.sql(s"DROP TABLE IF EXISTS ${prefix}_batches")
+    IndexCatalog.dropLedger(docs.sparkSession, prefix)
     // Materialize before the two table writes — each saveAsTable is its
     // own action, and without this the full shingle→minhash→band
     // pipeline would execute twice per build.
@@ -583,13 +580,6 @@ object LshIndexOps {
     dups
   }
 
-  /** Micro-batches with at most this many distinct doc_ids use a
-    * driver-side id list for the rare crash-repair presence probe
-    * (bounded collect — metadata-scale); larger batches fall back to a
-    * distributed semi-join probe.
-    */
-  private[graft] val ProbeIdCap = 100000
-
   /** Runs the independent appends of one batch: `a` on an internal
     * thread (started with the caller's session and local properties, so
     * its jobs belong to the caller's SQL execution), `b` on this one.
@@ -611,7 +601,7 @@ object LshIndexOps {
   }
 
   /** Appends the batch's keepers to the index tables, crash-repairably
-    * (the [[SearchIndexOps.indexBatch]] intent/commit discipline), and
+    * ([[IndexCatalog.ledgered]], keyed by the min kept doc_id), and
     * their `(doc_id, text_md5, n_tok)` rows to `_meta` when the prefix
     * carries it (the MediaIndexOps meta-maintenance discipline: the
     * upload-time digest probe then sees incrementally-admitted documents,
@@ -628,13 +618,10 @@ object LshIndexOps {
     * docs-first order made a crash between UNREPAIRABLE: the keepers
     * vanished from `kept` with their bands never written, silently
     * missing every future duplicate of them. A crash before the docs
-    * append can therefore leave any subset of {bands, meta} landed.
-    * The `<prefix>_batches` ledger (batch key = min kept doc_id,
-    * reproducible across replays) records intent before the appends
-    * and commit after; a replay that finds intent-without-commit
-    * presence-guards each append (by the bounded kept-id list — parquet
-    * row-group stats skip every file but the crashed append's own) so
-    * exactly the missing tables are re-appended.
+    * append can therefore leave any subset of {bands, meta} landed; a
+    * repairing replay presence-guards each append by the bounded
+    * kept-id list (parquet row-group stats skip every file but the
+    * crashed append's own), so exactly the missing tables re-append.
     *
     * Appends go through `insertInto`, i.e. the table's OWN bucket and
     * sort spec — they follow the live bucket count across a
@@ -652,44 +639,31 @@ object LshIndexOps {
   ): Unit = {
     val stats = kept.agg(count(lit(1)), min(col("doc_id"))).head()
     if (stats.getLong(0) == 0) return // nothing to append → no ledger entry needed
-    val batchKey = stats.getLong(1)
-    val ledger = s"${prefix}_batches"
-    if (!spark.catalog.tableExists(ledger))
-      spark.sql(s"CREATE TABLE $ledger (batch_key BIGINT, phase STRING) USING parquet")
-    val phases = spark.table(ledger)
-      .filter(col("batch_key") === batchKey)
-      .select(col("phase")).collect().map(_.getString(0)).toSet
-    if (phases.contains("commit")) return
-    val repairing = phases.contains("intent")
-    if (!repairing) {
-      spark.sql(s"INSERT INTO $ledger VALUES ($batchKey, 'intent')")
-      spark.catalog.refreshTable(ledger)
+    IndexCatalog.ledgered(spark, prefix, stats.getLong(1).toString) { repairing =>
+      // One kept-id collect per REPAIR, shared by every table probe
+      // (lazy inside the probe — the fast path never pays it).
+      val probe = new IndexCatalog.PresenceProbe(spark, kept)
+      def missing(table: String): Boolean = !repairing || !probe(s"${prefix}_$table")
+      def append(table: String, rows: DataFrame): Unit = {
+        rows.write.mode("append").insertInto(s"${prefix}_$table")
+        // The session caches each table's resolved relation (file listing
+        // included) on first read; without an explicit refresh the NEXT
+        // batch's candidate join would silently run against the
+        // pre-append file set and miss every cross-batch duplicate.
+        spark.catalog.refreshTable(s"${prefix}_$table")
+      }
+      val bands = crashAfter != "meta-only" && missing("bands")
+      val meta = crashAfter != "bands" &&
+        spark.catalog.tableExists(s"${prefix}_meta") && missing("meta")
+      concurrently(spark) {
+        if (bands) append("bands", bandRows(kept))
+      } {
+        if (meta) append("meta", kept.select(col("doc_id"), col("text_md5"), col("n_tok")))
+      }
+      if (crashAfter.nonEmpty)
+        throw new IllegalStateException(s"injected crash after $crashAfter append")
+      if (missing("docs")) append("docs", kept.select(col("doc_id"), col("sh")))
     }
-    // One kept-id collect per REPAIR, shared by every table probe
-    // (lazy inside the probe — the fast path never pays it).
-    val probe = new IndexCatalog.PresenceProbe(spark, kept, ProbeIdCap)
-    def missing(table: String): Boolean = !repairing || !probe(s"${prefix}_$table")
-    def append(table: String, rows: DataFrame): Unit = {
-      rows.write.mode("append").insertInto(s"${prefix}_$table")
-      // The session caches each table's resolved relation (file listing
-      // included) on first read; without an explicit refresh the NEXT
-      // batch's candidate join would silently run against the
-      // pre-append file set and miss every cross-batch duplicate.
-      spark.catalog.refreshTable(s"${prefix}_$table")
-    }
-    val bands = crashAfter != "meta-only" && missing("bands")
-    val meta = crashAfter != "bands" &&
-      spark.catalog.tableExists(s"${prefix}_meta") && missing("meta")
-    concurrently(spark) {
-      if (bands) append("bands", bandRows(kept))
-    } {
-      if (meta) append("meta", kept.select(col("doc_id"), col("text_md5"), col("n_tok")))
-    }
-    if (crashAfter.nonEmpty)
-      throw new IllegalStateException(s"injected crash after $crashAfter append")
-    if (missing("docs")) append("docs", kept.select(col("doc_id"), col("sh")))
-    spark.sql(s"INSERT INTO $ledger VALUES ($batchKey, 'commit')")
-    spark.catalog.refreshTable(ledger)
   }
 
   /** Continuous ingestion dedup — the streaming face of the persisted

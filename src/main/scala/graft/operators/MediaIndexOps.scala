@@ -90,10 +90,7 @@ object MediaIndexOps {
       prefix: String,
       mediaType: String = "image",
   ): Unit = {
-    // A rebuilt index is a fresh artifact — a stale ingest ledger
-    // would make [[dedupBatchAndGrow]] skip legitimate batches of the
-    // new generation.
-    media.sparkSession.sql(s"DROP TABLE IF EXISTS ${prefix}_batches")
+    IndexCatalog.dropLedger(media.sparkSession, prefix)
     // Materialize before the two table writes — each saveAsTable is
     // its own action, and the decode+fingerprint pass must run once.
     val fp = fpFrame(media, regions, blockBands, mediaType).localCheckpoint()
@@ -460,7 +457,7 @@ object MediaIndexOps {
     * a metadata-only `_meta` rewrite taken only when such a collision
     * exists (with monotone arrival ids it never fires and `_meta`
     * stays append-only; at 100 TB this is a MERGE on a transactional
-    * table).
+    * table). `buckets` is unused, as in [[dedupBatchAndGrow]].
     */
   def ingestBatchAndMaintain(
       spark: SparkSession,
@@ -569,7 +566,7 @@ object MediaIndexOps {
         }
         Some(newMeta)
       } else None
-    appendKeepers(spark, prefix, newRows, buckets, crashAfter = "", keptMeta)
+    appendKeepers(spark, prefix, newRows, crashAfter = "", keptMeta)
   }
 
   /** The skew STOP-KEY dial on the fingerprint banding (the
@@ -731,7 +728,9 @@ object MediaIndexOps {
     * themselves — or (b) any lower-doc_id image of the SAME batch.
     * Kept rows are anti-joined against the stored fps table before the
     * append (replay-safe on the index); the dup frame materializes
-    * BEFORE the append mutates the tables it reads.
+    * BEFORE the append mutates the tables it reads. `buckets` is
+    * unused — appends follow the tables' live bucket spec (see
+    * [[rebucket]]).
     */
   def dedupBatchAndGrow(
       spark: SparkSession,
@@ -778,89 +777,57 @@ object MediaIndexOps {
             batch.join(kept.select("doc_id"), Seq("doc_id"), "left_semi"), mediaType)
           .localCheckpoint())
       else None
-    appendKeepers(spark, prefix, kept, buckets, crashAfter, keptMeta)
+    appendKeepers(spark, prefix, kept, crashAfter, keptMeta)
     dups
   }
 
-  /** Bounded driver-side id list for the rare crash-repair presence
-    * probe; larger batches fall back to a distributed semi-join probe.
-    */
-  private[graft] val ProbeIdCap = 100000
-
   /** Appends the batch's keepers to the index tables, crash-repairably
-    * (the [[LshIndexOps]] intent/commit keeper discipline): chunks
-    * FIRST, then the optional `_meta` rows, fps LAST — fps is the
-    * membership table the kept anti-join reads, so its append is the
-    * batch's commit marker; the reverse order would make a
-    * crash-between unrepairable (keepers in fps with no chunk rows,
-    * invisible to every future candidate join, and hidden from the
-    * replay by the very anti-join that should repair them). Keepers
-    * never verify against each other, so a replay recomputes the
-    * identical kept set even with their chunks already stored (the
-    * self-collision guard covers exact replays). The
-    * `<prefix>_batches` ledger (batch key = min kept doc_id) records
-    * intent/commit; intent-without-commit replays presence-guard each
-    * append by the bounded kept-id list. `keptMeta` (when the prefix
-    * carries the curation-meta artifact) appends at the TABLE's own
-    * bucket count under the same ledger entry.
+    * ([[IndexCatalog.ledgered]], keyed by the min kept doc_id; the
+    * [[LshIndexOps]] keeper discipline): chunks FIRST, then the
+    * optional `_meta` rows, fps LAST — fps is the membership table the
+    * kept anti-join reads, so its append is the batch's commit marker;
+    * the reverse order would make a crash-between unrepairable
+    * (keepers in fps with no chunk rows, invisible to every future
+    * candidate join, and hidden from the replay by the very anti-join
+    * that should repair them). Keepers never verify against each
+    * other, so a replay recomputes the identical kept set even with
+    * their chunks already stored (the self-collision guard covers
+    * exact replays); a repairing replay presence-guards each append by
+    * the bounded kept-id list. `keptMeta` (when the prefix carries the
+    * curation-meta artifact) appends under the same ledger entry.
+    * Appends go through `insertInto`, i.e. each table's OWN bucket and
+    * sort spec, so they follow the live bucket count across a
+    * [[rebucket]].
     */
   private def appendKeepers(
       spark: SparkSession,
       prefix: String,
       kept: DataFrame,
-      buckets: Int,
       crashAfter: String,
       keptMeta: Option[DataFrame] = None,
   ): Unit = {
     if (kept.isEmpty) return // nothing to append → no ledger entry needed
     val batchKey = kept.agg(min(col("doc_id"))).first().getLong(0)
-    val ledger = s"${prefix}_batches"
-    if (!spark.catalog.tableExists(ledger))
-      spark.sql(s"CREATE TABLE $ledger (batch_key BIGINT, phase STRING) USING parquet")
-    val phases = spark.table(ledger)
-      .filter(col("batch_key") === batchKey)
-      .select(col("phase")).collect().map(_.getString(0)).toSet
-    if (phases.contains("commit")) return
-    val repairing = phases.contains("intent")
-    if (!repairing) {
-      spark.sql(s"INSERT INTO $ledger VALUES ($batchKey, 'intent')")
-      spark.catalog.refreshTable(ledger)
+    IndexCatalog.ledgered(spark, prefix, batchKey.toString) { repairing =>
+      // One kept-id collect per REPAIR, shared by every table probe
+      // (lazy inside the probe — the fast path never pays it).
+      val probe = new IndexCatalog.PresenceProbe(spark, kept)
+      def append(table: String, rows: DataFrame): Unit =
+        if (!repairing || !probe(s"${prefix}_$table")) {
+          rows.write.mode("append").insertInto(s"${prefix}_$table")
+          // Without the refresh the next batch's candidate join would
+          // read the pre-append file listing and miss every cross-batch
+          // dup.
+          spark.catalog.refreshTable(s"${prefix}_$table")
+        }
+      append("chunks", chunkRows(kept))
+      if (crashAfter == "chunks")
+        throw new IllegalStateException("injected crash after chunks append")
+      keptMeta.foreach(append("meta", _))
+      if (crashAfter == "meta")
+        throw new IllegalStateException("injected crash after meta append")
+      append("fps", kept.select(col("doc_id"), col("dhash"), col("whash")))
     }
-    // One kept-id collect per REPAIR, shared by both table probes
-    // (lazy inside the probe — the fast path never pays it).
-    val probe = new IndexCatalog.PresenceProbe(spark, kept, ProbeIdCap)
-    def present(table: String): Boolean = probe(s"${prefix}_$table")
-    if (!repairing || !present("chunks")) {
-      chunkRows(kept)
-        .write.mode("append")
-        .bucketBy(buckets, "chunk_idx", "chunk_bits")
-        .saveAsTable(s"${prefix}_chunks")
-      // Without the refresh the next batch's candidate join would read
-      // the pre-append file listing and miss every cross-batch dup.
-      spark.catalog.refreshTable(s"${prefix}_chunks")
-    }
-    if (crashAfter == "chunks")
-      throw new IllegalStateException("injected crash after chunks append")
-    keptMeta.foreach { m =>
-      if (!repairing || !present("meta")) {
-        m.write.mode("append")
-          .bucketBy(IndexCatalog.tableBuckets(spark, s"${prefix}_meta"), "doc_id")
-          .sortBy("doc_id")
-          .saveAsTable(s"${prefix}_meta")
-        spark.catalog.refreshTable(s"${prefix}_meta")
-      }
-    }
-    if (crashAfter == "meta")
-      throw new IllegalStateException("injected crash after meta append")
-    if (!repairing || !present("fps")) {
-      kept.select(col("doc_id"), col("dhash"), col("whash"))
-        .write.mode("append")
-        .bucketBy(buckets, "doc_id").sortBy("doc_id")
-        .saveAsTable(s"${prefix}_fps")
-      spark.catalog.refreshTable(s"${prefix}_fps")
-    }
-    spark.sql(s"INSERT INTO $ledger VALUES ($batchKey, 'commit')")
-    spark.catalog.refreshTable(ledger)
   }
 
   /** Continuous ingestion dedup — the streaming face: every

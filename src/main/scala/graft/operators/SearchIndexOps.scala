@@ -43,7 +43,7 @@ object SearchIndexOps {
     * the rebuilt index, so it is dropped with the data it described.
     */
   def writeIndex(docs: DataFrame, buckets: Int, prefix: String): Unit = {
-    docs.sparkSession.sql(s"DROP TABLE IF EXISTS ${prefix}_batches")
+    IndexCatalog.dropLedger(docs.sparkSession, prefix)
     writeTables(docs, buckets, prefix, org.apache.spark.sql.SaveMode.Overwrite)
   }
 
@@ -224,22 +224,16 @@ object SearchIndexOps {
   def fileStats(spark: SparkSession, prefix: String): DataFrame =
     IndexCatalog.fileStats(
       spark,
-      bucketedTables(prefix).map(_._1) ++ Seq(s"${prefix}_meta", s"${prefix}_batches"))
-
-  /** Micro-batches with at most this many distinct doc_ids push their
-    * id list into the stored-docs scan as an IN filter (bounded driver
-    * collect — metadata-scale like the BPE vocabulary fold, never
-    * corpus-scale); larger batches fall back to the full bucketed
-    * anti-join.
-    */
-  private[graft] val GuardIdCap = 100000
+      bucketedTables(prefix).map(_._1) ++
+        Seq(s"${prefix}_meta", IndexCatalog.ledgerTable(prefix)))
 
   /** The replay guard's surviving rows: batch minus already-indexed
     * doc_ids. Guard cost is O(batch), not O(index): the anti-join only
     * needs the stored ids that could COLLIDE with this batch, so the
-    * batch's (bounded) id list is pushed into the stored scan, where
-    * it prunes buckets (doc_id is the bucket key) and parquet row
-    * groups — at 100 TB the guard reads the touched buckets' matching
+    * batch's id list (at most [[IndexCatalog.ProbeIdCap]] ids; larger
+    * batches fall back to the full bucketed anti-join) is pushed into
+    * the stored scan, where it prunes buckets (doc_id is the bucket
+    * key) and parquet row groups — at 100 TB the guard reads the touched buckets' matching
     * rows, not the billion-row membership table. The pruned guard side
     * is then at most batch-sized, so it broadcasts. SearchIndexSpec
     * pins the bucket pruning on the stored scan. The batch is
@@ -256,9 +250,9 @@ object SearchIndexOps {
     val b = batch.localCheckpoint()
     val stored = spark.table(s"${prefix}_docs").select(col("doc_id"))
     val ids = b
-      .select(col("doc_id")).distinct().limit(GuardIdCap + 1)
+      .select(col("doc_id")).distinct().limit(IndexCatalog.ProbeIdCap + 1)
       .collect().map(_.getLong(0)).toSeq
-    if (ids.length <= GuardIdCap)
+    if (ids.length <= IndexCatalog.ProbeIdCap)
       b.join(
         broadcast(stored.filter(col("doc_id").isin(ids: _*))),
         Seq("doc_id"),
@@ -270,10 +264,11 @@ object SearchIndexOps {
   /** Does `<prefix>_<table>` already hold THIS batch's rows? Presence
     * of any row implies the whole batch landed in that table (each
     * table's append is one atomic job commit). Postings/docs rows are
-    * located by the batch's bounded doc_id list (the [[GuardIdCap]]
-    * pushdown — bucket-pruned on docs, file-skipped via parquet
-    * row-group doc_id stats on postings, where every append's files
-    * hold only that batch's ids; semi-join fallback above the cap);
+    * located by the batch's bounded doc_id list (the
+    * [[IndexCatalog.PresenceProbe]] pushdown — bucket-pruned on docs,
+    * file-skipped via parquet row-group doc_id stats on postings,
+    * where every append's files hold only that batch's ids; semi-join
+    * fallback above the cap);
     * lexicon/meta partials by their batch-key tag. Only the RARE
     * crash-repair path pays these probes — the fresh-batch fast path
     * never runs them.
@@ -300,28 +295,14 @@ object SearchIndexOps {
     * written last) already holds, so a fully-committed batch replays
     * to a no-op and a mixed batch keeps only its new docs.
     *
-    * Layer 2 — the `<prefix>_batches` ingest ledger (the
-    * [[VectorIndexOps.ingestBatch]] discipline, extended with an
-    * intent phase): a batch is identified by [[batchKeyOf]] (its min
-    * doc_id — reproducible across checkpoint replays). The fast path
-    * appends an `intent` row, runs the four table appends (docs last),
-    * then appends a `commit` row — two single-row writes around the
-    * work. On a replay that finds `intent` without `commit` — the
-    * crash-in-the-middle case that used to double-count tf/df — every
-    * table append is individually guarded by [[batchPresent]], so
-    * exactly the missing suffix of the four appends is re-run and
-    * nothing lands twice (SearchIndexSpec kills the sequence between
-    * postings and docs and asserts the replayed index is bit-equal).
-    * The residual exposure is therefore a single table append's own
-    * job-commit atomicity — the engine-level floor; crossing it needs
-    * a transactional table format (Iceberg/Delta).
-    *
-    * One benign residue: a crash AFTER the docs append but BEFORE the
-    * commit row leaves that batch's `intent` row dangling forever —
-    * its replay filters to empty at the doc-level guard and returns
-    * before reaching the ledger. Dangling intents are inert (batch
-    * keys are unique, so no later batch ever matches them) and cost
-    * one ledger row.
+    * Layer 2 — the ingest ledger ([[IndexCatalog.ledgered]]), keyed
+    * by [[batchKeyOf]] (the min doc_id): the four table appends run
+    * docs last, and a repairing replay guards each by
+    * [[batchPresent]], so exactly the missing suffix re-runs and tf/df
+    * is never double-counted (SearchIndexSpec kills the sequence
+    * between postings and docs and asserts the replayed index is
+    * bit-equal). A crash after the docs append leaves a dangling
+    * `intent`: its replay filters to empty at the doc-level guard.
     *
     * `crashAfter` is the spec's fault-injection seam: throw right
     * after the named table's append, simulating a kill mid-sequence.
@@ -335,33 +316,21 @@ object SearchIndexOps {
     val fresh = replayGuardFresh(spark, prefix, batch).localCheckpoint()
     if (fresh.isEmpty) return
     val bk = batchKeyOf(fresh)
-    val ledger = s"${prefix}_batches"
-    if (!spark.catalog.tableExists(ledger))
-      spark.sql(s"CREATE TABLE $ledger (batch_key BIGINT, phase STRING) USING parquet")
-    val phases = spark.table(ledger)
-      .filter(col("batch_key") === bk)
-      .select(col("phase")).collect().map(_.getString(0)).toSet
-    if (phases.contains("commit")) return
-    val repairing = phases.contains("intent")
-    if (!repairing) {
-      spark.sql(s"INSERT INTO $ledger VALUES ($bk, 'intent')")
-      spark.catalog.refreshTable(ledger)
-    }
-    val buckets = IndexCatalog.tableBuckets(spark, s"${prefix}_postings")
-    // One fresh-id collect per REPAIR, shared by every table probe
-    // (lazy inside the probe — the fast path never pays it).
-    val probe = new IndexCatalog.PresenceProbe(spark, fresh, GuardIdCap)
-    tableAppends(fresh, buckets, prefix, org.apache.spark.sql.SaveMode.Append, bk)
-      .foreach { case (t, run) =>
-        if (!repairing || !batchPresent(spark, prefix, t, probe, bk)) {
-          run()
-          spark.catalog.refreshTable(s"${prefix}_$t")
+    IndexCatalog.ledgered(spark, prefix, bk.toString) { repairing =>
+      val buckets = IndexCatalog.tableBuckets(spark, s"${prefix}_postings")
+      // One fresh-id collect per REPAIR, shared by every table probe
+      // (lazy inside the probe — the fast path never pays it).
+      val probe = new IndexCatalog.PresenceProbe(spark, fresh)
+      tableAppends(fresh, buckets, prefix, org.apache.spark.sql.SaveMode.Append, bk)
+        .foreach { case (t, run) =>
+          if (!repairing || !batchPresent(spark, prefix, t, probe, bk)) {
+            run()
+            spark.catalog.refreshTable(s"${prefix}_$t")
+          }
+          if (crashAfter == t)
+            throw new IllegalStateException(s"injected crash after $t append")
         }
-        if (crashAfter == t)
-          throw new IllegalStateException(s"injected crash after $t append")
-      }
-    spark.sql(s"INSERT INTO $ledger VALUES ($bk, 'commit')")
-    spark.catalog.refreshTable(ledger)
+    }
   }
 
   /** Continuous ingestion — the streaming face of the persisted index:

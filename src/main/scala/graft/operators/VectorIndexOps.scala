@@ -150,8 +150,8 @@ object VectorIndexOps {
     // A rebuilt index is a fresh artifact: stale tombstones would
     // silently hide corpus vectors, and a stale batch ledger would
     // silently skip the new stream's early batch ids.
-    Seq(s"${prefix}_tombstones", s"${prefix}_batches")
-      .foreach(t => embeddings.sparkSession.sql(s"DROP TABLE IF EXISTS $t"))
+    embeddings.sparkSession.sql(s"DROP TABLE IF EXISTS ${prefix}_tombstones")
+    IndexCatalog.dropLedger(embeddings.sparkSession, prefix)
   }
 
   /** Delete vectors from the index — the tombstone discipline (the
@@ -204,13 +204,6 @@ object VectorIndexOps {
   def appendVectors(spark: SparkSession, prefix: String, batch: DataFrame): Unit =
     appendVectorsGuarded(spark, prefix, batch, repairing = false)
 
-  /** Micro-batches with at most this many distinct vec_ids use a
-    * driver-side id list for the rare repair-path presence probe
-    * (bounded collect — metadata-scale); larger batches fall back to a
-    * distributed semi-join probe.
-    */
-  private[graft] val ProbeIdCap = 100000
-
   /** The batch's reproducible identity — its min vec_id (batches carry
     * disjoint vec_id sets, so the minimum is unique AND stable across
     * checkpoint replays); tags the cellstats partials so a crashed
@@ -262,7 +255,7 @@ object VectorIndexOps {
     val assigned = assignedProjection(batch, cb).localCheckpoint()
     val bk = batchKeyOf(assigned)
     def vectorsPresent: Boolean =
-      new IndexCatalog.PresenceProbe(spark, assigned, ProbeIdCap, idCol = "vec_id")(
+      new IndexCatalog.PresenceProbe(spark, assigned, idCol = "vec_id")(
         s"${prefix}_vectors")
     if (!repairing || !vectorsPresent) {
       assigned
@@ -584,28 +577,20 @@ object VectorIndexOps {
     SimilarityOps.rankTopK(scored, "cosine", ascending = false, k)
   }
 
-  /** One replay-safe, crash-repairable ingest step — the
-    * [[SearchIndexOps.indexBatch]] intent/commit discipline on the
-    * vector face. The `<prefix>_batches` ledger (created lazily on
-    * first streaming use) is the right guard HERE: the vectors table
-    * is bucketed by `cell`, so an anti-join on vec_id would shuffle
-    * the stored corpus once per micro-batch, while the ledger
-    * membership check reads a table with one row per applied batch
-    * phase (metadata-scale, O(1) corpus contact). foreachBatch batch
-    * ids are stable across checkpoint replays, so a committed batch
-    * replays to a wholesale skip and vec_ids stay unique
-    * (VectorIndexSpec replays a batch and asserts it).
-    *
-    * Crash repair: the fast path appends an `intent` row, runs the
-    * two table appends (vectors, then cellstats partials), then
-    * appends a `commit` row. A replay that finds intent-without-commit
-    * — the window that used to re-append the whole batch — runs the
-    * appends presence-guarded ([[appendVectorsGuarded]]), so exactly
-    * the missing appends re-run (VectorIndexSpec kills the sequence
-    * between the two appends and asserts the replayed index is
-    * bit-equal). The residual exposure is a single table append's own
-    * job-commit atomicity — the engine-level floor without a
-    * transactional table format.
+  /** One replay-safe, crash-repairable ingest step — the ingest
+    * ledger ([[IndexCatalog.ledgered]]) on the vector face, keyed by
+    * the foreachBatch id. The ledger is the right guard HERE: the
+    * vectors table is bucketed by `cell`, so an anti-join on vec_id
+    * would shuffle the stored corpus once per micro-batch, while the
+    * ledger check reads a table with one row per applied batch phase
+    * (metadata-scale, O(1) corpus contact). foreachBatch batch ids are
+    * stable across checkpoint replays, so a committed batch replays to
+    * a wholesale skip and vec_ids stay unique (VectorIndexSpec replays
+    * a batch and asserts it). A repairing replay runs the two appends
+    * (vectors, then cellstats partials) presence-guarded
+    * ([[appendVectorsGuarded]]), so exactly the missing appends re-run
+    * (VectorIndexSpec kills the sequence between the two appends and
+    * asserts the replayed index is bit-equal).
     */
   private[graft] def ingestBatch(
       spark: SparkSession,
@@ -613,23 +598,10 @@ object VectorIndexOps {
       batch: DataFrame,
       batchId: Long,
       crashAfter: String = "",
-  ): Unit = {
-    val ledger = s"${prefix}_batches"
-    if (!spark.catalog.tableExists(ledger))
-      spark.sql(s"CREATE TABLE $ledger (batch_id BIGINT, phase STRING) USING parquet")
-    val phases = spark.table(ledger)
-      .filter(col("batch_id") === batchId)
-      .select(col("phase")).collect().map(_.getString(0)).toSet
-    if (phases.contains("commit")) return
-    val repairing = phases.contains("intent")
-    if (!repairing) {
-      spark.sql(s"INSERT INTO $ledger VALUES ($batchId, 'intent')")
-      spark.catalog.refreshTable(ledger)
+  ): Unit =
+    IndexCatalog.ledgered(spark, prefix, batchId.toString) { repairing =>
+      appendVectorsGuarded(spark, prefix, batch, repairing, crashAfter)
     }
-    appendVectorsGuarded(spark, prefix, batch, repairing, crashAfter)
-    spark.sql(s"INSERT INTO $ledger VALUES ($batchId, 'commit')")
-    spark.catalog.refreshTable(ledger)
-  }
 
   /** Continuous vector ingestion — the streaming face: every
     * micro-batch of the `vectors` stream (vec_id, embedding) is
@@ -681,7 +653,7 @@ object VectorIndexOps {
     IndexCatalog.fileStats(
       spark,
       bucketedTables(spark, prefix).map(_._1)
-        ++ Seq(s"${prefix}_codebook", s"${prefix}_pq_codebook", s"${prefix}_batches"),
+        ++ Seq(s"${prefix}_codebook", s"${prefix}_pq_codebook", IndexCatalog.ledgerTable(prefix)),
     )
 
   /** Literal-cell read — the serving-side primitive: a probe list of

@@ -1,0 +1,77 @@
+package graft
+
+import org.apache.spark.sql.functions.col
+import graft.operators.IndexCatalog
+
+/** The crash-repair ingest ledger every persisted-index family shares
+  * (IndexCatalog.ledgered): a fresh key runs its appends once between
+  * an intent and a commit row, a crash leaves the intent for a
+  * repairing rerun, a committed key never runs again, and a foreign
+  * table under the ledger's name is refused rather than reinterpreted.
+  */
+class IndexCatalogSpec extends SparkSpec {
+
+  private def phases(owner: String, key: String): Seq[String] = {
+    spark.catalog.refreshTable(IndexCatalog.ledgerTable(owner))
+    spark.table(IndexCatalog.ledgerTable(owner))
+      .filter(col("batch_key") === key)
+      .select("phase").collect().map(_.getString(0)).toSeq.sorted
+  }
+
+  private def fresh(owner: String): Unit = IndexCatalog.dropLedger(spark, owner)
+
+  test("a fresh key runs appends(false) and leaves exactly intent and commit") {
+    val owner = "ledgerfresh"
+    fresh(owner)
+    val calls = scala.collection.mutable.Buffer[Boolean]()
+    IndexCatalog.ledgered(spark, owner, "17")(calls += _)
+    assert(calls == Seq(false))
+    assert(phases(owner, "17") == Seq("commit", "intent"))
+    assert(spark.table(IndexCatalog.ledgerTable(owner)).count() == 2)
+  }
+
+  test("an append that throws leaves intent only, and the rerun repairs with appends(true)") {
+    val owner = "ledgercrash"
+    fresh(owner)
+    val e = intercept[IllegalStateException] {
+      IndexCatalog.ledgered(spark, owner, "id:3") { _ =>
+        throw new IllegalStateException("injected crash")
+      }
+    }
+    assert(e.getMessage == "injected crash")
+    assert(phases(owner, "id:3") == Seq("intent"))
+    val calls = scala.collection.mutable.Buffer[Boolean]()
+    IndexCatalog.ledgered(spark, owner, "id:3")(calls += _)
+    assert(calls == Seq(true))
+    assert(phases(owner, "id:3") == Seq("commit", "intent"),
+      "the repair commits without a second intent row")
+  }
+
+  test("a committed key never calls appends") {
+    val owner = "ledgerdone"
+    fresh(owner)
+    IndexCatalog.ledgered(spark, owner, "5")(_ => ())
+    var called = false
+    IndexCatalog.ledgered(spark, owner, "5")(_ => called = true)
+    assert(!called)
+    assert(phases(owner, "5") == Seq("commit", "intent"))
+    // A different key is a different batch.
+    IndexCatalog.ledgered(spark, owner, "6")(_ => called = true)
+    assert(called)
+  }
+
+  test("a pre-existing ledger of another schema fails with the table's name") {
+    val owner = "ledgerlegacy"
+    val ledger = IndexCatalog.ledgerTable(owner)
+    fresh(owner)
+    spark.sql(s"CREATE TABLE $ledger (batch_id BIGINT, phase STRING) USING parquet")
+    spark.sql(s"INSERT INTO $ledger VALUES (1, 'commit')")
+    var called = false
+    val e = intercept[IllegalStateException] {
+      IndexCatalog.ledgered(spark, owner, "1")(_ => called = true)
+    }
+    assert(e.getMessage.contains(ledger), e.getMessage)
+    assert(!called)
+    assert(spark.table(ledger).count() == 1, "the foreign table must be left as it was")
+  }
+}

@@ -267,6 +267,54 @@ class MediaIndexSpec extends SparkSpec {
     assert(MediaIndexOps.rebucketIfNeeded(spark, prefix, candidatesPerBucketBudget = 1000000L).isEmpty)
   }
 
+  test("appends follow the live bucket spec after a rebucket: grown candidate pairs equal an unbucketed read") {
+    import spark.implicits._
+    val prefix = "mediaappendbkt"
+    Seq("_fps", "_chunks", "_meta").foreach(t => spark.sql(s"DROP TABLE IF EXISTS $prefix$t"))
+    MediaIndexOps.writeIndex(
+      media().filter(col("doc_id") % 5 =!= 0), Regions, Bands, buckets = 4, prefix = prefix)
+    MediaIndexOps.rebucket(spark, prefix, 8)
+    def ids() = spark.table(s"${prefix}_fps").select("doc_id").as[Long].collect().toSet
+    val before = ids()
+    // The caller still passes the build-time count; the append must
+    // take the table's live spec.
+    MediaIndexOps.dedupBatchAndGrow(
+      spark, prefix, media().filter(col("doc_id") % 5 === 0),
+      Regions, Bands, buckets = 4, maxHamming = MaxHamming)
+    val grown = ids() -- before
+    assert(grown.nonEmpty, "the batch admitted no keepers")
+    val broadcastBefore = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      def candidates() = {
+        val ch = spark.table(s"${prefix}_chunks")
+        ch.as("x").join(
+          ch.as("y"),
+          col("x.chunk_idx") === col("y.chunk_idx") &&
+            col("x.chunk_bits") === col("y.chunk_bits") &&
+            col("x.doc_id") < col("y.doc_id"),
+        ).select(col("x.doc_id"), col("y.doc_id")).as[(Long, Long)]
+      }
+      val joined = candidates()
+      assert(!joined.queryExecution.executedPlan.toString.contains("Exchange"),
+        "the grown chunk self-join must read the buckets without a shuffle")
+      // A row appended under a stale bucket count sits in the wrong
+      // bucket's file, and the exchange-free join misses its pairs.
+      val bucketed = joined.collect().toSet
+      spark.conf.set("spark.sql.sources.bucketing.enabled", "false")
+      val unbucketed = try candidates().collect().toSet
+      finally spark.conf.unset("spark.sql.sources.bucketing.enabled")
+      assert(bucketed.exists { case (a, b) => grown(a) || grown(b) },
+        "expected candidate pairs involving the appended keepers")
+      assert(bucketed == unbucketed)
+    } finally {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", broadcastBefore)
+      spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
+    }
+  }
+
   test("streaming dedup flags dups against index + earlier arrivals and grows the index with keepers") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
