@@ -513,7 +513,6 @@ object DedupOps {
     IndexCatalog.recoverDangling(spark, table)
     val np = newPairs.select(col("doc_a"), col("doc_b")).localCheckpoint()
     if (np.isEmpty) return
-    val buckets = IndexCatalog.tableBuckets(spark, table)
     val stored = spark.table(table)
     val endpoints = np.select(col("doc_a").as("doc_id"))
       .unionAll(np.select(col("doc_b").as("doc_id")))
@@ -530,14 +529,10 @@ object DedupOps {
       .select(col("doc_id").as("doc_a"), col("component").as("doc_b"))
       .localCheckpoint()
     val merged = connectedComponents(np.unionByName(stars))
-    val staged = s"${table}_grown"
-    spark.sql(s"DROP TABLE IF EXISTS $staged")
-    untouched
-      .unionByName(merged.select(col("doc_id"), col("component")))
-      .write.mode("overwrite")
-      .bucketBy(buckets, "doc_id").sortBy("doc_id")
-      .saveAsTable(staged)
-    IndexCatalog.swapStaged(spark, Seq((table, staged)))
+    IndexCatalog.swapStaged(
+      spark,
+      Seq(IndexCatalog.stageTableFrom(
+        spark, table, untouched.unionByName(merged.select(col("doc_id"), col("component"))))))
     spark.catalog.refreshTable(table)
   }
 

@@ -511,12 +511,8 @@ object GraphOps {
               .distinct()
               .join(spark.table(table), Seq("src", "dst"), "left_anti")
               .localCheckpoint())
-      val buckets = IndexCatalog.tableBuckets(spark, membersT)
       if (!memberAppend.isEmpty) {
-        memberAppend
-          .write.mode("append")
-          .bucketBy(buckets, "g")
-          .saveAsTable(membersT)
+        memberAppend.write.mode("append").insertInto(membersT)
         spark.catalog.refreshTable(membersT)
       }
       // Spec fault-injection seam (the LshIndexOps/SearchIndexOps
@@ -531,14 +527,10 @@ object GraphOps {
         IndexCatalog.swapStaged(
           spark,
           Seq(IndexCatalog.stageTableFrom(
-            spark, table,
-            edgesFromMembers(spark.table(membersT), maxGroupSize),
-            Seq("src"), Seq("src"), IndexCatalog.tableBuckets(spark, table))))
+            spark, table, edgesFromMembers(spark.table(membersT), maxGroupSize))))
         spark.catalog.refreshTable(table)
       } else edgeAppend.filter(!_.isEmpty).foreach { ea =>
-        ea.write.mode("append")
-          .bucketBy(IndexCatalog.tableBuckets(spark, table), "src").sortBy("src")
-          .saveAsTable(table)
+        ea.write.mode("append").insertInto(table)
         spark.catalog.refreshTable(table)
       }
       // Second seam: die between the edge mutation and the _deg refresh
@@ -562,9 +554,7 @@ object GraphOps {
     IndexCatalog.swapStaged(
       spark,
       Seq(IndexCatalog.stageTableFrom(
-        spark, degT,
-        spark.table(table).groupBy(col("src")).agg(count(lit(1)).as("out_deg")),
-        Seq("src"), Seq("src"), IndexCatalog.tableBuckets(spark, degT))))
+        spark, degT, spark.table(table).groupBy(col("src")).agg(count(lit(1)).as("out_deg")))))
     spark.catalog.refreshTable(degT)
   }
 
@@ -613,13 +603,7 @@ object GraphOps {
       table: String,
       maxFilesPerBucket: Int = 4,
   ): Seq[String] =
-    IndexCatalog.compactBucketed(
-      spark,
-      Seq(
-        (table, Seq("src"), Seq("src")),
-        (s"${table}_members", Seq("g"), Nil),
-      ),
-      maxFilesPerBucket)
+    IndexCatalog.compactBucketed(spark, Seq(table, s"${table}_members"), maxFilesPerBucket)
 
   /** PageRank over the GROWN artifact: the stored symmetric edges join
     * their maintained out-degrees — both bucketed on src at the same

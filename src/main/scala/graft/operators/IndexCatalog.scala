@@ -1,20 +1,23 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
+import org.apache.spark.sql.functions.{coalesce, col, count, expr, lit, sum}
 import org.apache.spark.sql.types.StringType
 
-/** Catalog lookups and the crash-repair ingest ledger shared by the
-  * persisted-index families ([[LshIndexOps]], [[SearchIndexOps]],
-  * [[MediaIndexOps]], [[VectorIndexOps]] and [[GraphOps]]' growable
-  * edge table) — one implementation of the rebucket-survival rule:
-  * appends MUST follow the live bucket spec (an `insertInto`, which
-  * takes the table's own spec, or a [[tableBuckets]] lookup) rather
-  * than take a bucket count as a parameter, because a hard-coded count
-  * goes stale the moment a rebucket runs and the next append then
-  * fails the bucket-spec match (killing a running streaming ingest,
-  * which survives a mid-stream rebucket precisely because of this
-  * rule).
+/** Catalog lookups, layout maintenance and the crash-repair ingest
+  * ledger shared by the persisted-index families ([[LshIndexOps]],
+  * [[SearchIndexOps]], [[MediaIndexOps]], [[VectorIndexOps]] and
+  * [[GraphOps]]' growable edge table). A table's bucket and sort
+  * columns are stated ONCE, by the build write's `bucketBy`/`sortBy`;
+  * from then on the catalog's `BucketSpec` is the only copy. Appends
+  * go through `insertInto`, which writes with the table's own spec, and
+  * every maintenance rewrite here ([[stageTableFrom]] and the rebucket
+  * and compaction built on it) reads the columns from that spec — so
+  * no caller restates a layout, and nothing holds a bucket count that
+  * a rebucket could make stale (a stale count fails the next append's
+  * bucket-spec match, killing a running streaming ingest, which
+  * survives a mid-stream rebucket precisely because of this rule).
   */
 private[graft] object IndexCatalog {
 
@@ -139,15 +142,20 @@ private[graft] object IndexCatalog {
     }
   }
 
-  /** The stored table's bucket count, or a hard error for tables that
-    * are not graft index tables (appending unbucketed data into an
-    * index would silently disable every pruned read path).
+  /** The stored table's layout as its catalog records it, or a hard
+    * error for tables that are not graft index tables (appending
+    * unbucketed data into an index would silently disable every pruned
+    * read path).
     */
-  def tableBuckets(spark: SparkSession, table: String): Int =
+  private def bucketSpec(spark: SparkSession, table: String): BucketSpec =
     spark.sessionState.catalog
       .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(table))
-      .bucketSpec.map(_.numBuckets)
+      .bucketSpec
       .getOrElse(sys.error(s"$table has no bucket spec — not a graft index table"))
+
+  /** The stored table's bucket count ([[bucketSpec]]). */
+  def tableBuckets(spark: SparkSession, table: String): Int =
+    bucketSpec(spark, table).numBuckets
 
   /** Swap fully-staged replacement tables over their live names — the
     * maintenance-commit step shared by every index family's rebucket
@@ -224,39 +232,40 @@ private[graft] object IndexCatalog {
 
   /** Write `table`'s replacement under a staged name at `buckets`
     * physical buckets, touching nothing live — the phase-1 primitive
-    * behind every rebucket and compaction. The explicit
-    * `repartition(buckets, keys)` matters: Spark's bucketed WRITE
-    * never shuffles on its own, so each input task writes one file per
-    * bucket value it holds — a T-task rewrite would emit up to
-    * T × buckets files, re-creating the fragmentation a compaction
-    * exists to remove. repartition's hash is the bucket hash
+    * behind every rebucket and compaction ([[stageTableFrom]] over the
+    * whole live table).
+    */
+  def stageTable(spark: SparkSession, table: String, buckets: Int): (String, String) =
+    stageTableFrom(spark, table, spark.table(table), Some(buckets))
+
+  /** Stage `source` as `table`'s replacement under `${table}_rebucket`,
+    * touching nothing live, with the bucket and sort columns of
+    * `table`'s catalog [[bucketSpec]] at `buckets` physical buckets (by
+    * default its current count). A `source` other than the whole table
+    * is a derived rewrite of it: a tombstone purge, a relabel, a grown
+    * cluster assignment, a rebuilt edge set or degree table.
+    *
+    * The explicit `repartition(buckets, keys)` matters: Spark's
+    * bucketed WRITE never shuffles on its own, so each input task
+    * writes one file per bucket value it holds — a T-task rewrite would
+    * emit up to T × buckets files, re-creating the fragmentation a
+    * compaction exists to remove. repartition's hash is the bucket hash
     * (pmod(murmur3(keys), buckets)), so after it each task holds
     * exactly one bucket and the staged table lands at ONE file per
-    * bucket.
-    */
-  def stageTable(
-      spark: SparkSession,
-      table: String,
-      keys: Seq[String],
-      sortCols: Seq[String],
-      buckets: Int,
-  ): (String, String) =
-    stageTableFrom(spark, table, spark.table(table), keys, sortCols, buckets)
-
-  /** [[stageTable]] with an explicit source frame — for maintenance
-    * rewrites that stage a FILTERED view of the live table (tombstone
-    * purges). The source must read `table` (the conf guard below is
-    * what makes its bucketed scan align with the write; planning
-    * happens at the write action, inside the guard).
+    * bucket. Planning happens at the write action, inside the conf
+    * guard below, which is what makes a bucketed scan of `table` align
+    * with the write.
     */
   def stageTableFrom(
       spark: SparkSession,
       table: String,
       source: DataFrame,
-      keys: Seq[String],
-      sortCols: Seq[String],
-      buckets: Int,
+      buckets: Option[Int] = None,
   ): (String, String) = {
+    val spec = bucketSpec(spark, table)
+    val n = buckets.getOrElse(spec.numBuckets)
+    val keys = spec.bucketColumnNames
+    val sortCols = spec.sortColumnNames
     val tmp = s"${table}_rebucket"
     spark.sql(s"DROP TABLE IF EXISTS $tmp")
     // autoBucketedScan must be OFF for this read (saved/restored): with
@@ -275,13 +284,60 @@ private[graft] object IndexCatalog {
     spark.conf.set(conf, "false")
     try {
       val w = source
-        .repartition(buckets, keys.map(col): _*)
+        .repartition(n, keys.map(col): _*)
         .write.mode("overwrite")
-        .bucketBy(buckets, keys.head, keys.tail: _*)
+        .bucketBy(n, keys.head, keys.tail: _*)
       (if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w)
         .saveAsTable(tmp)
     } finally spark.conf.set(conf, saved)
     (table, tmp)
+  }
+
+  /** Phase 1 of [[rebucket]]: stage every table's replacement at
+    * `buckets`, touching nothing live. Returns the (live, staged) pairs
+    * for [[swapStaged]].
+    */
+  def stageRebucket(spark: SparkSession, tables: Seq[String], buckets: Int): Seq[(String, String)] =
+    tables.map(stageTable(spark, _, buckets))
+
+  /** Rewrite `tables` at `buckets` physical buckets, each keeping its
+    * bucket and sort columns. Every replacement is staged before any
+    * live name moves, so readers see the complete old tables through
+    * the whole rewrite, then [[swapStaged]] commits them.
+    */
+  def rebucket(spark: SparkSession, tables: Seq[String], buckets: Int): Unit =
+    swapStaged(spark, stageRebucket(spark, tables, buckets))
+
+  /** The rebucket dial wired to candidate cost: a self-join on
+    * `costTable`'s bucket columns costs Σ s·(s−1)/2 over its key
+    * groups, and with one task per physical bucket the per-task share
+    * is cost / buckets. When that share exceeds `budget`, [[rebucket]]
+    * `tables` (which include `costTable`) with enough buckets to bring
+    * it back under, capped at `maxBuckets`. Returns the new bucket
+    * count, or None when the current layout is within budget. The
+    * one-row `head()` is a driver-side scalar read, not a data collect.
+    */
+  def rebucketIfNeeded(
+      spark: SparkSession,
+      costTable: String,
+      tables: Seq[String],
+      budget: Long,
+      maxBuckets: Int,
+  ): Option[Int] = {
+    require(budget > 0, "budget must be positive")
+    val spec = bucketSpec(spark, costTable)
+    val total = spark
+      .table(costTable)
+      .groupBy(spec.bucketColumnNames.map(col): _*)
+      .agg(count(lit(1)).as("s"))
+      .agg(coalesce(sum(expr("s * (s - 1) DIV 2")), lit(0L)))
+      .head()
+      .getLong(0)
+    val needed = math.min(maxBuckets.toLong, (total + budget - 1) / budget).toInt
+    if (needed > spec.numBuckets) {
+      rebucket(spark, tables, needed)
+      Some(needed)
+    } else None
   }
 
   /** The worst bucket's physical file count — the cost a pruned read
@@ -324,15 +380,12 @@ private[graft] object IndexCatalog {
     */
   def compactBucketed(
       spark: SparkSession,
-      specs: Seq[(String, Seq[String], Seq[String])],
+      tables: Seq[String],
       maxPerBucket: Int,
   ): Seq[String] = {
     require(maxPerBucket >= 1, "maxFilesPerBucket must be at least 1")
-    val picked = specs.filter { case (t, _, _) => maxFilesPerBucket(spark, t) > maxPerBucket }
-    val staged = picked.map { case (t, keys, sortCols) =>
-      stageTable(spark, t, keys, sortCols, tableBuckets(spark, t))
-    }
-    swapStaged(spark, staged)
-    picked.map(_._1)
+    val picked = tables.filter(maxFilesPerBucket(spark, _) > maxPerBucket)
+    swapStaged(spark, picked.map(t => stageTableFrom(spark, t, spark.table(t))))
+    picked
   }
 }

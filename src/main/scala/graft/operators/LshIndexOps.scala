@@ -434,8 +434,8 @@ object LshIndexOps {
     * no matter how large the corpus has grown.
     *
     * Both replacement tables are STAGED before either live name moves
-    * ([[stageRebucket]]) — readers see the complete old index through
-    * the whole rewrite — then committed by
+    * ([[IndexCatalog.rebucket]]) — readers see the complete old index
+    * through the whole rewrite — then committed by
     * [[IndexCatalog.swapStaged]]'s rename-first sequence (live →
     * `_old`, staged → live, drop `_old`), so a crash mid-swap leaves a
     * recovery copy rather than a dangling live name and the
@@ -447,25 +447,11 @@ object LshIndexOps {
     * `buckets` argument no longer steers appends).
     */
   def rebucket(spark: SparkSession, prefix: String, newBuckets: Int): Unit =
-    IndexCatalog.swapStaged(spark, stageRebucket(spark, prefix, newBuckets))
+    IndexCatalog.rebucket(spark, bucketedTables(prefix), newBuckets)
 
-  /** Phase 1 of [[rebucket]]: write both tables' replacements under
-    * staged names, touching nothing live.
-    */
-  private def bucketedTables(prefix: String): Seq[(String, Seq[String], Seq[String])] =
-    Seq(
-      (s"${prefix}_docs", Seq("doc_id"), Seq("doc_id")),
-      (s"${prefix}_bands", Seq("band_idx", "band_key"), Nil),
-    )
-
-  private[graft] def stageRebucket(
-      spark: SparkSession,
-      prefix: String,
-      newBuckets: Int,
-  ): Seq[(String, String)] =
-    bucketedTables(prefix).map { case (table, keys, sortCols) =>
-      IndexCatalog.stageTable(spark, table, keys, sortCols, newBuckets)
-    }
+  /** The tables [[rebucket]], [[compact]] and [[fileStats]] cover. */
+  private def bucketedTables(prefix: String): Seq[String] =
+    Seq(s"${prefix}_docs", s"${prefix}_bands")
 
   /** Append compaction at the current bucket count — the cheap
     * between-rebuckets maintenance: [[dedupBatchAndGrow]] adds one
@@ -482,44 +468,22 @@ object LshIndexOps {
     * metadata; no oracle).
     */
   def fileStats(spark: SparkSession, prefix: String): org.apache.spark.sql.DataFrame =
-    IndexCatalog.fileStats(spark, bucketedTables(prefix).map(_._1))
+    IndexCatalog.fileStats(spark, bucketedTables(prefix))
 
-  /** The compaction dial wired to the health stat the dd_index_stats
-    * view exposes: the candidate self-join's total cost is Σ s·(s−1)/2 over
-    * band buckets, and with one task per physical bucket the per-task
-    * share is cost / buckets. When that share exceeds
-    * `candidatesPerBucketBudget`, rewrite the index with enough buckets
-    * to bring it back under budget (capped at `maxBuckets`). Returns
-    * the new bucket count, or None when the current layout is within
-    * budget. The one-row `head()` is the same driver-side scalar read
-    * as the cluster-convergence checksum — not a data collect.
+  /** The rebucket dial wired to the health stat the dd_index_stats
+    * view exposes: [[IndexCatalog.rebucketIfNeeded]] with the band
+    * table's candidate cost, rewriting both tables when the per-bucket
+    * share exceeds `candidatesPerBucketBudget`. Returns the new bucket
+    * count, or None when the current layout is within budget.
     */
   def rebucketIfNeeded(
       spark: SparkSession,
       prefix: String,
       candidatesPerBucketBudget: Long,
       maxBuckets: Int = 4096,
-  ): Option[Int] = {
-    require(candidatesPerBucketBudget > 0, "budget must be positive")
-    val totalCandidates = spark
-      .table(s"${prefix}_bands")
-      .groupBy(col("band_idx"), col("band_key"))
-      .agg(count(lit(1)).as("s"))
-      .agg(coalesce(sum(expr("s * (s - 1) DIV 2")), lit(0L)))
-      .head()
-      .getLong(0)
-    val current = spark.sessionState.catalog
-      .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(s"${prefix}_bands"))
-      .bucketSpec.map(_.numBuckets).getOrElse(1)
-    val needed = math.min(
-      maxBuckets.toLong,
-      (totalCandidates + candidatesPerBucketBudget - 1) / candidatesPerBucketBudget,
-    ).toInt
-    if (needed > current) {
-      rebucket(spark, prefix, needed)
-      Some(needed)
-    } else None
-  }
+  ): Option[Int] =
+    IndexCatalog.rebucketIfNeeded(
+      spark, s"${prefix}_bands", bucketedTables(prefix), candidatesPerBucketBudget, maxBuckets)
 
   /** One micro-batch of the STREAMING dedup: returns the batch's
     * near-dup rows `(new_doc_id, dup_of, jaccard)` and GROWS the index

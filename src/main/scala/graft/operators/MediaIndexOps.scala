@@ -548,20 +548,16 @@ object MediaIndexOps {
           // swapStaged's rename-instant window is RETRIED on the read
           // side (IndexCatalog.readLive → `_old` fallback) and a crash
           // between the renames is repaired by recoverDangling above.
-          val metaBuckets = IndexCatalog.tableBuckets(spark, s"${prefix}_meta")
-          val staged = s"${prefix}_meta_relabel"
-          spark.sql(s"DROP TABLE IF EXISTS $staged")
-          storedMeta
-            .join(batchKeeper, Seq("payload_md5"), "left")
-            .select(
-              metaCols.map(col) :+
-                least(col("ex_keeper"), coalesce(col("batch_keeper"), col("ex_keeper")))
-                  .as("ex_keeper"): _*)
-            .localCheckpoint()
-            .write.mode("overwrite")
-            .bucketBy(metaBuckets, "doc_id").sortBy("doc_id")
-            .saveAsTable(staged)
-          IndexCatalog.swapStaged(spark, Seq((s"${prefix}_meta", staged)))
+          val staged = IndexCatalog.stageTableFrom(
+            spark, s"${prefix}_meta",
+            storedMeta
+              .join(batchKeeper, Seq("payload_md5"), "left")
+              .select(
+                metaCols.map(col) :+
+                  least(col("ex_keeper"), coalesce(col("batch_keeper"), col("ex_keeper")))
+                    .as("ex_keeper"): _*)
+              .localCheckpoint())
+          IndexCatalog.swapStaged(spark, Seq(staged))
           spark.catalog.refreshTable(s"${prefix}_meta")
         }
         Some(newMeta)
@@ -896,59 +892,33 @@ object MediaIndexOps {
     IndexCatalog.compactBucketed(spark, bucketedTables(prefix), maxFilesPerBucket)
 
   /** Rewrite both tables at `newBuckets` with the staged rename-first
-    * swap ([[IndexCatalog.swapStaged]]): readers see the complete old
+    * swap ([[IndexCatalog.rebucket]]): readers see the complete old
     * index throughout, a crash leaves a recovery copy.
     */
   def rebucket(spark: SparkSession, prefix: String, newBuckets: Int): Unit =
-    IndexCatalog.swapStaged(
-      spark,
-      bucketedTables(prefix).map { case (t, keys, sortCols) =>
-        IndexCatalog.stageTable(spark, t, keys, sortCols, newBuckets)
-      })
+    IndexCatalog.rebucket(spark, bucketedTables(prefix), newBuckets)
 
   /** The compaction dial wired to the stat `mm_index_stats` exposes:
-    * candidate cost is Σ s·(s−1)/2 over chunk buckets, one task per
-    * physical bucket — when the per-task share exceeds the budget,
-    * rewrite with enough buckets to bring it back under (the
-    * [[LshIndexOps.rebucketIfNeeded]] policy on the chunk table).
-    * Returns the new bucket count, or None when within budget.
+    * [[IndexCatalog.rebucketIfNeeded]] with the chunk table's candidate
+    * cost (the [[LshIndexOps.rebucketIfNeeded]] policy). Returns the
+    * new bucket count, or None when within budget.
     */
   def rebucketIfNeeded(
       spark: SparkSession,
       prefix: String,
       candidatesPerBucketBudget: Long,
       maxBuckets: Int = 4096,
-  ): Option[Int] = {
-    require(candidatesPerBucketBudget > 0, "budget must be positive")
-    val totalCandidates = spark
-      .table(s"${prefix}_chunks")
-      .groupBy(col("chunk_idx"), col("chunk_bits"))
-      .agg(count(lit(1)).as("s"))
-      .agg(coalesce(sum(expr("s * (s - 1) DIV 2")), lit(0L)))
-      .head()
-      .getLong(0)
-    val current = spark.sessionState.catalog
-      .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(s"${prefix}_chunks"))
-      .bucketSpec.map(_.numBuckets).getOrElse(1)
-    val needed = math.min(
-      maxBuckets.toLong,
-      (totalCandidates + candidatesPerBucketBudget - 1) / candidatesPerBucketBudget,
-    ).toInt
-    if (needed > current) {
-      rebucket(spark, prefix, needed)
-      Some(needed)
-    } else None
-  }
+  ): Option[Int] =
+    IndexCatalog.rebucketIfNeeded(
+      spark, s"${prefix}_chunks", bucketedTables(prefix), candidatesPerBucketBudget, maxBuckets)
 
-  private def bucketedTables(prefix: String): Seq[(String, Seq[String], Seq[String])] =
-    Seq(
-      (s"${prefix}_fps", Seq("doc_id"), Seq("doc_id")),
-      (s"${prefix}_chunks", Seq("chunk_idx", "chunk_bits"), Nil),
-    )
+  /** The tables [[rebucket]], [[compact]] and [[fileStats]] cover. */
+  private def bucketedTables(prefix: String): Seq[String] =
+    Seq(s"${prefix}_fps", s"${prefix}_chunks")
 
   /** Physical layout health — file counts per table (operational
     * metadata; no oracle).
     */
   def fileStats(spark: SparkSession, prefix: String): DataFrame =
-    IndexCatalog.fileStats(spark, bucketedTables(prefix).map(_._1))
+    IndexCatalog.fileStats(spark, bucketedTables(prefix))
 }

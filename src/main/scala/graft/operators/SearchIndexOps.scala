@@ -44,17 +44,12 @@ object SearchIndexOps {
     */
   def writeIndex(docs: DataFrame, buckets: Int, prefix: String): Unit = {
     IndexCatalog.dropLedger(docs.sparkSession, prefix)
-    writeTables(docs, buckets, prefix, org.apache.spark.sql.SaveMode.Overwrite)
+    writeTables(docs, Some(buckets), prefix)
   }
 
-  private def writeTables(
-      docs: DataFrame,
-      buckets: Int,
-      prefix: String,
-      mode: org.apache.spark.sql.SaveMode,
-  ): Unit = {
+  private def writeTables(docs: DataFrame, buckets: Option[Int], prefix: String): Unit = {
     val bk = batchKeyOf(docs)
-    tableAppends(docs, buckets, prefix, mode, bk).foreach { case (t, run) =>
+    tableWrites(docs, buckets, prefix, bk).foreach { case (t, run) =>
       run()
       docs.sparkSession.catalog.refreshTable(s"${prefix}_$t")
     }
@@ -84,12 +79,17 @@ object SearchIndexOps {
     * (postings/docs rows carry their doc_ids; without the tag, df/meta
     * partials from a half-landed batch would be indistinguishable from
     * history).
+    *
+    * `buckets` set builds the tables at that count — the one place each
+    * layout is stated; unset appends through `insertInto`, so each
+    * table keeps its own catalog layout (a rebucket that crashed
+    * between two table swaps leaves the tables at different counts, and
+    * appends still land).
     */
-  private def tableAppends(
+  private def tableWrites(
       docs: DataFrame,
-      buckets: Int,
+      buckets: Option[Int],
       prefix: String,
-      mode: org.apache.spark.sql.SaveMode,
       batchKey: Long,
   ): Seq[(String, () => Unit)] = {
     lazy val p = SearchOps.postings(docs).localCheckpoint()
@@ -98,41 +98,35 @@ object SearchIndexOps {
     lazy val dl = docs
       .select(col("doc_id"), size(split(col("text"), " ")).cast("long").as("dl"))
       .localCheckpoint()
+    type Writer = org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row]
+    def write(t: String, rows: => DataFrame)(layout: (Writer, Int) => Writer) =
+      (t, () => buckets match {
+        case Some(n) => layout(rows.write.mode("overwrite"), n).saveAsTable(s"${prefix}_$t")
+        case None => rows.write.mode("append").insertInto(s"${prefix}_$t")
+      })
     Seq(
-      ("postings", () =>
-        p.write.mode(mode)
-          .bucketBy(buckets, "term").sortBy("term", "doc_id", "pos")
-          .saveAsTable(s"${prefix}_postings")),
-      ("lexicon", () =>
+      write("postings", p)((w, n) => w.bucketBy(n, "term").sortBy("term", "doc_id", "pos")),
+      write("lexicon",
         p.groupBy(col("term"))
           .agg(countDistinct(col("doc_id")).as("df"))
-          .withColumn("batch_key", lit(batchKey))
-          .write.mode(mode)
-          .bucketBy(buckets, "term")
-          .saveAsTable(s"${prefix}_lexicon")),
-      ("meta", () =>
+          .withColumn("batch_key", lit(batchKey)))((w, n) => w.bucketBy(n, "term")),
+      write("meta",
         dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("n_tokens"))
-          .withColumn("batch_key", lit(batchKey))
-          .write.mode(mode)
-          .saveAsTable(s"${prefix}_meta")),
-      ("docs", () =>
-        dl.write.mode(mode)
-          .bucketBy(buckets, "doc_id")
-          .saveAsTable(s"${prefix}_docs")),
+          .withColumn("batch_key", lit(batchKey)))((w, _) => w),
+      write("docs", dl)((w, n) => w.bucketBy(n, "doc_id")),
     )
   }
 
   /** Incremental append: index a new batch of documents (doc_ids
     * disjoint from the stored corpus) without touching existing data —
-    * one new file per bucket for postings/lexicon, one meta row, at
-    * whatever bucket count the stored tables currently have. The
-    * explicit refresh matters: the session caches each table's file
-    * listing on first read, and a stale cache would silently serve
-    * pre-append results to the next query.
+    * one new file per bucket for postings/lexicon, one meta row, each
+    * table at its own stored layout (`insertInto`). The explicit
+    * refresh matters: the session caches each table's file listing on
+    * first read, and a stale cache would silently serve pre-append
+    * results to the next query.
     */
   def appendDocuments(spark: SparkSession, prefix: String, batch: DataFrame): Unit =
-    writeTables(batch, IndexCatalog.tableBuckets(spark, s"${prefix}_postings"), prefix,
-      org.apache.spark.sql.SaveMode.Append)
+    writeTables(batch, None, prefix)
 
   /** Index health stats — the operational view of the stored postings:
     * per term-bucket file count proxy isn't observable from SQL, but
@@ -155,8 +149,8 @@ object SearchIndexOps {
     * reads degrade as files accumulate, and the bucket count chosen at
     * build time caps the pruned read's parallelism forever. Content is
     * bit-preserved; only layout changes (SearchIndexSpec asserts).
-    * Appends survive a rebucket because they read the live bucket
-    * count from the catalog. Swap discipline: ALL replacement tables
+    * Appends survive a rebucket because they go through `insertInto`,
+    * which writes with each table's own stored layout. Swap discipline: ALL replacement tables
     * are staged first ([[stageRebucket]]) — readers see the complete
     * old index throughout the rewrite (SearchIndexSpec reads
     * mid-stage) — then each is committed by
@@ -166,15 +160,11 @@ object SearchIndexOps {
     * single-maintainer contract covers them.
     */
   def rebucket(spark: SparkSession, prefix: String, newBuckets: Int): Unit =
-    IndexCatalog.swapStaged(spark, stageRebucket(spark, prefix, newBuckets))
+    IndexCatalog.rebucket(spark, bucketedTables(prefix), newBuckets)
 
-  /** The family's bucketed tables: (name, bucket keys, sort keys). */
-  private def bucketedTables(prefix: String): Seq[(String, Seq[String], Seq[String])] =
-    Seq(
-      (s"${prefix}_postings", Seq("term"), Seq("term", "doc_id", "pos")),
-      (s"${prefix}_lexicon", Seq("term"), Nil),
-      (s"${prefix}_docs", Seq("doc_id"), Nil),
-    )
+  /** The family's bucketed tables. */
+  private def bucketedTables(prefix: String): Seq[String] =
+    Seq(s"${prefix}_postings", s"${prefix}_lexicon", s"${prefix}_docs")
 
   /** Phase 1 of [[rebucket]]: write every table's replacement under a
     * staged name, touching nothing live. Returns (live, staged) pairs
@@ -185,9 +175,7 @@ object SearchIndexOps {
       prefix: String,
       newBuckets: Int,
   ): Seq[(String, String)] =
-    bucketedTables(prefix).map { case (table, keys, sortCols) =>
-      IndexCatalog.stageTable(spark, table, keys, sortCols, newBuckets)
-    }
+    IndexCatalog.stageRebucket(spark, bucketedTables(prefix), newBuckets)
 
   /** Append compaction — the maintenance pass between rebuckets: every
     * append adds one file per touched bucket, so after N appends a
@@ -224,8 +212,7 @@ object SearchIndexOps {
   def fileStats(spark: SparkSession, prefix: String): DataFrame =
     IndexCatalog.fileStats(
       spark,
-      bucketedTables(prefix).map(_._1) ++
-        Seq(s"${prefix}_meta", IndexCatalog.ledgerTable(prefix)))
+      bucketedTables(prefix) ++ Seq(s"${prefix}_meta", IndexCatalog.ledgerTable(prefix)))
 
   /** The replay guard's surviving rows: batch minus already-indexed
     * doc_ids. Guard cost is O(batch), not O(index): the anti-join only
@@ -317,11 +304,10 @@ object SearchIndexOps {
     if (fresh.isEmpty) return
     val bk = batchKeyOf(fresh)
     IndexCatalog.ledgered(spark, prefix, bk.toString) { repairing =>
-      val buckets = IndexCatalog.tableBuckets(spark, s"${prefix}_postings")
       // One fresh-id collect per REPAIR, shared by every table probe
       // (lazy inside the probe — the fast path never pays it).
       val probe = new IndexCatalog.PresenceProbe(spark, fresh)
-      tableAppends(fresh, buckets, prefix, org.apache.spark.sql.SaveMode.Append, bk)
+      tableWrites(fresh, None, prefix, bk)
         .foreach { case (t, run) =>
           if (!repairing || !batchPresent(spark, prefix, t, probe, bk)) {
             run()

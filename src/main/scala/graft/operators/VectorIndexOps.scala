@@ -194,12 +194,11 @@ object VectorIndexOps {
 
   /** Incremental ingest: assign a new batch (vec_ids disjoint from the
     * stored corpus) against the STORED codebook and append — one new
-    * file per touched bucket, existing data untouched, at whatever
-    * bucket count the stored table currently has (read from the
-    * catalog, so an append never goes stale against a rebucketed
-    * table). The refresh matters for the same reason as in
-    * [[SearchIndexOps]]: a stale relation cache would silently serve
-    * pre-append search results.
+    * file per touched bucket, existing data untouched, through
+    * `insertInto` (the stored table's own layout, so an append never
+    * goes stale against a rebucketed table). The refresh matters for
+    * the same reason as in [[SearchIndexOps]]: a stale relation cache
+    * would silently serve pre-append search results.
     */
   def appendVectors(spark: SparkSession, prefix: String, batch: DataFrame): Unit =
     appendVectorsGuarded(spark, prefix, batch, repairing = false)
@@ -244,7 +243,6 @@ object VectorIndexOps {
     if (spark.catalog.tableExists(tomb) && !spark.table(tomb).isEmpty &&
         !batch.join(broadcast(spark.table(tomb)), Seq("vec_id"), "left_semi").isEmpty)
       purgeTombstones(spark, prefix)
-    val buckets = IndexCatalog.tableBuckets(spark, s"${prefix}_vectors")
     val cb = spark.table(s"${prefix}_codebook")
     // Assign ONCE and materialize: the projection feeds two appends
     // (vectors + radius partials), and the batch source should be
@@ -258,10 +256,7 @@ object VectorIndexOps {
       new IndexCatalog.PresenceProbe(spark, assigned, idCol = "vec_id")(
         s"${prefix}_vectors")
     if (!repairing || !vectorsPresent) {
-      assigned
-        .write.mode("append")
-        .bucketBy(buckets, "cell")
-        .saveAsTable(s"${prefix}_vectors")
+      assigned.write.mode("append").insertInto(s"${prefix}_vectors")
       spark.catalog.refreshTable(s"${prefix}_vectors")
     }
     if (crashAfter == "vectors")
@@ -306,14 +301,10 @@ object VectorIndexOps {
     if (!spark.catalog.tableExists(tomb) || spark.table(tomb).isEmpty) Nil
     else {
       val tables = bucketedTables(spark, prefix)
-      val staged = tables.map { case (table, keys, sortCols) =>
-        IndexCatalog.stageTableFrom(
-          spark, table, live(spark, prefix, table), keys, sortCols,
-          IndexCatalog.tableBuckets(spark, table))
-      }
-      IndexCatalog.swapStaged(spark, staged)
+      IndexCatalog.swapStaged(
+        spark, tables.map(t => IndexCatalog.stageTableFrom(spark, t, live(spark, prefix, t))))
       spark.sql(s"TRUNCATE TABLE $tomb")
-      tables.map(_._1)
+      tables
     }
   }
 
@@ -626,14 +617,8 @@ object VectorIndexOps {
       .start()
 
   /** The family's bucketed tables (codes only once published). */
-  private def bucketedTables(
-      spark: SparkSession,
-      prefix: String,
-  ): Seq[(String, Seq[String], Seq[String])] =
-    Seq((s"${prefix}_vectors", Seq("cell"), Nil)) ++
-      (if (spark.catalog.tableExists(s"${prefix}_codes"))
-         Seq((s"${prefix}_codes", Seq("cell"), Nil))
-       else Nil)
+  private def bucketedTables(spark: SparkSession, prefix: String): Seq[String] =
+    s"${prefix}_vectors" +: Seq(s"${prefix}_codes").filter(spark.catalog.tableExists)
 
   /** Append compaction — every [[appendVectors]] (and every streaming
     * micro-batch) adds one file per touched cell bucket, so probed-cell
@@ -652,7 +637,7 @@ object VectorIndexOps {
   def fileStats(spark: SparkSession, prefix: String): DataFrame =
     IndexCatalog.fileStats(
       spark,
-      bucketedTables(spark, prefix).map(_._1)
+      bucketedTables(spark, prefix)
         ++ Seq(s"${prefix}_codebook", s"${prefix}_pq_codebook", IndexCatalog.ledgerTable(prefix)),
     )
 

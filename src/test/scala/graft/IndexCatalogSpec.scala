@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.functions.col
 import graft.operators.IndexCatalog
 
@@ -8,6 +10,8 @@ import graft.operators.IndexCatalog
   * an intent and a commit row, a crash leaves the intent for a
   * repairing rerun, a committed key never runs again, and a foreign
   * table under the ledger's name is refused rather than reinterpreted.
+  * Staged layout rewrites (rebucket, compaction) keep the bucket and
+  * sort columns the catalog records for the live table.
   */
 class IndexCatalogSpec extends SparkSpec {
 
@@ -73,5 +77,36 @@ class IndexCatalogSpec extends SparkSpec {
     assert(e.getMessage.contains(ledger), e.getMessage)
     assert(!called)
     assert(spark.table(ledger).count() == 1, "the foreign table must be left as it was")
+  }
+
+  test("staged rewrites keep the live table's bucket and sort columns") {
+    import spark.implicits._
+    val t = "layoutkeep"
+    val plain = "layoutplain"
+    Seq(t, plain).foreach(n => spark.sql(s"DROP TABLE IF EXISTS $n"))
+    (0 until 200).map(i => (i % 7, i % 5, i.toLong)).toDF("a", "b", "c")
+      .write.bucketBy(4, "a", "b").sortBy("a", "c").saveAsTable(t)
+    def layout = spark.sessionState.catalog.getTableMetadata(TableIdentifier(t)).bucketSpec
+    def rows = spark.table(t).collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).sorted.toSeq
+    val expected = BucketSpec(8, Seq("a", "b"), Seq("a", "c"))
+    val built = rows
+
+    IndexCatalog.rebucket(spark, Seq(t), 8)
+    assert(layout.contains(expected))
+    assert(rows == built)
+
+    Seq((3, 4, 1000L)).toDF("a", "b", "c").write.mode("append").insertInto(t)
+    spark.catalog.refreshTable(t)
+    assert(IndexCatalog.maxFilesPerBucket(spark, t) == 2)
+    assert(IndexCatalog.compactBucketed(spark, Seq(t), 1) == Seq(t))
+    assert(layout.contains(expected))
+    assert(IndexCatalog.maxFilesPerBucket(spark, t) == 1, "compaction writes one file per bucket")
+    assert(spark.table(t).inputFiles.length <= 8)
+    assert(rows == (built :+ ((3, 4, 1000L))).sorted)
+
+    Seq((1, 2, 3L)).toDF("a", "b", "c").write.saveAsTable(plain)
+    val e = intercept[RuntimeException](IndexCatalog.stageTable(spark, plain, 4))
+    assert(e.getMessage.contains(plain), e.getMessage)
+    assert(!spark.catalog.tableExists(s"${plain}_rebucket"))
   }
 }

@@ -292,6 +292,34 @@ class SearchIndexSpec extends SparkSpec {
     assert(graft.operators.IndexCatalog.tableBuckets(spark, s"${prefix}_postings") == 16)
   }
 
+  test("an append after a rebucket interrupted between table swaps lands in every table") {
+    import spark.implicits._
+    import graft.operators.IndexCatalog
+    def build(prefix: String): Unit = {
+      Seq("postings", "lexicon", "docs", "meta").foreach { t =>
+        Seq("", "_rebucket", "_old").foreach(s => spark.sql(s"DROP TABLE IF EXISTS ${prefix}_$t$s"))
+      }
+      SearchIndexOps.writeIndex(Tables.documents(spark, Sf), buckets = 4, prefix = prefix)
+    }
+    build("searchhalf")
+    build("searchwhole")
+    // The process dies after swapStaged renamed postings and before it
+    // reached lexicon and docs: the tables now disagree on bucket count.
+    val staged = SearchIndexOps.stageRebucket(spark, "searchhalf", newBuckets = 16)
+    IndexCatalog.swapStaged(spark, staged.filter(_._1 == "searchhalf_postings"))
+    assert(IndexCatalog.tableBuckets(spark, "searchhalf_postings") == 16)
+    assert(IndexCatalog.tableBuckets(spark, "searchhalf_lexicon") == 4)
+    val batch = Seq((900002L, "spark dup table spark window")).toDF("doc_id", "text")
+    SearchIndexOps.appendDocuments(spark, "searchhalf", batch)
+    SearchIndexOps.appendDocuments(spark, "searchwhole", batch)
+    assert(spark.table("searchhalf_docs").filter(col("doc_id") === 900002L).count() == 1,
+      "the append must land in _docs")
+    assert(
+      SearchIndexOps.searchRanked(spark, "searchhalf", RankTerms, 10).collect().toSeq ==
+        SearchIndexOps.searchRanked(spark, "searchwhole", RankTerms, 10).collect().toSeq,
+      "ranked results must equal the same append on an index with no partial swap")
+  }
+
   test("mid-swap reads retry then fall back to _old; a dangling _old is recovered") {
     import graft.operators.IndexCatalog
     val prefix = "searchdangle"
