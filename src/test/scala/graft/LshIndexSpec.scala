@@ -287,7 +287,7 @@ class LshIndexSpec extends SparkSpec {
       spark.catalog.refreshTable(t)
       t -> spark.table(t).inputFiles.length
     }.toMap
-    assert(LshIndexOps.fileStats(spark, prefix).count() == 2)
+    assert(LshIndexOps.fileStats(spark, prefix).count() == 3)
     Seq(1, 2).foreach { r =>
       // The second append follows a rebucket of docs and bands while the
       // caller still passes the old count: appends take the live spec.
@@ -328,6 +328,14 @@ class LshIndexSpec extends SparkSpec {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", broadcastBefore)
       spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
     }
+    // _meta is maintained with docs and bands: compaction collapses its
+    // appends to one file per bucket and keeps its rows.
+    val meta = s"${prefix}_meta"
+    val metaRows = spark.table(meta).collect().toSeq.sortBy(_.getLong(0))
+    assert(LshIndexOps.compact(spark, prefix, 1).contains(meta))
+    val stats = LshIndexOps.fileStats(spark, prefix).filter(col("table") === meta).collect()
+    assert(stats.map(_.getLong(2)).toSeq == Seq(1L), s"$meta not compacted: ${stats.mkString}")
+    assert(spark.table(meta).collect().toSeq.sortBy(_.getLong(0)) == metaRows)
   }
 
   test("text upload verdict ranking: exact before near, then highest Jaccard, then the smallest stored id") {
@@ -367,6 +375,133 @@ class LshIndexSpec extends SparkSpec {
     assert(near.filter(_._1 == 100L).map(_._2).toSet == Set(1L, 5L, 10L))
     val j = near.filter(_._1 == 101L).map(r => r._2 -> r._3).toMap
     assert(j.keySet == Set(15L, 20L, 30L) && j(20L) == j(30L) && j(15L) < j(20L))
+  }
+
+  /** A stored corpus with exact copies (ids 5/10 and 20/30) and near
+    * copies (ids 1 and 15) of two random texts, under `prefix` with its
+    * `_meta` table. Returns the two texts and a probe one edit from 20
+    * and 30 (tied), three from 15.
+    */
+  private def verdictFixture(prefix: String): (String, String, String) = {
+    import spark.implicits._
+    Seq("_docs", "_bands", "_meta", "_batches")
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $prefix$t"))
+    val rnd = new scala.util.Random(7)
+    def text(): Array[String] = Array.fill(100)(Iterator.fill(6)(('a' + rnd.nextInt(26)).toChar).mkString)
+    def edit(words: Array[String], at: Int*): String =
+      words.indices.map(i => if (at.contains(i)) s"edit$i" else words(i)).mkString(" ")
+    val (t, b) = (text(), text())
+    val storedDocs = Seq(
+      1L -> edit(t, 40), 5L -> t.mkString(" "), 10L -> t.mkString(" "),
+      15L -> edit(b, 20, 50, 80), 20L -> b.mkString(" "), 30L -> b.mkString(" "),
+    ).toDF("doc_id", "text")
+    LshIndexOps.writeIndex(storedDocs, N, K, Bands, buckets = 4, prefix = prefix)
+    LshIndexOps.writeMetaTable(storedDocs, buckets = 4, prefix = prefix)
+    (t.mkString(" "), b.mkString(" "), edit(b, 50))
+  }
+
+  test("the bounded and distributed upload verdicts give identical rows and schema") {
+    import spark.implicits._
+    val prefix = "lshverdictpaths"
+    val (t, b, probeNear) = verdictFixture(prefix)
+    val other = "an unrelated upload with no stored neighbour at all in the index"
+    // A stored doc whose band rows sit one band index over: every key of
+    // its probe is stored, but no (band_idx, band_key) pair is.
+    val shifted = "a stored document whose band keys were filed under the wrong band index"
+    LshIndexOps.writeIndex(Seq(50L -> shifted).toDF("doc_id", "text"), N, K, Bands, 4, s"${prefix}src")
+    spark.table(s"${prefix}src_bands")
+      .select(col("doc_id"), ((col("band_idx") + 1) % Bands).as("band_idx"), col("band_key"))
+      .write.mode("append").insertInto(s"${prefix}_bands")
+    spark.table(s"${prefix}src_docs").write.mode("append").insertInto(s"${prefix}_docs")
+    Seq("_bands", "_docs").foreach(t => spark.catalog.refreshTable(prefix + t))
+    val probeSets: Seq[(String, Seq[(Long, String)])] = Seq(
+      "ranking" -> Seq(100L -> t, 101L -> probeNear, 102L -> "too few tokens here", 103L -> other),
+      "repeated doc_id" -> Seq(
+        200L -> "too few tokens here", 200L -> probeNear, 201L -> "short one", 201L -> other,
+        202L -> other, 202L -> b),
+      "null text" -> Seq(300L -> null, 301L -> t),
+      "only null text" -> Seq(302L -> null),
+      "empty" -> Nil,
+      "no candidates" -> Seq(400L -> other, 401L -> "tiny"),
+      "band_idx mismatch" -> Seq(500L -> shifted),
+    )
+    probeSets.foreach { case (name, rows) =>
+      val probe = rows.toDF("doc_id", "text")
+      def verdict(cap: Int) =
+        LshIndexOps.uploadVerdict(spark, prefix, probe, N, K, Bands, Threshold, minTok = 10L, cap = cap)
+      val (bounded, distributed) = (verdict(1000), verdict(-1))
+      assert(bounded.schema == distributed.schema, s"$name: schema differs")
+      // Rows of a repeated doc_id may come in either order.
+      def sorted(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.map(_.toString).sorted
+      assert(sorted(bounded) == sorted(distributed), s"$name: rows differ")
+      assert(bounded.collect().map(_.get(0)).toSeq == rows.map(_._1).sorted, s"$name: order")
+    }
+    def got(set: Int) = LshIndexOps.uploadVerdict(
+      spark, prefix, probeSets(set)._2.toDF("doc_id", "text"), N, K, Bands, Threshold, minTok = 10L)
+      .as[(Long, String, Option[Long])].collect().toSet
+    assert(got(1) == Set((200L, "near_dup", Some(20L)), (201L, "too_short", None),
+      (201L, "keep", None), (202L, "exact_dup", Some(20L))))
+    assert(got(6) == Set((500L, "keep", None)))
+  }
+
+  test("a 4-document upload verdict from a local Seq runs at most 2 Spark jobs") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val prefix = "lshverdictjobs"
+    val (t, _, probeNear) = verdictFixture(prefix)
+    val probe = Seq(100L -> t, 101L -> probeNear, 102L -> "too few tokens here", 103L -> "keep me")
+      .toDF("doc_id", "text")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    def jobsOf(run: => Unit): Int = {
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      jobs.set(0)
+      run
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      jobs.get
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val bounded = jobsOf(
+        LshIndexOps.uploadVerdict(spark, prefix, probe, N, K, Bands, Threshold, minTok = 10L).collect())
+      val distributed = jobsOf(
+        LshIndexOps.uploadVerdict(spark, prefix, probe, N, K, Bands, Threshold, 10L, cap = -1).collect())
+      assert(bounded <= 2, s"bounded verdict ran $bounded jobs")
+      assert(distributed > bounded, s"the listener saw $distributed distributed jobs")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("a probe over the row cap or stored hits over the cap take the distributed upload verdict") {
+    import spark.implicits._
+    val prefix = "lshverdicthot"
+    val (t, _, _) = verdictFixture(prefix)
+    val cap = 400
+    val probe = Seq(900L -> t).toDF("doc_id", "text")
+    // The bounded path returns a local frame; the distributed plan does not.
+    def verdict(df: org.apache.spark.sql.DataFrame, cap: Int) =
+      LshIndexOps.uploadVerdict(spark, prefix, df, N, K, Bands, Threshold, minTok = 10L, cap = cap)
+    def copiesOf(rows: Int) = (1L to rows.toLong).map(_ -> t).toDF("doc_id", "text")
+    assert(verdict(probe, cap).isLocal)
+    assert(!verdict(copiesOf(cap / Bands + 1), cap).isLocal)
+    def byDefault(df: org.apache.spark.sql.DataFrame) =
+      LshIndexOps.uploadVerdict(spark, prefix, df, N, K, Bands, Threshold, minTok = 10L)
+    assert(byDefault(copiesOf(LshIndexOps.VerdictProbeRows)).isLocal)
+    assert(!byDefault(copiesOf(LshIndexOps.VerdictProbeRows + 1)).isLocal)
+    // 500 more stored copies of the probe's text: each of its band keys
+    // is now held by more stored docs than the cap.
+    val copies = (1000L until 1500L).map(_ -> t).toDF("doc_id", "text")
+    LshIndexOps.writeIndex(copies, N, K, Bands, 4, s"${prefix}src")
+    LshIndexOps.writeMetaTable(copies, 4, s"${prefix}src")
+    Seq("_bands", "_docs", "_meta").foreach { table =>
+      spark.table(s"${prefix}src$table").write.mode("append").insertInto(prefix + table)
+      spark.catalog.refreshTable(prefix + table)
+    }
+    val hot = verdict(probe, cap)
+    assert(!hot.isLocal, "hits over the cap must not be collected")
+    assert(hot.collect().toSeq == verdict(probe, -1).collect().toSeq)
+    assert(hot.as[(Long, String, Option[Long])].collect().toSeq == Seq((900L, "exact_dup", Some(5L))))
   }
 
   test("streaming dedup restart: replayed batch adds no keepers twice, no self-dups, converges to the uninterrupted run") {
