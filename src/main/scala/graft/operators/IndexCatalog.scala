@@ -1,32 +1,99 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, Encoders, GraftColumnBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.BucketSpec
+import org.apache.spark.sql.catalyst.expressions.{Cast, InSet, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions.{coalesce, col, count, expr, lit, sum}
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.types.{BooleanType, StringType, StructField, StructType}
 
-/** Catalog lookups, layout maintenance and the crash-repair ingest
-  * ledger shared by the persisted-index families ([[LshIndexOps]],
-  * [[SearchIndexOps]], [[MediaIndexOps]], [[VectorIndexOps]] and
-  * [[GraphOps]]' growable edge table). A table's bucket and sort
-  * columns are stated ONCE, by the build write's `bucketBy`/`sortBy`;
-  * from then on the catalog's `BucketSpec` is the only copy. Appends
-  * go through `insertInto`, which writes with the table's own spec, and
-  * every maintenance rewrite here ([[stageTableFrom]] and the rebucket
-  * and compaction built on it) reads the columns from that spec — so
-  * no caller restates a layout, and nothing holds a bucket count that
-  * a rebucket could make stale (a stale count fails the next append's
-  * bucket-spec match, killing a running streaming ingest, which
-  * survives a mid-stream rebucket precisely because of this rule).
+/** Catalog lookups, layout maintenance, the crash-repair ingest ledger
+  * and the bounded key lookup shared by the persisted-index families
+  * ([[LshIndexOps]], [[SearchIndexOps]], [[MediaIndexOps]],
+  * [[VectorIndexOps]] and [[GraphOps]]' growable edge table).
+  *
+  * The key lookup is two helpers: [[capped]] collects a bounded key or
+  * hit list (`None` past its cap, so the caller takes its distributed
+  * join or plan instead), and [[keyed]] reads a table through one IN
+  * filter on those keys, pushed into the parquet scan and pruning
+  * buckets when the column is the bucket key. Crash-repair presence
+  * probes ([[PresenceProbe]], [[present]]), Search's replay guard and
+  * the bounded LSH upload verdict all go through them.
+  *
+  * A table's bucket and sort columns are stated ONCE, by the build
+  * write's `bucketBy`/`sortBy`; from then on the catalog's `BucketSpec`
+  * is the only copy. Appends go through `insertInto`, which writes with
+  * the table's own spec, and every maintenance rewrite here
+  * ([[stageTableFrom]] and the rebucket and compaction built on it)
+  * reads the columns from that spec — so no caller restates a layout,
+  * and nothing holds a bucket count that a rebucket could make stale (a
+  * stale count fails the next append's bucket-spec match, killing a
+  * running streaming ingest, which survives a mid-stream rebucket
+  * precisely because of this rule).
   */
 private[graft] object IndexCatalog {
 
   /** Batches with at most this many distinct ids use a driver-side id
-    * list for the crash-repair [[PresenceProbe]] and Search's replay
-    * guard (a bounded collect — metadata-scale); larger batches fall
-    * back to a distributed semi-join.
+    * list ([[capped]]) for the crash-repair [[PresenceProbe]] and
+    * Search's replay guard (a bounded collect — metadata-scale); larger
+    * batches fall back to a distributed semi-join.
     */
   val ProbeIdCap = 100000
+
+  /** The rows of `df` when it holds at most `cap`, else None — the
+    * bounded collect behind every key and hit list the index families
+    * take to the driver. A local frame (one the optimizer folds into a
+    * `LocalRelation`, such as a `Seq.toDF` with a projection) is
+    * collected directly and runs no Spark job. Any other frame is
+    * collected once (one job for a scan), and each task sends at most
+    * its share of `cap` (cap / tasks) rows, plus an overflow marker past
+    * it, so the driver takes at most `cap` + tasks rows; one marker
+    * makes the answer None. A
+    * task over its share (a hot key) therefore overflows even when the
+    * frame as a whole holds fewer than `cap` rows: the caller's
+    * distributed fallback gives the same answer.
+    */
+  def capped(df: DataFrame, cap: Int): Option[Array[Row]] =
+    if (df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+      Some(df.collect()).filter(_.length <= cap)
+    else {
+      // (overflow, row): the marker carries no row, so the row struct is
+      // nullable and its own fields keep the frame's schema.
+      val marked = StructType(Seq(
+        StructField("overflow", BooleanType, nullable = false),
+        StructField("row", df.schema, nullable = true)))
+      val sent = df
+        .mapPartitions { (rows: Iterator[Row]) =>
+          val share = cap / TaskContext.get().numPartitions()
+          rows.take(share + 1).zipWithIndex
+            .map { case (r, i) => if (i < share) Row(false, r) else Row(true, null) }
+        }(Encoders.row(marked))
+        .collect()
+      if (sent.exists(_.getBoolean(0))) None else Some(sent.map(_.getStruct(1)))
+    }
+
+  /** The live `table`'s rows whose `column` is one of `keys`, through
+    * ONE IN filter built as a single `InSet` (the keys cast once to the
+    * column's type): parquet pushes it down as an `In` and, on the
+    * bucket column, the scan reads only the keys' buckets — the same
+    * for every caller, and without analysing one literal per key.
+    */
+  def keyed(spark: SparkSession, table: String, column: String, keys: Seq[Any]): DataFrame = {
+    val t = readLive(spark, table)
+    val dt = t.schema(column).dataType
+    val set: Set[Any] = keys.map(k => Cast(Literal(k), dt).eval()).toSet
+    t.filter(GraftColumnBridge.toColumn(InSet(GraftColumnBridge.toExpression(col(column)), set)))
+  }
+
+  /** True when `table` holds any row whose `column` is one of `keys`.
+    * Refreshes the relation first — an append earlier in the same
+    * repair must be visible to the probe.
+    */
+  def present(spark: SparkSession, table: String, column: String, keys: Seq[Any]): Boolean = {
+    spark.catalog.refreshTable(table)
+    !keyed(spark, table, column, keys).isEmpty
+  }
 
   /** The ingest ledger's table name for an index family's `owner`
     * (an index prefix, or a growable edge table's name).
@@ -109,13 +176,12 @@ private[graft] object IndexCatalog {
     * anti-joins and need none): "does `table` already hold any of this
     * batch's rows?" — presence of one row implies the whole batch
     * landed there, because each table append is a single atomic job
-    * commit. The batch's bounded
-    * doc_id list is collected ONCE per repair (lazily — the fresh-batch
-    * fast path never pays it), not once per probed table, and pushed
-    * into each probed scan as an IN-list (bucket pruning + parquet
-    * row-group doc_id stats skip every file but the crashed append's
-    * own); batches above `cap` distinct ids fall back to a distributed
-    * semi-join probe instead of a driver list.
+    * commit. The batch's distinct `idCol` list is collected ONCE per
+    * repair ([[capped]], lazily — the fresh-batch fast path never pays
+    * it), not once per probed table, and each probe is a [[present]]
+    * over it (bucket pruning + parquet row-group id stats skip every
+    * file but the crashed append's own); batches above `cap` distinct
+    * ids fall back to a distributed semi-join probe instead.
     */
   final class PresenceProbe(
       spark: SparkSession,
@@ -123,22 +189,15 @@ private[graft] object IndexCatalog {
       cap: Int = ProbeIdCap,
       idCol: String = "doc_id",
   ) {
-    private lazy val ids: Seq[Long] = batch
-      .select(col(idCol)).distinct().limit(cap + 1)
-      .collect().map(_.getLong(0)).toSeq
+    private def batchIds = batch.select(col(idCol)).distinct()
+    private lazy val ids: Option[Seq[Any]] = capped(batchIds, cap).map(_.map(_.get(0)).toSeq)
 
-    /** True when `table` already holds any of the batch's ids.
-      * Refreshes the relation first — a prior append in this very
-      * repair must be visible to the probe.
-      */
-    def apply(table: String): Boolean = {
-      spark.catalog.refreshTable(table)
-      val t = spark.table(table)
-      if (ids.length <= cap)
-        !t.filter(col(idCol).isin(ids: _*)).limit(1).isEmpty
-      else
-        !t.join(batch.select(col(idCol)).distinct(), Seq(idCol), "left_semi")
-          .limit(1).isEmpty
+    /** True when `table` already holds any of the batch's ids. */
+    def apply(table: String): Boolean = ids match {
+      case Some(ks) => present(spark, table, idCol, ks)
+      case None =>
+        spark.catalog.refreshTable(table)
+        !spark.table(table).join(batchIds, Seq(idCol), "left_semi").isEmpty
     }
   }
 
@@ -147,15 +206,11 @@ private[graft] object IndexCatalog {
     * unbucketed data into an index would silently disable every pruned
     * read path).
     */
-  private def bucketSpec(spark: SparkSession, table: String): BucketSpec =
+  private[graft] def bucketSpec(spark: SparkSession, table: String): BucketSpec =
     spark.sessionState.catalog
       .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(table))
       .bucketSpec
       .getOrElse(sys.error(s"$table has no bucket spec — not a graft index table"))
-
-  /** The stored table's bucket count ([[bucketSpec]]). */
-  def tableBuckets(spark: SparkSession, table: String): Int =
-    bucketSpec(spark, table).numBuckets
 
   /** Swap fully-staged replacement tables over their live names — the
     * maintenance-commit step shared by every index family's rebucket

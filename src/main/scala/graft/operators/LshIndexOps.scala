@@ -2,7 +2,6 @@ package graft.operators
 
 import java.util.concurrent.{ExecutionException, Executors}
 
-import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
@@ -244,22 +243,24 @@ object LshIndexOps {
     * sorted by doc_id.
     *
     * Two plans give the same rows:
-    *   - BOUNDED (small uploads): the raw batch is collected when it
-    *     has at most `VerdictProbeRows` (256) rows and at most
-    *     [[IndexCatalog.ProbeIdCap]] band keys (rows × bands), then
-    *     hashed on the driver — a local input (a `Seq.toDF`) costs no
-    *     job for either step. One scan-only job reads the `_meta` rows
-    *     holding a probe digest and the `_bands` rows holding a probe
-    *     band key (a candidate must match the whole (band_idx, band_key)
-    *     pair, checked on the driver); each task sends at most its share
-    *     of the cap. A second job reads the candidates' shingle sets
-    *     from `_docs`, bucket-pruned on doc_id, and verifies Jaccard
-    *     where it reads them, so only matches reach the driver, which
-    *     folds them into a local frame. The `_docs` read and the driver
-    *     work grow with the probe; the `_meta` and `_bands` scans still
-    *     grow with the index, since they are file-scanned in full with
-    *     the IN filters pushed down (bucket pruning needs a single-column
-    *     bucket key). The tables are read when this is called.
+    *   - BOUNDED (small uploads), on the shared key lookup
+    *     ([[IndexCatalog.capped]], [[IndexCatalog.keyed]]): the raw
+    *     batch is collected when it has at most `VerdictProbeRows` (256)
+    *     rows and at most [[IndexCatalog.ProbeIdCap]] band keys (rows ×
+    *     bands), then hashed on the driver — a local input (a
+    *     `Seq.toDF`) costs no job for either step. One scan-only job
+    *     reads the `_meta` rows holding a probe digest and the `_bands`
+    *     rows holding a probe band key (a candidate must match the whole
+    *     (band_idx, band_key) pair, checked on the driver); each task
+    *     sends at most its share of the cap. A second job reads the
+    *     candidates' shingle sets from `_docs`, bucket-pruned on doc_id,
+    *     and verifies Jaccard where it reads them, so only matches reach
+    *     the driver, which folds them into a local frame. The `_docs`
+    *     read and the driver work grow with the probe; the `_meta` and
+    *     `_bands` scans still grow with the index, since they are
+    *     file-scanned in full with the IN filters pushed down (bucket
+    *     pruning needs a single-column bucket key). The tables are read
+    *     when this is called.
     *   - DISTRIBUTED: a batch over either cap, or one whose stored hits
     *     or candidate pairs exceed the cap (a hot band key, a digest
     *     many stored docs share), or whose doc_id is not a long, is
@@ -301,7 +302,7 @@ object LshIndexOps {
     val maxRows = math.min(cap / bands, VerdictProbeRows)
     val local =
       if (cap < 0 || input.schema("doc_id").dataType != LongType) None
-      else Some(input.limit(maxRows + 1).collect()).filter(_.length <= maxRows)
+      else IndexCatalog.capped(input, maxRows)
     local
       .flatMap { rows =>
         val probe = spark.createDataFrame(java.util.Arrays.asList(rows: _*), input.schema)
@@ -341,27 +342,18 @@ object LshIndexOps {
     val probe = indexFrame(local, n, k, bands, metaCols: _*).collect()
     val digests = probe.toSeq.filterNot(_.isNullAt(2)).map(_.getString(2)).distinct
     val keys = probe.toSeq.flatMap(_.getSeq[String](4)).distinct
-    // Digest hits carry band_idx -1; band hits their own band_idx. Each
-    // task keeps at most its share of `cap` rows and ends in an overflow
-    // row (band_idx -2) past it, so the driver never takes much more
-    // than `cap` hits, in one job.
+    // Digest hits carry band_idx -1; band hits their own band_idx.
+    def scan = IndexCatalog.keyed(spark, s"${prefix}_meta", "text_md5", digests)
+      .select(col("doc_id"), lit(-1).as("band_idx"), col("text_md5").as("key"))
+      .unionByName(
+        IndexCatalog.keyed(spark, s"${prefix}_bands", "band_key", keys)
+          .select(col("doc_id"), col("band_idx"), col("band_key").as("key")))
     val hits =
       if (probe.isEmpty) Array.empty[Row]
-      else {
-        val scan = IndexCatalog.readLive(spark, s"${prefix}_meta")
-          .filter(col("text_md5").isin(digests: _*))
-          .select(col("doc_id"), lit(-1).as("band_idx"), col("text_md5").as("key"))
-          .unionByName(
-            IndexCatalog.readLive(spark, s"${prefix}_bands")
-              .filter(col("band_key").isin(keys: _*))
-              .select(col("doc_id"), col("band_idx"), col("band_key").as("key")))
-        scan.mapPartitions { (rows: Iterator[Row]) =>
-          val share = cap / TaskContext.get.numPartitions()
-          rows.take(share + 1).zipWithIndex
-            .map { case (r, i) => if (i < share) r else Row(0L, -2, "") }
-        }(Encoders.row(scan.schema)).collect()
+      else IndexCatalog.capped(scan, cap) match {
+        case Some(rows) => rows
+        case None => return None
       }
-    if (hits.exists(_.getInt(1) == -2)) return None
     val (digestHits, bandHits) = hits.partition(_.getInt(1) < 0)
     val exactOf = digestHits.groupMapReduce(_.getString(2))(_.getLong(0))(math.min)
     val byBand = bandHits.groupMap(r => (r.getInt(1), r.getString(2)))(_.getLong(0))
@@ -418,8 +410,8 @@ object LshIndexOps {
   ): Array[(Long, Long, Double)] =
     if (pairs.isEmpty) Array.empty
     else
-      IndexCatalog.readLive(spark, s"${prefix}_docs")
-        .filter(col("doc_id").isin(pairs.keys.toSeq: _*) && col("sh").isNotNull)
+      IndexCatalog.keyed(spark, s"${prefix}_docs", "doc_id", pairs.keys.toSeq)
+        .filter(col("sh").isNotNull)
         .select(col("doc_id"), col("sh"))
         .mapPartitions { (rows: Iterator[Row]) =>
           rows.flatMap { r =>

@@ -889,14 +889,14 @@ object MediaIndexOps {
     * adds one file per touched bucket). Content bit-preserved.
     */
   def compact(spark: SparkSession, prefix: String, maxFilesPerBucket: Int = 4): Seq[String] =
-    IndexCatalog.compactBucketed(spark, bucketedTables(prefix), maxFilesPerBucket)
+    IndexCatalog.compactBucketed(spark, bucketedTables(spark, prefix), maxFilesPerBucket)
 
-  /** Rewrite both tables at `newBuckets` with the staged rename-first
+  /** Rewrite the index tables at `newBuckets` with the staged rename-first
     * swap ([[IndexCatalog.rebucket]]): readers see the complete old
     * index throughout, a crash leaves a recovery copy.
     */
   def rebucket(spark: SparkSession, prefix: String, newBuckets: Int): Unit =
-    IndexCatalog.rebucket(spark, bucketedTables(prefix), newBuckets)
+    IndexCatalog.rebucket(spark, bucketedTables(spark, prefix), newBuckets)
 
   /** The compaction dial wired to the stat `mm_index_stats` exposes:
     * [[IndexCatalog.rebucketIfNeeded]] with the chunk table's candidate
@@ -910,15 +910,19 @@ object MediaIndexOps {
       maxBuckets: Int = 4096,
   ): Option[Int] =
     IndexCatalog.rebucketIfNeeded(
-      spark, s"${prefix}_chunks", bucketedTables(prefix), candidatesPerBucketBudget, maxBuckets)
+      spark, s"${prefix}_chunks", bucketedTables(spark, prefix), candidatesPerBucketBudget, maxBuckets)
 
-  /** The tables [[rebucket]], [[compact]] and [[fileStats]] cover. */
-  private def bucketedTables(prefix: String): Seq[String] =
-    Seq(s"${prefix}_fps", s"${prefix}_chunks")
+  /** The tables [[rebucket]], [[compact]] and [[fileStats]] cover: fps
+    * and chunks, plus `_meta` when the prefix carries it (its ingest
+    * appends one file per touched bucket too).
+    */
+  private def bucketedTables(spark: SparkSession, prefix: String): Seq[String] =
+    Seq(s"${prefix}_fps", s"${prefix}_chunks") ++
+      Seq(s"${prefix}_meta").filter(spark.catalog.tableExists)
 
   /** Physical layout health — file counts per table (operational
     * metadata; no oracle).
     */
   def fileStats(spark: SparkSession, prefix: String): DataFrame =
-    IndexCatalog.fileStats(spark, bucketedTables(prefix))
+    IndexCatalog.fileStats(spark, bucketedTables(spark, prefix))
 }

@@ -217,9 +217,10 @@ object SearchIndexOps {
   /** The replay guard's surviving rows: batch minus already-indexed
     * doc_ids. Guard cost is O(batch), not O(index): the anti-join only
     * needs the stored ids that could COLLIDE with this batch, so the
-    * batch's id list (at most [[IndexCatalog.ProbeIdCap]] ids; larger
-    * batches fall back to the full bucketed anti-join) is pushed into
-    * the stored scan, where it prunes buckets (doc_id is the bucket
+    * batch's id list ([[IndexCatalog.capped]] at
+    * [[IndexCatalog.ProbeIdCap]] ids; larger batches fall back to the
+    * full bucketed anti-join) is pushed into the stored scan
+    * ([[IndexCatalog.keyed]]), where it prunes buckets (doc_id is the bucket
     * key) and parquet row groups — at 100 TB the guard reads the touched buckets' matching
     * rows, not the billion-row membership table. The pruned guard side
     * is then at most batch-sized, so it broadcasts. SearchIndexSpec
@@ -235,17 +236,13 @@ object SearchIndexOps {
       batch: DataFrame,
   ): DataFrame = {
     val b = batch.localCheckpoint()
-    val stored = spark.table(s"${prefix}_docs").select(col("doc_id"))
-    val ids = b
-      .select(col("doc_id")).distinct().limit(IndexCatalog.ProbeIdCap + 1)
-      .collect().map(_.getLong(0)).toSeq
-    if (ids.length <= IndexCatalog.ProbeIdCap)
-      b.join(
-        broadcast(stored.filter(col("doc_id").isin(ids: _*))),
-        Seq("doc_id"),
-        "left_anti",
-      )
-    else b.join(stored, Seq("doc_id"), "left_anti")
+    val docs = s"${prefix}_docs"
+    IndexCatalog.capped(b.select(col("doc_id")).distinct(), IndexCatalog.ProbeIdCap) match {
+      case Some(ids) =>
+        val stored = IndexCatalog.keyed(spark, docs, "doc_id", ids.map(_.get(0)).toSeq)
+        b.join(broadcast(stored.select(col("doc_id"))), Seq("doc_id"), "left_anti")
+      case None => b.join(spark.table(docs).select(col("doc_id")), Seq("doc_id"), "left_anti")
+    }
   }
 
   /** Does `<prefix>_<table>` already hold THIS batch's rows? Presence
@@ -269,9 +266,7 @@ object SearchIndexOps {
   ): Boolean =
     table match {
       case "lexicon" | "meta" =>
-        spark.catalog.refreshTable(s"${prefix}_$table")
-        !spark.table(s"${prefix}_$table")
-          .filter(col("batch_key") === batchKey).limit(1).isEmpty
+        IndexCatalog.present(spark, s"${prefix}_$table", "batch_key", Seq(batchKey))
       case _ => probe(s"${prefix}_$table")
     }
 

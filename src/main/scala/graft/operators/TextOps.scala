@@ -838,13 +838,6 @@ object TextOps {
       (a, b) => struct(a.as("tok_a"), b.as("tok_b")),
     )
 
-  /** Re-parse the bracket-serialized token stream `[tok][tok]…` back
-    * into its token array (the inverse of [[bpeEncode]]'s wrapping; the
-    * alphabet is bracket-free by construction, so the split is exact).
-    */
-  private def bracketTokens(s: Column): Column =
-    regexp_extract_all(s, lit("\\[([^\\]]+)\\]"), lit(1))
-
   /** Multi-step BPE vocabulary TRAINING — the real tokenizer-build loop
     * that [[bpeMergeStep]] is one step of: `rounds` iterations of
     * (count adjacent pairs over the CURRENT encoded stream → fuse the

@@ -267,12 +267,7 @@ object VectorIndexOps {
     // the table ([[ivfRangeSearch]] then probes every cell — correct,
     // unpruned).
     if (spark.catalog.tableExists(s"${prefix}_cellstats")) {
-      def cellstatsPresent: Boolean = {
-        spark.catalog.refreshTable(s"${prefix}_cellstats")
-        !spark.table(s"${prefix}_cellstats")
-          .filter(col("batch_key") === bk).limit(1).isEmpty
-      }
-      if (!repairing || !cellstatsPresent) {
+      if (!repairing || !IndexCatalog.present(spark, s"${prefix}_cellstats", "batch_key", Seq(bk))) {
         radiusPartials(assigned, cb)
           .withColumn("batch_key", lit(bk))
           .write.mode("append").saveAsTable(s"${prefix}_cellstats")

@@ -12,37 +12,18 @@ import graft.schemas.Schemas
   * §7.2 M3). All *transforms* live in [[graft.operators.NetflowOps]] as
   * pure `DataFrame => DataFrame` functions — the reference's own
   * batch/stream unification argument (README.md:192-193) — so this file
-  * only holds sources, sinks, and trigger/watermark policy.
+  * only holds sources, sinks, and trigger/watermark policy. The Kafka
+  * edge (source S1/S4, re-publish K2) is outside this build: it has no
+  * Kafka connector, so Kafka-shaped input is parsed from its `value`
+  * bytes ([[parseKafkaNetflow]]) whatever delivered it.
   *
   * Fixes over the reference, by design rather than patching:
   *   - K1/K3 (per-partition / per-row MongoClient): `foreachBatch` with
   *     a columnar datasource write — connection pooling and batching
   *     belong to the connector, executors write in parallel.
-  *   - K2 (`collect()` to the driver before the Kafka re-publish,
-  *     acknowledged broken on a real cluster at README.md:182): the
-  *     Kafka *sink* writes from executors; no driver round-trip exists.
   *   - T6 (no late-data story): event-time windows carry a watermark.
   */
 object NetflowStreams {
-
-  /** S1/S4 — Kafka source (modern direct reader; the reference's
-    * ZK-receiver approach is legacy). `startingOffsets="latest"`
-    * reproduces the serving consumer's `fromOffset:'lastest'` intent
-    * (websocket-server/index.js:14, typo and all).
-    * Requires the spark-sql-kafka connector on the classpath.
-    */
-  def kafkaSource(
-      spark: SparkSession,
-      bootstrapServers: String,
-      topic: String,
-      startingOffsets: String = "latest",
-  ): DataFrame =
-    spark.readStream
-      .format("kafka")
-      .option("kafka.bootstrap.servers", bootstrapServers)
-      .option("subscribe", topic)
-      .option("startingOffsets", startingOffsets)
-      .load()
 
   /** S2 — streaming JSON file source: explicit schema (required by SS),
     * `multiLine` + `maxFilesPerTrigger` exactly as the reference
@@ -105,33 +86,6 @@ object NetflowStreams {
           .partitionBy("batch_id")
           .parquet(path)
       }
-
-  /** K2 fix — distributed Kafka re-publish: rows serialize to JSON on
-    * executors and the Kafka sink writes them there; the reference's
-    * driver-collect bug (README.md:182) cannot exist structurally.
-    * Delivery is AT-LEAST-ONCE (Spark's Kafka sink has no transactional
-    * producer): a batch replayed after a crash re-publishes its records,
-    * so consumers needing effectively-once dedup downstream (e.g.
-    * [[dedupStream]]). Producer batching moves to writer options —
-    * `kafka.batch.size` is in BYTES (the reference's `batch_size=1000`
-    * would cap batches at ~5 records; we keep the 1 s linger and the
-    * default 16 KiB batch for real batching).
-    */
-  def kafkaRepublishSink(
-      curated: DataFrame,
-      bootstrapServers: String,
-      topic: String,
-      checkpoint: String,
-  ): DataStreamWriter[org.apache.spark.sql.Row] =
-    curated
-      .selectExpr("to_json(struct(*)) AS value")
-      .writeStream
-      .format("kafka")
-      .option("kafka.bootstrap.servers", bootstrapServers)
-      .option("topic", topic)
-      .option("kafka.linger.ms", "1000")
-      .option("kafka.batch.size", "16384")
-      .option("checkpointLocation", checkpoint)
 
   /** The curated-record timestamp format (README.md:105). Rows whose
     * timestamp does not parse become NULL event time and are excluded

@@ -11,7 +11,10 @@ import graft.operators.IndexCatalog
   * repairing rerun, a committed key never runs again, and a foreign
   * table under the ledger's name is refused rather than reinterpreted.
   * Staged layout rewrites (rebucket, compaction) keep the bucket and
-  * sort columns the catalog records for the live table.
+  * sort columns the catalog records for the live table. The bounded
+  * key lookup (capped, keyed, present) returns every row up to its cap
+  * and None past it, runs no job for a local frame, and sees appends
+  * made after its first read.
   */
 class IndexCatalogSpec extends SparkSpec {
 
@@ -108,5 +111,76 @@ class IndexCatalogSpec extends SparkSpec {
     val e = intercept[RuntimeException](IndexCatalog.stageTable(spark, plain, 4))
     assert(e.getMessage.contains(plain), e.getMessage)
     assert(!spark.catalog.tableExists(s"${plain}_rebucket"))
+  }
+
+  private def jobsOf(run: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      run
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      jobs.get
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  private def keys(rows: Option[Array[org.apache.spark.sql.Row]]): Option[Seq[Long]] =
+    rows.map(_.map(_.getLong(0)).toSeq.sorted)
+
+  test("capped returns every row at the cap and None one row past it") {
+    import spark.implicits._
+    val cap = 50
+    val all = Some((1L to cap).toSeq)
+    // A local frame, and a one-task scan whose share is the whole cap.
+    def local(n: Int) = (1L to n).toDF("k")
+    def scan(n: Int) = spark.range(1, n + 1, 1, 1).toDF("k")
+    assert(keys(IndexCatalog.capped(local(cap), cap)) == all)
+    assert(IndexCatalog.capped(local(cap + 1), cap).isEmpty)
+    assert(keys(IndexCatalog.capped(scan(cap), cap)) == all)
+    assert(IndexCatalog.capped(scan(cap + 1), cap).isEmpty)
+    assert(keys(IndexCatalog.capped(scan(0), cap)) == Some(Nil))
+  }
+
+  test("capped returns None when one task holds more than its share of the cap") {
+    // Four tasks holding 10, 3, 0 and 0 rows: at cap 20 each task's
+    // share is 5, so the first task overflows although 13 rows < 20.
+    val hot = spark.range(0, 40, 1, 4).toDF("k").filter(col("k") < 13)
+    assert(hot.rdd.getNumPartitions == 4)
+    assert(IndexCatalog.capped(hot, 20).isEmpty)
+    assert(keys(IndexCatalog.capped(hot, 40)) == Some((0L until 13L).toSeq))
+  }
+
+  test("capped collects a local frame with no Spark job, any other frame in one") {
+    import spark.implicits._
+    // A projection over a Seq is not a bare LocalRelation until optimized.
+    val local = Seq(3L, 1L, 2L).toDF("k").select((col("k") * 2).as("k"))
+    var got: Option[Array[org.apache.spark.sql.Row]] = None
+    assert(jobsOf { got = IndexCatalog.capped(local, 10) } == 0)
+    assert(keys(got) == Some(Seq(2L, 4L, 6L)))
+    assert(jobsOf { got = IndexCatalog.capped(spark.range(0, 6, 1, 3).toDF("k"), 10) } == 1)
+    assert(keys(got) == Some((0L until 6L).toSeq))
+  }
+
+  test("present sees a row appended through insertInto after its first read") {
+    import spark.implicits._
+    val t = "presentprobe"
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    (1L to 20L).map(i => (i, s"v$i")).toDF("k", "v").write.bucketBy(4, "k").saveAsTable(t)
+    assert(IndexCatalog.present(spark, t, "k", Seq(7L, 99L)))
+    assert(!IndexCatalog.present(spark, t, "k", Seq(42L, 99L)))
+    Seq((42L, "late")).toDF("k", "v").write.mode("append").insertInto(t)
+    assert(IndexCatalog.present(spark, t, "k", Seq(42L)))
+    // Another session appends, as a concurrent ingest would: this
+    // session's cached file listing, taken by the probe above, predates
+    // the new file.
+    spark.newSession().createDataFrame(Seq((43L, "later"))).toDF("k", "v")
+      .write.mode("append").insertInto(t)
+    assert(IndexCatalog.present(spark, t, "k", Seq(43L)))
+    assert(IndexCatalog.keyed(spark, t, "k", Seq(42L, 43L, 99L)).select("v").as[String]
+      .collect().sorted.toSeq == Seq("late", "later"))
   }
 }

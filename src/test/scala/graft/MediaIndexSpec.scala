@@ -379,6 +379,36 @@ class MediaIndexSpec extends SparkSpec {
       "a replayed batch must not grow the index")
   }
 
+  test("compact and rebucket cover the _meta table that ingest appends to") {
+    import org.apache.spark.sql.catalyst.TableIdentifier
+    import org.apache.spark.sql.catalyst.catalog.BucketSpec
+    import graft.operators.IndexCatalog
+    val pre = "mediaixmetalayout"
+    Seq("_fps", "_chunks", "_meta", "_batches")
+      .foreach(sfx => spark.sql(s"DROP TABLE IF EXISTS $pre$sfx"))
+    val stored = media().filter(col("doc_id") % 4 === 0)
+    MediaIndexOps.writeIndex(stored, Regions, Bands, buckets = 4, prefix = pre)
+    MediaIndexOps.writeMetaTable(stored, buckets = 4, prefix = pre)
+    (1 to 3).foreach { r =>
+      MediaIndexOps.dedupBatchAndGrow(
+        spark, pre, media().filter(col("doc_id") % 4 === r), Regions, Bands,
+        buckets = 4, maxHamming = MaxHamming)
+    }
+    val meta = s"${pre}_meta"
+    def rows = spark.table(meta).collect().map(_.toString).sorted.toSeq
+    val grown = rows
+    assert(IndexCatalog.maxFilesPerBucket(spark, meta) > 1, "the appends added no _meta files")
+    assert(MediaIndexOps.compact(spark, pre, 1).contains(meta))
+    assert(IndexCatalog.maxFilesPerBucket(spark, meta) == 1)
+    assert(rows == grown)
+    MediaIndexOps.rebucket(spark, pre, 8)
+    assert(spark.sessionState.catalog.getTableMetadata(TableIdentifier(meta)).bucketSpec
+      .contains(BucketSpec(8, Seq("doc_id"), Seq("doc_id"))))
+    assert(rows == grown)
+    assert(MediaIndexOps.fileStats(spark, pre).select("table").collect().map(_.getString(0))
+      .contains(meta))
+  }
+
   test("incrementally admitted keepers are visible to the exact-dup digest probe") {
     import spark.implicits._
     val pre = "mediaixmetagrow"

@@ -289,7 +289,7 @@ class SearchIndexSpec extends SparkSpec {
       assert(!spark.catalog.tableExists(tmp), s"$tmp must be gone after the swap")
       assert(!spark.catalog.tableExists(s"${live}_old"), s"${live}_old must be dropped")
     }
-    assert(graft.operators.IndexCatalog.tableBuckets(spark, s"${prefix}_postings") == 16)
+    assert(graft.operators.IndexCatalog.bucketSpec(spark, s"${prefix}_postings").numBuckets == 16)
   }
 
   test("an append after a rebucket interrupted between table swaps lands in every table") {
@@ -307,8 +307,8 @@ class SearchIndexSpec extends SparkSpec {
     // reached lexicon and docs: the tables now disagree on bucket count.
     val staged = SearchIndexOps.stageRebucket(spark, "searchhalf", newBuckets = 16)
     IndexCatalog.swapStaged(spark, staged.filter(_._1 == "searchhalf_postings"))
-    assert(IndexCatalog.tableBuckets(spark, "searchhalf_postings") == 16)
-    assert(IndexCatalog.tableBuckets(spark, "searchhalf_lexicon") == 4)
+    assert(IndexCatalog.bucketSpec(spark, "searchhalf_postings").numBuckets == 16)
+    assert(IndexCatalog.bucketSpec(spark, "searchhalf_lexicon").numBuckets == 4)
     val batch = Seq((900002L, "spark dup table spark window")).toDF("doc_id", "text")
     SearchIndexOps.appendDocuments(spark, "searchhalf", batch)
     SearchIndexOps.appendDocuments(spark, "searchwhole", batch)
@@ -350,7 +350,7 @@ class SearchIndexSpec extends SparkSpec {
     assert(SearchIndexOps.searchBm25(spark, prefix, RankTerms, 10).collect().toSeq == before,
       "swap entered on a dangling state must still commit the staged index")
     assert(!spark.catalog.tableExists(s"${prefix}_postings_old"))
-    assert(graft.operators.IndexCatalog.tableBuckets(spark, s"${prefix}_postings") == 8)
+    assert(graft.operators.IndexCatalog.bucketSpec(spark, s"${prefix}_postings").numBuckets == 8)
   }
 
   test("streaming ingest grows the index per micro-batch; queries equal a full-corpus scan") {
@@ -400,7 +400,7 @@ class SearchIndexSpec extends SparkSpec {
     // Bounded: one file per bucket after the rewrite, bucket count kept.
     assert(IndexCatalog.maxFilesPerBucket(spark, s"${prefix}_postings") == 1,
       "compaction must collapse each bucket to one file")
-    assert(IndexCatalog.tableBuckets(spark, s"${prefix}_postings") == 4,
+    assert(IndexCatalog.bucketSpec(spark, s"${prefix}_postings").numBuckets == 4,
       "compaction must keep the bucket count (rebucket is the other dial)")
     assert(SearchIndexOps.searchBm25(spark, prefix, RankTerms, 10).collect().toSeq == before,
       "compaction must preserve results bit-for-bit")
