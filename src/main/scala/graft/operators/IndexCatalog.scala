@@ -116,11 +116,12 @@ private[graft] object IndexCatalog {
     * applied batch. `batchKey` must be reproducible across checkpoint
     * replays: LSH, Search and Media pass their min doc_id, Vector its
     * `foreachBatch` id, Graph an `id:`/`h:` scheduler-id or content
-    * key. A key with a `commit` row short-circuits (a replay of a
-    * committed batch is a no-op). Otherwise an `intent` row is written,
-    * `appends` runs, and a `commit` row is written — two single-row
-    * writes around the work, each followed by a refresh so the next
-    * batch's phase read sees it.
+    * key; any string is a valid key. A key with a `commit` row
+    * short-circuits (a replay of a committed batch is a no-op).
+    * Otherwise an `intent` row is written, `appends` runs, and a
+    * `commit` row is written — two single-row `insertInto` writes
+    * around the work, each followed by a refresh so the next batch's
+    * phase read sees it.
     *
     * A replay that finds `intent` without `commit` — a crash in the
     * middle — calls `appends(true)`: the caller then guards each table
@@ -161,13 +162,14 @@ private[graft] object IndexCatalog {
       .select(col("phase")).collect().map(_.getString(0)).toSet
     if (phases.contains("commit")) return
     val repairing = phases.contains("intent")
-    if (!repairing) {
-      spark.sql(s"INSERT INTO $ledger VALUES ('$batchKey', 'intent')")
+    // A one-row frame, never SQL text, so a key may hold any character.
+    def record(phase: String): Unit = {
+      spark.createDataFrame(Seq((batchKey, phase))).write.insertInto(ledger)
       spark.catalog.refreshTable(ledger)
     }
+    if (!repairing) record("intent")
     appends(repairing)
-    spark.sql(s"INSERT INTO $ledger VALUES ('$batchKey', 'commit')")
-    spark.catalog.refreshTable(ledger)
+    record("commit")
   }
 
   /** The crash-repair presence probe the ledger users share

@@ -143,20 +143,14 @@ class FlowGenSourceSpec extends SparkSpec {
     // checkpoint continues where the first stopped — total content must
     // equal the batch read exactly (no gaps, no duplicates).
     val base = Files.createTempDirectory("flowgen_restart").toFile.getAbsolutePath
-    def startQuery() = spark.readStream
-      .format(fmt)
-      .option("rows", 300).option("rowsPerBatch", 100).option("seed", 11)
-      .load()
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        batch
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(s"$base/out")
-      }
-      .option("checkpointLocation", s"$base/ckpt")
+    def startQuery() = graft.streaming.NetflowStreams
+      .storeSink(
+        spark.readStream
+          .format(fmt)
+          .option("rows", 300).option("rowsPerBatch", 100).option("seed", 11)
+          .load(),
+        s"$base/out", s"$base/ckpt", org.apache.spark.sql.streaming.Trigger.ProcessingTime(0),
+      )
       .start()
 
     // Run 1: let at least one batch commit, then stop mid-stream.

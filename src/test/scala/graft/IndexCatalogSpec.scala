@@ -67,6 +67,22 @@ class IndexCatalogSpec extends SparkSpec {
     assert(called)
   }
 
+  test("a key holding a quote goes through intent, commit and short-circuit") {
+    val owner = "ledgerquote"
+    val key = "h:it's ' OR '1'='1"
+    fresh(owner)
+    intercept[IllegalStateException] {
+      IndexCatalog.ledgered(spark, owner, key)(_ => throw new IllegalStateException("injected crash"))
+    }
+    assert(phases(owner, key) == Seq("intent"))
+    val calls = scala.collection.mutable.Buffer[Boolean]()
+    IndexCatalog.ledgered(spark, owner, key)(calls += _)
+    IndexCatalog.ledgered(spark, owner, key)(calls += _)
+    assert(calls == Seq(true), "the repair runs once and the committed key short-circuits")
+    assert(phases(owner, key) == Seq("commit", "intent"))
+    assert(spark.table(IndexCatalog.ledgerTable(owner)).count() == 2)
+  }
+
   test("a pre-existing ledger of another schema fails with the table's name") {
     val owner = "ledgerlegacy"
     val ledger = IndexCatalog.ledgerTable(owner)
