@@ -502,7 +502,7 @@ object Bench {
       val ckpt = java.nio.file.Files.createTempDirectory("bench_media").toFile.getAbsolutePath
       val q = graft.operators.MediaIndexOps.streamingDedup(
         spark, prefix, in.toDF().toDF("doc_id", "media_type", "payload"),
-        regions = 49, blockBands = 6, buckets = 8, maxHamming = 5, checkpoint = ckpt,
+        regions = 49, blockBands = 6, maxHamming = 5, checkpoint = ckpt,
         onDups = (d, _) => dupRows += d.count())
       try arrivals.grouped(math.max(1, arrivals.length / 4)).foreach { w =>
         in.addData(w.toSeq); q.processAllAvailable()

@@ -153,7 +153,7 @@ object DedupQueries {
           LshIndexOps.writeClusters(s, pre, JaccardThreshold, buckets = 8)
           LshIndexOps.ingestBatchAndMaintain(
             s, pre, docs.filter(col("doc_id") % 5 === 0), N, K, Bands,
-            buckets = 8, threshold = JaccardThreshold)
+            threshold = JaccardThreshold)
           pre
         },
       )

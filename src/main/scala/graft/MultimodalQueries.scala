@@ -129,7 +129,7 @@ object MultimodalQueries {
             s, seed, maxHamming = 5, buckets = 8, prefix = pre, mediaType = mediaType)
           graft.operators.MediaIndexOps.ingestBatchAndMaintain(
             s, pre, media.filter(col("doc_id") % 5 === 0),
-            regions = 49, blockBands = 6, buckets = 8, maxHamming = 5,
+            regions = 49, blockBands = 6, maxHamming = 5,
             mediaType = mediaType)
           pre
         },

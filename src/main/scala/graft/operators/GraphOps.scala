@@ -511,10 +511,7 @@ object GraphOps {
               .distinct()
               .join(spark.table(table), Seq("src", "dst"), "left_anti")
               .localCheckpoint())
-      if (!memberAppend.isEmpty) {
-        memberAppend.write.mode("append").insertInto(membersT)
-        spark.catalog.refreshTable(membersT)
-      }
+      if (!memberAppend.isEmpty) IndexCatalog.append(spark, membersT, memberAppend)
       // Spec fault-injection seam (the LshIndexOps/SearchIndexOps
       // crashAfter discipline): die between the member append and the
       // edge mutation, the exact window the replay bracket exists for.
@@ -529,10 +526,7 @@ object GraphOps {
           Seq(IndexCatalog.stageTableFrom(
             spark, table, edgesFromMembers(spark.table(membersT), maxGroupSize))))
         spark.catalog.refreshTable(table)
-      } else edgeAppend.filter(!_.isEmpty).foreach { ea =>
-        ea.write.mode("append").insertInto(table)
-        spark.catalog.refreshTable(table)
-      }
+      } else edgeAppend.filter(!_.isEmpty).foreach(IndexCatalog.append(spark, table, _))
       // Second seam: die between the edge mutation and the _deg refresh
       // + commit — the replay must converge without double-appending.
       if (crashAfter == "edges")

@@ -1,15 +1,22 @@
 package graft.operators
 
+import java.util.concurrent.{ExecutionException, Executors}
+
+import scala.util.{Failure, Try}
+
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Encoders, GraftColumnBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.catalyst.expressions.{Cast, InSet, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.functions.{coalesce, col, count, expr, lit, sum}
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.functions.{coalesce, col, count, expr, lit, min, sum}
 import org.apache.spark.sql.types.{BooleanType, StringType, StructField, StructType}
 
 /** Catalog lookups, layout maintenance, the crash-repair ingest ledger
-  * and the bounded key lookup shared by the persisted-index families
+  * with its guarded appends, and the bounded key lookup shared by the
+  * persisted-index families
   * ([[LshIndexOps]], [[SearchIndexOps]], [[MediaIndexOps]],
   * [[VectorIndexOps]] and [[GraphOps]]' growable edge table).
   *
@@ -119,23 +126,25 @@ private[graft] object IndexCatalog {
     * key; any string is a valid key. A key with a `commit` row
     * short-circuits (a replay of a committed batch is a no-op).
     * Otherwise an `intent` row is written, `appends` runs, and a
-    * `commit` row is written — two single-row `insertInto` writes
-    * around the work, each followed by a refresh so the next batch's
-    * phase read sees it.
+    * `commit` row is written — two single-row [[append]]s around the
+    * work, so the next batch's phase read sees them.
     *
     * A replay that finds `intent` without `commit` — a crash in the
-    * middle — calls `appends(true)`: the caller then guards each table
-    * append by a presence probe ([[PresenceProbe]], or its own tag
-    * probe) so exactly the missing appends re-run and nothing lands
-    * twice. Each append must therefore be one atomic job commit whose
-    * presence proves the whole append landed; the residual exposure is
-    * that single-append atomicity, the engine-level floor without a
-    * transactional table format (Iceberg/Delta). A crash after the
-    * appends but before the commit row leaves a dangling `intent`: the
-    * replay either repairs it (every probe finds its table present) or,
-    * when the caller's own membership guard filters the replay to
-    * empty before it reaches the ledger, leaves it inert — batch keys
-    * are unique, so no later batch matches it.
+    * middle — calls `appends(true)`. Table appends are repaired by
+    * [[Appends]] ([[ledgeredAppends]]): it skips each append whose
+    * guard finds the batch already landed, so exactly the missing
+    * appends re-run and nothing lands twice. Each append must
+    * therefore be one atomic job commit whose presence proves the
+    * whole append landed; the residual exposure is that single-append
+    * atomicity, the engine-level floor without a transactional table
+    * format (Iceberg/Delta). A crash after the appends but before the
+    * commit row leaves a dangling `intent`: the replay either repairs
+    * it (every guard finds its table present) or, when the caller's
+    * own membership guard filters the replay to empty before it
+    * reaches the ledger, leaves it inert — batch keys are unique, so no
+    * later batch matches it. A caller whose steps are idempotent by
+    * construction ([[GraphOps]]' anti-join grow) reads `appends`' flag
+    * itself.
     *
     * A pre-existing `<owner>_batches` table of any other schema (a
     * retired ledger generation, or a foreign table under the name)
@@ -163,22 +172,119 @@ private[graft] object IndexCatalog {
     if (phases.contains("commit")) return
     val repairing = phases.contains("intent")
     // A one-row frame, never SQL text, so a key may hold any character.
-    def record(phase: String): Unit = {
-      spark.createDataFrame(Seq((batchKey, phase))).write.insertInto(ledger)
-      spark.catalog.refreshTable(ledger)
-    }
+    def record(phase: String): Unit =
+      append(spark, ledger, spark.createDataFrame(Seq((batchKey, phase))))
     if (!repairing) record("intent")
     appends(repairing)
     record("commit")
   }
 
-  /** The crash-repair presence probe the ledger users share
-    * ([[LshIndexOps]], [[MediaIndexOps]], [[SearchIndexOps]],
-    * [[VectorIndexOps]]; [[GraphOps]]' grow steps are idempotent
-    * anti-joins and need none): "does `table` already hold any of this
-    * batch's rows?" — presence of one row implies the whole batch
-    * landed there, because each table append is a single atomic job
-    * commit. The batch's distinct `idCol` list is collected ONCE per
+  /** Append `rows` to `table` through `insertInto` (the table's own
+    * column order and bucket/sort spec), then refresh it: the session
+    * caches a table's file listing on first read, and without the
+    * refresh the next batch's read of `table` would miss this append.
+    */
+  def append(spark: SparkSession, table: String, rows: DataFrame): Unit = {
+    rows.write.mode("append").insertInto(table)
+    spark.catalog.refreshTable(table)
+  }
+
+  /** A batch's ledger key, its minimum `idCol` (a long), or None for an
+    * empty batch — one aggregate job for both answers.
+    */
+  def batchKey(batch: DataFrame, idCol: String = "doc_id"): Option[Long] = {
+    val r = batch.agg(count(lit(1)), min(col(idCol))).head()
+    if (r.getLong(0) == 0) None else Some(r.getLong(1))
+  }
+
+  /** One table append of a batch: `rows` go to `<owner>_<table>`. The
+    * crash-repair guard `landed` answers "does this table already hold
+    * the batch?" for the full table name; by default it is the batch's
+    * [[PresenceProbe]]. Rows that carry no batch id (per-batch partials)
+    * use [[taggedWith]] instead. `rows` is evaluated only if the append
+    * runs.
+    */
+  final class Append(
+      val table: String,
+      rows: => DataFrame,
+      val landed: Option[String => Boolean] = None,
+  ) {
+    private[IndexCatalog] def frame: DataFrame = rows
+  }
+
+  /** The guard for partial rows tagged with their batch's `batch_key`
+    * column: `table` holds a row with that tag.
+    */
+  def taggedWith(spark: SparkSession, batchKey: Long): String => Boolean =
+    present(spark, _, "batch_key", Seq(batchKey))
+
+  /** A batch's table appends, one group per call. `apply` runs the
+    * group's appends concurrently ([[concurrently]]) and returns when
+    * all have landed, so consecutive calls land in order: a family
+    * appends its membership table in the last call, making it the
+    * batch's commit marker. On a repairing replay an append whose guard
+    * finds the batch already landed is skipped; the guards run on this
+    * thread before the group starts, and the [[PresenceProbe]] over
+    * `batch`'s `idCol` list is built at most once per repair and never
+    * on a fresh batch.
+    */
+  final class Appends(
+      spark: SparkSession,
+      owner: String,
+      batch: DataFrame,
+      repairing: Boolean,
+      idCol: String = "doc_id",
+  ) {
+    private lazy val probe = new PresenceProbe(spark, batch, idCol = idCol)
+
+    def apply(group: Append*): Unit = {
+      val due = group.map(a => (s"${owner}_${a.table}", a)).filter { case (table, a) =>
+        !repairing || !a.landed.fold(probe(table))(_(table))
+      }
+      concurrently(spark)(due.map { case (table, a) => () => append(spark, table, a.frame) })
+    }
+  }
+
+  /** [[ledgered]] for a batch whose work is table appends: `steps`
+    * lists them as [[Appends]] groups over `batch`, and a repairing
+    * replay re-runs only the missing ones.
+    */
+  def ledgeredAppends(spark: SparkSession, owner: String, batchKey: Long, batch: DataFrame)(
+      steps: Appends => Unit,
+  ): Unit =
+    ledgered(spark, owner, batchKey.toString)(repairing =>
+      steps(new Appends(spark, owner, batch, repairing)))
+
+  /** Runs `tasks` at once: all but the last on daemon threads (started
+    * with the caller's session and local properties, so their jobs
+    * belong to the caller's SQL execution), the last on this one.
+    * Returns once EVERY task has finished — no write is left running
+    * behind a failure — and then rethrows the first failure in task
+    * order.
+    */
+  private def concurrently(spark: SparkSession)(tasks: Seq[() => Unit]): Unit =
+    if (tasks.nonEmpty) {
+      val started = tasks.init.map(t =>
+        SQLExecution.withThreadLocalCaptured(castToImpl(spark), appendPool)(t()))
+      val last = Try(tasks.last())
+      val outcomes = started.map(f =>
+        Try(f.get()).recoverWith { case e: ExecutionException => Failure(e.getCause) })
+      (outcomes :+ last).foreach(_.get)
+    }
+
+  private lazy val appendPool = Executors.newCachedThreadPool { (r: Runnable) =>
+    val t = new Thread(r, "index-append")
+    t.setDaemon(true)
+    t
+  }
+
+  /** The crash-repair presence probe, [[Appends]]' default guard for
+    * the LSH, Media, Search and Vector ingests ([[GraphOps]]' grow
+    * steps are idempotent anti-joins and need none): "does `table`
+    * already hold any of this batch's rows?" — presence of one row
+    * implies the whole batch landed there, because each table append
+    * is a single atomic job commit. The batch's distinct `idCol` list
+    * is collected ONCE per
     * repair ([[capped]], lazily — the fresh-batch fast path never pays
     * it), not once per probed table, and each probe is a [[present]]
     * over it (bucket pruning + parquet row-group id stats skip every

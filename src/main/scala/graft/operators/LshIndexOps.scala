@@ -1,11 +1,7 @@
 package graft.operators
 
-import java.util.concurrent.{ExecutionException, Executors}
-
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.classic.ClassicConversions.castToImpl
-import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
@@ -534,7 +530,6 @@ object LshIndexOps {
     * prior partial append) and the merge is idempotent, so a crashed
     * replay converges (LshIndexSpec asserts bit-equality to a
     * from-scratch rebuild after N batches and replay as a no-op).
-    * `buckets` is unused, as in [[dedupBatchAndGrow]].
     */
   def ingestBatchAndMaintain(
       spark: SparkSession,
@@ -543,7 +538,6 @@ object LshIndexOps {
       n: Int,
       k: Int,
       bands: Int,
-      buckets: Int,
       threshold: Double,
   ): Unit = {
     val idx = batchFrame(batch, n, k, bands)
@@ -629,8 +623,7 @@ object LshIndexOps {
     * streaming ingest needs no restart: [[dedupBatchAndGrow]] and
     * [[ingestBatchAndMaintain]] append through `insertInto`, which
     * writes with the live table's own bucket and sort spec, so the
-    * first batch after the swap already lands at the new count (their
-    * `buckets` argument no longer steers appends).
+    * first batch after the swap already lands at the new count.
     */
   def rebucket(spark: SparkSession, prefix: String, newBuckets: Int): Unit =
     IndexCatalog.rebucket(spark, bucketedTables(spark, prefix), newBuckets)
@@ -700,8 +693,8 @@ object LshIndexOps {
     * its meta columns), stored and within-batch matches come from one
     * candidate join and one verify join ([[batchMatches]]), and
     * [[appendKeepers]] overlaps the bands and meta appends (SCALE.md
-    * gives the job count). `buckets` is unused — appends follow the
-    * tables' live bucket spec (see [[rebucket]]).
+    * gives the job count). Appends follow the tables' live bucket spec
+    * (see [[rebucket]]).
     */
   def dedupBatchAndGrow(
       spark: SparkSession,
@@ -710,7 +703,6 @@ object LshIndexOps {
       n: Int,
       k: Int,
       bands: Int,
-      buckets: Int,
       threshold: Double,
       crashAfter: String = "",
   ): DataFrame = {
@@ -733,52 +725,25 @@ object LshIndexOps {
     dups
   }
 
-  /** Runs the independent appends of one batch: `a` on an internal
-    * thread (started with the caller's session and local properties, so
-    * its jobs belong to the caller's SQL execution), `b` on this one.
-    * Returns once BOTH have finished — no write is left running behind
-    * a failure of `b` — and rethrows a failure, `a`'s when both fail.
-    */
-  private def concurrently(spark: SparkSession)(a: => Unit)(b: => Unit): Unit = {
-    val fa = SQLExecution.withThreadLocalCaptured(castToImpl(spark), appendPool)(a)
-    val rb = scala.util.Try(b)
-    try fa.get()
-    catch { case e: ExecutionException => throw e.getCause }
-    rb.get
-  }
-
-  private lazy val appendPool = Executors.newCachedThreadPool { (r: Runnable) =>
-    val t = new Thread(r, "lsh-index-append")
-    t.setDaemon(true)
-    t
-  }
-
   /** Appends the batch's keepers to the index tables, crash-repairably
-    * ([[IndexCatalog.ledgered]], keyed by the min kept doc_id), and
-    * their `(doc_id, text_md5, n_tok)` rows to `_meta` when the prefix
-    * carries it (the MediaIndexOps meta-maintenance discipline: the
-    * upload-time digest probe then sees incrementally-admitted documents,
-    * so an exact copy replayed later is labeled `exact_dup` — not
-    * `near_dup` at jaccard 1).
+    * ([[IndexCatalog.ledgeredAppends]], keyed by the min kept doc_id),
+    * and their `(doc_id, text_md5, n_tok)` rows to `_meta` when the
+    * prefix carries it (the MediaIndexOps meta-maintenance discipline:
+    * the upload-time digest probe then sees incrementally-admitted
+    * documents, so an exact copy replayed later is labeled `exact_dup`
+    * — not `near_dup` at jaccard 1).
     *
-    * The bands and meta appends run CONCURRENTLY ([[concurrently]]), and
-    * docs is written LAST: the docs table is the membership table
+    * Bands ‖ meta, then docs. Docs is the membership table
     * [[dedupBatchAndGrow]]'s `kept` anti-join reads, so its append is
-    * the batch's doc-level commit marker — a replay of a crash before
+    * the batch's doc-level commit marker: a replay of a crash before
     * docs recomputes the identical kept set (keepers never verify
     * against each other, so their own bands in the store add no dup
     * rows — the self-collision guard covers exact replays), while a
     * docs-first order made a crash between UNREPAIRABLE: the keepers
     * vanished from `kept` with their bands never written, silently
-    * missing every future duplicate of them. A crash before the docs
-    * append can therefore leave any subset of {bands, meta} landed; a
-    * repairing replay presence-guards each append by the bounded
-    * kept-id list (parquet row-group stats skip every file but the
-    * crashed append's own), so exactly the missing tables re-append.
-    *
-    * Appends go through `insertInto`, i.e. the table's OWN bucket and
-    * sort spec — they follow the live bucket count across a
-    * [[rebucket]] with no catalog lookup here.
+    * missing every future duplicate of them. A crash before docs can
+    * leave any subset of {bands, meta} landed, and the repair
+    * re-appends exactly the missing ones.
     *
     * `crashAfter` is the spec's fault-injection seam, named by what
     * lands before the injected crash: "bands" (bands only), "meta-only"
@@ -789,35 +754,22 @@ object LshIndexOps {
       prefix: String,
       kept: DataFrame,
       crashAfter: String,
-  ): Unit = {
-    val stats = kept.agg(count(lit(1)), min(col("doc_id"))).head()
-    if (stats.getLong(0) == 0) return // nothing to append → no ledger entry needed
-    IndexCatalog.ledgered(spark, prefix, stats.getLong(1).toString) { repairing =>
-      // One kept-id collect per REPAIR, shared by every table probe
-      // (lazy inside the probe — the fast path never pays it).
-      val probe = new IndexCatalog.PresenceProbe(spark, kept)
-      def missing(table: String): Boolean = !repairing || !probe(s"${prefix}_$table")
-      def append(table: String, rows: DataFrame): Unit = {
-        rows.write.mode("append").insertInto(s"${prefix}_$table")
-        // The session caches each table's resolved relation (file listing
-        // included) on first read; without an explicit refresh the NEXT
-        // batch's candidate join would silently run against the
-        // pre-append file set and miss every cross-batch duplicate.
-        spark.catalog.refreshTable(s"${prefix}_$table")
+  ): Unit =
+    // An empty batch needs no ledger entry.
+    IndexCatalog.batchKey(kept).foreach { key =>
+      IndexCatalog.ledgeredAppends(spark, prefix, key, kept) { append =>
+        val bands = new IndexCatalog.Append("bands", bandRows(kept))
+        val meta =
+          new IndexCatalog.Append("meta", kept.select(col("doc_id"), col("text_md5"), col("n_tok")))
+        val withMeta = spark.catalog.tableExists(s"${prefix}_meta")
+        append(
+          Seq(bands).filter(_ => crashAfter != "meta-only") ++
+            Seq(meta).filter(_ => withMeta && crashAfter != "bands"): _*)
+        if (crashAfter.nonEmpty)
+          throw new IllegalStateException(s"injected crash after $crashAfter append")
+        append(new IndexCatalog.Append("docs", kept.select(col("doc_id"), col("sh"))))
       }
-      val bands = crashAfter != "meta-only" && missing("bands")
-      val meta = crashAfter != "bands" &&
-        spark.catalog.tableExists(s"${prefix}_meta") && missing("meta")
-      concurrently(spark) {
-        if (bands) append("bands", bandRows(kept))
-      } {
-        if (meta) append("meta", kept.select(col("doc_id"), col("text_md5"), col("n_tok")))
-      }
-      if (crashAfter.nonEmpty)
-        throw new IllegalStateException(s"injected crash after $crashAfter append")
-      if (missing("docs")) append("docs", kept.select(col("doc_id"), col("sh")))
     }
-  }
 
   /** Continuous ingestion dedup — the streaming face of the persisted
     * index: every micro-batch of the `docs` stream (doc_id, text) is
@@ -827,7 +779,8 @@ object LshIndexOps {
     * tables rather than in a state store: restarts recover it for free,
     * batch consumers ([[nearDupPairs]] etc.) read the same artifact
     * concurrently, and state size scales with the warehouse, not
-    * executor memory.
+    * executor memory. `buckets` is unused (appends follow the tables'
+    * live bucket spec); it stays because callers pass it by position.
     */
   def streamingDedup(
       spark: SparkSession,
@@ -845,7 +798,7 @@ object LshIndexOps {
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        onDups(dedupBatchAndGrow(spark, prefix, batch, n, k, bands, buckets, threshold), batchId)
+        onDups(dedupBatchAndGrow(spark, prefix, batch, n, k, bands, threshold), batchId)
       }
       .start()
 }

@@ -195,19 +195,6 @@ object MediaIndexOps {
     MultimodalOps.confirmPairs(pairs, fps, whashBudget)
   }
 
-  /** Persist the CURATION artifacts next to the fingerprint index — the
-    * deployment shape of a nightly curation verdict: `<prefix>_meta`
-    * (doc_id, ex_keeper, width, height, n_bytes, has_signal — ONE
-    * decoded scan over the payload bytes,
-    * [[MultimodalOps.curationMeta]], instead of the separate exact-hash
-    * / header / signal passes) and `<prefix>_clusters` (doc_id,
-    * component — label-prop connected components over the verified
-    * pairs read FROM the just-written chunk table, so clustering never
-    * re-fingerprints a payload). Both bucketed+sorted on doc_id like
-    * `_fps`, so the verdict read face joins them exchange-free. These
-    * are BUILD-TIME artifacts (refreshed with the index, the nightly
-    * cadence); the incremental ingest faces grow `_fps`/`_chunks` only.
-    */
   /** Persist just the `<prefix>_meta` table (the one-decoded-scan item
     * metadata + exact-dup keeper) — the half [[uploadVerdict]] needs;
     * [[writeCurationArtifacts]] adds the cluster assignment on top.
@@ -223,6 +210,20 @@ object MediaIndexOps {
       .bucketBy(buckets, "doc_id").sortBy("doc_id")
       .saveAsTable(s"${prefix}_meta")
 
+  /** Persist the CURATION artifacts next to the fingerprint index — the
+    * deployment shape of a nightly curation verdict: `<prefix>_meta`
+    * (doc_id, ex_keeper, width, height, n_bytes, has_signal — ONE
+    * decoded scan over the payload bytes,
+    * [[MultimodalOps.curationMeta]], instead of the separate exact-hash
+    * / header / signal passes) and `<prefix>_clusters` (doc_id,
+    * component — label-prop connected components over the verified
+    * pairs read FROM the just-written chunk table, so clustering never
+    * re-fingerprints a payload). Both bucketed+sorted on doc_id like
+    * `_fps`, so the verdict read face joins them exchange-free. These
+    * are BUILD-TIME artifacts (refreshed with the index, the nightly
+    * cadence); between builds the ingest faces append `_meta` rows and
+    * [[ingestBatchAndMaintain]] grows the cluster tables.
+    */
   def writeCurationArtifacts(
       spark: SparkSession,
       media: DataFrame,
@@ -457,7 +458,7 @@ object MediaIndexOps {
     * a metadata-only `_meta` rewrite taken only when such a collision
     * exists (with monotone arrival ids it never fires and `_meta`
     * stays append-only; at 100 TB this is a MERGE on a transactional
-    * table). `buckets` is unused, as in [[dedupBatchAndGrow]].
+    * table).
     */
   def ingestBatchAndMaintain(
       spark: SparkSession,
@@ -465,7 +466,6 @@ object MediaIndexOps {
       batch: DataFrame,
       regions: Int,
       blockBands: Int,
-      buckets: Int,
       maxHamming: Int,
       whashBudget: Int = 5,
       mediaType: String = "image",
@@ -724,9 +724,8 @@ object MediaIndexOps {
     * themselves — or (b) any lower-doc_id image of the SAME batch.
     * Kept rows are anti-joined against the stored fps table before the
     * append (replay-safe on the index); the dup frame materializes
-    * BEFORE the append mutates the tables it reads. `buckets` is
-    * unused — appends follow the tables' live bucket spec (see
-    * [[rebucket]]).
+    * BEFORE the append mutates the tables it reads. Appends follow the
+    * tables' live bucket spec (see [[rebucket]]).
     */
   def dedupBatchAndGrow(
       spark: SparkSession,
@@ -734,7 +733,6 @@ object MediaIndexOps {
       batch: DataFrame,
       regions: Int,
       blockBands: Int,
-      buckets: Int,
       maxHamming: Int,
       crashAfter: String = "",
       mediaType: String = "image",
@@ -778,22 +776,20 @@ object MediaIndexOps {
   }
 
   /** Appends the batch's keepers to the index tables, crash-repairably
-    * ([[IndexCatalog.ledgered]], keyed by the min kept doc_id; the
-    * [[LshIndexOps]] keeper discipline): chunks FIRST, then the
-    * optional `_meta` rows, fps LAST — fps is the membership table the
-    * kept anti-join reads, so its append is the batch's commit marker;
-    * the reverse order would make a crash-between unrepairable
-    * (keepers in fps with no chunk rows, invisible to every future
-    * candidate join, and hidden from the replay by the very anti-join
-    * that should repair them). Keepers never verify against each
-    * other, so a replay recomputes the identical kept set even with
-    * their chunks already stored (the self-collision guard covers
-    * exact replays); a repairing replay presence-guards each append by
-    * the bounded kept-id list. `keptMeta` (when the prefix carries the
-    * curation-meta artifact) appends under the same ledger entry.
-    * Appends go through `insertInto`, i.e. each table's OWN bucket and
-    * sort spec, so they follow the live bucket count across a
-    * [[rebucket]].
+    * ([[IndexCatalog.ledgeredAppends]], keyed by the min kept doc_id;
+    * the [[LshIndexOps]] keeper discipline): chunks, then the optional
+    * `_meta` rows (`keptMeta`, when the prefix carries the curation-meta
+    * artifact), then fps. Fps is the membership table the kept
+    * anti-join reads, so its append is the batch's commit marker; the
+    * reverse order would make a crash-between unrepairable (keepers in
+    * fps with no chunk rows, invisible to every future candidate join,
+    * and hidden from the replay by the very anti-join that should
+    * repair them). Keepers never verify against each other, so a
+    * replay recomputes the identical kept set even with their chunks
+    * already stored (the self-collision guard covers exact replays).
+    *
+    * `crashAfter` is the spec's fault-injection seam: "chunks" or
+    * "meta" throws right after that append.
     */
   private def appendKeepers(
       spark: SparkSession,
@@ -801,30 +797,21 @@ object MediaIndexOps {
       kept: DataFrame,
       crashAfter: String,
       keptMeta: Option[DataFrame] = None,
-  ): Unit = {
-    if (kept.isEmpty) return // nothing to append → no ledger entry needed
-    val batchKey = kept.agg(min(col("doc_id"))).first().getLong(0)
-    IndexCatalog.ledgered(spark, prefix, batchKey.toString) { repairing =>
-      // One kept-id collect per REPAIR, shared by every table probe
-      // (lazy inside the probe — the fast path never pays it).
-      val probe = new IndexCatalog.PresenceProbe(spark, kept)
-      def append(table: String, rows: DataFrame): Unit =
-        if (!repairing || !probe(s"${prefix}_$table")) {
-          rows.write.mode("append").insertInto(s"${prefix}_$table")
-          // Without the refresh the next batch's candidate join would
-          // read the pre-append file listing and miss every cross-batch
-          // dup.
-          spark.catalog.refreshTable(s"${prefix}_$table")
-        }
-      append("chunks", chunkRows(kept))
-      if (crashAfter == "chunks")
-        throw new IllegalStateException("injected crash after chunks append")
-      keptMeta.foreach(append("meta", _))
-      if (crashAfter == "meta")
-        throw new IllegalStateException("injected crash after meta append")
-      append("fps", kept.select(col("doc_id"), col("dhash"), col("whash")))
+  ): Unit =
+    // An empty batch needs no ledger entry.
+    IndexCatalog.batchKey(kept).foreach { key =>
+      IndexCatalog.ledgeredAppends(spark, prefix, key, kept) { append =>
+        def crash(point: String): Unit =
+          if (crashAfter == point)
+            throw new IllegalStateException(s"injected crash after $point append")
+        append(new IndexCatalog.Append("chunks", chunkRows(kept)))
+        crash("chunks")
+        append(keptMeta.map(new IndexCatalog.Append("meta", _)).toSeq: _*)
+        crash("meta")
+        append(
+          new IndexCatalog.Append("fps", kept.select(col("doc_id"), col("dhash"), col("whash"))))
+      }
     }
-  }
 
   /** Continuous ingestion dedup — the streaming face: every
     * micro-batch of the `media` stream (doc_id, media_type, payload)
@@ -838,7 +825,6 @@ object MediaIndexOps {
       media: DataFrame,
       regions: Int,
       blockBands: Int,
-      buckets: Int,
       maxHamming: Int,
       checkpoint: String,
       onDups: (DataFrame, Long) => Unit,
@@ -850,7 +836,7 @@ object MediaIndexOps {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         onDups(
           dedupBatchAndGrow(
-            spark, prefix, batch, regions, blockBands, buckets, maxHamming,
+            spark, prefix, batch, regions, blockBands, maxHamming,
             mediaType = mediaType),
           batchId)
       }

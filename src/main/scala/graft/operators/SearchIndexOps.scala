@@ -37,6 +37,8 @@ import org.apache.spark.sql.functions._
   */
 object SearchIndexOps {
 
+  private type Writer = org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row]
+
   /** Builds and publishes the index tables (overwriting any previous
     * index at `prefix`). A stale ingest ledger from a previous index
     * generation would make [[indexBatch]] skip legitimate batches of
@@ -44,76 +46,59 @@ object SearchIndexOps {
     */
   def writeIndex(docs: DataFrame, buckets: Int, prefix: String): Unit = {
     IndexCatalog.dropLedger(docs.sparkSession, prefix)
-    writeTables(docs, Some(buckets), prefix)
-  }
-
-  private def writeTables(docs: DataFrame, buckets: Option[Int], prefix: String): Unit = {
-    val bk = batchKeyOf(docs)
-    tableWrites(docs, buckets, prefix, bk).foreach { case (t, run) =>
-      run()
+    tableWrites(docs, batchKeyOf(docs)).foreach { case (t, rows, layout) =>
+      layout(rows().write.mode("overwrite"), buckets).saveAsTable(s"${prefix}_$t")
       docs.sparkSession.catalog.refreshTable(s"${prefix}_$t")
     }
   }
 
-  /** The batch's deterministic identity: its minimum doc_id. Batches
-    * carry disjoint doc_id sets (the incremental contract), so the
-    * minimum is unique per batch AND reproducible on a checkpoint
-    * replay of the same batch — which is what lets the per-batch
-    * lexicon/df and meta partials be attributed to their batch, and
-    * the ingest ledger recognize a replay, without any external id.
+  /** The batch's deterministic identity: its minimum doc_id (0 for an
+    * empty batch, an inert key). Batches carry disjoint doc_id sets
+    * (the incremental contract), so the minimum is unique per batch AND
+    * reproducible on a checkpoint replay of the same batch — which is
+    * what lets the per-batch lexicon/df and meta partials be attributed
+    * to their batch, and the ingest ledger recognize a replay, without
+    * any external id.
     */
-  private def batchKeyOf(docs: DataFrame): Long = {
-    val r = docs.agg(min(col("doc_id"))).first()
-    if (r.isNullAt(0)) 0L else r.getLong(0) // empty batch → inert key
-  }
+  private def batchKeyOf(docs: DataFrame): Long = IndexCatalog.batchKey(docs).getOrElse(0L)
 
-  /** The four table writes in commit order — docs LAST, because it is
-    * the membership table [[replayGuardFresh]] anti-joins against, so
-    * its append is the batch's doc-level commit marker. Each write is
-    * a thunk so [[indexBatch]]'s crash repair can re-run exactly the
-    * missing suffix; the shared inputs are lazy and materialized once
-    * (the corpus explode feeds two tables and must run once per
-    * build). Lexicon and meta partial rows are tagged with the batch
-    * key: per-batch partials are summed by readers anyway, and the tag
-    * is what makes a crashed partial append DETECTABLE afterwards
-    * (postings/docs rows carry their doc_ids; without the tag, df/meta
-    * partials from a half-landed batch would be indistinguishable from
-    * history).
-    *
-    * `buckets` set builds the tables at that count — the one place each
-    * layout is stated; unset appends through `insertInto`, so each
-    * table keeps its own catalog layout (a rebucket that crashed
-    * between two table swaps leaves the tables at different counts, and
-    * appends still land).
+  /** The four tables' rows in commit order, each with its build layout
+    * — the one place each layout is stated; appends go through
+    * `insertInto`, so each table keeps its own catalog layout (a
+    * rebucket that crashed between two table swaps leaves the tables at
+    * different counts, and appends still land). Docs is LAST, because
+    * it is the membership table [[replayGuardFresh]] anti-joins
+    * against, so its append is the batch's doc-level commit marker.
+    * The shared inputs are lazy and materialized once (the corpus
+    * explode feeds two tables and must run once per build). Lexicon
+    * and meta partial rows are tagged with the batch key: per-batch
+    * partials are summed by readers anyway, and the tag is what makes a
+    * crashed partial append DETECTABLE afterwards (postings/docs rows
+    * carry their doc_ids; without the tag, df/meta partials from a
+    * half-landed batch would be indistinguishable from history).
     */
   private def tableWrites(
       docs: DataFrame,
-      buckets: Option[Int],
-      prefix: String,
       batchKey: Long,
-  ): Seq[(String, () => Unit)] = {
+  ): Seq[(String, () => DataFrame, (Writer, Int) => Writer)] = {
     lazy val p = SearchOps.postings(docs).localCheckpoint()
     // Length norms from one narrow projection of the batch (no second
     // explode — size(split) is row-local).
     lazy val dl = docs
       .select(col("doc_id"), size(split(col("text"), " ")).cast("long").as("dl"))
       .localCheckpoint()
-    type Writer = org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row]
-    def write(t: String, rows: => DataFrame)(layout: (Writer, Int) => Writer) =
-      (t, () => buckets match {
-        case Some(n) => layout(rows.write.mode("overwrite"), n).saveAsTable(s"${prefix}_$t")
-        case None => rows.write.mode("append").insertInto(s"${prefix}_$t")
-      })
+    def table(t: String, rows: => DataFrame)(layout: (Writer, Int) => Writer) =
+      (t, () => rows, layout)
     Seq(
-      write("postings", p)((w, n) => w.bucketBy(n, "term").sortBy("term", "doc_id", "pos")),
-      write("lexicon",
+      table("postings", p)((w, n) => w.bucketBy(n, "term").sortBy("term", "doc_id", "pos")),
+      table("lexicon",
         p.groupBy(col("term"))
           .agg(countDistinct(col("doc_id")).as("df"))
           .withColumn("batch_key", lit(batchKey)))((w, n) => w.bucketBy(n, "term")),
-      write("meta",
+      table("meta",
         dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("n_tokens"))
           .withColumn("batch_key", lit(batchKey)))((w, _) => w),
-      write("docs", dl)((w, n) => w.bucketBy(n, "doc_id")),
+      table("docs", dl)((w, n) => w.bucketBy(n, "doc_id")),
     )
   }
 
@@ -126,7 +111,9 @@ object SearchIndexOps {
     * results to the next query.
     */
   def appendDocuments(spark: SparkSession, prefix: String, batch: DataFrame): Unit =
-    writeTables(batch, None, prefix)
+    tableWrites(batch, batchKeyOf(batch)).foreach { case (t, rows, _) =>
+      IndexCatalog.append(spark, s"${prefix}_$t", rows())
+    }
 
   /** Index health stats — the operational view of the stored postings:
     * per term-bucket file count proxy isn't observable from SQL, but
@@ -245,31 +232,6 @@ object SearchIndexOps {
     }
   }
 
-  /** Does `<prefix>_<table>` already hold THIS batch's rows? Presence
-    * of any row implies the whole batch landed in that table (each
-    * table's append is one atomic job commit). Postings/docs rows are
-    * located by the batch's bounded doc_id list (the
-    * [[IndexCatalog.PresenceProbe]] pushdown — bucket-pruned on docs,
-    * file-skipped via parquet row-group doc_id stats on postings,
-    * where every append's files hold only that batch's ids; semi-join
-    * fallback above the cap);
-    * lexicon/meta partials by their batch-key tag. Only the RARE
-    * crash-repair path pays these probes — the fresh-batch fast path
-    * never runs them.
-    */
-  private def batchPresent(
-      spark: SparkSession,
-      prefix: String,
-      table: String,
-      probe: IndexCatalog.PresenceProbe,
-      batchKey: Long,
-  ): Boolean =
-    table match {
-      case "lexicon" | "meta" =>
-        IndexCatalog.present(spark, s"${prefix}_$table", "batch_key", Seq(batchKey))
-      case _ => probe(s"${prefix}_$table")
-    }
-
   /** One replay-safe, crash-repairable ingest step.
     *
     * Layer 1 — doc-level guard: [[replayGuardFresh]] drops the batch
@@ -277,14 +239,16 @@ object SearchIndexOps {
     * written last) already holds, so a fully-committed batch replays
     * to a no-op and a mixed batch keeps only its new docs.
     *
-    * Layer 2 — the ingest ledger ([[IndexCatalog.ledgered]]), keyed
-    * by [[batchKeyOf]] (the min doc_id): the four table appends run
-    * docs last, and a repairing replay guards each by
-    * [[batchPresent]], so exactly the missing suffix re-runs and tf/df
-    * is never double-counted (SearchIndexSpec kills the sequence
-    * between postings and docs and asserts the replayed index is
-    * bit-equal). A crash after the docs append leaves a dangling
-    * `intent`: its replay filters to empty at the doc-level guard.
+    * Layer 2 — the ingest ledger ([[IndexCatalog.ledgeredAppends]]),
+    * keyed by the min doc_id: the four tables append one at a time in
+    * [[tableWrites]]' order, docs last. A repairing replay locates
+    * postings/docs rows by the batch's doc_ids and lexicon/meta
+    * partials by their batch-key tag, so exactly the missing tables
+    * re-run and tf/df is never double-counted (SearchIndexSpec kills
+    * the sequence between postings and docs and asserts the replayed
+    * index is bit-equal). A crash after the docs append leaves a
+    * dangling `intent`: its replay filters to empty at the doc-level
+    * guard.
     *
     * `crashAfter` is the spec's fault-injection seam: throw right
     * after the named table's append, simulating a kill mid-sequence.
@@ -296,21 +260,18 @@ object SearchIndexOps {
       crashAfter: String = "",
   ): Unit = {
     val fresh = replayGuardFresh(spark, prefix, batch).localCheckpoint()
-    if (fresh.isEmpty) return
-    val bk = batchKeyOf(fresh)
-    IndexCatalog.ledgered(spark, prefix, bk.toString) { repairing =>
-      // One fresh-id collect per REPAIR, shared by every table probe
-      // (lazy inside the probe — the fast path never pays it).
-      val probe = new IndexCatalog.PresenceProbe(spark, fresh)
-      tableWrites(fresh, None, prefix, bk)
-        .foreach { case (t, run) =>
-          if (!repairing || !batchPresent(spark, prefix, t, probe, bk)) {
-            run()
-            spark.catalog.refreshTable(s"${prefix}_$t")
-          }
+    IndexCatalog.batchKey(fresh).foreach { bk =>
+      IndexCatalog.ledgeredAppends(spark, prefix, bk, fresh) { append =>
+        tableWrites(fresh, bk).foreach { case (t, rows, _) =>
+          // Lexicon and meta partials carry no doc_id: their batch-key
+          // tag locates them.
+          val tagged =
+            Option.when(t == "lexicon" || t == "meta")(IndexCatalog.taggedWith(spark, bk))
+          append(new IndexCatalog.Append(t, rows(), tagged))
           if (crashAfter == t)
             throw new IllegalStateException(s"injected crash after $t append")
         }
+      }
     }
   }
 

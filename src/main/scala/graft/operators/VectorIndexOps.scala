@@ -205,24 +205,20 @@ object VectorIndexOps {
 
   /** The batch's reproducible identity — its min vec_id (batches carry
     * disjoint vec_id sets, so the minimum is unique AND stable across
-    * checkpoint replays); tags the cellstats partials so a crashed
-    * partial append is attributable afterwards.
+    * checkpoint replays; 0 for an empty batch, an inert key); tags the
+    * cellstats partials so a crashed partial append is attributable
+    * afterwards.
     */
-  private def batchKeyOf(assigned: DataFrame): Long = {
-    val r = assigned.agg(min(col("vec_id"))).first()
-    if (r.isNullAt(0)) 0L else r.getLong(0) // empty batch → inert key
-  }
+  private def batchKeyOf(assigned: DataFrame): Long =
+    IndexCatalog.batchKey(assigned, "vec_id").getOrElse(0L)
 
-  /** The append, with the crash-repair seam [[ingestBatch]] drives:
-    * when `repairing` (a replay found an intent-without-commit ledger
-    * row), each of the two appends is individually guarded by a
-    * presence probe — vectors by the batch's bounded vec_id list
-    * (file-skipped via parquet row-group stats: every append's files
-    * hold only that batch's ids), cellstats by the batch-key tag its
-    * partial rows carry — so exactly the missing appends re-run and
-    * nothing lands twice. The fresh-batch fast path never probes.
-    * `crashAfter` is the spec's fault injection: throw right after the
-    * named table's append.
+  /** The append: vectors, then cellstats ([[IndexCatalog.Appends]]).
+    * When `repairing` (a replay of [[ingestBatch]] found an
+    * intent-without-commit ledger row), vectors are located by the
+    * batch's vec_ids and cellstats by the batch-key tag its partial
+    * rows carry, so exactly the missing appends re-run. `crashAfter` is
+    * the spec's fault injection: throw right after the named table's
+    * append.
     */
   private[graft] def appendVectorsGuarded(
       spark: SparkSession,
@@ -252,13 +248,8 @@ object VectorIndexOps {
     // (VectorIndexSpec pins the plan).
     val assigned = assignedProjection(batch, cb).localCheckpoint()
     val bk = batchKeyOf(assigned)
-    def vectorsPresent: Boolean =
-      new IndexCatalog.PresenceProbe(spark, assigned, idCol = "vec_id")(
-        s"${prefix}_vectors")
-    if (!repairing || !vectorsPresent) {
-      assigned.write.mode("append").insertInto(s"${prefix}_vectors")
-      spark.catalog.refreshTable(s"${prefix}_vectors")
-    }
+    val append = new IndexCatalog.Appends(spark, prefix, assigned, repairing, idCol = "vec_id")
+    append(new IndexCatalog.Append("vectors", assigned))
     if (crashAfter == "vectors")
       throw new IllegalStateException("injected crash after vectors append")
     // The batch's radius partials ride along as an APPEND (readers max
@@ -267,12 +258,10 @@ object VectorIndexOps {
     // the table ([[ivfRangeSearch]] then probes every cell — correct,
     // unpruned).
     if (spark.catalog.tableExists(s"${prefix}_cellstats")) {
-      if (!repairing || !IndexCatalog.present(spark, s"${prefix}_cellstats", "batch_key", Seq(bk))) {
-        radiusPartials(assigned, cb)
-          .withColumn("batch_key", lit(bk))
-          .write.mode("append").saveAsTable(s"${prefix}_cellstats")
-        spark.catalog.refreshTable(s"${prefix}_cellstats")
-      }
+      append(new IndexCatalog.Append(
+        "cellstats",
+        radiusPartials(assigned, cb).withColumn("batch_key", lit(bk)),
+        Some(IndexCatalog.taggedWith(spark, bk))))
       if (crashAfter == "cellstats")
         throw new IllegalStateException("injected crash after cellstats append")
     }

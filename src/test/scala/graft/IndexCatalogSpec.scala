@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.catalyst.catalog.BucketSpec
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit, raise_error, udf}
+import scala.jdk.CollectionConverters._
 import graft.operators.IndexCatalog
 
 /** The crash-repair ingest ledger every persisted-index family shares
@@ -10,6 +11,9 @@ import graft.operators.IndexCatalog
   * an intent and a commit row, a crash leaves the intent for a
   * repairing rerun, a committed key never runs again, and a foreign
   * table under the ledger's name is refused rather than reinterpreted.
+  * Guarded appends (ledgeredAppends) run their groups in order, consult
+  * no guard on a fresh key, re-run only what a repair finds missing, and
+  * let a concurrent group finish before a failure surfaces.
   * Staged layout rewrites (rebucket, compaction) keep the bucket and
   * sort columns the catalog records for the live table. The bounded
   * key lookup (capped, keyed, present) returns every row up to its cap
@@ -96,6 +100,101 @@ class IndexCatalogSpec extends SparkSpec {
     assert(e.getMessage.contains(ledger), e.getMessage)
     assert(!called)
     assert(spark.table(ledger).count() == 1, "the foreign table must be left as it was")
+  }
+
+  private def appendTables(owner: String, names: String*): Unit = {
+    fresh(owner)
+    names.foreach { n =>
+      spark.sql(s"DROP TABLE IF EXISTS ${owner}_$n")
+      spark.sql(s"CREATE TABLE ${owner}_$n (doc_id BIGINT) USING parquet")
+    }
+  }
+
+  private def ids(owner: String, name: String): Seq[Long] = {
+    spark.catalog.refreshTable(s"${owner}_$name")
+    spark.table(s"${owner}_$name").collect().map(_.getLong(0)).toSeq.sorted
+  }
+
+  test("ledgeredAppends on a fresh key runs every append in group order and no guard") {
+    import spark.implicits._
+    val owner = "appendsfresh"
+    appendTables(owner, "a", "b", "c")
+    val batch = Seq(1L, 2L, 3L).toDF("doc_id")
+    val ran = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val guarded = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    def to(t: String) = new IndexCatalog.Append(t, { ran.add(t); batch }, Some { (table: String) =>
+      guarded.add(table); false
+    })
+    // The default guard's probe would fail on this frame if it ran.
+    val poisoned = spark.range(1).select(raise_error(lit("probe ran")).as("doc_id"))
+    IndexCatalog.ledgeredAppends(spark, owner, 1L, poisoned) { append =>
+      append(to("a"), to("b"))
+      append(new IndexCatalog.Append("c", { ran.add("c"); batch }))
+    }
+    assert(guarded.isEmpty, s"guards ran on a fresh key: $guarded")
+    val order = ran.asScala.toSeq
+    assert(order.take(2).toSet == Set("a", "b") && order.drop(2) == Seq("c"), order)
+    Seq("a", "b", "c").foreach(t => assert(ids(owner, t) == Seq(1L, 2L, 3L), t))
+    assert(phases(owner, "1") == Seq("commit", "intent"))
+  }
+
+  test("a repairing ledgeredAppends re-runs only the appends its guards find missing") {
+    import spark.implicits._
+    val owner = "appendsrepair"
+    appendTables(owner, "a", "b", "c", "d")
+    val batch = Seq(1L, 2L, 3L).toDF("doc_id")
+    val ran = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    def to(t: String, landed: Option[String => Boolean] = None) =
+      new IndexCatalog.Append(t, { ran.add(t); batch }, landed)
+    intercept[IllegalStateException] {
+      IndexCatalog.ledgeredAppends(spark, owner, 1L, batch) { append =>
+        append(to("a"))
+        throw new IllegalStateException("injected crash")
+      }
+    }
+    assert(phases(owner, "1") == Seq("intent"))
+    ran.clear()
+    val guarded = scala.collection.mutable.Buffer[String]()
+    IndexCatalog.ledgeredAppends(spark, owner, 1L, batch) { append =>
+      // a: landed, found by the default probe; b: missing; d: its own
+      // guard says landed; c, the last group: its own guard says missing.
+      append(to("a"), to("b"), to("d", Some(t => { guarded += t; true })))
+      append(to("c", Some(t => { guarded += t; false })))
+    }
+    assert(ran.asScala.toSeq == Seq("b", "c"))
+    assert(guarded == Seq(s"${owner}_d", s"${owner}_c"))
+    Seq("a", "b", "c").foreach(t => assert(ids(owner, t) == Seq(1L, 2L, 3L), t))
+    assert(ids(owner, "d").isEmpty)
+    assert(phases(owner, "1") == Seq("commit", "intent"))
+  }
+
+  test("a failing append in a concurrent group surfaces only after the others finish") {
+    import spark.implicits._
+    val owner = "appendsfail"
+    appendTables(owner, "slow", "late")
+    val batch = Seq(1L).toDF("doc_id")
+    val nap = udf { (x: Long) => Thread.sleep(500); x }
+    def slow = spark.range(1, 4, 1, 1).select(nap(col("id")).as("doc_id"))
+    def boom = new IndexCatalog.Append("boom", throw new IllegalStateException("injected crash"))
+    // The failure on this thread waits for the other append's write.
+    val e = intercept[IllegalStateException] {
+      IndexCatalog.ledgeredAppends(spark, owner, 1L, batch) { append =>
+        append(new IndexCatalog.Append("slow", slow), boom)
+      }
+    }
+    assert(e.getMessage == "injected crash")
+    assert(ids(owner, "slow") == Seq(1L, 2L, 3L), "the concurrent append must have landed")
+    assert(phases(owner, "1") == Seq("intent"))
+    // A failure on the other thread arrives as itself, after this
+    // thread's append.
+    val e2 = intercept[IllegalStateException] {
+      IndexCatalog.ledgeredAppends(spark, owner, 2L, batch) { append =>
+        append(boom, new IndexCatalog.Append("late", slow))
+      }
+    }
+    assert(e2.getMessage == "injected crash")
+    assert(ids(owner, "late") == Seq(1L, 2L, 3L))
+    assert(phases(owner, "2") == Seq("intent"))
   }
 
   test("staged rewrites keep the live table's bucket and sort columns") {

@@ -143,7 +143,7 @@ class LshIndexSpec extends SparkSpec {
     // anti-join hid them.
     val crash = intercept[IllegalStateException] {
       LshIndexOps.dedupBatchAndGrow(
-        spark, prefix, batch, N, K, Bands, buckets = 4, threshold = Threshold,
+        spark, prefix, batch, N, K, Bands, threshold = Threshold,
         crashAfter = "bands")
     }
     assert(crash.getMessage.contains("bands"))
@@ -154,7 +154,7 @@ class LshIndexSpec extends SparkSpec {
     // identically (keepers never verify against each other, so their
     // own stored bands add nothing).
     val replayDups = LshIndexOps.dedupBatchAndGrow(
-      spark, prefix, batch, N, K, Bands, buckets = 4, threshold = Threshold)
+      spark, prefix, batch, N, K, Bands, threshold = Threshold)
       .as[(Long, Long, Double)].collect().toSet
     assert(spark.table(s"${prefix}_bands").count() == bandsAfterCrash,
       "repair must not re-append the bands that survived the crash")
@@ -166,7 +166,7 @@ class LshIndexSpec extends SparkSpec {
     LshIndexOps.writeIndex(
       indexed.toSeq.toDF("doc_id", "text"), N, K, Bands, buckets = 4, prefix = cleanPrefix)
     val cleanDups = LshIndexOps.dedupBatchAndGrow(
-      spark, cleanPrefix, batch, N, K, Bands, buckets = 4, threshold = Threshold)
+      spark, cleanPrefix, batch, N, K, Bands, threshold = Threshold)
       .as[(Long, Long, Double)].collect().toSet
     assert(replayDups == cleanDups, "replayed dups must equal the uninterrupted run's")
     val repairedPairs = LshIndexOps.nearDupPairs(spark, prefix, Threshold)
@@ -177,7 +177,7 @@ class LshIndexSpec extends SparkSpec {
     // A further replay of the committed batch is a no-op on the store.
     val done = spark.table(s"${prefix}_bands").count()
     LshIndexOps.dedupBatchAndGrow(
-      spark, prefix, batch, N, K, Bands, buckets = 4, threshold = Threshold)
+      spark, prefix, batch, N, K, Bands, threshold = Threshold)
     assert(spark.table(s"${prefix}_bands").count() == done)
   }
 
@@ -197,13 +197,13 @@ class LshIndexSpec extends SparkSpec {
     LshIndexOps.writeMetaTable(stored, buckets = 4, prefix = prefix)
     intercept[IllegalStateException] {
       LshIndexOps.dedupBatchAndGrow(
-        spark, prefix, batch, N, K, Bands, buckets = 4, threshold = Threshold,
+        spark, prefix, batch, N, K, Bands, threshold = Threshold,
         crashAfter = "meta")
     }
     val metaAfterCrash = spark.table(s"${prefix}_meta").count()
     assert(spark.table(s"${prefix}_batches").filter(col("phase") === "commit").isEmpty)
     LshIndexOps.dedupBatchAndGrow(
-      spark, prefix, batch, N, K, Bands, buckets = 4, threshold = Threshold)
+      spark, prefix, batch, N, K, Bands, threshold = Threshold)
     assert(spark.table(s"${prefix}_meta").count() == metaAfterCrash,
       "repair must not re-append the meta rows that survived the crash")
     assert(!spark.table(s"${prefix}_batches").filter(col("phase") === "commit").isEmpty)
@@ -220,7 +220,7 @@ class LshIndexSpec extends SparkSpec {
     LshIndexOps.writeIndex(stored, N, K, Bands, buckets = 4, prefix = cleanPrefix)
     LshIndexOps.writeMetaTable(stored, buckets = 4, prefix = cleanPrefix)
     LshIndexOps.dedupBatchAndGrow(
-      spark, cleanPrefix, batch, N, K, Bands, buckets = 4, threshold = Threshold)
+      spark, cleanPrefix, batch, N, K, Bands, threshold = Threshold)
     val repaired = spark.table(s"${prefix}_meta")
     val clean = spark.table(s"${cleanPrefix}_meta")
     assert(repaired.exceptAll(clean).isEmpty && clean.exceptAll(repaired).isEmpty,
@@ -246,7 +246,7 @@ class LshIndexSpec extends SparkSpec {
     val (bandsBefore, metaBefore) = (rows(prefix, "_bands"), rows(prefix, "_meta"))
     intercept[IllegalStateException] {
       LshIndexOps.dedupBatchAndGrow(
-        spark, prefix, batch, N, K, Bands, buckets = 4, threshold = Threshold,
+        spark, prefix, batch, N, K, Bands, threshold = Threshold,
         crashAfter = "meta-only")
     }
     val metaAfterCrash = rows(prefix, "_meta")
@@ -254,14 +254,14 @@ class LshIndexSpec extends SparkSpec {
     assert(metaAfterCrash > metaBefore, "the injected state has the meta rows appended")
     assert(spark.table(s"${prefix}_batches").filter(col("phase") === "commit").isEmpty)
     val replayDups = LshIndexOps.dedupBatchAndGrow(
-      spark, prefix, batch, N, K, Bands, buckets = 4, threshold = Threshold)
+      spark, prefix, batch, N, K, Bands, threshold = Threshold)
       .as[(Long, Long, Double)].collect().toSet
     val kept = metaAfterCrash - metaBefore
     assert(rows(prefix, "_meta") == metaAfterCrash, "repair must not re-append meta")
     assert(rows(prefix, "_bands") == bandsBefore + kept * Bands,
       "repair appends the keepers' bands exactly once")
     val cleanDups = LshIndexOps.dedupBatchAndGrow(
-      spark, cleanPrefix, batch, N, K, Bands, buckets = 4, threshold = Threshold)
+      spark, cleanPrefix, batch, N, K, Bands, threshold = Threshold)
       .as[(Long, Long, Double)].collect().toSet
     assert(replayDups == cleanDups, "replayed dups must equal the uninterrupted run's")
     Seq("_docs", "_bands", "_meta").foreach { t =>
@@ -289,13 +289,13 @@ class LshIndexSpec extends SparkSpec {
     }.toMap
     assert(LshIndexOps.fileStats(spark, prefix).count() == 3)
     Seq(1, 2).foreach { r =>
-      // The second append follows a rebucket of docs and bands while the
-      // caller still passes the old count: appends take the live spec.
+      // The second append follows a rebucket of docs and bands: appends
+      // take the live spec.
       if (r == 2) LshIndexOps.rebucket(spark, prefix, 2 * buckets)
       val before = files()
       val rowsBefore = spark.table(s"${prefix}_docs").count()
       LshIndexOps.dedupBatchAndGrow(
-        spark, prefix, all.filter(col("doc_id") % 3 === r), N, K, Bands, buckets, Threshold)
+        spark, prefix, all.filter(col("doc_id") % 3 === r), N, K, Bands, Threshold)
       assert(spark.table(s"${prefix}_docs").count() > rowsBefore, s"append $r admitted no keepers")
       val after = files()
       tables.foreach { t =>
@@ -638,8 +638,7 @@ class LshIndexSpec extends SparkSpec {
     LshIndexOps.writeClusters(spark, pre, Threshold, buckets = 4)
     waves.foreach { w =>
       LshIndexOps.ingestBatchAndMaintain(
-        spark, pre, w.toDF("doc_id", "text"), N, K, Bands, buckets = 4,
-        threshold = Threshold)
+        spark, pre, w.toDF("doc_id", "text"), N, K, Bands, threshold = Threshold)
     }
     LshIndexOps.writeIndex(docs, N, K, Bands, buckets = 4, prefix = ref)
     LshIndexOps.writeClusters(spark, ref, Threshold, buckets = 4)
@@ -665,8 +664,7 @@ class LshIndexSpec extends SparkSpec {
     val before = Seq("_docs", "_clusters")
       .map(t => t -> spark.table(s"$pre$t").collect().toSeq).toMap
     LshIndexOps.ingestBatchAndMaintain(
-      spark, pre, waves.last.toDF("doc_id", "text"), N, K, Bands, buckets = 4,
-      threshold = Threshold)
+      spark, pre, waves.last.toDF("doc_id", "text"), N, K, Bands, threshold = Threshold)
     before.foreach { case (t, rows0) =>
       assert(spark.table(s"$pre$t").collect().toSeq.sortBy(_.toString) ==
         rows0.sortBy(_.toString), s"replaying a committed batch must not change $t")
@@ -692,8 +690,7 @@ class LshIndexSpec extends SparkSpec {
     // read face permanently stale.
     spark.sql(s"ALTER TABLE ${pre}_clusters RENAME TO ${pre}_clusters_old")
     LshIndexOps.ingestBatchAndMaintain(
-      spark, pre, batch.toDF("doc_id", "text"), N, K, Bands, buckets = 4,
-      threshold = Threshold)
+      spark, pre, batch.toDF("doc_id", "text"), N, K, Bands, threshold = Threshold)
     assert(spark.catalog.tableExists(s"${pre}_clusters"),
       "ingest must recover the dangling _old before its exists guard")
     assert(!spark.catalog.tableExists(s"${pre}_clusters_old"))
@@ -719,7 +716,7 @@ class LshIndexSpec extends SparkSpec {
     LshIndexOps.writeMetaTable(stored, buckets = 4, prefix = pre)
     val metaBefore = spark.table(s"${pre}_meta").count()
     LshIndexOps.dedupBatchAndGrow(
-      spark, pre, batch, N, K, Bands, buckets = 4, threshold = Threshold)
+      spark, pre, batch, N, K, Bands, threshold = Threshold)
     val keptIds = spark.table(s"${pre}_docs").select("doc_id").as[Long].collect().toSet --
       stored.select("doc_id").as[Long].collect().toSet
     assert(keptIds.nonEmpty)

@@ -276,11 +276,10 @@ class MediaIndexSpec extends SparkSpec {
     MediaIndexOps.rebucket(spark, prefix, 8)
     def ids() = spark.table(s"${prefix}_fps").select("doc_id").as[Long].collect().toSet
     val before = ids()
-    // The caller still passes the build-time count; the append must
-    // take the table's live spec.
+    // The append must take the table's live spec, not the build count.
     MediaIndexOps.dedupBatchAndGrow(
       spark, prefix, media().filter(col("doc_id") % 5 === 0),
-      Regions, Bands, buckets = 4, maxHamming = MaxHamming)
+      Regions, Bands, maxHamming = MaxHamming)
     val grown = ids() -- before
     assert(grown.nonEmpty, "the batch admitted no keepers")
     val broadcastBefore = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -334,7 +333,7 @@ class MediaIndexSpec extends SparkSpec {
     val ckpt = java.nio.file.Files.createTempDirectory("media_stream").toFile.getAbsolutePath
     val q = MediaIndexOps.streamingDedup(
       spark, prefix, in.toDF().toDF("doc_id", "media_type", "payload"),
-      Regions, Bands, buckets = 4, maxHamming = MaxHamming, checkpoint = ckpt,
+      Regions, Bands, maxHamming = MaxHamming, checkpoint = ckpt,
       onDups = (d, _) => collected ++= d.as[(Long, Long, Int)].collect(),
     )
     // Three arrival waves, ascending doc_id (so every cross-wave match
@@ -372,7 +371,7 @@ class MediaIndexSpec extends SparkSpec {
     val before = spark.table(s"${prefix}_fps").count()
     val replayDups = MediaIndexOps.dedupBatchAndGrow(
       spark, prefix, waves.last.toSeq.toDF("doc_id", "media_type", "payload"),
-      Regions, Bands, buckets = 4, maxHamming = MaxHamming)
+      Regions, Bands, maxHamming = MaxHamming)
       .as[(Long, Long, Int)].collect()
     assert(!replayDups.exists(r => r._1 == r._2), "replayed keepers must not flag themselves")
     assert(spark.table(s"${prefix}_fps").count() == before,
@@ -392,7 +391,7 @@ class MediaIndexSpec extends SparkSpec {
     (1 to 3).foreach { r =>
       MediaIndexOps.dedupBatchAndGrow(
         spark, pre, media().filter(col("doc_id") % 4 === r), Regions, Bands,
-        buckets = 4, maxHamming = MaxHamming)
+        maxHamming = MaxHamming)
     }
     val meta = s"${pre}_meta"
     def rows = spark.table(meta).collect().map(_.toString).sorted.toSeq
@@ -420,7 +419,7 @@ class MediaIndexSpec extends SparkSpec {
     MediaIndexOps.writeMetaTable(stored, buckets = 4, prefix = pre)
     val metaBefore = spark.table(s"${pre}_meta").count()
     MediaIndexOps.dedupBatchAndGrow(
-      spark, pre, batch, Regions, Bands, buckets = 4, maxHamming = MaxHamming)
+      spark, pre, batch, Regions, Bands, maxHamming = MaxHamming)
     // The admitted keepers' meta rows landed in the same commit: one
     // row per kept fps doc_id, each its own ex_keeper.
     val keptIds = spark.table(s"${pre}_fps").select("doc_id").as[Long].collect().toSet --
@@ -465,7 +464,7 @@ class MediaIndexSpec extends SparkSpec {
     // The kill: keepers' chunks land, the fps membership rows do not.
     intercept[IllegalStateException] {
       MediaIndexOps.dedupBatchAndGrow(
-        spark, prefix, batch, Regions, Bands, buckets = 4, maxHamming = MaxHamming,
+        spark, prefix, batch, Regions, Bands, maxHamming = MaxHamming,
         crashAfter = "chunks")
     }
     val chunksAfterCrash = spark.table(s"${prefix}_chunks").count()
@@ -473,7 +472,7 @@ class MediaIndexSpec extends SparkSpec {
     // Replay: chunks must not double, fps must land, and the repaired
     // index must equal a clean uninterrupted run.
     val replayDups = MediaIndexOps.dedupBatchAndGrow(
-      spark, prefix, batch, Regions, Bands, buckets = 4, maxHamming = MaxHamming)
+      spark, prefix, batch, Regions, Bands, maxHamming = MaxHamming)
       .as[(Long, Long, Int)].collect().toSet
     assert(spark.table(s"${prefix}_chunks").count() == chunksAfterCrash,
       "repair must not re-append the chunks that survived the crash")
@@ -485,7 +484,7 @@ class MediaIndexSpec extends SparkSpec {
     MediaIndexOps.writeIndex(seed, Regions, Bands, buckets = 4, prefix = cleanPrefix)
     MediaIndexOps.writeMetaTable(seed, buckets = 4, prefix = cleanPrefix)
     val cleanDups = MediaIndexOps.dedupBatchAndGrow(
-      spark, cleanPrefix, batch, Regions, Bands, buckets = 4, maxHamming = MaxHamming)
+      spark, cleanPrefix, batch, Regions, Bands, maxHamming = MaxHamming)
       .as[(Long, Long, Int)].collect().toSet
     assert(replayDups == cleanDups, "replayed dups must equal the uninterrupted run's")
     val repaired = MediaIndexOps.nearDupPairs(spark, prefix, MaxHamming)
@@ -522,7 +521,7 @@ class MediaIndexSpec extends SparkSpec {
     waves.foreach { w =>
       MediaIndexOps.ingestBatchAndMaintain(
         spark, pre, w.toDF("doc_id", "media_type", "payload"),
-        Regions, Bands, buckets = 4, maxHamming = MaxHamming)
+        Regions, Bands, maxHamming = MaxHamming)
     }
     val union = (seedRows.toSeq ++ waves.flatten).toDF("doc_id", "media_type", "payload")
     MediaIndexOps.writeIndex(union, Regions, Bands, buckets = 4, prefix = ref)
@@ -544,7 +543,7 @@ class MediaIndexSpec extends SparkSpec {
       .map(t => t -> spark.table(s"$pre$t").collect().toSeq).toMap
     MediaIndexOps.ingestBatchAndMaintain(
       spark, pre, waves.last.toDF("doc_id", "media_type", "payload"),
-      Regions, Bands, buckets = 4, maxHamming = MaxHamming)
+      Regions, Bands, maxHamming = MaxHamming)
     before.foreach { case (t, rows0) =>
       assert(spark.table(s"$pre$t").collect().toSeq.sortBy(_.toString) ==
         rows0.sortBy(_.toString), s"replaying a committed batch must not change $t")
@@ -651,7 +650,7 @@ class MediaIndexSpec extends SparkSpec {
     waves.foreach { w =>
       MediaIndexOps.ingestBatchAndMaintain(
         spark, pre, w.toDF("doc_id", "media_type", "payload"),
-        Regions, Bands, buckets = 4, maxHamming = MaxHamming, mediaType = "video")
+        Regions, Bands, maxHamming = MaxHamming, mediaType = "video")
     }
     val union = (seedRows.toSeq ++ waves.flatten).toDF("doc_id", "media_type", "payload")
     MediaIndexOps.writeIndex(
@@ -679,13 +678,13 @@ class MediaIndexSpec extends SparkSpec {
     MediaIndexOps.writeMetaTable(stored, buckets = 4, prefix = prefix)
     intercept[IllegalStateException] {
       MediaIndexOps.dedupBatchAndGrow(
-        spark, prefix, batch, Regions, Bands, buckets = 4, maxHamming = MaxHamming,
+        spark, prefix, batch, Regions, Bands, maxHamming = MaxHamming,
         crashAfter = "meta")
     }
     val metaAfterCrash = spark.table(s"${prefix}_meta").count()
     assert(spark.table(s"${prefix}_batches").filter(col("phase") === "commit").isEmpty)
     MediaIndexOps.dedupBatchAndGrow(
-      spark, prefix, batch, Regions, Bands, buckets = 4, maxHamming = MaxHamming)
+      spark, prefix, batch, Regions, Bands, maxHamming = MaxHamming)
     assert(spark.table(s"${prefix}_meta").count() == metaAfterCrash,
       "repair must not re-append the meta rows that survived the crash")
     assert(!spark.table(s"${prefix}_batches").filter(col("phase") === "commit").isEmpty)
