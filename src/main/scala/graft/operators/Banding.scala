@@ -2,26 +2,34 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.expressions.SortedIntersectCount
 
 /** The banded-candidate core every LSH/pigeonhole face shares — ONE
   * implementation of the shape that was previously copied (with its
   * preconditions) into four files: fingerprint → fixed-width chunk
   * extraction, banded candidate equi-join (self or batch-vs-stored),
-  * optional inline hamming verify, and the stop-key skew cap.
+  * optional inline hamming verify, the stop-key skew cap, and the
+  * MinHash faces' `(doc_id, band_idx, band_key)` band rows and exact
+  * Jaccard verify (candidate filtering, then ONE exact-similarity
+  * verify).
   *
   * Faces built on this core:
   *   - [[DedupOps.simhashPairs]] (SimHash text near-dup),
   *   - [[MultimodalOps.nearDupPairs]] (perceptual dHash media near-dup),
   *   - [[MediaIndexOps]] (the persisted fingerprint index: pair /
   *     capped / incremental / streaming-grow reads),
+  *   - [[DedupOps.jaccardPairsFrom]] (prefix-posting candidates) and
+  *     [[DedupOps.minhashLshPairsFrom]], [[DedupOps.containmentPairs]],
+  *     [[DedupOps.lshContamination]] (band candidates): the corpus-scan
+  *     MinHash faces, verified by [[jaccardPairs]] / [[withSets]],
   *   - [[LshIndexOps]] (the persisted MinHash index: candidate /
-  *     capped / incremental / streaming-grow reads, whose verify stage
-  *     is exact Jaccard rather than inline hamming),
-  *   - [[DedupOps.jaccardPairsFrom]] / the MinHash band candidates
-  *     (same candidate-join shape on prefix-posting / band keys).
+  *     capped / incremental / streaming-grow reads): the same
+  *     [[bandRows]] layout and [[jaccardPairs]] verify, so its pairs
+  *     equal the corpus-scan faces' by construction.
   *
-  * Everything here is a pure equi-join on band keys — never an
-  * all-pairs comparison at any corpus scale — and the expressions are
+  * Everything here is a pure equi-join on band keys (the verify joins
+  * on the candidates' doc ids) — never an all-pairs comparison at any
+  * corpus scale — and the expressions are
   * kept byte-identical to what the faces inlined before the extraction,
   * so the pinned exchange-free plans and the DuckDB oracles are
   * unchanged.
@@ -171,4 +179,62 @@ object Banding {
     hammingPairs(
       rows, rows, keys, fpCol, maxHamming,
       docPred = Some(col("x.doc_id") < col("y.doc_id")))
+
+  /** The MinHash band rows' key list: the persisted `_bands` table's
+    * bucket keys and every band candidate join's equi-join keys.
+    */
+  val BandKeys: Seq[String] = Seq("band_idx", "band_key")
+
+  /** `(doc_id, band_idx, band_key)` rows of a `(doc_id, …, bk)` frame,
+    * one per band key (`bk` from [[HashOps.bandKeys]]).
+    */
+  def bandRows(idx: DataFrame): DataFrame =
+    idx.select(col("doc_id"), posexplode(col("bk")).as(BandKeys))
+
+  /** |A ∩ B| of two sorted shingle-hash arrays, by an allocation-free
+    * merge-scan.
+    */
+  def intersectCount(a: Column, b: Column): Column = SortedIntersectCount(a, b)
+
+  /** Exact Jaccard of two sorted distinct shingle-hash arrays:
+    * c / (|A| + |B| − c), c = [[intersectCount]].
+    */
+  def jaccard(a: Column, b: Column): Column = {
+    val c = intersectCount(a, b)
+    c.cast("double") / (size(a) + size(b) - c)
+  }
+
+  /** `candidates` with each side's shingle set attached: `sh_a` read
+    * from `setsA(doc_id, sh)` at `a`, `sh_b` from `setsB(doc_id, sh)` at
+    * `b`. `carry` columns of `setsB` (a side tag of a unioned store)
+    * join with `b`.
+    */
+  def withSets(
+      candidates: DataFrame,
+      setsA: DataFrame,
+      setsB: DataFrame,
+      a: String = "doc_a",
+      b: String = "doc_b",
+      carry: Seq[String] = Nil,
+  ): DataFrame =
+    candidates
+      .join(setsA.select(col("doc_id").as(a), col("sh").as("sh_a")), a)
+      .join(setsB.select(col("doc_id").as(b) +: col("sh").as("sh_b") +: carry.map(col): _*), b +: carry)
+
+  /** The exact-Jaccard verify of candidate pairs: `(a, b, jaccard)` for
+    * the pairs of `candidates` whose [[withSets]] sets reach
+    * `threshold`.
+    */
+  def jaccardPairs(
+      candidates: DataFrame,
+      setsA: DataFrame,
+      setsB: DataFrame,
+      threshold: Double,
+      a: String = "doc_a",
+      b: String = "doc_b",
+      carry: Seq[String] = Nil,
+  ): DataFrame =
+    withSets(candidates, setsA, setsB, a, b, carry)
+      .select(col(a), col(b), jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
+      .filter(col("jaccard") >= threshold)
 }

@@ -86,17 +86,7 @@ object DedupOps {
       col("doc_id"),
       explode(slice(col("sh"), lit(1), prefixLen)).as("h"),
     )
-    val candidates = Banding.candidateSelfPairs(posts, Seq("h"))
-    val c = graft.expressions.SortedIntersectCount(col("sh_a"), col("sh_b"))
-    candidates
-      .join(sized.select(col("doc_id").as("doc_a"), col("sh").as("sh_a"), col("sz").as("sz_a")), "doc_a")
-      .join(sized.select(col("doc_id").as("doc_b"), col("sh").as("sh_b"), col("sz").as("sz_b")), "doc_b")
-      .select(
-        col("doc_a"),
-        col("doc_b"),
-        (c.cast("double") / (col("sz_a") + col("sz_b") - c)).as("jaccard"),
-      )
-      .filter(col("jaccard") >= threshold)
+    Banding.jaccardPairs(Banding.candidateSelfPairs(posts, Seq("h")), sized, sized, threshold)
       .orderBy("doc_a", "doc_b")
   }
 
@@ -136,19 +126,7 @@ object DedupOps {
       threshold: Double,
   ): DataFrame = {
     val (sets, candidates) = lshSetsAndCandidates(sized, k, bands)
-    // Verify stage: sorted merge-scan intersect count on candidates only
-    // (sh is sorted above; union size = sz_a + sz_b − c).
-    val c = graft.expressions.SortedIntersectCount(col("sh_a"), col("sh_b"))
-    candidates
-      .join(sets.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
-      .join(sets.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), "doc_b")
-      .select(
-        col("doc_a"),
-        col("doc_b"),
-        (c.cast("double") / (size(col("sh_a")) + size(col("sh_b")) - c)).as("jaccard"),
-      )
-      .filter(col("jaccard") >= threshold)
-      .orderBy("doc_a", "doc_b")
+    Banding.jaccardPairs(candidates, sets, sets, threshold).orderBy("doc_a", "doc_b")
   }
 
   /** The banding core shared by the Jaccard and edit-distance verify
@@ -168,8 +146,7 @@ object DedupOps {
         HashOps.bandKeys(col("sig"), bands, rowsPerBand).as("bk"),
       )
       .localCheckpoint()
-    val bandsDf = sets.select(col("doc_id"), posexplode(col("bk")).as(Seq("band_idx", "band_key")))
-    (sets, Banding.candidateSelfPairs(bandsDf, Seq("band_idx", "band_key")))
+    (sets, Banding.candidateSelfPairs(Banding.bandRows(sets), Banding.BandKeys))
   }
 
   /** Fuzzy benchmark decontamination — the TWO-TABLE LSH join: corpus
@@ -197,35 +174,23 @@ object DedupOps {
   ): DataFrame = {
     val rowsPerBand = k / bands
     val sets = shingleSets(docs, n)
-      .select(col("doc_id"), col("sh"), col("sz"), HashOps.minhashSignature(col("sh"), k).as("sig"))
+      .select(col("doc_id"), col("sh"), HashOps.minhashSignature(col("sh"), k).as("sig"))
       .select(
         col("doc_id"),
         col("sh"),
-        col("sz"),
         HashOps.bandKeys(col("sig"), bands, rowsPerBand).as("bk"),
       )
       .localCheckpoint()
-    val bandsDf = sets.select(col("doc_id"), posexplode(col("bk")).as(Seq("band_idx", "band_key")))
+    val bandsDf = Banding.bandRows(sets)
     val benchBands = bandsDf
       .filter(isBench)
-      .select(col("doc_id").as("bench_id"), col("band_idx"), col("band_key"))
+      .withColumnRenamed("doc_id", "bench_id")
     val cand = bandsDf
       .filter(!isBench)
-      .join(broadcast(benchBands), Seq("band_idx", "band_key"))
+      .join(broadcast(benchBands), Banding.BandKeys)
       .select(col("doc_id"), col("bench_id"))
       .distinct()
-    val c = graft.expressions.SortedIntersectCount(col("sh_a"), col("sh_b"))
-    val hits = cand
-      .join(sets.select(col("doc_id"), col("sh").as("sh_a"), col("sz").as("sz_a")), "doc_id")
-      .join(
-        sets.select(col("doc_id").as("bench_id"), col("sh").as("sh_b"), col("sz").as("sz_b")),
-        "bench_id",
-      )
-      .select(
-        col("doc_id"),
-        (c.cast("double") / (col("sz_a") + col("sz_b") - c)).as("jaccard"),
-      )
-      .filter(col("jaccard") >= threshold)
+    val hits = Banding.jaccardPairs(cand, sets, sets, threshold, "doc_id", "bench_id")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_bench_matches"), max(col("jaccard")).as("max_jaccard"))
     docs
@@ -321,10 +286,8 @@ object DedupOps {
       threshold: Double,
   ): DataFrame = {
     val (sets, candidates) = lshSetsAndCandidates(shingleSets(docs, n), k, bands)
-    val c = graft.expressions.SortedIntersectCount(col("sh_a"), col("sh_b"))
-    candidates
-      .join(sets.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
-      .join(sets.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), "doc_b")
+    val c = Banding.intersectCount(col("sh_a"), col("sh_b"))
+    Banding.withSets(candidates, sets, sets)
       .select(
         col("doc_a"),
         col("doc_b"),

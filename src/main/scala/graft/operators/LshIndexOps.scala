@@ -19,7 +19,12 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   *     the candidate self-join's keys — so the join needs NO shuffle
   *     (LshIndexSpec pins the exchange-free plan);
   *   - the doc table is bucketed + sorted on `doc_id`, so both verify
-  *     joins are shuffle-free on the index side too.
+  *     joins are shuffle-free on the index side too (LshIndexSpec pins
+  *     no exchange above the `_docs` scan).
+  * The band-row layout ([[Banding.bandRows]] / [[Banding.BandKeys]])
+  * and the exact-Jaccard verify ([[Banding.jaccardPairs]]) are the ones
+  * [[DedupOps.minhashLshPairs]] runs, so the index's pairs equal the
+  * corpus-scan operator's by construction, not by kept-in-step copies.
   * At 100 TB this converts the dominant dedup cost (re-hashing the
   * corpus per query, then shuffling it per join) into a one-time build
   * plus exchange-free reads.
@@ -44,36 +49,6 @@ object LshIndexOps {
   private def batchFrame(batch: DataFrame, n: Int, k: Int, bands: Int): DataFrame =
     indexFrame(batch, n, k, bands, metaCols: _*).localCheckpoint()
 
-  /** (doc_id, band_idx, band_key) rows of an index frame. */
-  private def bandRows(idx: DataFrame): DataFrame =
-    idx.select(col("doc_id"), posexplode(col("bk")).as(Seq("band_idx", "band_key")))
-
-  private val BandKeys = Seq("band_idx", "band_key")
-
-  /** Exact Jaccard of candidate pairs (new_doc_id, dup_of, …): the
-    * arriving side's sets come from `idx`, the matched side's from
-    * `sets` (dup_of, sh_b, …) joined on `on`; pairs under `threshold`
-    * drop. Returns (new_doc_id, dup_of, jaccard).
-    */
-  private def verify(
-      candidates: DataFrame,
-      idx: DataFrame,
-      sets: DataFrame,
-      on: Seq[String],
-      threshold: Double,
-  ): DataFrame = {
-    val c = graft.expressions.SortedIntersectCount(col("sh_a"), col("sh_b"))
-    candidates
-      .join(idx.select(col("doc_id").as("new_doc_id"), col("sh").as("sh_a")), "new_doc_id")
-      .join(sets, on)
-      .select(
-        col("new_doc_id"),
-        col("dup_of"),
-        (c.cast("double") / (size(col("sh_a")) + size(col("sh_b")) - c)).as("jaccard"),
-      )
-      .filter(col("jaccard") >= threshold)
-  }
-
   /** A batch's verified matches against the stored index AND against
     * lower-id docs of the same batch, found by ONE candidate join and
     * ONE verify join over tagged unions (`src` 0 = stored rows, 1 =
@@ -90,18 +65,17 @@ object LshIndexOps {
       storedPred: Column,
       threshold: Double,
   ): DataFrame = {
-    val batchBands = bandRows(idx)
+    val batchBands = Banding.bandRows(idx)
     val candidates = Banding.candidatePairs(
       batchBands,
-      storedBands.select(col("doc_id"), col("band_idx"), col("band_key"), lit(0).as("src"))
-        .unionByName(batchBands.withColumn("src", lit(1))),
-      BandKeys, "new_doc_id", "dup_of",
+      storedBands.withColumn("src", lit(0)).unionByName(batchBands.withColumn("src", lit(1))),
+      Banding.BandKeys, "new_doc_id", "dup_of",
       docPred = Some(
         when(col("y.src") === 0, storedPred).otherwise(col("y.doc_id") < col("x.doc_id"))),
       carry = Seq("src"))
-    val sets = storedSets.select(col("doc_id").as("dup_of"), col("sh").as("sh_b"), lit(0).as("src"))
-      .unionByName(idx.select(col("doc_id").as("dup_of"), col("sh").as("sh_b"), lit(1).as("src")))
-    verify(candidates, idx, sets, Seq("dup_of", "src"), threshold)
+    val sets = storedSets.select(col("doc_id"), col("sh"), lit(0).as("src"))
+      .unionByName(idx.select(col("doc_id"), col("sh"), lit(1).as("src")))
+    Banding.jaccardPairs(candidates, idx, sets, threshold, "new_doc_id", "dup_of", Seq("src"))
   }
 
   /** Builds and publishes the two index tables:
@@ -126,10 +100,9 @@ object LshIndexOps {
       .write.mode("overwrite")
       .bucketBy(buckets, "doc_id").sortBy("doc_id")
       .saveAsTable(s"${prefix}_docs")
-    idx
-      .select(col("doc_id"), posexplode(col("bk")).as(Seq("band_idx", "band_key")))
+    Banding.bandRows(idx)
       .write.mode("overwrite")
-      .bucketBy(buckets, "band_idx", "band_key")
+      .bucketBy(buckets, Banding.BandKeys.head, Banding.BandKeys.tail: _*)
       .saveAsTable(s"${prefix}_bands")
   }
 
@@ -138,38 +111,17 @@ object LshIndexOps {
     * sides — no exchange, no recompute.
     */
   def candidatePairs(spark: SparkSession, prefix: String): DataFrame =
-    Banding.candidateSelfPairs(
-      IndexCatalog.readLive(spark, s"${prefix}_bands"), Seq("band_idx", "band_key"))
+    Banding.candidateSelfPairs(IndexCatalog.readLive(spark, s"${prefix}_bands"), Banding.BandKeys)
 
   /** Verified near-dup pairs from the stored index: candidates from the
-    * band table, exact-Jaccard verify against the stored shingle sets.
-    * Output is identical to `DedupOps.minhashLshPairs(docs, …)` on the
-    * corpus the index was built from (LshIndexSpec asserts equality).
+    * band table, exact-Jaccard verify ([[Banding.jaccardPairs]]) against
+    * the stored shingle sets. Output is identical to
+    * `DedupOps.minhashLshPairs(docs, …)` on the corpus the index was
+    * built from (LshIndexSpec asserts equality).
     */
-  def nearDupPairs(spark: SparkSession, prefix: String, threshold: Double): DataFrame =
-    verifiedPairs(spark, prefix, candidatePairs(spark, prefix), threshold)
-
-  /** The exact-Jaccard verify stage shared by the full and stop-key
-    * candidate faces.
-    */
-  private def verifiedPairs(
-      spark: SparkSession,
-      prefix: String,
-      candidates: DataFrame,
-      threshold: Double,
-  ): DataFrame = {
-    val sets = IndexCatalog.readLive(spark, s"${prefix}_docs")
-    val c = graft.expressions.SortedIntersectCount(col("sh_a"), col("sh_b"))
-    candidates
-      .join(sets.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
-      .join(sets.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), "doc_b")
-      .select(
-        col("doc_a"),
-        col("doc_b"),
-        (c.cast("double") / (size(col("sh_a")) + size(col("sh_b")) - c)).as("jaccard"),
-      )
-      .filter(col("jaccard") >= threshold)
-      .orderBy("doc_a", "doc_b")
+  def nearDupPairs(spark: SparkSession, prefix: String, threshold: Double): DataFrame = {
+    val docs = IndexCatalog.readLive(spark, s"${prefix}_docs")
+    Banding.jaccardPairs(candidatePairs(spark, prefix), docs, docs, threshold).orderBy("doc_a", "doc_b")
   }
 
   /** The skew STOP-KEY dial the health stats point at: band buckets
@@ -193,10 +145,11 @@ object LshIndexOps {
       threshold: Double,
       maxBucket: Int,
   ): DataFrame = {
-    val keys = Seq("band_idx", "band_key")
     val small = Banding.capSmallBuckets(
-      IndexCatalog.readLive(spark, s"${prefix}_bands"), keys, maxBucket)
-    verifiedPairs(spark, prefix, Banding.candidateSelfPairs(small, keys), threshold)
+      IndexCatalog.readLive(spark, s"${prefix}_bands"), Banding.BandKeys, maxBucket)
+    val docs = IndexCatalog.readLive(spark, s"${prefix}_docs")
+    Banding.jaccardPairs(Banding.candidateSelfPairs(small, Banding.BandKeys), docs, docs, threshold)
+      .orderBy("doc_a", "doc_b")
   }
 
   /** Persist the `<prefix>_meta` table — (doc_id, text_md5, n_tok),
@@ -591,15 +544,13 @@ object LshIndexOps {
       idx: DataFrame,
       threshold: Double,
   ): DataFrame =
-    verify(
+    Banding.jaccardPairs(
       Banding.candidatePairs(
-        bandRows(idx), IndexCatalog.readLive(spark, s"${prefix}_bands"),
-        BandKeys, "new_doc_id", "dup_of"),
+        Banding.bandRows(idx), IndexCatalog.readLive(spark, s"${prefix}_bands"),
+        Banding.BandKeys, "new_doc_id", "dup_of"),
       idx,
-      IndexCatalog.readLive(spark, s"${prefix}_docs")
-        .select(col("doc_id").as("dup_of"), col("sh").as("sh_b")),
-      Seq("dup_of"),
-      threshold)
+      IndexCatalog.readLive(spark, s"${prefix}_docs"),
+      threshold, "new_doc_id", "dup_of")
 
   /** Index maintenance: rewrite the index tables (docs, bands, and
     * `_meta` when present) at `newBuckets` physical buckets. Content is
@@ -758,7 +709,7 @@ object LshIndexOps {
     // An empty batch needs no ledger entry.
     IndexCatalog.batchKey(kept).foreach { key =>
       IndexCatalog.ledgeredAppends(spark, prefix, key, kept) { append =>
-        val bands = new IndexCatalog.Append("bands", bandRows(kept))
+        val bands = new IndexCatalog.Append("bands", Banding.bandRows(kept))
         val meta =
           new IndexCatalog.Append("meta", kept.select(col("doc_id"), col("text_md5"), col("n_tok")))
         val withMeta = spark.catalog.tableExists(s"${prefix}_meta")

@@ -196,12 +196,6 @@ object NetflowStreams {
         col("n_ports"),
       )
 
-  /** P9/K4 — the realtime tick stream behind the websocket push:
-    * heartbeat filter + {time, bytes} projection per record.
-    */
-  def tickStream(parsedWithArrival: DataFrame): DataFrame =
-    NetflowOps.tick(parsedWithArrival)
-
   /** Memory-sink runner for tests/dev: processes all available input
     * (Trigger.AvailableNow — deterministic over finite input, T3's
     * modern one-time trigger) and returns the finished query.

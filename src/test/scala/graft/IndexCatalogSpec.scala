@@ -13,7 +13,9 @@ import graft.operators.IndexCatalog
   * table under the ledger's name is refused rather than reinterpreted.
   * Guarded appends (ledgeredAppends) run their groups in order, consult
   * no guard on a fresh key, re-run only what a repair finds missing, and
-  * let a concurrent group finish before a failure surfaces.
+  * let a concurrent group finish before a failure surfaces; an append
+  * is visible to the caller's next read even when another session
+  * wrote it.
   * Staged layout rewrites (rebucket, compaction) keep the bucket and
   * sort columns the catalog records for the live table. The bounded
   * key lookup (capped, keyed, present) returns every row up to its cap
@@ -195,6 +197,20 @@ class IndexCatalogSpec extends SparkSpec {
     assert(e2.getMessage == "injected crash")
     assert(ids(owner, "late") == Seq(1L, 2L, 3L))
     assert(phases(owner, "2") == Seq("intent"))
+  }
+
+  test("an append of another session's frame is visible to the caller's next read") {
+    import spark.implicits._
+    val t = "appendsession"
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    spark.sql(s"CREATE TABLE $t (doc_id BIGINT) USING parquet")
+    IndexCatalog.append(spark, t, Seq(1L).toDF("doc_id"))
+    assert(spark.table(t).count() == 1)
+    // A foreachBatch frame belongs to the stream's own session: its
+    // insertInto refreshes that session's file listing, not this one's.
+    val other = spark.newSession().createDataFrame(Seq(Tuple1(2L))).toDF("doc_id")
+    IndexCatalog.append(spark, t, other)
+    assert(spark.table(t).as[Long].collect().sorted.toSeq == Seq(1L, 2L))
   }
 
   test("staged rewrites keep the live table's bucket and sort columns") {

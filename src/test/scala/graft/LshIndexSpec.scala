@@ -6,8 +6,9 @@ import graft.operators.{DedupOps, LshIndexOps}
 /** The persisted LSH index artifact (LshIndexOps): pairs computed from
   * the stored bucketed tables must be IDENTICAL to the single-pass
   * operator's, the candidate self-join must read the bucketed band table
-  * without any exchange, and incremental dedup against the index must
-  * flag a planted near-duplicate without touching stored text.
+  * without any exchange, neither verify join may shuffle the `_docs`
+  * side, and incremental dedup against the index must flag a planted
+  * near-duplicate without touching stored text.
   */
 class LshIndexSpec extends SparkSpec {
 
@@ -24,6 +25,22 @@ class LshIndexSpec extends SparkSpec {
       )
     }
 
+  /** Runs `body` with broadcast joins and AQE off: exchange elision is
+    * a static EnsureRequirements property, and with AQE off
+    * executedPlan is the final physical tree, not an adaptive shell.
+    */
+  private def staticPlans(body: => Unit): Unit = {
+    val broadcastBefore = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try body
+    finally {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", broadcastBefore)
+      spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
+    }
+  }
+
   test("near-dup pairs from the stored index equal the single-pass operator's") {
     buildOnce()
     val fromIndex = LshIndexOps.nearDupPairs(spark, Prefix, Threshold)
@@ -37,13 +54,7 @@ class LshIndexSpec extends SparkSpec {
 
   test("the candidate self-join over the bucketed band table is exchange-free") {
     buildOnce()
-    val broadcastBefore = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    // Exchange elision is a static EnsureRequirements property; AQE off
-    // so executedPlan is the final physical tree, not an adaptive shell.
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    staticPlans {
       // The raw self-join (before the distinct, whose shuffle is its own
       // stage and legitimately present).
       val bandsDf = spark.table(s"${Prefix}_bands")
@@ -65,9 +76,28 @@ class LshIndexSpec extends SparkSpec {
         s"expected a shuffled join over the band table:\n$plan",
       )
       assert(!plan.contains("Exchange"), s"bucketed band self-join must not shuffle:\n$plan")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", broadcastBefore)
-      spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
+    }
+  }
+
+  test("both verify joins of nearDupPairs read the bucketed _docs table with no exchange above its scan") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan, UnaryExecNode}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    buildOnce()
+    staticPlans {
+      val plan = LshIndexOps.nearDupPairs(spark, Prefix, Threshold).queryExecution.executedPlan
+      def isDocsScan(p: SparkPlan): Boolean = p match {
+        case s: FileSourceScanExec => s.tableIdentifier.exists(_.table == s"${Prefix}_docs")
+        case _ => false
+      }
+      // What an operator reads through single-child operators (project,
+      // filter, sort, codegen wrappers).
+      @annotation.tailrec def source(p: SparkPlan): SparkPlan = p match {
+        case u: UnaryExecNode => source(u.child)
+        case _ => p
+      }
+      val shuffledDocs = plan.collect { case e: Exchange if isDocsScan(source(e.child)) => e }
+      assert(shuffledDocs.isEmpty, s"the _docs side of a verify join must not shuffle:\n$plan")
+      assert(plan.collectLeaves().count(isDocsScan) == 2, s"one _docs scan per verify join:\n$plan")
     }
   }
 
@@ -303,11 +333,7 @@ class LshIndexSpec extends SparkSpec {
           s"append $r added ${after(t) - before(t)} files to $t (buckets = ${bucketsOf(t)})")
       }
     }
-    val broadcastBefore = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    staticPlans {
       val bandsDf = spark.table(s"${prefix}_bands")
       val joined = bandsDf.as("x").join(
         bandsDf.as("y"),
@@ -324,9 +350,6 @@ class LshIndexSpec extends SparkSpec {
       val unbucketed = try joined.collect().toSet
       finally spark.conf.unset("spark.sql.sources.bucketing.enabled")
       assert(bucketed.nonEmpty && bucketed == unbucketed)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", broadcastBefore)
-      spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
     }
     // _meta is maintained with docs and bands: compaction collapses its
     // appends to one file per bucket and keeps its rows.
@@ -600,11 +623,7 @@ class LshIndexSpec extends SparkSpec {
     assert(pairs() == before, "physical rebucketing must not change pair results")
 
     // The candidate self-join stays exchange-free at the new count.
-    val broadcastBefore = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    staticPlans {
       val bandsDf = spark.table(s"${prefix}_bands")
       val joined = bandsDf.as("x").join(
         bandsDf.as("y"),
@@ -615,9 +634,6 @@ class LshIndexSpec extends SparkSpec {
       assert(joined.count() > 0)
       assert(!joined.queryExecution.executedPlan.toString.contains("Exchange"),
         "rebucketed band self-join must not shuffle")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", broadcastBefore)
-      spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
     }
   }
 
