@@ -559,7 +559,7 @@ object GraphOps {
     * order-independent hash of the batch's distinct rows) is
     * reproducible across checkpoint replays — a replayed micro-batch
     * re-delivers the identical rows, hashes to the identical key, and
-    * short-circuits on its commit row, while two distinct batches can
+    * short-circuits on its commit mark, while two distinct batches can
     * never alias — and every partial step is idempotent, so the
     * artifact converges to the batch-grown truth (StreamingSpec pins
     * union-over-waves ≡ the batch face). The foreachBatch epoch id is

@@ -1,11 +1,18 @@
 package graft.operators
 
+import java.io.IOException
+import java.nio.charset.StandardCharsets.UTF_8
+import java.security.MessageDigest
+import java.util.{HexFormat, UUID}
 import java.util.concurrent.{ExecutionException, Executors}
 
 import scala.util.{Failure, Try}
 
+import com.fasterxml.jackson.core.io.JsonStringEncoder
+import org.apache.hadoop.fs.Path
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Encoders, GraftColumnBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.catalyst.expressions.{Cast, InSet, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
@@ -118,16 +125,12 @@ private[graft] object IndexCatalog {
     * intent/commit ingest ledger that makes every family's
     * `foreachBatch` sink idempotent under at-least-once delivery.
     *
-    * The `<owner>_batches(batch_key STRING, phase STRING)` table
-    * (created lazily) holds one `intent` and one `commit` row per
-    * applied batch. `batchKey` must be reproducible across checkpoint
-    * replays: LSH, Search and Media pass their min doc_id, Vector its
-    * `foreachBatch` id, Graph an `id:`/`h:` scheduler-id or content
-    * key; any string is a valid key. A key with a `commit` row
-    * short-circuits (a replay of a committed batch is a no-op).
-    * Otherwise an `intent` row is written, `appends` runs, and a
-    * `commit` row is written — two single-row [[append]]s around the
-    * work, so the next batch's phase read sees them.
+    * `batchKey` must be reproducible across checkpoint replays: LSH,
+    * Search and Media pass their min doc_id, Vector its `foreachBatch`
+    * id, Graph an `id:`/`h:` scheduler-id or content key; any string is
+    * a valid key. A key with a `commit` mark short-circuits (a replay of
+    * a committed batch is a no-op). Otherwise an `intent` mark is
+    * written, `appends` runs, and a `commit` mark is written.
     *
     * A replay that finds `intent` without `commit` — a crash in the
     * middle — calls `appends(true)`. Table appends are repaired by
@@ -138,7 +141,7 @@ private[graft] object IndexCatalog {
     * whole append landed; the residual exposure is that single-append
     * atomicity, the engine-level floor without a transactional table
     * format (Iceberg/Delta). A crash after the appends but before the
-    * commit row leaves a dangling `intent`: the replay either repairs
+    * commit mark leaves a dangling `intent`: the replay either repairs
     * it (every guard finds its table present) or, when the caller's
     * own membership guard filters the replay to empty before it
     * reaches the ledger, leaves it inert — batch keys are unique, so no
@@ -146,56 +149,98 @@ private[graft] object IndexCatalog {
     * construction ([[GraphOps]]' anti-join grow) reads `appends`' flag
     * itself.
     *
-    * A pre-existing `<owner>_batches` table of any other schema (a
-    * retired ledger generation, or a foreign table under the name)
-    * fails with an error naming it: the ledger is never dropped or
-    * reinterpreted silently.
+    * Storage: the ledger is the catalog table
+    * `<owner>_batches(batch_key STRING, phase STRING) USING json`
+    * (created lazily), a keyed store of one file per mark. The driver
+    * writes each mark as `<phase>-<sha256(key)>.json`, holding one JSON
+    * line, under a hidden temp name renamed into place, so readers of
+    * the table never see a partial file. The phase read is two
+    * `FileSystem.exists` calls on those names.
     *
-    * The ledger grows two small files per batch and is read once per
-    * batch; compaction or a keyed store belongs here alone.
+    * Cost: no Spark job and no scan on any path. Each batch pays at
+    * most two existence checks, two small file writes and two
+    * relation-cache invalidations (so a same-session read of the table
+    * lists the new marks); none of it grows with the number of batches
+    * the ledger holds.
+    *
+    * A pre-existing `<owner>_batches` table of any other schema or
+    * format fails with an error naming it, before `appends` runs and
+    * without touching the table. That includes the parquet ledger of
+    * the same columns that indexes built before the keyed store carry:
+    * the ledger is never dropped or reinterpreted silently.
     */
   def ledgered(spark: SparkSession, owner: String, batchKey: String)(
       appends: Boolean => Unit,
   ): Unit = {
     val ledger = ledgerTable(owner)
-    if (!spark.catalog.tableExists(ledger))
-      spark.sql(s"CREATE TABLE $ledger (batch_key STRING, phase STRING) USING parquet")
-    val stored = spark.table(ledger)
-    val columns = stored.schema.map(f => f.name -> f.dataType)
-    if (columns != Seq("batch_key" -> StringType, "phase" -> StringType))
-      throw new IllegalStateException(
-        s"$ledger is not an ingest ledger (batch_key STRING, phase STRING): " +
-          s"found (${stored.schema.toDDL}); drop it or rebuild the index")
-    val phases = stored
-      .filter(col("batch_key") === batchKey)
-      .select(col("phase")).collect().map(_.getString(0)).toSet
-    if (phases.contains("commit")) return
-    val repairing = phases.contains("intent")
-    // A one-row frame, never SQL text, so a key may hold any character.
-    def record(phase: String): Unit =
-      append(spark, ledger, spark.createDataFrame(Seq((batchKey, phase))))
+    val ident = spark.sessionState.sqlParser.parseTableIdentifier(ledger)
+    val dir = ledgerDir(spark, ledger, ident)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val name = HexFormat.of().formatHex(
+      MessageDigest.getInstance("SHA-256").digest(batchKey.getBytes(UTF_8)))
+    def mark(phase: String) = new Path(dir, s"$phase-$name.json")
+    if (fs.exists(mark("commit"))) return
+    val repairing = fs.exists(mark("intent"))
+    def record(phase: String): Unit = {
+      val tmp = new Path(dir, s".$phase-$name.${UUID.randomUUID()}.tmp")
+      val key = new String(JsonStringEncoder.getInstance().quoteAsString(batchKey))
+      val out = fs.create(tmp, false)
+      try out.write(s"""{"batch_key":"$key","phase":"$phase"}\n""".getBytes(UTF_8))
+      finally out.close()
+      if (!fs.rename(tmp, mark(phase)))
+        throw new IOException(s"could not record $phase of batch $batchKey in $ledger")
+      spark.sessionState.catalog.invalidateCachedTable(ident)
+    }
     if (!repairing) record("intent")
     appends(repairing)
     record("commit")
+  }
+
+  /** The directory of `ledger`'s marks, creating the table when absent;
+    * a table of another schema or format is refused (see [[ledgered]]).
+    * Catalog metadata only, no Spark job.
+    */
+  private def ledgerDir(spark: SparkSession, ledger: String, ident: TableIdentifier): Path = {
+    val catalog = spark.sessionState.catalog
+    if (!catalog.tableExists(ident))
+      spark.sql(s"CREATE TABLE IF NOT EXISTS $ledger (batch_key STRING, phase STRING) USING json")
+    val meta = catalog.getTableMetadata(ident)
+    val columns = meta.schema.map(f => f.name -> f.dataType)
+    val format = meta.provider.getOrElse("")
+    if (!format.equalsIgnoreCase("json") ||
+        columns != Seq("batch_key" -> StringType, "phase" -> StringType))
+      throw new IllegalStateException(
+        s"$ledger is not an ingest ledger (batch_key STRING, phase STRING) USING json: " +
+          s"found (${meta.schema.toDDL}) USING $format; drop it or rebuild the index")
+    new Path(meta.location)
   }
 
   /** Append `rows` to `table` through `insertInto` (the table's own
     * column order and bucket/sort spec), then refresh it: the session
     * caches a table's file listing on first read, and without the
     * refresh the next batch's read of `table` would miss this append.
+    * One write job plus the refresh's listing of `table`; the ingest
+    * ledger's marks do not come through here.
     */
   def append(spark: SparkSession, table: String, rows: DataFrame): Unit = {
     rows.write.mode("append").insertInto(table)
     spark.catalog.refreshTable(table)
   }
 
-  /** A batch's ledger key, its minimum `idCol` (a long), or None for an
-    * empty batch — one aggregate job for both answers.
+  /** `batch` materialised by `localCheckpoint`, with its ledger key:
+    * its minimum `idCol` (a long), or None for an empty batch. A
+    * `Dataset.observe` reads the count and the minimum on the
+    * checkpoint's own job, so the key costs no job of its own; the
+    * metrics are read from the finished plan, never waited for.
     */
-  def batchKey(batch: DataFrame, idCol: String = "doc_id"): Option[Long] = {
-    val r = batch.agg(count(lit(1)), min(col(idCol))).head()
-    if (r.getLong(0) == 0) None else Some(r.getLong(1))
+  def checkpointKeyed(batch: DataFrame, idCol: String = "doc_id"): (DataFrame, Option[Long]) = {
+    val observed = batch.observe(KeyMetrics, count(lit(1)), min(col(idCol)))
+    val frame = observed.localCheckpoint()
+    val r = observed.queryExecution.observedMetrics(KeyMetrics)
+    (frame, Option.when(r.getLong(0) > 0)(r.getLong(1)))
   }
+
+  private val KeyMetrics = "batch_key"
 
   /** One table append of a batch: `rows` go to `<owner>_<table>`. The
     * crash-repair guard `landed` answers "does this table already hold

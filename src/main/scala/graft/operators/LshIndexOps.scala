@@ -512,10 +512,9 @@ object LshIndexOps {
     IndexCatalog.recoverDangling(spark, s"${prefix}_clusters")
     if (spark.catalog.tableExists(s"${prefix}_clusters"))
       DedupOps.growPersistedClusters(spark, s"${prefix}_clusters", pairs)
-    val newRows = idx
-      .join(spark.table(s"${prefix}_docs").select("doc_id"), Seq("doc_id"), "left_anti")
-      .localCheckpoint()
-    appendKeepers(spark, prefix, newRows, crashAfter = "")
+    val (newRows, key) = IndexCatalog.checkpointKeyed(idx
+      .join(spark.table(s"${prefix}_docs").select("doc_id"), Seq("doc_id"), "left_anti"))
+    appendKeepers(spark, prefix, newRows, key, crashAfter = "")
   }
 
   /** Incremental dedup — the reason a pipeline PERSISTS the index: new
@@ -668,11 +667,10 @@ object LshIndexOps {
       col("x.doc_id") =!= col("y.doc_id"),
       threshold,
     ).localCheckpoint()
-    val kept = idx
+    val (kept, key) = IndexCatalog.checkpointKeyed(idx
       .join(dups.select(col("new_doc_id").as("doc_id")), Seq("doc_id"), "left_anti")
-      .join(docs.select("doc_id"), Seq("doc_id"), "left_anti")
-      .localCheckpoint()
-    appendKeepers(spark, prefix, kept, crashAfter)
+      .join(docs.select("doc_id"), Seq("doc_id"), "left_anti"))
+    appendKeepers(spark, prefix, kept, key, crashAfter)
     dups
   }
 
@@ -704,10 +702,11 @@ object LshIndexOps {
       spark: SparkSession,
       prefix: String,
       kept: DataFrame,
+      batchKey: Option[Long],
       crashAfter: String,
   ): Unit =
     // An empty batch needs no ledger entry.
-    IndexCatalog.batchKey(kept).foreach { key =>
+    batchKey.foreach { key =>
       IndexCatalog.ledgeredAppends(spark, prefix, key, kept) { append =>
         val bands = new IndexCatalog.Append("bands", Banding.bandRows(kept))
         val meta =

@@ -516,9 +516,8 @@ object MediaIndexOps {
           .select(col("doc_a"), col("doc_b")),
         table = "cclusters")
     }
-    val newRows = idx
-      .join(spark.table(s"${prefix}_fps").select("doc_id"), Seq("doc_id"), "left_anti")
-      .localCheckpoint()
+    val (newRows, key) = IndexCatalog.checkpointKeyed(idx
+      .join(spark.table(s"${prefix}_fps").select("doc_id"), Seq("doc_id"), "left_anti"))
     val metaCols = Seq("doc_id", "payload_md5", "width", "height", "n_bytes", "has_signal")
     val keptMeta =
       if (spark.catalog.tableExists(s"${prefix}_meta")) {
@@ -562,7 +561,7 @@ object MediaIndexOps {
         }
         Some(newMeta)
       } else None
-    appendKeepers(spark, prefix, newRows, crashAfter = "", keptMeta)
+    appendKeepers(spark, prefix, newRows, key, crashAfter = "", keptMeta)
   }
 
   /** The skew STOP-KEY dial on the fingerprint banding (the
@@ -750,10 +749,9 @@ object MediaIndexOps {
     )
     val withinBatch = verified(batchChunks, batchChunks, col("y.doc_id") < col("x.doc_id"))
     val dups = vsIndex.unionByName(withinBatch).localCheckpoint()
-    val kept = idx
+    val (kept, key) = IndexCatalog.checkpointKeyed(idx
       .join(dups.select(col("new_doc_id").as("doc_id")).distinct(), Seq("doc_id"), "left_anti")
-      .join(spark.table(s"${prefix}_fps").select("doc_id"), Seq("doc_id"), "left_anti")
-      .localCheckpoint()
+      .join(spark.table(s"${prefix}_fps").select("doc_id"), Seq("doc_id"), "left_anti"))
     // Incremental `_meta` maintenance: when the prefix carries the
     // curation-meta artifact, the admitted keepers' one-decoded-scan
     // meta rows ride the SAME ledgered commit — so the upload-time
@@ -771,7 +769,7 @@ object MediaIndexOps {
             batch.join(kept.select("doc_id"), Seq("doc_id"), "left_semi"), mediaType)
           .localCheckpoint())
       else None
-    appendKeepers(spark, prefix, kept, crashAfter, keptMeta)
+    appendKeepers(spark, prefix, kept, key, crashAfter, keptMeta)
     dups
   }
 
@@ -795,11 +793,12 @@ object MediaIndexOps {
       spark: SparkSession,
       prefix: String,
       kept: DataFrame,
+      batchKey: Option[Long],
       crashAfter: String,
       keptMeta: Option[DataFrame] = None,
   ): Unit =
     // An empty batch needs no ledger entry.
-    IndexCatalog.batchKey(kept).foreach { key =>
+    batchKey.foreach { key =>
       IndexCatalog.ledgeredAppends(spark, prefix, key, kept) { append =>
         def crash(point: String): Unit =
           if (crashAfter == point)

@@ -46,13 +46,15 @@ object SearchIndexOps {
     */
   def writeIndex(docs: DataFrame, buckets: Int, prefix: String): Unit = {
     IndexCatalog.dropLedger(docs.sparkSession, prefix)
-    tableWrites(docs, batchKeyOf(docs)).foreach { case (t, rows, layout) =>
+    val (d, key) = keyed(docs)
+    tableWrites(d, key).foreach { case (t, rows, layout) =>
       layout(rows().write.mode("overwrite"), buckets).saveAsTable(s"${prefix}_$t")
       docs.sparkSession.catalog.refreshTable(s"${prefix}_$t")
     }
   }
 
-  /** The batch's deterministic identity: its minimum doc_id (0 for an
+  /** `docs` checkpointed ([[IndexCatalog.checkpointKeyed]]), with the
+    * batch's deterministic identity: its minimum doc_id (0 for an
     * empty batch, an inert key). Batches carry disjoint doc_id sets
     * (the incremental contract), so the minimum is unique per batch AND
     * reproducible on a checkpoint replay of the same batch — which is
@@ -60,7 +62,10 @@ object SearchIndexOps {
     * to their batch, and the ingest ledger recognize a replay, without
     * any external id.
     */
-  private def batchKeyOf(docs: DataFrame): Long = IndexCatalog.batchKey(docs).getOrElse(0L)
+  private def keyed(docs: DataFrame): (DataFrame, Long) = {
+    val (d, key) = IndexCatalog.checkpointKeyed(docs)
+    (d, key.getOrElse(0L))
+  }
 
   /** The four tables' rows in commit order, each with its build layout
     * — the one place each layout is stated; appends go through
@@ -110,10 +115,12 @@ object SearchIndexOps {
     * first read, and a stale cache would silently serve pre-append
     * results to the next query.
     */
-  def appendDocuments(spark: SparkSession, prefix: String, batch: DataFrame): Unit =
-    tableWrites(batch, batchKeyOf(batch)).foreach { case (t, rows, _) =>
+  def appendDocuments(spark: SparkSession, prefix: String, batch: DataFrame): Unit = {
+    val (b, key) = keyed(batch)
+    tableWrites(b, key).foreach { case (t, rows, _) =>
       IndexCatalog.append(spark, s"${prefix}_$t", rows())
     }
+  }
 
   /** Index health stats — the operational view of the stored postings:
     * per term-bucket file count proxy isn't observable from SQL, but
@@ -259,8 +266,8 @@ object SearchIndexOps {
       batch: DataFrame,
       crashAfter: String = "",
   ): Unit = {
-    val fresh = replayGuardFresh(spark, prefix, batch).localCheckpoint()
-    IndexCatalog.batchKey(fresh).foreach { bk =>
+    val (fresh, key) = IndexCatalog.checkpointKeyed(replayGuardFresh(spark, prefix, batch))
+    key.foreach { bk =>
       IndexCatalog.ledgeredAppends(spark, prefix, bk, fresh) { append =>
         tableWrites(fresh, bk).foreach { case (t, rows, _) =>
           // Lexicon and meta partials carry no doc_id: their batch-key

@@ -145,7 +145,7 @@ object VectorIndexOps {
     // the source corpus is still read exactly once per build.
     val stored = embeddings.sparkSession.table(s"${prefix}_vectors")
     radiusPartials(stored, cb)
-      .withColumn("batch_key", lit(batchKeyOf(stored)))
+      .withColumn("batch_key", lit(keyed(stored.select("vec_id"))._2))
       .write.mode("overwrite").saveAsTable(s"${prefix}_cellstats")
     // A rebuilt index is a fresh artifact: stale tombstones would
     // silently hide corpus vectors, and a stale batch ledger would
@@ -203,18 +203,21 @@ object VectorIndexOps {
   def appendVectors(spark: SparkSession, prefix: String, batch: DataFrame): Unit =
     appendVectorsGuarded(spark, prefix, batch, repairing = false)
 
-  /** The batch's reproducible identity — its min vec_id (batches carry
+  /** `frame` checkpointed ([[IndexCatalog.checkpointKeyed]]), with the
+    * batch's reproducible identity — its min vec_id (batches carry
     * disjoint vec_id sets, so the minimum is unique AND stable across
     * checkpoint replays; 0 for an empty batch, an inert key); tags the
     * cellstats partials so a crashed partial append is attributable
     * afterwards.
     */
-  private def batchKeyOf(assigned: DataFrame): Long =
-    IndexCatalog.batchKey(assigned, "vec_id").getOrElse(0L)
+  private def keyed(frame: DataFrame): (DataFrame, Long) = {
+    val (f, key) = IndexCatalog.checkpointKeyed(frame, "vec_id")
+    (f, key.getOrElse(0L))
+  }
 
   /** The append: vectors, then cellstats ([[IndexCatalog.Appends]]).
     * When `repairing` (a replay of [[ingestBatch]] found an
-    * intent-without-commit ledger row), vectors are located by the
+    * intent-without-commit ledger mark), vectors are located by the
     * batch's vec_ids and cellstats by the batch-key tag its partial
     * rows carry, so exactly the missing appends re-run. `crashAfter` is
     * the spec's fault injection: throw right after the named table's
@@ -246,8 +249,7 @@ object VectorIndexOps {
     // append, not once per output table. The checkpoint is
     // batch-sized; the stored corpus is never touched by an append
     // (VectorIndexSpec pins the plan).
-    val assigned = assignedProjection(batch, cb).localCheckpoint()
-    val bk = batchKeyOf(assigned)
+    val (assigned, bk) = keyed(assignedProjection(batch, cb))
     val append = new IndexCatalog.Appends(spark, prefix, assigned, repairing, idCol = "vec_id")
     append(new IndexCatalog.Append("vectors", assigned))
     if (crashAfter == "vectors")
@@ -557,8 +559,8 @@ object VectorIndexOps {
     * the foreachBatch id. The ledger is the right guard HERE: the
     * vectors table is bucketed by `cell`, so an anti-join on vec_id
     * would shuffle the stored corpus once per micro-batch, while the
-    * ledger check reads a table with one row per applied batch phase
-    * (metadata-scale, O(1) corpus contact). foreachBatch batch ids are
+    * ledger check is two file-existence checks on the driver (no
+    * Spark job, O(1) corpus contact). foreachBatch batch ids are
     * stable across checkpoint replays, so a committed batch replays to
     * a wholesale skip and vec_ids stay unique (VectorIndexSpec replays
     * a batch and asserts it). A repairing replay runs the two appends

@@ -9,8 +9,11 @@ import graft.operators.IndexCatalog
 /** The crash-repair ingest ledger every persisted-index family shares
   * (IndexCatalog.ledgered): a fresh key runs its appends once between
   * an intent and a commit row, a crash leaves the intent for a
-  * repairing rerun, a committed key never runs again, and a foreign
-  * table under the ledger's name is refused rather than reinterpreted.
+  * repairing rerun, a committed key never runs again, none of it runs
+  * a Spark job, and a foreign table under the ledger's name (a parquet
+  * ledger included) is refused rather than reinterpreted.
+  * checkpointKeyed keys a batch by its minimum id, None when empty, on
+  * the checkpoint's own job.
   * Guarded appends (ledgeredAppends) run their groups in order, consult
   * no guard on a fresh key, re-run only what a repair finds missing, and
   * let a concurrent group finish before a failure surfaces; an append
@@ -102,6 +105,73 @@ class IndexCatalogSpec extends SparkSpec {
     assert(e.getMessage.contains(ledger), e.getMessage)
     assert(!called)
     assert(spark.table(ledger).count() == 1, "the foreign table must be left as it was")
+  }
+
+  test("a parquet ledger of the ledger's own columns fails, untouched, before appends run") {
+    // Every index built before the keyed store carries this table.
+    val owner = "ledgerparquet"
+    val ledger = IndexCatalog.ledgerTable(owner)
+    fresh(owner)
+    spark.sql(s"CREATE TABLE $ledger (batch_key STRING, phase STRING) USING parquet")
+    spark.sql(s"INSERT INTO $ledger VALUES ('1', 'intent'), ('1', 'commit')")
+    val files = spark.table(ledger).inputFiles.toSeq.sorted
+    var called = false
+    val e = intercept[IllegalStateException] {
+      IndexCatalog.ledgered(spark, owner, "2")(_ => called = true)
+    }
+    assert(e.getMessage.contains(ledger), e.getMessage)
+    assert(!called)
+    spark.catalog.refreshTable(ledger)
+    assert(spark.table(ledger).inputFiles.toSeq.sorted == files)
+    assert(phases(owner, "1") == Seq("commit", "intent"))
+    assert(phases(owner, "2").isEmpty)
+  }
+
+  test("the ledger runs no Spark job on a fresh key, a repair or a committed key") {
+    val owner = "ledgerjobs"
+    fresh(owner)
+    assert(jobsOf(IndexCatalog.ledgered(spark, owner, "1")(_ => ())) == 0)
+    assert(jobsOf(IndexCatalog.ledgered(spark, owner, "1")(_ => ())) == 0)
+    intercept[IllegalStateException] {
+      IndexCatalog.ledgered(spark, owner, "2")(_ => throw new IllegalStateException("injected crash"))
+    }
+    val calls = scala.collection.mutable.Buffer[Boolean]()
+    assert(jobsOf(IndexCatalog.ledgered(spark, owner, "2")(calls += _)) == 0)
+    assert(calls == Seq(true))
+    assert(phases(owner, "1") == Seq("commit", "intent"))
+    assert(phases(owner, "2") == Seq("commit", "intent"))
+  }
+
+  /** checkpointKeyed's key, failing the test past a bounded wait. */
+  private def keyOf(batch: => org.apache.spark.sql.DataFrame): Option[Long] = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    Await.result(Future(IndexCatalog.checkpointKeyed(batch)._2), 60.seconds)
+  }
+
+  test("checkpointKeyed keys an empty batch None, without waiting on its metrics") {
+    import spark.implicits._
+    val range = spark.range(0, 40, 1, 4).toDF("doc_id")
+    assert(keyOf(spark.range(0).toDF("doc_id")).isEmpty)
+    assert(keyOf(Seq.empty[Long].toDF("doc_id")).isEmpty)
+    assert(keyOf(range.filter(col("doc_id") < 0)).isEmpty)
+    assert(keyOf(range.join(range, Seq("doc_id"), "left_anti")).isEmpty)
+  }
+
+  test("checkpointKeyed returns the batch's rows and its min id, on the checkpoint's one job") {
+    import spark.implicits._
+    // Four tasks; the minimum sits in the last one.
+    val spread = spark.range(0, 40, 1, 4).select((lit(100L) - col("id")).as("doc_id"))
+    assert(spread.rdd.getNumPartitions == 4)
+    var got: (org.apache.spark.sql.DataFrame, Option[Long]) = null
+    assert(jobsOf { got = IndexCatalog.checkpointKeyed(spread) } == 1)
+    assert(got._2 == Some(61L))
+    assert(got._1.as[Long].collect().sorted.toSeq == (61L to 100L))
+    val local = Seq(7L, 3L, 9L).toDF("vec_id")
+    val (rows, key) = IndexCatalog.checkpointKeyed(local, "vec_id")
+    assert(key == Some(3L))
+    assert(rows.as[Long].collect().sorted.toSeq == Seq(3L, 7L, 9L))
   }
 
   private def appendTables(owner: String, names: String*): Unit = {
@@ -242,21 +312,6 @@ class IndexCatalogSpec extends SparkSpec {
     val e = intercept[RuntimeException](IndexCatalog.stageTable(spark, plain, 4))
     assert(e.getMessage.contains(plain), e.getMessage)
     assert(!spark.catalog.tableExists(s"${plain}_rebucket"))
-  }
-
-  private def jobsOf(run: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    org.apache.spark.ListenerBusDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      run
-      org.apache.spark.ListenerBusDrain(spark.sparkContext)
-      jobs.get
-    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   private def keys(rows: Option[Array[org.apache.spark.sql.Row]]): Option[Seq[Long]] =

@@ -469,31 +469,33 @@ class LshIndexSpec extends SparkSpec {
 
   test("a 4-document upload verdict from a local Seq runs at most 2 Spark jobs") {
     import spark.implicits._
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val prefix = "lshverdictjobs"
     val (t, _, probeNear) = verdictFixture(prefix)
     val probe = Seq(100L -> t, 101L -> probeNear, 102L -> "too few tokens here", 103L -> "keep me")
       .toDF("doc_id", "text")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    def jobsOf(run: => Unit): Int = {
-      org.apache.spark.ListenerBusDrain(spark.sparkContext)
-      jobs.set(0)
-      run
-      org.apache.spark.ListenerBusDrain(spark.sparkContext)
-      jobs.get
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val bounded = jobsOf(
-        LshIndexOps.uploadVerdict(spark, prefix, probe, N, K, Bands, Threshold, minTok = 10L).collect())
-      val distributed = jobsOf(
-        LshIndexOps.uploadVerdict(spark, prefix, probe, N, K, Bands, Threshold, 10L, cap = -1).collect())
-      assert(bounded <= 2, s"bounded verdict ran $bounded jobs")
-      assert(distributed > bounded, s"the listener saw $distributed distributed jobs")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val bounded = jobsOf(
+      LshIndexOps.uploadVerdict(spark, prefix, probe, N, K, Bands, Threshold, minTok = 10L).collect())
+    val distributed = jobsOf(
+      LshIndexOps.uploadVerdict(spark, prefix, probe, N, K, Bands, Threshold, 10L, cap = -1).collect())
+    assert(bounded <= 2, s"bounded verdict ran $bounded jobs")
+    assert(distributed > bounded, s"the listener saw $distributed distributed jobs")
+  }
+
+  test("a 200-document dedupBatchAndGrow over a 150-document index with _meta runs 14 Spark jobs") {
+    // The ingest ledger and the batch key add none: the ledger's marks
+    // are driver-side files, and the key rides the kept checkpoint.
+    val prefix = "lshgrowjobs"
+    Seq("_docs", "_bands", "_meta", "_batches")
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $prefix$t"))
+    val all = Tables.documents(spark, Sf).select("doc_id", "text")
+    val seed = all.filter(col("doc_id") < 150)
+    LshIndexOps.writeIndex(seed, N, K, Bands, buckets = 4, prefix = prefix)
+    LshIndexOps.writeMetaTable(seed, buckets = 4, prefix = prefix)
+    val batch = all.filter(col("doc_id") >= 150 && col("doc_id") < 350)
+    val jobs = jobsOf(LshIndexOps.dedupBatchAndGrow(spark, prefix, batch, N, K, Bands, Threshold))
+    assert(jobs == 14, s"the grow ran $jobs Spark jobs")
+    assert(spark.table(s"${prefix}_docs").count() > 150, "the batch admitted no keepers")
+    assert(!spark.table(s"${prefix}_batches").filter(col("phase") === "commit").isEmpty)
   }
 
   test("a probe over the row cap or stored hits over the cap take the distributed upload verdict") {

@@ -20,4 +20,22 @@ trait SparkSpec extends AnyFunSuite {
     .getOrCreate()
 
   val Sf = "/root/testdata/sf0.001"
+
+  /** The Spark jobs `run` starts, counted by a listener over a drained
+    * listener bus.
+    */
+  def jobsOf(run: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      run
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      jobs.get
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }
