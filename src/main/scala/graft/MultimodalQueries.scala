@@ -1222,23 +1222,25 @@ object MultimodalQueries {
     ),
     // Index-served VIDEO near-dup pairs: the index stores ONE
     // fingerprint ROW PER FRAME (doc_id repeats); the read face is the
-    // same exchange-free chunk self-join with the MIN pairwise-frame
-    // hamming aggregation — bit-equal to the corpus-scan video face,
-    // one oracle for both.
+    // same exchange-free chunk self-join as the image/audio faces, whose
+    // hamming verify reports each pair at its MIN pairwise-frame
+    // hamming — bit-equal to the corpus-scan video face, one oracle for
+    // both.
     Q(
       "mm_index_pairs_video",
-      (s, d) => graft.operators.MediaIndexOps.nearDupPairsMin(
+      (s, d) => graft.operators.MediaIndexOps.nearDupPairs(
         s, fullMediaIndex(s, d, "video"), maxHamming = 5),
       Some(videoNearDupSql),
     ),
-    // The stop-key dial on the per-frame index: hot chunk buckets
-    // excluded before candidate generation. Frame fingerprints
-    // concentrate HARDER than whole-item ones (short slices, up to 16
-    // rows per doc), so this is the face a 100 TB video pipeline
-    // actually runs; bounded-recall tradeoff stated at the operator.
+    // The stop-key dial on the per-frame index: the capped pair face
+    // with hot chunk buckets excluded before candidate generation.
+    // Frame fingerprints concentrate HARDER than whole-item ones (short
+    // slices, up to 16 rows per doc), so this is the face a 100 TB
+    // video pipeline actually runs; bounded-recall tradeoff stated at
+    // the operator.
     Q(
       "mm_index_pairs_video_capped",
-      (s, d) => graft.operators.MediaIndexOps.nearDupPairsCappedMin(
+      (s, d) => graft.operators.MediaIndexOps.nearDupPairsCapped(
         s, fullMediaIndex(s, d, "video"), maxHamming = 5, maxBucket = 32),
       Some(videoDhashCtes + videoPairsTail(Some(32))),
     ),
@@ -1530,7 +1532,7 @@ object MultimodalQueries {
       (s, d) => {
         val pre = fullMediaIndex(s, d, "image")
         s.table(s"${pre}_chunks")
-          .groupBy(col("chunk_idx"), col("chunk_bits"))
+          .groupBy(graft.operators.Banding.ChunkKeys.map(col): _*)
           .agg(count(lit(1)).as("bucket_size"))
           .groupBy(col("chunk_idx"))
           .agg(

@@ -6,33 +6,35 @@ import graft.expressions.SortedIntersectCount
 
 /** The banded-candidate core every LSH/pigeonhole face shares — ONE
   * implementation of the shape that was previously copied (with its
-  * preconditions) into four files: fingerprint → fixed-width chunk
-  * extraction, banded candidate equi-join (self or batch-vs-stored),
-  * optional inline hamming verify, the stop-key skew cap, and the
-  * MinHash faces' `(doc_id, band_idx, band_key)` band rows and exact
-  * Jaccard verify (candidate filtering, then ONE exact-similarity
-  * verify).
+  * preconditions) into four files. Two families, each with one row
+  * layout and one verify:
   *
-  * Faces built on this core:
-  *   - [[DedupOps.simhashPairs]] (SimHash text near-dup),
-  *   - [[MultimodalOps.nearDupPairs]] (perceptual dHash media near-dup),
-  *   - [[MediaIndexOps]] (the persisted fingerprint index: pair /
-  *     capped / incremental / streaming-grow reads),
-  *   - [[DedupOps.jaccardPairsFrom]] (prefix-posting candidates) and
-  *     [[DedupOps.minhashLshPairsFrom]], [[DedupOps.containmentPairs]],
-  *     [[DedupOps.lshContamination]] (band candidates): the corpus-scan
-  *     MinHash faces, verified by [[jaccardPairs]] / [[withSets]],
-  *   - [[LshIndexOps]] (the persisted MinHash index: candidate /
-  *     capped / incremental / streaming-grow reads): the same
-  *     [[bandRows]] layout and [[jaccardPairs]] verify, so its pairs
-  *     equal the corpus-scan faces' by construction.
+  *   - Fingerprint (Hamming) faces: the [[ChunkKeys]] layout
+  *     ([[chunkRows]], fingerprint → fixed-width pigeonhole chunks) and
+  *     the inline Hamming verify [[hammingPairs]], which returns ONE row
+  *     per pair at its minimum Hamming — so a per-frame face needs no
+  *     min-aggregation of its own. Built on it:
+  *     [[DedupOps.simhashPairs]] (SimHash text near-dup),
+  *     [[MultimodalOps.nearDupPairs]] / `nearDupPairsWHash` /
+  *     `nearDupPairsVideo` / `frameMatchPairs` (perceptual media
+  *     near-dup, per item and per frame), and [[MediaIndexOps]] (the
+  *     persisted fingerprint index: pair / capped / consensus /
+  *     incremental / frame-match / streaming-grow reads, image, audio
+  *     and video alike).
+  *   - MinHash (Jaccard) faces: the [[BandKeys]] layout ([[bandRows]])
+  *     and the exact-Jaccard verify [[jaccardPairs]] / [[withSets]].
+  *     Built on it: [[DedupOps.jaccardPairsFrom]] (prefix-posting
+  *     candidates) and [[DedupOps.minhashLshPairsFrom]],
+  *     [[DedupOps.containmentPairs]], [[DedupOps.lshContamination]] (band
+  *     candidates), the corpus-scan faces; and [[LshIndexOps]] (the
+  *     persisted MinHash index: candidate / capped / incremental /
+  *     streaming-grow reads), so its pairs equal the corpus-scan faces'
+  *     by construction.
   *
-  * Everything here is a pure equi-join on band keys (the verify joins
+  * Both share the stop-key skew cap [[capSmallBuckets]]. Everything here
+  * is a pure equi-join on band or chunk keys (the Jaccard verify joins
   * on the candidates' doc ids) — never an all-pairs comparison at any
-  * corpus scale — and the expressions are
-  * kept byte-identical to what the faces inlined before the extraction,
-  * so the pinned exchange-free plans and the DuckDB oracles are
-  * unchanged.
+  * corpus scale.
   */
 object Banding {
 
@@ -67,16 +69,24 @@ object Banding {
     )
   }
 
+  /** The fingerprint chunk rows' key list: the persisted `_chunks`
+    * table's bucket keys and every pigeonhole join's equi-join keys
+    * (the [[BandKeys]] twin).
+    */
+  val ChunkKeys: Seq[String] = Seq("chunk_idx", "chunk_bits")
+
   /** `(doc_id, <fpCol>, chunk_idx, chunk_bits)` rows — the banded shape
-    * the candidate joins run on, extracted inline from the fingerprint
-    * column.
+    * the candidate joins run on, one row per element of the `chunks`
+    * array column.
+    */
+  def chunkRows(fp: DataFrame, fpCol: String, chunks: Column): DataFrame =
+    fp.select(col("doc_id"), col(fpCol), posexplode(chunks).as(ChunkKeys))
+
+  /** [[chunkRows]] with the chunks extracted inline from the
+    * fingerprint column ([[chunksCol]]).
     */
   def chunkRows(fp: DataFrame, fpCol: String, bits: Int, blockBands: Int): DataFrame =
-    fp.select(
-      col("doc_id"),
-      col(fpCol),
-      posexplode(chunksCol(col(fpCol), bits, blockBands)).as(Seq("chunk_idx", "chunk_bits")),
-    )
+    chunkRows(fp, fpCol, chunksCol(col(fpCol), bits, blockBands))
 
   private def keyCond(keys: Seq[String]): Column =
     keys.map(k => col(s"x.$k") === col(s"y.$k")).reduce(_ && _)
@@ -143,16 +153,20 @@ object Banding {
       rows, rows, keys, outA, outB,
       docPred = Some(col(s"x.$idCol") < col(s"y.$idCol")), idCol = idCol)
 
-  /** Banded candidate join with the INLINE hamming verify — for faces
-    * whose verify artifact (the fingerprint, one long) rides in the
-    * band rows themselves, so candidates verify in the same join with
-    * no second pass over any store. Returns distinct
-    * `(outA, outB, hamming ≤ maxHamming)`.
+  /** Banded candidate join on [[ChunkKeys]] with the INLINE hamming
+    * verify — for faces whose verify artifact (the fingerprint, one
+    * long) rides in the chunk rows themselves, so candidates verify in
+    * the same join with no second pass over any store. Returns ONE row
+    * per `(outA, outB)` at its minimum `hamming ≤ maxHamming`. A
+    * single-fingerprint face (image, audio, SimHash) has one hamming per
+    * pair, so this is that value; a per-frame face (video: several rows
+    * per doc_id) gets the min pairwise-frame hamming, exact by
+    * pigeonhole — the closest frame pair, when within `maxHamming`,
+    * collides on ≥1 chunk, so it is among the verified rows.
     */
   def hammingPairs(
       x: DataFrame,
       y: DataFrame,
-      keys: Seq[String],
       fpCol: String,
       maxHamming: Int,
       outA: String = "doc_a",
@@ -160,24 +174,20 @@ object Banding {
       docPred: Option[Column] = None,
   ): DataFrame =
     x.as("x")
-      .join(y.as("y"), joinCond(keys, docPred))
+      .join(y.as("y"), joinCond(ChunkKeys, docPred))
       .select(
         col("x.doc_id").as(outA),
         col("y.doc_id").as(outB),
         bit_count(col(s"x.$fpCol").bitwiseXOR(col(s"y.$fpCol"))).as("hamming"),
       )
-      .distinct()
       .filter(col("hamming") <= maxHamming)
+      .groupBy(col(outA), col(outB))
+      .agg(min(col("hamming")).as("hamming"))
 
   /** The ordered self-join face of [[hammingPairs]]. */
-  def hammingSelfPairs(
-      rows: DataFrame,
-      keys: Seq[String],
-      fpCol: String,
-      maxHamming: Int,
-  ): DataFrame =
+  def hammingSelfPairs(rows: DataFrame, fpCol: String, maxHamming: Int): DataFrame =
     hammingPairs(
-      rows, rows, keys, fpCol, maxHamming,
+      rows, rows, fpCol, maxHamming,
       docPred = Some(col("x.doc_id") < col("y.doc_id")))
 
   /** The MinHash band rows' key list: the persisted `_bands` table's

@@ -352,7 +352,7 @@ object DedupOps {
       .localCheckpoint()
     val chunks = Banding.chunkRows(fp, "simhash", bits, blockBands)
     Banding
-      .hammingSelfPairs(chunks, Seq("chunk_idx", "chunk_bits"), "simhash", maxHamming)
+      .hammingSelfPairs(chunks, "simhash", maxHamming)
       .orderBy("doc_a", "doc_b")
   }
 

@@ -16,13 +16,19 @@ import org.apache.spark.sql.functions._
   *   - `<prefix>_fps(doc_id, dhash)` bucketed+sorted on doc_id — the
   *     authoritative fingerprint store and the membership table the
   *     ingest replay guard anti-joins (no stored-side exchange);
-  *   - `<prefix>_chunks(doc_id, dhash, chunk_idx, chunk_bits)`
-  *     bucketed on `(chunk_idx, chunk_bits)` — exactly the candidate
-  *     self-join's keys, so pair generation needs NO shuffle below the
-  *     join (MediaIndexSpec pins the exchange-free plan). Unlike the
-  *     text LSH index, the verify artifact (the 48-bit fingerprint)
-  *     is ONE long, so it rides IN the chunk rows and candidates
-  *     verify inline — no second join against stored sets at all.
+  *   - `<prefix>_chunks(doc_id, dhash, chunk_idx, chunk_bits)` — the
+  *     [[Banding.chunkRows]] layout, bucketed on [[Banding.ChunkKeys]]:
+  *     exactly the candidate self-join's keys, so pair generation needs
+  *     NO shuffle below the join (MediaIndexSpec pins the exchange-free
+  *     plan). Unlike the text LSH index, the verify artifact (the
+  *     48-bit fingerprint) is ONE long, so it rides IN the chunk rows
+  *     and candidates verify inline ([[Banding.hammingPairs]]) — no
+  *     second join against stored sets at all.
+  *
+  * An `image` or `audio` index stores one fingerprint per item; a
+  * `video` index stores ONE ROW PER FRAME. Every read and ingest face
+  * serves both shapes unchanged, because [[Banding.hammingPairs]]
+  * returns one row per pair at its minimum (pairwise-frame) hamming.
   *
   * At 100 TB this converts per-query corpus decode + fingerprint +
   * shuffle into a one-time build plus exchange-free bucketed reads.
@@ -37,8 +43,8 @@ object MediaIndexOps {
     * `image`/`audio` rows carry one fingerprint per item; `video` rows
     * carry ONE ROW PER FRAME ([[MultimodalOps.videoFrameFingerprints]])
     * — the doc_id repeats, the membership/anti-join semantics on
-    * doc_id are unchanged, and the pair read face aggregates the MIN
-    * pairwise-frame hamming ([[nearDupPairsMin]]).
+    * doc_id are unchanged, and every pair face reports the MIN
+    * pairwise-frame hamming ([[Banding.hammingPairs]]).
     */
   private def fpFrame(
       media: DataFrame,
@@ -72,12 +78,9 @@ object MediaIndexOps {
     )
   }
 
+  /** The chunk rows of an [[fpFrame]] (its precomputed `chunks`). */
   private def chunkRows(fp: DataFrame): DataFrame =
-    fp.select(
-      col("doc_id"),
-      col("dhash"),
-      posexplode(col("chunks")).as(Seq("chunk_idx", "chunk_bits")),
-    )
+    Banding.chunkRows(fp, "dhash", col("chunks"))
 
   /** Builds and publishes the two index tables (overwriting any
     * previous index at `prefix`).
@@ -100,7 +103,7 @@ object MediaIndexOps {
       .saveAsTable(s"${prefix}_fps")
     chunkRows(fp)
       .write.mode("overwrite")
-      .bucketBy(buckets, "chunk_idx", "chunk_bits")
+      .bucketBy(buckets, Banding.ChunkKeys.head, Banding.ChunkKeys.tail: _*)
       .saveAsTable(s"${prefix}_chunks")
     // Record the chunk layout on the artifact itself so index×index
     // consumers ([[frameMatchFromIndexes]]) can enforce the pigeonhole
@@ -137,30 +140,14 @@ object MediaIndexOps {
     * self-equi-join reads the bucketed artifact on both sides (no
     * exchange, no re-decode) and verifies hamming inline from the
     * fingerprints the chunk rows carry. Output is identical to
-    * `MultimodalOps.nearDupPairs` on the corpus the index was built
-    * from (MediaIndexSpec asserts equality; the registry query shares
-    * the pairs oracle).
+    * `MultimodalOps.nearDupPairs` (`nearDupPairsVideo` on a per-frame
+    * index: pair score = MIN pairwise-frame hamming) on the corpus the
+    * index was built from (MediaIndexSpec asserts equality; the
+    * registry queries share the pairs oracles).
     */
   def nearDupPairs(spark: SparkSession, prefix: String, maxHamming: Int): DataFrame =
     Banding
-      .hammingSelfPairs(
-        IndexCatalog.readLive(spark, s"${prefix}_chunks"),
-        Seq("chunk_idx", "chunk_bits"), "dhash", maxHamming)
-      .orderBy("doc_a", "doc_b")
-
-  /** The pair read face for a PER-FRAME index (video: several
-    * fingerprint rows per doc_id): same exchange-free chunk self-join,
-    * pair score = MIN pairwise-frame hamming — exact by the pigeonhole
-    * argument [[MultimodalOps.nearDupPairsVideo]] documents. Output is
-    * identical to that operator on the corpus the index was built from.
-    */
-  def nearDupPairsMin(spark: SparkSession, prefix: String, maxHamming: Int): DataFrame =
-    Banding
-      .hammingSelfPairs(
-        IndexCatalog.readLive(spark, s"${prefix}_chunks"),
-        Seq("chunk_idx", "chunk_bits"), "dhash", maxHamming)
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(min(col("hamming")).as("hamming"))
+      .hammingSelfPairs(IndexCatalog.readLive(spark, s"${prefix}_chunks"), "dhash", maxHamming)
       .orderBy("doc_a", "doc_b")
 
   /** TWO-FAMILY consensus from the STORED artifact
@@ -171,11 +158,11 @@ object MediaIndexOps {
     * computed in the index build's single decode pass, so the
     * consensus judgment costs two narrow joins against fingerprint
     * rows and never re-reads a payload. Works on BOTH index shapes:
-    * single-stream (one `_fps` row per doc — the min-aggregation and
-    * per-doc whash pick are identities) and per-frame video (pair
-    * score = MIN pairwise-frame hamming; the whash is the whole-item
-    * fingerprint every frame row repeats, so `min(whash)` recovers
-    * exactly it — per-frame duplication can never multiply pair rows).
+    * single-stream (one `_fps` row per doc — the per-doc whash pick is
+    * an identity) and per-frame video (pair score = MIN pairwise-frame
+    * hamming; the whash is the whole-item fingerprint every frame row
+    * repeats, so `min(whash)` recovers exactly it — per-frame
+    * duplication can never multiply pair rows).
     */
   def consensusFromIndex(
       spark: SparkSession,
@@ -187,11 +174,7 @@ object MediaIndexOps {
       .groupBy(col("doc_id"))
       .agg(min(col("whash")).as("whash"))
     val pairs = Banding
-      .hammingSelfPairs(
-        IndexCatalog.readLive(spark, s"${prefix}_chunks"),
-        Seq("chunk_idx", "chunk_bits"), "dhash", maxHamming)
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(min(col("hamming")).as("hamming"))
+      .hammingSelfPairs(IndexCatalog.readLive(spark, s"${prefix}_chunks"), "dhash", maxHamming)
     MultimodalOps.confirmPairs(pairs, fps, whashBudget)
   }
 
@@ -234,10 +217,7 @@ object MediaIndexOps {
       whashBudget: Int = 5,
   ): Unit = {
     writeMetaTable(media, buckets, prefix, mediaType)
-    val pairs =
-      if (mediaType == "video") nearDupPairsMin(spark, prefix, maxHamming)
-      else nearDupPairs(spark, prefix, maxHamming)
-    DedupOps.connectedComponents(pairs)
+    DedupOps.connectedComponents(nearDupPairs(spark, prefix, maxHamming))
       .write.mode("overwrite")
       .bucketBy(buckets, "doc_id").sortBy("doc_id")
       .saveAsTable(s"${prefix}_clusters")
@@ -249,9 +229,8 @@ object MediaIndexOps {
     // consensus read face (`mm_index_consensus_clusters`) exists for
     // the image index alone; building the artifact for audio/video
     // would pay an extra consensus pass + label-prop + table write
-    // that nothing reads (and video's non-min-aggregated frame pairs
-    // have no oracle-pinned consensus semantics). The drop keeps a
-    // stale prior-generation artifact from being served.
+    // that nothing reads. The drop keeps a stale prior-generation
+    // artifact from being served.
     if (mediaType == "image")
       DedupOps.connectedComponents(
         consensusFromIndex(spark, prefix, maxHamming, whashBudget)
@@ -473,23 +452,17 @@ object MediaIndexOps {
     val idx = fpFrame(batch, regions, blockBands, mediaType).localCheckpoint()
     val batchIds = idx.select(col("doc_id")).distinct().localCheckpoint()
     val batchChunks = chunkRows(idx)
-    val keys = Seq("chunk_idx", "chunk_bits")
     val storedChunks = spark.table(s"${prefix}_chunks")
       .join(batchIds, Seq("doc_id"), "left_anti")
-    val vsStored = Banding.hammingPairs(batchChunks, storedChunks, keys, "dhash", maxHamming)
-    val withinBatch = Banding.hammingPairs(
-      batchChunks, batchChunks, keys, "dhash", maxHamming,
-      docPred = Some(col("x.doc_id") < col("y.doc_id")))
-    // One row per unordered pair; min frame hamming (exact for a
-    // per-frame video index by the pigeonhole argument, identity for
-    // single-stream modalities).
+    val vsStored = Banding.hammingPairs(batchChunks, storedChunks, "dhash", maxHamming)
+    val withinBatch = Banding.hammingSelfPairs(batchChunks, "dhash", maxHamming)
+    // One row per unordered pair at its min hamming: each side already
+    // is, and they share no pair (the stored side excludes the batch).
     val pairs = vsStored.unionByName(withinBatch)
       .select(
-        least(col("doc_a"), col("doc_b")).as("a"),
-        greatest(col("doc_a"), col("doc_b")).as("b"),
+        least(col("doc_a"), col("doc_b")).as("doc_a"),
+        greatest(col("doc_a"), col("doc_b")).as("doc_b"),
         col("hamming"))
-      .groupBy(col("a").as("doc_a"), col("b").as("doc_b"))
-      .agg(min(col("hamming")).as("hamming"))
       .localCheckpoint()
     // Cluster merges run BEFORE the ledgered appends: both are
     // idempotent, so any crash point replays cleanly; their inputs
@@ -575,7 +548,11 @@ object MediaIndexOps {
     * Bounded-recall tradeoff stated plainly: a true near-dup pair is
     * missed only if EVERY one of its ≥1 colliding chunks is hot; the
     * exact pigeonhole guarantee is conceded for the capped keys only,
-    * which are exactly the ones `mm_index_stats` surfaces.
+    * which are exactly the ones `mm_index_stats` surfaces. On a
+    * per-frame (video) index the cap matters MORE: frame fingerprints
+    * concentrate harder than whole-item ones (short slices of the
+    * decoded stream, up to 16 per doc), and a true pair is missed only
+    * if EVERY colliding frame chunk of its closest frame pair is hot.
     */
   def nearDupPairsCapped(
       spark: SparkSession,
@@ -583,36 +560,10 @@ object MediaIndexOps {
       maxHamming: Int,
       maxBucket: Int,
   ): DataFrame = {
-    val keys = Seq("chunk_idx", "chunk_bits")
     val small = Banding.capSmallBuckets(
-      IndexCatalog.readLive(spark, s"${prefix}_chunks"), keys, maxBucket)
+      IndexCatalog.readLive(spark, s"${prefix}_chunks"), Banding.ChunkKeys, maxBucket)
     Banding
-      .hammingSelfPairs(small, keys, "dhash", maxHamming)
-      .orderBy("doc_a", "doc_b")
-  }
-
-  /** The stop-key dial on a PER-FRAME (video) index — [[nearDupPairsMin]]
-    * with hot chunk buckets excluded before candidate generation. Frame
-    * fingerprints concentrate harder than whole-item ones (frames are
-    * short slices of the decoded stream, and every doc contributes up
-    * to 16 of them), so the skew cap matters MORE here: one hot chunk
-    * value of s frame rows costs s·(s−1)/2 verifications. Bounded
-    * recall stated as always: a true pair is missed only if EVERY
-    * colliding frame chunk of its closest frame pair is hot.
-    */
-  def nearDupPairsCappedMin(
-      spark: SparkSession,
-      prefix: String,
-      maxHamming: Int,
-      maxBucket: Int,
-  ): DataFrame = {
-    val keys = Seq("chunk_idx", "chunk_bits")
-    val small = Banding.capSmallBuckets(
-      IndexCatalog.readLive(spark, s"${prefix}_chunks"), keys, maxBucket)
-    Banding
-      .hammingSelfPairs(small, keys, "dhash", maxHamming)
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(min(col("hamming")).as("hamming"))
+      .hammingSelfPairs(small, "dhash", maxHamming)
       .orderBy("doc_a", "doc_b")
   }
 
@@ -620,8 +571,9 @@ object MediaIndexOps {
     * fingerprint the new batch (its OWN decode, one pass), join its
     * chunks against the STORED chunk table (bucketed side never
     * shuffles), verify hamming inline. Stored payloads are never
-    * re-read. Returns (new_doc_id, dup_of, hamming ≤ maxHamming) for
-    * batch images that near-duplicate an indexed image.
+    * re-read. Returns one (new_doc_id, dup_of, hamming ≤ maxHamming)
+    * row per batch item that near-duplicates an indexed item, at the
+    * pair's min hamming (pairwise-frame on a video index).
     */
   def dedupAgainstIndex(
       spark: SparkSession,
@@ -636,7 +588,7 @@ object MediaIndexOps {
     Banding
       .hammingPairs(
         chunkRows(idx), IndexCatalog.readLive(spark, s"${prefix}_chunks"),
-        Seq("chunk_idx", "chunk_bits"), "dhash", maxHamming, "new_doc_id", "dup_of")
+        "dhash", maxHamming, "new_doc_id", "dup_of")
       .orderBy("new_doc_id", "dup_of")
   }
 
@@ -669,9 +621,7 @@ object MediaIndexOps {
       .hammingPairs(
         IndexCatalog.readLive(spark, s"${prefix}_chunks"),
         Banding.chunkRows(vf, "dhash", bits, blockBands),
-        Seq("chunk_idx", "chunk_bits"), "dhash", maxHamming, "image_id", "video_id")
-      .groupBy(col("image_id"), col("video_id"))
-      .agg(min(col("hamming")).as("hamming"))
+        "dhash", maxHamming, "image_id", "video_id")
       .orderBy("image_id", "video_id")
   }
 
@@ -707,15 +657,14 @@ object MediaIndexOps {
       .hammingPairs(
         IndexCatalog.readLive(spark, s"${imagePrefix}_chunks"),
         IndexCatalog.readLive(spark, s"${videoPrefix}_chunks"),
-        Seq("chunk_idx", "chunk_bits"), "dhash", maxHamming, "image_id", "video_id")
-      .groupBy(col("image_id"), col("video_id"))
-      .agg(min(col("hamming")).as("hamming"))
+        "dhash", maxHamming, "image_id", "video_id")
       .orderBy("image_id", "video_id")
   }
 
   /** One micro-batch of the STREAMING image dedup: returns the batch's
-    * near-dup rows `(new_doc_id, dup_of, hamming)` and GROWS the index
-    * with the batch's kept (non-dup, not-already-indexed) images — the
+    * near-dup rows `(new_doc_id, dup_of, hamming)` (one per verified
+    * pair at its min hamming) and GROWS the index with the batch's
+    * kept (non-dup, not-already-indexed) images — the
     * [[LshIndexOps.dedupBatchAndGrow]] greedy-keeper discipline on
     * fingerprints. A batch image is a dup if its chunks collide (and
     * hamming verifies) with (a) any INDEXED image — the self-collision
@@ -740,8 +689,7 @@ object MediaIndexOps {
     val batchChunks = chunkRows(idx)
     def verified(x: DataFrame, y: DataFrame, extra: org.apache.spark.sql.Column) =
       Banding.hammingPairs(
-        x, y, Seq("chunk_idx", "chunk_bits"), "dhash", maxHamming,
-        "new_doc_id", "dup_of", docPred = Some(extra))
+        x, y, "dhash", maxHamming, "new_doc_id", "dup_of", docPred = Some(extra))
     val vsIndex = verified(
       batchChunks,
       IndexCatalog.readLive(spark, s"${prefix}_chunks"),

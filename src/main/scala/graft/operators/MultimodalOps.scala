@@ -584,7 +584,7 @@ object MultimodalOps {
       .localCheckpoint()
     val chunks = Banding.chunkRows(fp, "dhash", bits, blockBands)
     Banding
-      .hammingSelfPairs(chunks, Seq("chunk_idx", "chunk_bits"), "dhash", maxHamming)
+      .hammingSelfPairs(chunks, "dhash", maxHamming)
       .orderBy("doc_a", "doc_b")
   }
 
@@ -616,7 +616,7 @@ object MultimodalOps {
       .localCheckpoint()
     val chunks = Banding.chunkRows(fp, "whash", bits, blockBands)
     Banding
-      .hammingSelfPairs(chunks, Seq("chunk_idx", "chunk_bits"), "whash", maxHamming)
+      .hammingSelfPairs(chunks, "whash", maxHamming)
       .orderBy("doc_a", "doc_b")
   }
 
@@ -757,9 +757,10 @@ object MultimodalOps {
     * one sits within `maxHamming` of any frame of the other). The min
     * over VERIFIED collisions is exact, not approximate: if the true
     * closest frame pair is within `maxHamming`, pigeonhole guarantees
-    * that very pair collides on ≥1 chunk, so it is present in the
-    * aggregation and no smaller value exists. Candidates remain a pure
-    * banded equi-join — frames never all-pairs across the corpus.
+    * that very pair collides on ≥1 chunk, so it is among the verified
+    * rows [[Banding.hammingPairs]] reduces to one per pair and no
+    * smaller value exists. Candidates remain a pure banded equi-join —
+    * frames never all-pairs across the corpus.
     */
   def nearDupPairsVideo(
       media: DataFrame,
@@ -772,9 +773,7 @@ object MultimodalOps {
     val fp = videoFrameFingerprints(media, regions).localCheckpoint()
     val chunks = Banding.chunkRows(fp, "dhash", bits, blockBands)
     Banding
-      .hammingSelfPairs(chunks, Seq("chunk_idx", "chunk_bits"), "dhash", maxHamming)
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(min(col("hamming")).as("hamming"))
+      .hammingSelfPairs(chunks, "dhash", maxHamming)
       .orderBy("doc_a", "doc_b")
   }
 
@@ -863,9 +862,7 @@ object MultimodalOps {
       .hammingPairs(
         Banding.chunkRows(img, "dhash", bits, blockBands),
         Banding.chunkRows(vid, "dhash", bits, blockBands),
-        Seq("chunk_idx", "chunk_bits"), "dhash", maxHamming, "image_id", "video_id")
-      .groupBy(col("image_id"), col("video_id"))
-      .agg(min(col("hamming")).as("hamming"))
+        "dhash", maxHamming, "image_id", "video_id")
       .orderBy("image_id", "video_id")
   }
 

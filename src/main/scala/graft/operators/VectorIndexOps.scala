@@ -556,18 +556,23 @@ object VectorIndexOps {
 
   /** One replay-safe, crash-repairable ingest step — the ingest
     * ledger ([[IndexCatalog.ledgered]]) on the vector face, keyed by
-    * the foreachBatch id. The ledger is the right guard HERE: the
-    * vectors table is bucketed by `cell`, so an anti-join on vec_id
-    * would shuffle the stored corpus once per micro-batch, while the
-    * ledger check is two file-existence checks on the driver (no
-    * Spark job, O(1) corpus contact). foreachBatch batch ids are
-    * stable across checkpoint replays, so a committed batch replays to
-    * a wholesale skip and vec_ids stay unique (VectorIndexSpec replays
-    * a batch and asserts it). A repairing replay runs the two appends
-    * (vectors, then cellstats partials) presence-guarded
-    * ([[appendVectorsGuarded]]), so exactly the missing appends re-run
-    * (VectorIndexSpec kills the sequence between the two appends and
-    * asserts the replayed index is bit-equal).
+    * the foreachBatch id, prefixed with the stream's persistent query
+    * id when it runs inside a streaming query. The ledger is the right
+    * guard HERE: the vectors table is bucketed by `cell`, so an
+    * anti-join on vec_id would shuffle the stored corpus once per
+    * micro-batch, while the ledger check is two file-existence checks
+    * on the driver (no Spark job, O(1) corpus contact). The query id
+    * and the foreachBatch batch ids are both stable across checkpoint
+    * replays, so a committed batch replays to a wholesale skip and
+    * vec_ids stay unique (VectorIndexSpec replays a batch and asserts
+    * it). Epoch ids alone restart at 0 with every fresh checkpoint; the
+    * query id (new per checkpoint) keeps a re-pointed stream over the
+    * same index from aliasing the previous stream's batches
+    * (VectorIndexSpec runs two such streams). A repairing replay runs
+    * the two appends (vectors, then cellstats partials)
+    * presence-guarded ([[appendVectorsGuarded]]), so exactly the
+    * missing appends re-run (VectorIndexSpec kills the sequence between
+    * the two appends and asserts the replayed index is bit-equal).
     */
   private[graft] def ingestBatch(
       spark: SparkSession,
@@ -575,16 +580,20 @@ object VectorIndexOps {
       batch: DataFrame,
       batchId: Long,
       crashAfter: String = "",
-  ): Unit =
-    IndexCatalog.ledgered(spark, prefix, batchId.toString) { repairing =>
-      appendVectorsGuarded(spark, prefix, batch, repairing, crashAfter)
+  ): Unit = {
+    val stream = Option(spark.sparkContext.getLocalProperty(
+      org.apache.spark.sql.execution.streaming.runtime.StreamExecution.QUERY_ID_KEY))
+    IndexCatalog.ledgered(spark, prefix, stream.fold(batchId.toString)(q => s"$q/$batchId")) {
+      repairing => appendVectorsGuarded(spark, prefix, batch, repairing, crashAfter)
     }
+  }
 
   /** Continuous vector ingestion — the streaming face: every
     * micro-batch of the `vectors` stream (vec_id, embedding) is
     * assigned against the frozen stored codebook and appended
-    * ([[appendVectors]]), guarded by [[ingestBatch]]'s batch-id ledger
-    * so checkpoint replays cannot duplicate vec_ids. The artifact is
+    * ([[appendVectors]]), guarded by [[ingestBatch]]'s (query id, batch
+    * id) ledger so checkpoint replays cannot duplicate vec_ids and a
+    * fresh checkpoint over the same index skips nothing. The artifact is
     * the stream's state in the warehouse (the established
     * index-as-state discipline).
     */

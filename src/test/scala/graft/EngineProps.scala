@@ -731,7 +731,7 @@ object EngineProps extends Properties("graft") {
       val df = fps.zipWithIndex.map { case (f, i) => (i.toLong, f) }.toDF("doc_id", "fp")
       val chunks = graft.operators.Banding.chunkRows(df, "fp", bits, bands)
       val got = graft.operators.Banding
-        .hammingSelfPairs(chunks, Seq("chunk_idx", "chunk_bits"), "fp", maxHamming)
+        .hammingSelfPairs(chunks, "fp", maxHamming)
         .as[(Long, Long, Int)].collect().toSet
       val expected = (for {
         a <- fps.indices; b <- fps.indices if a < b
@@ -742,11 +742,12 @@ object EngineProps extends Properties("graft") {
   }
 
   /** The cross-modal frame-match reduction (mm_frame_match /
-    * mm_index_frame_match): banded two-table hammingPairs + min-over-
-    * frames equals the brute-force min over all (image, frame) pairs
-    * whenever that min is within maxHamming — exact by pigeonhole (the
-    * minimizing frame pair collides on ≥1 chunk, and no smaller value
-    * can exist outside the verified set).
+    * mm_index_frame_match): banded two-table hammingPairs, one row per
+    * (image, video) at its min over frames, equals the brute-force min
+    * over all (image, frame) pairs whenever that min is within
+    * maxHamming — exact by pigeonhole (the minimizing frame pair
+    * collides on ≥1 chunk, and no smaller value can exist outside the
+    * verified set).
     */
   property("cross-table min-over-frames == brute-force frame-pair min") = {
     import spark.implicits._
@@ -771,9 +772,7 @@ object EngineProps extends Properties("graft") {
         .hammingPairs(
           graft.operators.Banding.chunkRows(imgDf, "fp", bits, bands),
           graft.operators.Banding.chunkRows(vidDf, "fp", bits, bands),
-          Seq("chunk_idx", "chunk_bits"), "fp", maxHamming, "image_id", "video_id")
-        .groupBy(col("image_id"), col("video_id"))
-        .agg(org.apache.spark.sql.functions.min(col("hamming")).as("hamming"))
+          "fp", maxHamming, "image_id", "video_id")
         .as[(Long, Long, Int)].collect().toSet
       val expected = (for {
         i <- imgs.indices; v <- vids.indices

@@ -44,10 +44,10 @@ class MediaIndexSpec extends SparkSpec {
     val audioDirect = MultimodalOps.nearDupPairs(media(), Regions, Bands, MaxHamming, "audio")
     assert(audioIdx.count() > 0)
     assert(audioIdx.exceptAll(audioDirect).isEmpty && audioDirect.exceptAll(audioIdx).isEmpty)
-    // Video: one fingerprint row per frame in the store; the min-agg
+    // Video: one fingerprint row per frame in the store; the same pair
     // read face must reproduce the corpus-scan min pairwise-frame
     // hamming exactly.
-    val videoIdx = MediaIndexOps.nearDupPairsMin(spark, videoPre, MaxHamming)
+    val videoIdx = MediaIndexOps.nearDupPairs(spark, videoPre, MaxHamming)
     val videoDirect = MultimodalOps.nearDupPairsVideo(media(), Regions, Bands, MaxHamming)
     assert(videoIdx.count() > 0)
     assert(videoIdx.exceptAll(videoDirect).isEmpty && videoDirect.exceptAll(videoIdx).isEmpty)
@@ -207,21 +207,27 @@ class MediaIndexSpec extends SparkSpec {
     val stored = media().filter(col("doc_id") % 5 =!= 0)
     val batch = media().filter(col("doc_id") % 5 === 0)
     MediaIndexOps.writeIndex(stored, Regions, Bands, buckets = 4, prefix = pre, mediaType = "video")
-    val got = MediaIndexOps
+    val rows = MediaIndexOps
       .dedupAgainstIndex(spark, pre, batch, Regions, Bands, MaxHamming, mediaType = "video")
-      .as[(Long, Long, Int)].collect().toSet
-    // Expectation from first principles: every batch-frame × stored-frame
-    // hamming ≤ MaxHamming MUST be emitted (pigeonhole guarantees the
-    // pair collides on ≥1 chunk), distinct per (new, dup, hamming).
+      .as[(Long, Long, Int)].collect()
+    val got = rows.toSet
+    // Expectation from first principles: every (new, dup) pair whose
+    // closest batch-frame × stored-frame hamming is ≤ MaxHamming MUST be
+    // emitted (pigeonhole guarantees that frame pair collides on ≥1
+    // chunk), once, at that min hamming.
     val fps = MultimodalOps.videoFrameFingerprints(media(), Regions)
       .as[(Long, Int, Long)].collect()
     val batchIds = batch.select("doc_id").as[Long].collect().toSet
     val expected = (for {
       (na, _, fa) <- fps if batchIds.contains(na)
       (nb, _, fb) <- fps if !batchIds.contains(nb)
-      h = java.lang.Long.bitCount(fa ^ fb) if h <= MaxHamming
-    } yield (na, nb, h)).toSet
+    } yield ((na, nb), java.lang.Long.bitCount(fa ^ fb)))
+      .groupBy(_._1)
+      .map { case ((na, nb), hs) => (na, nb, hs.map(_._2).min) }
+      .filter(_._3 <= MaxHamming)
+      .toSet
     assert(got.nonEmpty && got == expected)
+    assert(rows.length == got.size, "one row per (new, dup) pair")
   }
 
   test("the candidate self-join over the bucketed chunk table is exchange-free") {

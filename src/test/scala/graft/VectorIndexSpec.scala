@@ -130,6 +130,39 @@ class VectorIndexSpec extends SparkSpec {
       "every streamed vector must land exactly once")
   }
 
+  test("two streams with fresh checkpoints over one index both land every row") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val prefix = "vecrepoint"
+    Seq("codebook", "vectors", "cellstats", "batches").foreach(t =>
+      spark.sql(s"DROP TABLE IF EXISTS ${prefix}_$t"))
+    val emb = Tables.embeddings(spark, Sf)
+    VectorIndexOps.writeIndex(
+      emb, dim = 64, isSeed = col("vec_id") < 8, iters = 2, buckets = 4, prefix = prefix)
+    val seeded = spark.table(s"${prefix}_vectors").count()
+    val base = emb.select("vec_id", "embedding").as[(Long, Array[Float])].head()._2
+    // Each stream starts from its own fresh checkpoint, so both number
+    // their micro-batches from epoch 0; the second must not be taken
+    // for a replay of the first.
+    def stream(ids: Seq[Long]): Unit = {
+      val in = MemoryStream[(Long, Array[Float])]
+      val ckpt = java.nio.file.Files.createTempDirectory("vec_repoint").toFile.getAbsolutePath
+      val q = VectorIndexOps.streamingIngest(
+        spark, prefix, in.toDF().toDF("vec_id", "embedding"), checkpoint = ckpt)
+      try ids.grouped(2).foreach { w => in.addData(w.map(i => (i, base))); q.processAllAvailable() }
+      finally q.stop()
+    }
+    val first = 920001L to 920004L
+    val second = 930001L to 930004L
+    stream(first)
+    stream(second)
+    val landed = spark.table(s"${prefix}_vectors").filter(col("vec_id") >= 920001L)
+      .select("vec_id").as[Long].collect().sorted.toSeq
+    assert(landed == first ++ second, "every row of both streams must land exactly once")
+    assert(spark.table(s"${prefix}_vectors").count() == seeded + first.size + second.size)
+  }
+
   test("replayed micro-batch is idempotent: the batch ledger skips applied ids") {
     val prefix = "vecreplay"
     Seq("codebook", "vectors", "batches").foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${prefix}_$t"))
