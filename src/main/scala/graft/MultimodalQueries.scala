@@ -16,82 +16,54 @@ import org.apache.spark.sql.functions._
   */
 object MultimodalQueries {
 
-  /** Build the full-corpus media fingerprint index for one modality
-    * once per (session, dataset) — the build-once read-many discipline
-    * the sim/tx families already follow (fullVectorIndex /
-    * fullSearchIndex rationale): the dataset AND modality fold into the
-    * physical table prefix (the memo key alone can't stop two datasets
-    * in one session from overwriting each other), stopped sessions are
-    * evicted. Every index READ face (`mm_index_pairs*`, `mm_index_stats`,
-    * `mm_index_frame_match`, `mm_index_consensus*`) serves from this
-    * shared artifact — at 100× scale the plan you want reads a PERSISTED
-    * index, and rebuilding one inside a timed query misrepresents that
-    * plan's cost. The deliberately-incremental faces
-    * (`mm_index_incremental`, the streaming ingest smokes) keep building
-    * their own: their build IS the test.
+  /** The full-corpus media fingerprint index of one modality, a shared
+    * [[Tables.artifact]] per modality. Every index READ face
+    * (`mm_index_pairs*`, `mm_index_stats`, `mm_index_frame_match`,
+    * `mm_index_consensus*`) serves from it — at 100× scale the plan you
+    * want reads a PERSISTED index, and rebuilding one inside a timed
+    * query misrepresents that plan's cost. The deliberately-incremental
+    * faces (`mm_index_incremental`, the streaming ingest smokes) keep
+    * building their own: their build IS the test.
     */
-  private val builtMediaIdx = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String, String), String]
-
   private[graft] def fullMediaIndex(
       s: org.apache.spark.sql.SparkSession,
       d: String,
       mediaType: String,
-  ): String = {
-    builtMediaIdx.keys.filter(_._1.sparkContext.isStopped).foreach(builtMediaIdx.remove)
-    builtMediaIdx.synchronized {
-      builtMediaIdx.getOrElseUpdate(
-        (s, d, mediaType), {
-          val pre = Tables.tempIndexDb(s, "media", s"full_${mediaType}_${Tables.datasetKey(d)}")
-          val media = MultimodalOps.encodeMedia(documents(s, d))
-          graft.operators.MediaIndexOps.writeIndex(
-            media, regions = 49, blockBands = 6, buckets = 8, prefix = pre,
-            mediaType = mediaType)
-          // The curation artifacts ride the same build cadence: meta from
-          // ONE decoded scan, clusters from pairs read off the just-written
-          // chunk table — the nightly-refresh shape the verdict read faces
-          // (`mm_index_curation*`) serve from.
-          graft.operators.MediaIndexOps.writeCurationArtifacts(
-            s, media, maxHamming = 5, buckets = 8, prefix = pre, mediaType = mediaType)
-          pre
-        },
-      )
+  ): String =
+    Tables.artifact(s, "media", s"full_$mediaType", d) { pre =>
+      val media = MultimodalOps.encodeMedia(documents(s, d))
+      graft.operators.MediaIndexOps.writeIndex(
+        media, regions = 49, blockBands = 6, buckets = 8, prefix = pre,
+        mediaType = mediaType)
+      // The curation artifacts ride the same build cadence: meta from
+      // ONE decoded scan, clusters from pairs read off the just-written
+      // chunk table — the nightly-refresh shape the verdict read faces
+      // (`mm_index_curation*`) serve from.
+      graft.operators.MediaIndexOps.writeCurationArtifacts(
+        s, media, maxHamming = 5, buckets = 8, prefix = pre, mediaType = mediaType)
     }
-  }
 
   /** The STORED-SPLIT index + meta (stored corpus = doc_id % 5 ≠ 0) the
-    * upload-verdict faces probe — built once per (session, dataset,
-    * modality) on the [[fullMediaIndex]] pattern, so
+    * upload-verdict faces probe — a shared artifact per modality, so
     * `mm_index_upload_verdict[/_audio/_video]` time exactly what an
     * admission gate costs per arrival at 100 TB: decode the batch,
     * digest-join the stored `_meta`, banded-probe the stored chunks —
     * never the stored-split index build itself.
     */
-  private val builtSplitIdx = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String, String), String]
-
   private[graft] def splitMediaIndex(
       s: org.apache.spark.sql.SparkSession,
       d: String,
       mediaType: String,
-  ): String = {
-    builtSplitIdx.keys.filter(_._1.sparkContext.isStopped).foreach(builtSplitIdx.remove)
-    builtSplitIdx.synchronized {
-      builtSplitIdx.getOrElseUpdate(
-        (s, d, mediaType), {
-          val pre = Tables.tempIndexDb(s, "media", s"split_${mediaType}_${Tables.datasetKey(d)}")
-          val stored = MultimodalOps.encodeMedia(documents(s, d))
-            .filter(col("doc_id") % 5 =!= 0)
-          graft.operators.MediaIndexOps.writeIndex(
-            stored, regions = 49, blockBands = 6, buckets = 8, prefix = pre,
-            mediaType = mediaType)
-          graft.operators.MediaIndexOps.writeMetaTable(
-            stored, buckets = 8, prefix = pre, mediaType = mediaType)
-          pre
-        },
-      )
+  ): String =
+    Tables.artifact(s, "media", s"split_$mediaType", d) { pre =>
+      val stored = MultimodalOps.encodeMedia(documents(s, d))
+        .filter(col("doc_id") % 5 =!= 0)
+      graft.operators.MediaIndexOps.writeIndex(
+        stored, regions = 49, blockBands = 6, buckets = 8, prefix = pre,
+        mediaType = mediaType)
+      graft.operators.MediaIndexOps.writeMetaTable(
+        stored, buckets = 8, prefix = pre, mediaType = mediaType)
     }
-  }
 
   /** The INCREMENTALLY-GROWN index of one modality: seeded from the
     * stored split (doc_id % 5 ≠ 0) with its full curation artifacts,
@@ -99,43 +71,31 @@ object MultimodalQueries {
     * [[graft.operators.MediaIndexOps.ingestBatchAndMaintain]] — the
     * grow-everything archive face whose touched-component label-prop
     * keeps `_meta`/`_clusters` (and, for image, `_cclusters`) fresh
-    * between wholesale rebuilds. Built once per (session, dataset,
-    * modality); the read faces over it share the FULL-CORPUS oracles,
+    * between wholesale rebuilds. A shared artifact per modality; the
+    * read faces over it share the FULL-CORPUS oracles,
     * so a drifted incremental merge (a missed pair, a stale keeper, an
     * unrelabeled ex_keeper) hash-mismatches against the from-scratch
     * truth — including video, the hardest case, whose pairs carry the
     * min-across-frames semantics through the incremental merge.
     */
-  private val builtGrownIdx = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String, String), String]
-
   private[graft] def grownMediaIndex(
       s: org.apache.spark.sql.SparkSession,
       d: String,
       mediaType: String = "image",
-  ): String = {
-    builtGrownIdx.keys.filter(_._1.sparkContext.isStopped).foreach(builtGrownIdx.remove)
-    builtGrownIdx.synchronized {
-      builtGrownIdx.getOrElseUpdate(
-        (s, d, mediaType), {
-          val pre = Tables.tempIndexDb(
-            s, "media", s"grown_${mediaType}_${Tables.datasetKey(d)}")
-          val media = MultimodalOps.encodeMedia(documents(s, d))
-          val seed = media.filter(col("doc_id") % 5 =!= 0)
-          graft.operators.MediaIndexOps.writeIndex(
-            seed, regions = 49, blockBands = 6, buckets = 8, prefix = pre,
-            mediaType = mediaType)
-          graft.operators.MediaIndexOps.writeCurationArtifacts(
-            s, seed, maxHamming = 5, buckets = 8, prefix = pre, mediaType = mediaType)
-          graft.operators.MediaIndexOps.ingestBatchAndMaintain(
-            s, pre, media.filter(col("doc_id") % 5 === 0),
-            regions = 49, blockBands = 6, maxHamming = 5,
-            mediaType = mediaType)
-          pre
-        },
-      )
+  ): String =
+    Tables.artifact(s, "media", s"grown_$mediaType", d) { pre =>
+      val media = MultimodalOps.encodeMedia(documents(s, d))
+      val seed = media.filter(col("doc_id") % 5 =!= 0)
+      graft.operators.MediaIndexOps.writeIndex(
+        seed, regions = 49, blockBands = 6, buckets = 8, prefix = pre,
+        mediaType = mediaType)
+      graft.operators.MediaIndexOps.writeCurationArtifacts(
+        s, seed, maxHamming = 5, buckets = 8, prefix = pre, mediaType = mediaType)
+      graft.operators.MediaIndexOps.ingestBatchAndMaintain(
+        s, pre, media.filter(col("doc_id") % 5 === 0),
+        regions = 49, blockBands = 6, maxHamming = 5,
+        mediaType = mediaType)
     }
-  }
 
   /** The cross-modal content-family assignment PERSISTED as an
     * artifact: pairs from the index×index sweep
@@ -146,32 +106,20 @@ object MultimodalQueries {
     * is then a bucket scan; the corpus-scan face stays as the exact
     * reference (shared oracle).
     */
-  private val builtFmFamilies = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), String]
-
   private[graft] def frameMatchFamiliesTable(
       s: org.apache.spark.sql.SparkSession,
       d: String,
-  ): String = {
-    builtFmFamilies.keys.filter(_._1.sparkContext.isStopped)
-      .foreach(builtFmFamilies.remove)
-    builtFmFamilies.synchronized {
-      builtFmFamilies.getOrElseUpdate(
-        (s, d), {
-          val t = Tables.tempIndexDb(s, "media", s"fmfam_${Tables.datasetKey(d)}")
-          graft.operators.DedupOps.connectedComponents(
-            graft.operators.MediaIndexOps.frameMatchFromIndexes(
-              s, fullMediaIndex(s, d, "image"), fullMediaIndex(s, d, "video"),
-              maxHamming = 5)
-              .select(col("image_id").as("doc_a"), col("video_id").as("doc_b")))
-            .write.mode("overwrite")
-            .bucketBy(8, "doc_id").sortBy("doc_id")
-            .saveAsTable(t)
-          t
-        },
-      )
+  ): String =
+    Tables.artifact(s, "media", "fmfam", d) { t =>
+      graft.operators.DedupOps.connectedComponents(
+        graft.operators.MediaIndexOps.frameMatchFromIndexes(
+          s, fullMediaIndex(s, d, "image"), fullMediaIndex(s, d, "video"),
+          maxHamming = 5)
+          .select(col("image_id").as("doc_a"), col("video_id").as("doc_b")))
+        .write.mode("overwrite")
+        .bucketBy(8, "doc_id").sortBy("doc_id")
+        .saveAsTable(t)
     }
-  }
 
   /** The INCREMENTALLY-GROWN cross-modal family assignment — the last
     * build-once artifact brought under the grow discipline: families
@@ -186,40 +134,28 @@ object MultimodalQueries {
     * oracle, so a missed cross-batch family merge hash-mismatches the
     * from-scratch truth.
     */
-  private val builtGrownFmFamilies = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), String]
-
   private[graft] def grownFrameMatchFamiliesTable(
       s: org.apache.spark.sql.SparkSession,
       d: String,
-  ): String = {
-    builtGrownFmFamilies.keys.filter(_._1.sparkContext.isStopped)
-      .foreach(builtGrownFmFamilies.remove)
-    builtGrownFmFamilies.synchronized {
-      builtGrownFmFamilies.getOrElseUpdate(
-        (s, d), {
-          val t = Tables.tempIndexDb(s, "media", s"fmfamg_${Tables.datasetKey(d)}")
-          graft.operators.DedupOps.connectedComponents(
-            graft.operators.MediaIndexOps.frameMatchFromIndexes(
-              s, fullMediaIndex(s, d, "image"), splitMediaIndex(s, d, "video"),
-              maxHamming = 5)
-              .select(col("image_id").as("doc_a"), col("video_id").as("doc_b")))
-            .write.mode("overwrite")
-            .bucketBy(8, "doc_id").sortBy("doc_id")
-            .saveAsTable(t)
-          val arrivals = MultimodalOps.encodeMedia(documents(s, d))
-            .filter(col("media_type") === "video" && col("doc_id") % 5 === 0)
-          graft.operators.DedupOps.growPersistedClusters(
-            s, t,
-            graft.operators.MediaIndexOps.frameMatchAgainstIndex(
-              s, fullMediaIndex(s, d, "image"), arrivals,
-              regions = 49, blockBands = 6, maxHamming = 5)
-              .select(col("image_id").as("doc_a"), col("video_id").as("doc_b")))
-          t
-        },
-      )
+  ): String =
+    Tables.artifact(s, "media", "fmfamg", d) { t =>
+      graft.operators.DedupOps.connectedComponents(
+        graft.operators.MediaIndexOps.frameMatchFromIndexes(
+          s, fullMediaIndex(s, d, "image"), splitMediaIndex(s, d, "video"),
+          maxHamming = 5)
+          .select(col("image_id").as("doc_a"), col("video_id").as("doc_b")))
+        .write.mode("overwrite")
+        .bucketBy(8, "doc_id").sortBy("doc_id")
+        .saveAsTable(t)
+      val arrivals = MultimodalOps.encodeMedia(documents(s, d))
+        .filter(col("media_type") === "video" && col("doc_id") % 5 === 0)
+      graft.operators.DedupOps.growPersistedClusters(
+        s, t,
+        graft.operators.MediaIndexOps.frameMatchAgainstIndex(
+          s, fullMediaIndex(s, d, "image"), arrivals,
+          regions = 49, blockBands = 6, maxHamming = 5)
+          .select(col("image_id").as("doc_a"), col("video_id").as("doc_b")))
     }
-  }
 
   /** Eagerly builds the three shared per-modality fingerprint indexes
     * for `d` plus the three stored-split admission-gate artifacts, the

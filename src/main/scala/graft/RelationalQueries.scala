@@ -19,23 +19,17 @@ object RelationalQueries {
 
   private def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(12,2)")
 
-  /** The supplier co-occurrence adjacency persisted bucketed on src —
-    * q_pagerank's build-once edge artifact (the fullMediaIndex memo
-    * pattern: dataset folded into the physical name, stopped sessions
-    * evicted), built in Bench's un-timed setup via
-    * [[prepareSharedArtifacts]] so the timed query is the iterative
-    * centrality computation over the stored graph, which is what a
-    * nightly rank run costs — a link graph pre-exists its rank runs.
-    */
-  private val builtGraphEdges = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String, String), String]
-
-  /** Memoized build of one co-occurrence edge artifact over lineitem —
-    * `tag` names it, `slice` the row filter, `keyCol` the co-occurring
-    * key (group = l_orderkey throughout). `withDeg` picks the
-    * out-degree-carrying layout ([[graft.operators.GraphOps.buildEdgeTable]],
-    * pagerank's iteration input) vs the plain symmetric (src, dst)
-    * table the other analytics scan.
+  /** One co-occurrence edge artifact over lineitem, a shared
+    * [[Tables.artifact]] built in Bench's un-timed setup via
+    * [[prepareSharedArtifacts]], so the timed graph queries are the
+    * analytics over the stored graph (q_pagerank's iterative centrality
+    * is what a nightly rank run costs — a link graph pre-exists its rank
+    * runs). `tag` names it, `slice` the row filter, `keyCol` the
+    * co-occurring key (group = l_orderkey throughout). `withDeg` picks
+    * the out-degree-carrying layout
+    * ([[graft.operators.GraphOps.buildEdgeTable]], pagerank's iteration
+    * input) vs the plain symmetric (src, dst) table the other analytics
+    * scan.
     */
   private def graphEdgeTable(
       s: org.apache.spark.sql.SparkSession,
@@ -44,22 +38,14 @@ object RelationalQueries {
       keyCol: String,
       slice: Option[org.apache.spark.sql.Column],
       withDeg: Boolean,
-  ): String = {
-    builtGraphEdges.keys.filter(_._1.sparkContext.isStopped).foreach(builtGraphEdges.remove)
-    builtGraphEdges.synchronized {
-      builtGraphEdges.getOrElseUpdate(
-        (s, d, tag), {
-          val t = Tables.tempIndexDb(s, "graph", s"${tag}_edges_${Tables.datasetKey(d)}")
-          val li = slice.foldLeft(lineitem(s, d))(_.filter(_))
-            .select(col("l_orderkey"), col(keyCol))
-          val edges = graft.operators.GraphOps.coOccurrenceEdges(li, "l_orderkey", keyCol)
-          if (withDeg) graft.operators.GraphOps.buildEdgeTable(s, edges, t)
-          else graft.operators.GraphOps.buildSymEdgeTable(s, edges, t)
-          t
-        },
-      )
+  ): String =
+    Tables.artifact(s, "graph", s"${tag}_edges", d) { t =>
+      val li = slice.foldLeft(lineitem(s, d))(_.filter(_))
+        .select(col("l_orderkey"), col(keyCol))
+      val edges = graft.operators.GraphOps.coOccurrenceEdges(li, "l_orderkey", keyCol)
+      if (withDeg) graft.operators.GraphOps.buildEdgeTable(s, edges, t)
+      else graft.operators.GraphOps.buildSymEdgeTable(s, edges, t)
     }
-  }
 
   private[graft] def pagerankEdgeTable(
       s: org.apache.spark.sql.SparkSession,
@@ -98,37 +84,26 @@ object RelationalQueries {
     * so a drifted incremental merge (a missed cross-split edge, a
     * stale out_deg) hash-mismatches the from-scratch truth.
     */
-  private val builtGrownEdges = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String, String), String]
-
   private def grownEdgeTable(
       s: org.apache.spark.sql.SparkSession,
       d: String,
       tag: String,
       keyCol: String,
       slice: Option[org.apache.spark.sql.Column],
-  ): String = {
-    builtGrownEdges.keys.filter(_._1.sparkContext.isStopped).foreach(builtGrownEdges.remove)
-    builtGrownEdges.synchronized {
-      builtGrownEdges.getOrElseUpdate(
-        (s, d, tag), {
-          val t = Tables.tempIndexDb(s, "graph", s"${tag}_grown_edges_${Tables.datasetKey(d)}")
-          // Split on l_partkey (independent of both the group and the
-          // co-occurring key), so growth rows land INSIDE seeded orders
-          // — the batch genuinely extends existing groups' memberships
-          // (an l_orderkey split would only ever add whole new groups,
-          // never exercising the incremental cross-split edge merge).
-          val li = slice.foldLeft(lineitem(s, d))(_.filter(_))
-            .select(col("l_orderkey"), col("l_partkey"), col(keyCol))
-          graft.operators.GraphOps.buildGrowableEdgeTable(
-            s, li.filter(col("l_partkey") % 5 =!= 0), "l_orderkey", keyCol, t)
-          graft.operators.GraphOps.growEdgeTable(
-            s, t, li.filter(col("l_partkey") % 5 === 0), "l_orderkey", keyCol)
-          t
-        },
-      )
+  ): String =
+    Tables.artifact(s, "graph", s"${tag}_grown_edges", d) { t =>
+      // Split on l_partkey (independent of both the group and the
+      // co-occurring key), so growth rows land INSIDE seeded orders
+      // — the batch genuinely extends existing groups' memberships
+      // (an l_orderkey split would only ever add whole new groups,
+      // never exercising the incremental cross-split edge merge).
+      val li = slice.foldLeft(lineitem(s, d))(_.filter(_))
+        .select(col("l_orderkey"), col("l_partkey"), col(keyCol))
+      graft.operators.GraphOps.buildGrowableEdgeTable(
+        s, li.filter(col("l_partkey") % 5 =!= 0), "l_orderkey", keyCol, t)
+      graft.operators.GraphOps.growEdgeTable(
+        s, t, li.filter(col("l_partkey") % 5 === 0), "l_orderkey", keyCol)
     }
-  }
 
   private[graft] def grownTriangleEdgeTable(
       s: org.apache.spark.sql.SparkSession,

@@ -7,7 +7,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Every `SparkEntry.queries` entry receives `(spark, sfDir)`; all table
   * reads go through here so scans stay plain parquet scans that Catalyst
   * can push filters/column-pruning into. At cluster scale the same calls
-  * would point at a partitioned table root — nothing else changes.
+  * would point at a partitioned table root — nothing else changes. The
+  * artifacts derived from those tables (persisted indexes, trained
+  * models) are built through the one memo here, [[once]]/[[artifact]].
   */
 object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
@@ -41,8 +43,8 @@ object Tables {
   }
 
   /** One-time temp-warehouse database for the persisted-index query
-    * families (LSH / search / vector) — keeps their bucketed tables out
-    * of the session's default warehouse (whose cwd the driver
+    * families (LSH, Media, Search, Vector, Graph, text) — keeps their
+    * tables out of the session's default warehouse (whose cwd the driver
     * controls). BOTH the database name and its location carry the Spark
     * applicationId: with only the location keyed, a persistent
     * metastore would make CREATE DATABASE IF NOT EXISTS silently keep a
@@ -61,11 +63,55 @@ object Tables {
   }
 
   /** Sanitized dataset key for embedding an sfDir into a table-name
-    * prefix — memoized index builds MUST fold the dataset into the
-    * physical name, or two datasets in one session would silently serve
-    * each other's tables.
+    * prefix ([[artifact]] folds it into every shared artifact's name).
     */
   def datasetKey(d: String): String = d.replaceAll("[^A-Za-z0-9]", "_")
+
+  private val built = scala.collection.mutable.HashMap.empty[(SparkSession, Any), Any]
+
+  /** The build-once memo behind every shared artifact the registry's
+    * read faces serve (the persisted LSH, Media, Search, Vector/PQ and
+    * Graph indexes, the stored BPE merges and quality weights, the
+    * trained codebooks): `build` runs at most once per session and
+    * `key`, and every later call returns its value.
+    *
+    * The rules live here, once:
+    *  - Per session: a restarted session (whose tables and checkpointed
+    *    frames died with its context) never sees an old value, and
+    *    entries of stopped sessions are evicted on every call, so a
+    *    process that cycles sessions does not accrete them.
+    *  - Serialized: two threads never race one build (two overwrite
+    *    `saveAsTable`s on one physical name). The lock is reentrant, so
+    *    a build may itself call `once` (the grown frame-match families
+    *    build the media indexes; the PQ layer builds the vector index,
+    *    which trains a codebook). Builds are one-time and the drivers
+    *    run queries one at a time, so the one lock costs nothing. A
+    *    build that throws leaves its key unbuilt.
+    *  - Key on the artifact, never on the value: two artifacts may
+    *    share one `db.table` prefix (the PQ layer over the vector
+    *    index), and each must still build.
+    */
+  def once[V](s: SparkSession, key: Any)(build: => V): V = built.synchronized {
+    built.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
+    built.getOrElseUpdate((s, key), build).asInstanceOf[V]
+  }
+
+  private final case class Artifact(family: String, name: String, dataset: String)
+
+  /** A persisted shared artifact: [[once]] per (session, `family`,
+    * `name`, dataset) runs `build` on the `db.table` prefix
+    * [[tempIndexDb]] gives `name` with the dataset folded in
+    * (`<name>_<datasetKey(d)>` — the memo key alone cannot stop two
+    * datasets in one session from overwriting each other's tables), and
+    * returns that prefix. A hit runs no SQL at all.
+    */
+  def artifact(s: SparkSession, family: String, name: String, d: String)(
+      build: String => Unit): String =
+    once(s, Artifact(family, name, d)) {
+      val pre = tempIndexDb(s, family, s"${name}_${datasetKey(d)}")
+      build(pre)
+      pre
+    }
 
   def lineitem(s: SparkSession, d: String): DataFrame = table(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame = table(s, d, "orders")

@@ -463,6 +463,11 @@ private[graft] object IndexCatalog {
     * bucket. Planning happens at the write action, inside the conf
     * guard below, which is what makes a bucketed scan of `table` align
     * with the write.
+    *
+    * The staged table carries over `table`'s `graft.*` table properties
+    * (a plain `saveAsTable` writes none), so metadata an index records on
+    * itself — the Media chunk layout's `graft.block_bands` — survives
+    * every rebucket and compaction.
     */
   def stageTableFrom(
       spark: SparkSession,
@@ -498,6 +503,12 @@ private[graft] object IndexCatalog {
       (if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w)
         .saveAsTable(tmp)
     } finally spark.conf.set(conf, saved)
+    val props = spark.sessionState.catalog
+      .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(table))
+      .properties.filter(_._1.startsWith("graft."))
+    if (props.nonEmpty)
+      spark.sql(s"ALTER TABLE $tmp SET TBLPROPERTIES (" +
+        props.map { case (k, v) => s"'$k' = '$v'" }.mkString(", ") + ")")
     (table, tmp)
   }
 

@@ -114,9 +114,9 @@ object MediaIndexOps {
   }
 
   /** The stored chunk table's band count — from the `graft.block_bands`
-    * property [[writeIndex]] records (metadata-only); indexes written
-    * before the property existed (or rebucketed copies, which reset
-    * properties) derive it as max(chunk_idx)+1 — one narrow
+    * property [[writeIndex]] records (metadata-only, kept by appends and
+    * by every rebucket and compaction); indexes written before the
+    * property existed derive it as max(chunk_idx)+1 — one narrow
     * dictionary-encoded column scan, paid only on the legacy path. A
     * legacy table that is EMPTY (built, never ingested) has no rows to
     * derive from — max() is NULL — so that case fails with an explicit
@@ -397,29 +397,13 @@ object MediaIndexOps {
       }
       .start()
 
-  /** Incremental CLUSTER maintenance — merge `newPairs` (verified
-    * pairs involving a just-ingested batch) into the persisted
-    * assignment at `<prefix>_<table>` by
-    * [[DedupOps.growPersistedClusters]]' touched-component label-prop
-    * (MediaIndexSpec asserts bit-equality to a from-scratch rebuild
-    * after N batches; the merge is idempotent, so a crashed ingest
-    * replays cleanly).
-    */
-  def growClustersWith(
-      spark: SparkSession,
-      prefix: String,
-      newPairs: DataFrame,
-      table: String = "clusters",
-  ): Unit =
-    DedupOps.growPersistedClusters(spark, s"${prefix}_$table", newPairs)
-
   /** GROW-EVERYTHING ingest + artifact maintenance — the full-corpus
     * nightly index's incremental face: every batch item is appended to
     * `_fps`/`_chunks` (and its meta row to `_meta`), and the batch's
     * verified pairs are merged into the persisted `_clusters` (and the
     * consensus-confirmed pairs into `_cclusters`, where present) by
-    * [[growClustersWith]]'s touched-component label-prop — so the
-    * savings/curation/cluster read faces stay fresh between wholesale
+    * [[DedupOps.growPersistedClusters]]' touched-component label-prop —
+    * so the savings/curation/cluster read faces stay fresh between wholesale
     * rebuilds without re-fingerprinting or re-clustering the corpus.
     * Unlike [[dedupBatchAndGrow]] (the admission gate: dups are
     * REJECTED), this is the archive shape: dups are admitted and the
@@ -474,7 +458,8 @@ object MediaIndexOps {
     IndexCatalog.recoverDangling(spark, s"${prefix}_cclusters")
     IndexCatalog.recoverDangling(spark, s"${prefix}_meta")
     if (spark.catalog.tableExists(s"${prefix}_clusters"))
-      growClustersWith(spark, prefix, pairs.select(col("doc_a"), col("doc_b")))
+      DedupOps.growPersistedClusters(
+        spark, s"${prefix}_clusters", pairs.select(col("doc_a"), col("doc_b")))
     if (spark.catalog.tableExists(s"${prefix}_cclusters")) {
       val wfp = spark.table(s"${prefix}_fps")
         .join(batchIds, Seq("doc_id"), "left_anti")
@@ -482,12 +467,11 @@ object MediaIndexOps {
         .unionByName(idx.select(col("doc_id"), col("whash")))
         .groupBy(col("doc_id"))
         .agg(min(col("whash")).as("whash"))
-      growClustersWith(
-        spark, prefix,
+      DedupOps.growPersistedClusters(
+        spark, s"${prefix}_cclusters",
         MultimodalOps.confirmPairs(pairs, wfp, whashBudget)
           .filter(col("confirmed"))
-          .select(col("doc_a"), col("doc_b")),
-        table = "cclusters")
+          .select(col("doc_a"), col("doc_b")))
     }
     val (newRows, key) = IndexCatalog.checkpointKeyed(idx
       .join(spark.table(s"${prefix}_fps").select("doc_id"), Seq("doc_id"), "left_anti"))

@@ -414,6 +414,35 @@ class MediaIndexSpec extends SparkSpec {
       .contains(meta))
   }
 
+  test("compaction and rebucket keep the chunk table's graft.block_bands property") {
+    def blockBands(t: String) = spark.sessionState.catalog
+      .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(t))
+      .properties.get("graft.block_bands")
+    val pre = "mediaixprops"
+    Seq("_fps", "_chunks", "_batches").foreach(sfx => spark.sql(s"DROP TABLE IF EXISTS $pre$sfx"))
+    MediaIndexOps.writeIndex(
+      media().filter(col("doc_id") % 2 === 0), Regions, Bands, buckets = 4, prefix = pre)
+    MediaIndexOps.dedupBatchAndGrow(
+      spark, pre, media().filter(col("doc_id") % 2 === 1), Regions, Bands,
+      maxHamming = MaxHamming)
+    assert(MediaIndexOps.compact(spark, pre, 1).contains(s"${pre}_chunks"))
+    assert(blockBands(s"${pre}_chunks").contains(Bands.toString), "compaction dropped it")
+    MediaIndexOps.rebucket(spark, pre, 8)
+    assert(blockBands(s"${pre}_chunks").contains(Bands.toString), "rebucket dropped it")
+    // A rebucketed EMPTY index still states its layout, so an
+    // index×index sweep needs no max(chunk_idx) derivation (which has
+    // nothing to derive from and throws).
+    import spark.implicits._
+    val empty = "mediaixpropsempty"
+    Seq("_fps", "_chunks").foreach(t => spark.sql(s"DROP TABLE IF EXISTS $empty$t"))
+    MediaIndexOps.writeIndex(
+      Seq.empty[(Long, String, Array[Byte])].toDF("doc_id", "media_type", "payload"),
+      Regions, Bands, buckets = 2, prefix = empty)
+    MediaIndexOps.rebucket(spark, empty, 4)
+    val vid = MultimodalQueries.fullMediaIndex(spark, Sf, "video")
+    assert(MediaIndexOps.frameMatchFromIndexes(spark, empty, vid, MaxHamming).isEmpty)
+  }
+
   test("incrementally admitted keepers are visible to the exact-dup digest probe") {
     import spark.implicits._
     val pre = "mediaixmetagrow"
