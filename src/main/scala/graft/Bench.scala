@@ -471,15 +471,16 @@ object Bench {
       out
     }
 
-    // The heaviest streaming face: continuous media ingest dedup —
-    // per micro-batch container decode + dHash fingerprint + bucketed
+    // The heaviest streaming face: continuous media ingest dedup — per
+    // micro-batch container decode + dHash fingerprint + bucketed
     // candidate join against the index-so-far + index-grow appends
-    // (MediaIndexOps.streamingDedup). Rows/s here is dominated by the
-    // per-batch FIXED cost (two localCheckpoints + two saveAsTable
-    // appends + ledger writes per batch), which is exactly the number a
-    // capacity plan needs: batch sizing is the scale lever, same as the
-    // transformWithState smokes. The index is grown from EMPTY so the
-    // run measures the full ingest path, not a warm-read shortcut.
+    // (MediaIndexOps.dedupBatchAndGrow per micro-batch). Rows/s here is
+    // dominated by the per-batch FIXED cost (two localCheckpoints + two
+    // saveAsTable appends + ledger writes per batch), which is exactly
+    // the number a capacity plan needs: batch sizing is the scale lever,
+    // same as the transformWithState smokes. The index is grown from
+    // EMPTY so the run measures the full ingest path, not a warm-read
+    // shortcut.
     val mediaRows = sys.env.getOrElse("SPARK_GRAFT_MEDIA_ROWS", "6000").toInt
     val mediaGen = new java.util.concurrent.atomic.AtomicLong(0)
     timedN("media_dedup", warmN = 600, n = mediaRows) { n =>
@@ -500,10 +501,11 @@ object Bench {
         .MemoryStream[(Long, String, Array[Byte])]
       var dupRows = 0L
       val ckpt = java.nio.file.Files.createTempDirectory("bench_media").toFile.getAbsolutePath
-      val q = graft.operators.MediaIndexOps.streamingDedup(
-        spark, prefix, in.toDF().toDF("doc_id", "media_type", "payload"),
-        regions = 49, blockBands = 6, maxHamming = 5, checkpoint = ckpt,
-        onDups = (d, _) => dupRows += d.count())
+      val q = graft.operators.IndexCatalog.stream(
+        in.toDF().toDF("doc_id", "media_type", "payload"), ckpt) { (batch, _) =>
+        dupRows += graft.operators.MediaIndexOps.dedupBatchAndGrow(
+          spark, prefix, batch, regions = 49, blockBands = 6, maxHamming = 5).count()
+      }
       try arrivals.grouped(math.max(1, arrivals.length / 4)).foreach { w =>
         in.addData(w.toSeq); q.processAllAvailable()
       } finally { q.stop(); rmLater(ckpt) }
@@ -547,16 +549,16 @@ object Bench {
     }
 
     // The READ-ONLY streaming face: the upload-time blocklist screen
-    // (MediaIndexOps.streamingFrameMatch) — arriving videos fingerprint
-    // per frame and match against the STORED image index; no appends,
-    // no ledger, batches independent. The blocklist index is the shared
-    // artifact prepareSharedArtifacts already built (a blocklist
-    // pre-exists its screen — building it here would time the wrong
-    // thing), so rows/s here is the pure screen cost: per-batch decode
-    // + frame fingerprints + the banded join against bucketed storage.
-    // This is the capacity number the upload pipeline plans against.
-    // Default stays under the sf0.1 video count (1666) so the reported
-    // rows/s divides by the rows actually streamed.
+    // (MediaIndexOps.frameMatchAgainstIndex per micro-batch) — arriving
+    // videos fingerprint per frame and match against the STORED image
+    // index; no appends, no ledger, batches independent. The blocklist
+    // index is the shared artifact prepareSharedArtifacts already built
+    // (a blocklist pre-exists its screen — building it here would time
+    // the wrong thing), so rows/s here is the pure screen cost:
+    // per-batch decode + frame fingerprints + the banded join against
+    // bucketed storage. This is the capacity number the upload pipeline
+    // plans against. Default stays under the sf0.1 video count (1666) so
+    // the reported rows/s divides by the rows actually streamed.
     val screenRows = sys.env.getOrElse("SPARK_GRAFT_SCREEN_ROWS", "1500").toInt
     timedN("frame_match", warmN = 150, n = screenRows) { n =>
       import org.apache.spark.sql.functions.col
@@ -573,17 +575,18 @@ object Bench {
         .MemoryStream[(Long, String, Array[Byte])]
       var matchRows = 0L
       val ckpt = java.nio.file.Files.createTempDirectory("bench_screen").toFile.getAbsolutePath
-      val q = graft.operators.MediaIndexOps.streamingFrameMatch(
-        spark, pre, in.toDF().toDF("doc_id", "media_type", "payload"),
-        regions = 49, blockBands = 6, maxHamming = 5, checkpoint = ckpt,
-        onMatches = (m, _) => matchRows += m.count())
+      val q = graft.operators.IndexCatalog.stream(
+        in.toDF().toDF("doc_id", "media_type", "payload"), ckpt) { (batch, _) =>
+        matchRows += graft.operators.MediaIndexOps.frameMatchAgainstIndex(
+          spark, pre, batch, regions = 49, blockBands = 6, maxHamming = 5).count()
+      }
       try arrivals.grouped(math.max(1, arrivals.length / 4)).foreach { w =>
         in.addData(w.toSeq); q.processAllAvailable()
       } finally { q.stop(); rmLater(ckpt) }
       matchRows
     }
 
-    // Vector-index streaming ingest (VectorIndexOps.streamingIngest):
+    // Vector-index streaming ingest (VectorIndexOps.ingestBatch):
     // micro-batch = intent/commit append against the FROZEN stored
     // codebook. The index is seeded once outside the timing (an index
     // pre-exists its ingest stream); each run streams a fresh disjoint
@@ -619,8 +622,9 @@ object Bench {
         val in = org.apache.spark.sql.execution.streaming.runtime
           .MemoryStream[(Long, Array[Float])]
         val ckpt = java.nio.file.Files.createTempDirectory("bench_vecing").toFile.getAbsolutePath
-        val q = graft.operators.VectorIndexOps.streamingIngest(
-          spark, pre, in.toDF().toDF("vec_id", "embedding"), checkpoint = ckpt)
+        val q = graft.operators.IndexCatalog.stream(
+          in.toDF().toDF("vec_id", "embedding"), ckpt)(
+          graft.operators.VectorIndexOps.ingestBatch(spark, pre, _, _))
         try rows.grouped(math.max(1, rows.length / waves)).foreach { w =>
           in.addData(w); q.processAllAvailable()
         } finally { q.stop(); rmLater(ckpt) }
@@ -637,7 +641,7 @@ object Bench {
       timedN("vector_ingest_b20k", warmN = 2000, n = vecRows20k)(ingestRun(_, waves = 1))
     }
 
-    // Search-index streaming ingest (SearchIndexOps.streamingIndex):
+    // Search-index streaming ingest (SearchIndexOps.indexBatch):
     // micro-batch = doc-level replay guard + four ledgered bucketed
     // appends (postings/lexicon/meta/docs). Seeded once outside the timing
     // from the corpus (an index pre-exists its ingest stream); each run
@@ -663,8 +667,8 @@ object Bench {
         implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
         val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
         val ckpt = java.nio.file.Files.createTempDirectory("bench_searching").toFile.getAbsolutePath
-        val q = graft.operators.SearchIndexOps.streamingIndex(
-          spark, pre, in.toDF().toDF("doc_id", "text"), checkpoint = ckpt)
+        val q = graft.operators.IndexCatalog.stream(in.toDF().toDF("doc_id", "text"), ckpt)(
+          (batch, _) => graft.operators.SearchIndexOps.indexBatch(spark, pre, batch))
         try rows.grouped(math.max(1, rows.length / 4)).foreach { w =>
           in.addData(w); q.processAllAvailable()
         } finally { q.stop(); rmLater(ckpt) }

@@ -398,7 +398,10 @@ object GraphOps {
     * supplies one (the natural identity a scheduler or ingest pipeline
     * already carries — the dd/mm ingest-ledger shape); otherwise it is
     * a CONTENT key, the order-independent sum of `xxhash64(g, k)` over
-    * the batch's distinct rows. Both are reproducible across replays,
+    * the batch's distinct rows. A stream ([[IndexCatalog.stream]])
+    * passes no `batchId`: its epoch ids restart at 0 with every fresh
+    * checkpoint, so a re-pointed stream would alias the previous
+    * stream's batches. Both keys are reproducible across replays,
     * and — unlike the min-(g, k) key this replaced — the content key
     * cannot alias two DISTINCT batches that happen to share their
     * minimum member (an at-least-once redelivery of the earlier
@@ -551,53 +554,6 @@ object GraphOps {
         spark, degT, spark.table(table).groupBy(col("src")).agg(count(lit(1)).as("out_deg")))))
     spark.catalog.refreshTable(degT)
   }
-
-  /** Continuous edge ingestion — the streaming face of the growable
-    * artifact (the index-as-state discipline the dd/mm/sim/tx families
-    * follow): every micro-batch of group rows grows the stored graph
-    * through [[growEdgeTable]], whose default CONTENT ledger key (the
-    * order-independent hash of the batch's distinct rows) is
-    * reproducible across checkpoint replays — a replayed micro-batch
-    * re-delivers the identical rows, hashes to the identical key, and
-    * short-circuits on its commit mark, while two distinct batches can
-    * never alias — and every partial step is idempotent, so the
-    * artifact converges to the batch-grown truth (StreamingSpec pins
-    * union-over-waves ≡ the batch face). The foreachBatch epoch id is
-    * deliberately NOT used: epoch numbering restarts at 0 with every
-    * fresh checkpoint, so a re-pointed stream over the same artifact
-    * would alias its first batches with the previous stream's.
-    */
-  def streamingGrowEdges(
-      spark: org.apache.spark.sql.SparkSession,
-      table: String,
-      rows: DataFrame,
-      groupCol: String,
-      keyCol: String,
-      maxGroupSize: Int = 1000,
-      checkpoint: String,
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        growEdgeTable(spark, table, batch, groupCol, keyCol, maxGroupSize)
-      }
-      .start()
-
-  /** Append compaction for a growable edge artifact — every
-    * [[growEdgeTable]] batch adds one file per touched bucket to the
-    * edge and members tables, so reads open O(batches) files per
-    * bucket until this runs ([[IndexCatalog.compactBucketed]]: staged
-    * + rename-swapped, readers served throughout; `_deg` is rewritten
-    * wholesale every grow and never fragments). Returns the rewritten
-    * tables.
-    */
-  def compactEdgeTable(
-      spark: org.apache.spark.sql.SparkSession,
-      table: String,
-      maxFilesPerBucket: Int = 4,
-  ): Seq[String] =
-    IndexCatalog.compactBucketed(spark, Seq(table, s"${table}_members"), maxFilesPerBucket)
 
   /** PageRank over the GROWN artifact: the stored symmetric edges join
     * their maintained out-degrees — both bucketed on src at the same

@@ -19,13 +19,20 @@ import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions.{coalesce, col, count, expr, lit, min, sum}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{BooleanType, StringType, StructField, StructType}
 
 /** Catalog lookups, layout maintenance, the crash-repair ingest ledger
-  * with its guarded appends, and the bounded key lookup shared by the
-  * persisted-index families
+  * with its guarded appends, the bounded key lookup and the streaming
+  * sink shared by the persisted-index families
   * ([[LshIndexOps]], [[SearchIndexOps]], [[MediaIndexOps]],
   * [[VectorIndexOps]] and [[GraphOps]]' growable edge table).
+  *
+  * Each family states its tables once, as a [[Family]] value here
+  * ([[LshIndex]], [[MediaIndex]], [[SearchIndex]], [[VectorIndex]],
+  * [[EdgeTable]]); rebucket, compaction, the candidate-cost dial and
+  * the layout stats are defined once on it. Every index-side stream
+  * runs through [[stream]], one `foreachBatch` sink over a checkpoint.
   *
   * The key lookup is two helpers: [[capped]] collects a bounded key or
   * hit list (`None` past its cap, so the caller takes its distributed
@@ -112,7 +119,9 @@ private[graft] object IndexCatalog {
   /** The ingest ledger's table name for an index family's `owner`
     * (an index prefix, or a growable edge table's name).
     */
-  def ledgerTable(owner: String): String = s"${owner}_batches"
+  def ledgerTable(owner: String): String = owner + LedgerSuffix
+
+  private val LedgerSuffix = "_batches"
 
   /** Drop `owner`'s ingest ledger. Every rebuild calls this: a rebuilt
     * index is a fresh artifact, and a stale ledger would make the
@@ -123,10 +132,10 @@ private[graft] object IndexCatalog {
 
   /** Run one batch's appends at most once to completion — the
     * intent/commit ingest ledger that makes every family's
-    * `foreachBatch` sink idempotent under at-least-once delivery.
+    * [[stream]] sink idempotent under at-least-once delivery.
     *
     * `batchKey` must be reproducible across checkpoint replays: LSH,
-    * Search and Media pass their min doc_id, Vector its `foreachBatch`
+    * Search and Media pass their min doc_id, Vector its micro-batch
     * id, Graph an `id:`/`h:` scheduler-id or content key; any string is
     * a valid key. A key with a `commit` mark short-circuits (a replay of
     * a committed batch is a no-op). Otherwise an `intent` mark is
@@ -512,53 +521,6 @@ private[graft] object IndexCatalog {
     (table, tmp)
   }
 
-  /** Phase 1 of [[rebucket]]: stage every table's replacement at
-    * `buckets`, touching nothing live. Returns the (live, staged) pairs
-    * for [[swapStaged]].
-    */
-  def stageRebucket(spark: SparkSession, tables: Seq[String], buckets: Int): Seq[(String, String)] =
-    tables.map(stageTable(spark, _, buckets))
-
-  /** Rewrite `tables` at `buckets` physical buckets, each keeping its
-    * bucket and sort columns. Every replacement is staged before any
-    * live name moves, so readers see the complete old tables through
-    * the whole rewrite, then [[swapStaged]] commits them.
-    */
-  def rebucket(spark: SparkSession, tables: Seq[String], buckets: Int): Unit =
-    swapStaged(spark, stageRebucket(spark, tables, buckets))
-
-  /** The rebucket dial wired to candidate cost: a self-join on
-    * `costTable`'s bucket columns costs Σ s·(s−1)/2 over its key
-    * groups, and with one task per physical bucket the per-task share
-    * is cost / buckets. When that share exceeds `budget`, [[rebucket]]
-    * `tables` (which include `costTable`) with enough buckets to bring
-    * it back under, capped at `maxBuckets`. Returns the new bucket
-    * count, or None when the current layout is within budget. The
-    * one-row `head()` is a driver-side scalar read, not a data collect.
-    */
-  def rebucketIfNeeded(
-      spark: SparkSession,
-      costTable: String,
-      tables: Seq[String],
-      budget: Long,
-      maxBuckets: Int,
-  ): Option[Int] = {
-    require(budget > 0, "budget must be positive")
-    val spec = bucketSpec(spark, costTable)
-    val total = spark
-      .table(costTable)
-      .groupBy(spec.bucketColumnNames.map(col): _*)
-      .agg(count(lit(1)).as("s"))
-      .agg(coalesce(sum(expr("s * (s - 1) DIV 2")), lit(0L)))
-      .head()
-      .getLong(0)
-    val needed = math.min(maxBuckets.toLong, (total + budget - 1) / budget).toInt
-    if (needed > spec.numBuckets) {
-      rebucket(spark, tables, needed)
-      Some(needed)
-    } else None
-  }
-
   /** The worst bucket's physical file count — the cost a pruned read
     * actually pays (a probe of one bucket opens that bucket's files).
     * Bucket ids are parsed from the bucketed-file naming scheme
@@ -576,35 +538,170 @@ private[graft] object IndexCatalog {
         .values.map(_.length).max
   }
 
-  /** Per-table physical layout stats for an index family — total file
-    * count and worst-bucket file count, the two dials appends degrade
-    * and [[compactBucketed]] restores. Surfaced as a DataFrame so
-    * operational consumers read it like any other health view.
+  /** An index family's tables, stated once as suffixes of the family's
+    * owner (an index prefix, or a growable edge table's name): the one
+    * definition of what rebucket, compaction, the candidate-cost dial
+    * and the layout stats cover. `bucketed` tables always exist;
+    * `optional` bucketed tables join them when present (LSH and Media
+    * `_meta`, Vector `_codes` once published); `cost` names the table
+    * whose bucket-key self-join is the family's candidate cost;
+    * `coalesced` tables are unbucketed per-append partials that
+    * compaction rewrites to one file (Search `_meta`); `reported` tables
+    * are listed by [[fileStats]] only.
+    *
+    * Every maintainer here first recovers each family table a crashed
+    * [[swapStaged]] left under `_old` ([[recoverDangling]]), before any
+    * existence check: an optional table is never skipped and a required
+    * one never fails as missing. [[fileStats]] and ingest do not
+    * recover — they may run beside a maintainer's rename instants, and
+    * only the single maintainer renames.
     */
-  def fileStats(spark: SparkSession, tables: Seq[String]): DataFrame = {
-    val rows = tables.filter(spark.catalog.tableExists).map { t =>
-      (t, spark.table(t).inputFiles.length.toLong, maxFilesPerBucket(spark, t).toLong)
+  final case class Family(
+      bucketed: Seq[String],
+      optional: Seq[String] = Nil,
+      cost: Option[String] = None,
+      coalesced: Seq[String] = Nil,
+      reported: Seq[String] = Nil,
+  ) {
+
+    /** The bucketed tables a maintainer rewrites, after recovering
+      * every family table.
+      */
+    def maintained(spark: SparkSession, owner: String): Seq[String] = {
+      (bucketed ++ optional ++ coalesced).foreach(t => recoverDangling(spark, owner + t))
+      bucketed.map(owner + _) ++ optional.map(owner + _).filter(spark.catalog.tableExists)
     }
-    spark.createDataFrame(rows).toDF("table", "n_files", "max_files_per_bucket")
+
+    /** Phase 1 of [[rebucket]]: stage every bucketed table's
+      * replacement at `newBuckets`, touching nothing live. Returns the
+      * (live, staged) pairs for [[swapStaged]].
+      */
+    def stageRebucket(spark: SparkSession, owner: String, newBuckets: Int): Seq[(String, String)] =
+      maintained(spark, owner).map(stageTable(spark, _, newBuckets))
+
+    /** Rewrite the bucketed tables at `newBuckets` physical buckets,
+      * each keeping its bucket and sort columns; content is preserved
+      * bit-for-bit. It is the parallelism dial: an exchange-free
+      * bucketed join runs one task per bucket, so the build-time count
+      * caps it however large the index grows. Every replacement is staged before any live name
+      * moves, so readers see the complete old tables through the whole
+      * rewrite, then [[swapStaged]] commits them. Appends go through
+      * `insertInto`, which writes with the live spec, so a running
+      * streaming ingest lands its next batch at the new count.
+      */
+    def rebucket(spark: SparkSession, owner: String, newBuckets: Int): Unit =
+      swapStaged(spark, stageRebucket(spark, owner, newBuckets))
+
+    /** The rebucket dial wired to candidate cost: a self-join on the
+      * `cost` table's bucket columns costs Σ s·(s−1)/2 over its key
+      * groups, and with one task per physical bucket the per-task share
+      * is cost / buckets. When that share exceeds
+      * `candidatesPerBucketBudget`, [[rebucket]] with enough buckets to
+      * bring it back under, capped at `maxBuckets`. Returns the new
+      * bucket count, or None when the current layout is within budget.
+      * The one-row `head()` is a driver-side scalar read.
+      */
+    def rebucketIfNeeded(
+        spark: SparkSession,
+        owner: String,
+        candidatesPerBucketBudget: Long,
+        maxBuckets: Int = 4096,
+    ): Option[Int] = {
+      val budget = candidatesPerBucketBudget
+      require(budget > 0, "budget must be positive")
+      val costTable = owner + cost.getOrElse(sys.error(s"$owner's index family has no cost table"))
+      val tables = maintained(spark, owner)
+      val spec = bucketSpec(spark, costTable)
+      val total = spark
+        .table(costTable)
+        .groupBy(spec.bucketColumnNames.map(col): _*)
+        .agg(count(lit(1)).as("s"))
+        .agg(coalesce(sum(expr("s * (s - 1) DIV 2")), lit(0L)))
+        .head()
+        .getLong(0)
+      val needed = math.min(maxBuckets.toLong, (total + budget - 1) / budget).toInt
+      if (needed > spec.numBuckets) {
+        swapStaged(spark, tables.map(stageTable(spark, _, needed)))
+        Some(needed)
+      } else None
+    }
+
+    /** Append compaction at the current bucket count: each append adds
+      * one file per touched bucket, so pruned reads open O(appends)
+      * files per probe until this runs. Rewrites ONLY the bucketed
+      * tables whose worst bucket exceeds `maxFilesPerBucket`, and the
+      * `coalesced` tables holding more files than that (to one file;
+      * their partial rows are kept, readers sum them), staged all
+      * before any swap. Returns the rewritten tables (empty = layout
+      * already within budget; the call did no data work, only
+      * driver-side file listings).
+      */
+    def compact(spark: SparkSession, owner: String, maxFilesPerBucket: Int = 4): Seq[String] = {
+      require(maxFilesPerBucket >= 1, "maxFilesPerBucket must be at least 1")
+      val picked = maintained(spark, owner)
+        .filter(IndexCatalog.maxFilesPerBucket(spark, _) > maxFilesPerBucket)
+      val partials = coalesced.map(owner + _)
+        .filter(spark.table(_).inputFiles.length > maxFilesPerBucket)
+      swapStaged(spark, picked.map(t => stageTableFrom(spark, t, spark.table(t))) ++
+        partials.map { t =>
+          val rows = spark.table(t).localCheckpoint()
+          val tmp = s"${t}_rebucket"
+          spark.sql(s"DROP TABLE IF EXISTS $tmp")
+          rows.coalesce(1).write.mode("overwrite").saveAsTable(tmp)
+          (t, tmp)
+        })
+      picked ++ partials
+    }
+
+    /** Physical layout health: per table, total file count and
+      * worst-bucket file count — the two dials appends degrade and
+      * [[compact]] restores — for every family table that exists.
+      * Driver-side listings only (no oracle: file layout is
+      * execution-dependent), surfaced as a DataFrame like any other
+      * health view.
+      */
+    def fileStats(spark: SparkSession, owner: String): DataFrame = {
+      val rows = (bucketed ++ optional ++ coalesced ++ reported).map(owner + _)
+        .filter(spark.catalog.tableExists)
+        .map(t => (t, spark.table(t).inputFiles.length.toLong, maxFilesPerBucket(spark, t).toLong))
+      spark.createDataFrame(rows).toDF("table", "n_files", "max_files_per_bucket")
+    }
   }
 
-  /** Append compaction over a family's bucketed tables: rewrite ONLY
-    * the tables whose worst bucket exceeds `maxFilesPerBucket` (each
-    * append adds one file per touched bucket, so pruned reads open
-    * O(appends) files per probe until this runs), at their CURRENT
-    * bucket count, with the same stage-all-then-swap discipline as a
-    * rebucket — readers are served throughout. Returns the rewritten
-    * table names (empty = layout already within budget; the call did
-    * no data work, only driver-side file listings).
+  /** The persisted MinHash-LSH index ([[LshIndexOps]]). */
+  val LshIndex = Family(Seq("_docs", "_bands"), optional = Seq("_meta"), cost = Some("_bands"))
+
+  /** The persisted perceptual-fingerprint index ([[MediaIndexOps]]). */
+  val MediaIndex = Family(Seq("_fps", "_chunks"), optional = Seq("_meta"), cost = Some("_chunks"))
+
+  /** The persisted inverted index ([[SearchIndexOps]]). */
+  val SearchIndex = Family(
+    Seq("_postings", "_lexicon", "_docs"), coalesced = Seq("_meta"), reported = Seq(LedgerSuffix))
+
+  /** The persisted IVF vector index ([[VectorIndexOps]]). */
+  val VectorIndex = Family(
+    Seq("_vectors"), optional = Seq("_codes"),
+    reported = Seq("_codebook", "_pq_codebook", LedgerSuffix))
+
+  /** [[GraphOps]]' growable edge table and its membership table; its
+    * `_deg` is rewritten whole on every grow and never fragments.
     */
-  def compactBucketed(
-      spark: SparkSession,
-      tables: Seq[String],
-      maxPerBucket: Int,
-  ): Seq[String] = {
-    require(maxPerBucket >= 1, "maxFilesPerBucket must be at least 1")
-    val picked = tables.filter(maxFilesPerBucket(spark, _) > maxPerBucket)
-    swapStaged(spark, picked.map(t => stageTableFrom(spark, t, spark.table(t))))
-    picked
-  }
+  val EdgeTable = Family(Seq("", "_members"))
+
+  /** Runs `perBatch` on every micro-batch of `input` — the one streaming
+    * sink of every index-side stream. The stream's progress lives in
+    * `checkpoint`, so a restart on it resumes after the last committed
+    * batch; a batch that failed before its commit is handed to
+    * `perBatch` again with the same id (at-least-once), which the
+    * ingest ledger ([[ledgered]]) or a read-only `perBatch` makes
+    * harmless.
+    */
+  def stream(input: DataFrame, checkpoint: String)(
+      perBatch: (DataFrame, Long) => Unit,
+  ): StreamingQuery =
+    input.writeStream
+      .outputMode("append")
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch(perBatch)
+      .start()
 }

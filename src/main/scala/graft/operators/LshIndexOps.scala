@@ -134,7 +134,8 @@ object LshIndexOps {
     * EVERY band it collides on is hot (with b bands the pair survives
     * unless all its collisions are capped), which is the standard
     * recall concession production dedup makes; the excluded keys are
-    * exactly the ones `dd_index_stats`/[[rebucketIfNeeded]] surface.
+    * exactly the ones `dd_index_stats` and [[IndexCatalog.LshIndex]]'s
+    * `rebucketIfNeeded` surface.
     * Bucket sizing reads the stored band table grouped on its own
     * bucket keys — exchange-free on the stored side like the
     * candidate join itself.
@@ -409,35 +410,6 @@ object LshIndexOps {
       .orderBy("doc_id")
   }
 
-  /** The STREAMING face of the text upload verdict — the
-    * `MediaIndexOps.streamingUploadVerdict` twin: every micro-batch of
-    * arriving documents is judged against the stored artifacts
-    * ([[uploadVerdict]]) and its per-doc verdicts handed to
-    * `onVerdicts`. READ-ONLY on the index (the verdict gates
-    * admission; it does not ingest), so batches are independent and a
-    * replay re-emits identical verdicts — idempotent by construction,
-    * no ledger needed; LshIndexSpec asserts the batch twin identical.
-    */
-  def streamingUploadVerdict(
-      spark: SparkSession,
-      prefix: String,
-      docs: DataFrame,
-      n: Int,
-      k: Int,
-      bands: Int,
-      threshold: Double,
-      minTok: Long,
-      checkpoint: String,
-      onVerdicts: (DataFrame, Long) => Unit,
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        onVerdicts(uploadVerdict(spark, prefix, batch, n, k, bands, threshold, minTok), batchId)
-      }
-      .start()
-
   /** Persist the cluster assignment next to the index — label-prop
     * connected components over pairs read FROM the just-written band
     * table (clustering never re-shingles a document), bucketed+sorted
@@ -551,71 +523,11 @@ object LshIndexOps {
       IndexCatalog.readLive(spark, s"${prefix}_docs"),
       threshold, "new_doc_id", "dup_of")
 
-  /** Index maintenance: rewrite the index tables (docs, bands, and
-    * `_meta` when present) at `newBuckets` physical buckets. Content is
-    * preserved bit-for-bit — physical bucketing never affects which
-    * pairs come out (LshIndexSpec asserts equality across a rebucket) —
-    * but a months-running ingest needs this pass for two reasons:
-    * every [[dedupBatchAndGrow]] append adds one file per bucket, so
-    * reads degrade as the file count grows
-    * (compaction collapses them to one file per bucket again), and the
-    * exchange-free candidate self-join schedules one task per bucket,
-    * so the bucket count chosen at day one caps the join's parallelism
-    * no matter how large the corpus has grown.
-    *
-    * Every replacement table is STAGED before any live name moves
-    * ([[IndexCatalog.rebucket]]) — readers see the complete old index
-    * through the whole rewrite — then committed by
-    * [[IndexCatalog.swapStaged]]'s rename-first sequence (live →
-    * `_old`, staged → live, drop `_old`), so a crash mid-swap leaves a
-    * recovery copy rather than a dangling live name and the
-    * reader-visible hole is the rename instants only. A running
-    * streaming ingest needs no restart: [[dedupBatchAndGrow]] and
-    * [[ingestBatchAndMaintain]] append through `insertInto`, which
-    * writes with the live table's own bucket and sort spec, so the
-    * first batch after the swap already lands at the new count.
+  /** [[IndexCatalog.LshIndex]]'s layout stats, by the name perfbench's
+    * `DocDedupStream` reads them.
     */
-  def rebucket(spark: SparkSession, prefix: String, newBuckets: Int): Unit =
-    IndexCatalog.rebucket(spark, bucketedTables(spark, prefix), newBuckets)
-
-  /** The tables [[rebucket]], [[compact]] and [[fileStats]] cover:
-    * docs and bands, plus `_meta` when the prefix carries it.
-    */
-  private def bucketedTables(spark: SparkSession, prefix: String): Seq[String] =
-    Seq(s"${prefix}_docs", s"${prefix}_bands") ++
-      Seq(s"${prefix}_meta").filter(spark.catalog.tableExists)
-
-  /** Append compaction at the current bucket count — the cheap
-    * between-rebuckets maintenance: [[dedupBatchAndGrow]] adds one
-    * file per touched bucket per batch, and this rewrites only the
-    * tables whose worst bucket exceeds `maxFilesPerBucket`
-    * ([[IndexCatalog.compactBucketed]]; [[rebucketIfNeeded]] remains
-    * the dial for the candidate-cost problem, which needs a new bucket
-    * COUNT, not just fewer files). Returns the rewritten tables.
-    */
-  def compact(spark: SparkSession, prefix: String, maxFilesPerBucket: Int = 4): Seq[String] =
-    IndexCatalog.compactBucketed(spark, bucketedTables(spark, prefix), maxFilesPerBucket)
-
-  /** Physical layout health — file counts per index table (operational
-    * metadata; no oracle).
-    */
-  def fileStats(spark: SparkSession, prefix: String): org.apache.spark.sql.DataFrame =
-    IndexCatalog.fileStats(spark, bucketedTables(spark, prefix))
-
-  /** The rebucket dial wired to the health stat the dd_index_stats
-    * view exposes: [[IndexCatalog.rebucketIfNeeded]] with the band
-    * table's candidate cost, rewriting every index table when the
-    * per-bucket share exceeds `candidatesPerBucketBudget`. Returns the
-    * new bucket count, or None when the current layout is within budget.
-    */
-  def rebucketIfNeeded(
-      spark: SparkSession,
-      prefix: String,
-      candidatesPerBucketBudget: Long,
-      maxBuckets: Int = 4096,
-  ): Option[Int] =
-    IndexCatalog.rebucketIfNeeded(
-      spark, s"${prefix}_bands", bucketedTables(spark, prefix), candidatesPerBucketBudget, maxBuckets)
+  def fileStats(spark: SparkSession, prefix: String): DataFrame =
+    IndexCatalog.LshIndex.fileStats(spark, prefix)
 
   /** One micro-batch of the STREAMING dedup: returns the batch's
     * near-dup rows `(new_doc_id, dup_of, jaccard)` and GROWS the index
@@ -631,7 +543,7 @@ object LshIndexOps {
     * because the index stores only keepers. Replay-safe on the index:
     * kept docs are anti-joined against the stored doc table before the
     * append, so a replayed batch never double-inserts (the RETURNED dup
-    * rows are at-least-once, like every foreachBatch emission — pair
+    * rows are at-least-once, like every micro-batch emission — pair
     * with the K1 batch_id-partition pattern for an idempotent sink).
     *
     * Order of operations matters and is pinned by localCheckpoints: the
@@ -644,7 +556,7 @@ object LshIndexOps {
     * candidate join and one verify join ([[batchMatches]]), and
     * [[appendKeepers]] overlaps the bands and meta appends (SCALE.md
     * gives the job count). Appends follow the tables' live bucket spec
-    * (see [[rebucket]]).
+    * (see [[IndexCatalog.Family.rebucket]]).
     */
   def dedupBatchAndGrow(
       spark: SparkSession,
@@ -744,11 +656,6 @@ object LshIndexOps {
       checkpoint: String,
       onDups: (DataFrame, Long) => Unit,
   ): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        onDups(dedupBatchAndGrow(spark, prefix, batch, n, k, bands, threshold), batchId)
-      }
-      .start()
+    IndexCatalog.stream(docs, checkpoint)((batch, id) =>
+      onDups(dedupBatchAndGrow(spark, prefix, batch, n, k, bands, threshold), id))
 }

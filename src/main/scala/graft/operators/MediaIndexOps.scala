@@ -364,39 +364,6 @@ object MediaIndexOps {
       .orderBy("doc_id")
   }
 
-  /** The STREAMING face of the upload verdict: every micro-batch of
-    * arriving media is judged against the stored artifacts
-    * ([[uploadVerdict]]) and its per-item verdicts handed to
-    * `onVerdicts`. READ-ONLY on the index (the verdict gates admission;
-    * it does not ingest), so batches are independent and a replay
-    * re-emits identical verdicts — idempotent by construction, no
-    * ledger needed; the batch twin is spec-asserted identical.
-    */
-  def streamingUploadVerdict(
-      spark: SparkSession,
-      prefix: String,
-      media: DataFrame,
-      regions: Int,
-      blockBands: Int,
-      maxHamming: Int,
-      floorReject: org.apache.spark.sql.Column,
-      floorLabel: String,
-      checkpoint: String,
-      onVerdicts: (DataFrame, Long) => Unit,
-      mediaType: String = "image",
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    media.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        onVerdicts(
-          uploadVerdict(
-            spark, prefix, batch, regions, blockBands, maxHamming,
-            floorReject, floorLabel, mediaType),
-          batchId)
-      }
-      .start()
-
   /** GROW-EVERYTHING ingest + artifact maintenance — the full-corpus
     * nightly index's incremental face: every batch item is appended to
     * `_fps`/`_chunks` (and its meta row to `_meta`), and the batch's
@@ -657,7 +624,7 @@ object MediaIndexOps {
     * Kept rows are anti-joined against the stored fps table before the
     * append (replay-safe on the index); the dup frame materializes
     * BEFORE the append mutates the tables it reads. Appends follow the
-    * tables' live bucket spec (see [[rebucket]]).
+    * tables' live bucket spec (see [[IndexCatalog.Family.rebucket]]).
     */
   def dedupBatchAndGrow(
       spark: SparkSession,
@@ -743,103 +710,4 @@ object MediaIndexOps {
           new IndexCatalog.Append("fps", kept.select(col("doc_id"), col("dhash"), col("whash"))))
       }
     }
-
-  /** Continuous ingestion dedup — the streaming face: every
-    * micro-batch of the `media` stream (doc_id, media_type, payload)
-    * is deduped by [[dedupBatchAndGrow]] and its near-dup rows handed
-    * to `onDups`. The index artifact is the stream's STATE stored as
-    * bucketed tables (the established index-as-state discipline).
-    */
-  def streamingDedup(
-      spark: SparkSession,
-      prefix: String,
-      media: DataFrame,
-      regions: Int,
-      blockBands: Int,
-      maxHamming: Int,
-      checkpoint: String,
-      onDups: (DataFrame, Long) => Unit,
-      mediaType: String = "image",
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    media.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        onDups(
-          dedupBatchAndGrow(
-            spark, prefix, batch, regions, blockBands, maxHamming,
-            mediaType = mediaType),
-          batchId)
-      }
-      .start()
-
-  /** The STREAMING upload screen — [[frameMatchAgainstIndex]] per
-    * micro-batch of the `media` stream: every arriving video is
-    * fingerprinted per frame and matched against the stored image
-    * index, match rows handed to `onMatches`. READ-ONLY on the index
-    * (a blocklist screen flags, it does not ingest), so batches are
-    * independent and a replay re-emits the identical matches —
-    * idempotent by construction, no ledger needed.
-    */
-  def streamingFrameMatch(
-      spark: SparkSession,
-      prefix: String,
-      media: DataFrame,
-      regions: Int,
-      blockBands: Int,
-      maxHamming: Int,
-      checkpoint: String,
-      onMatches: (DataFrame, Long) => Unit,
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    media.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        onMatches(
-          frameMatchAgainstIndex(spark, prefix, batch, regions, blockBands, maxHamming),
-          batchId)
-      }
-      .start()
-
-  /** Index maintenance at the current bucket count: rewrite only the
-    * tables whose worst bucket exceeds the file budget (every append
-    * adds one file per touched bucket). Content bit-preserved.
-    */
-  def compact(spark: SparkSession, prefix: String, maxFilesPerBucket: Int = 4): Seq[String] =
-    IndexCatalog.compactBucketed(spark, bucketedTables(spark, prefix), maxFilesPerBucket)
-
-  /** Rewrite the index tables at `newBuckets` with the staged rename-first
-    * swap ([[IndexCatalog.rebucket]]): readers see the complete old
-    * index throughout, a crash leaves a recovery copy.
-    */
-  def rebucket(spark: SparkSession, prefix: String, newBuckets: Int): Unit =
-    IndexCatalog.rebucket(spark, bucketedTables(spark, prefix), newBuckets)
-
-  /** The compaction dial wired to the stat `mm_index_stats` exposes:
-    * [[IndexCatalog.rebucketIfNeeded]] with the chunk table's candidate
-    * cost (the [[LshIndexOps.rebucketIfNeeded]] policy). Returns the
-    * new bucket count, or None when within budget.
-    */
-  def rebucketIfNeeded(
-      spark: SparkSession,
-      prefix: String,
-      candidatesPerBucketBudget: Long,
-      maxBuckets: Int = 4096,
-  ): Option[Int] =
-    IndexCatalog.rebucketIfNeeded(
-      spark, s"${prefix}_chunks", bucketedTables(spark, prefix), candidatesPerBucketBudget, maxBuckets)
-
-  /** The tables [[rebucket]], [[compact]] and [[fileStats]] cover: fps
-    * and chunks, plus `_meta` when the prefix carries it (its ingest
-    * appends one file per touched bucket too).
-    */
-  private def bucketedTables(spark: SparkSession, prefix: String): Seq[String] =
-    Seq(s"${prefix}_fps", s"${prefix}_chunks") ++
-      Seq(s"${prefix}_meta").filter(spark.catalog.tableExists)
-
-  /** Physical layout health — file counts per table (operational
-    * metadata; no oracle).
-    */
-  def fileStats(spark: SparkSession, prefix: String): DataFrame =
-    IndexCatalog.fileStats(spark, bucketedTables(spark, prefix))
 }

@@ -1130,13 +1130,8 @@ object MultimodalOps {
       heldType: String = "image",
   ): org.apache.spark.sql.streaming.StreamingQuery = {
     val held = heldBandRows(heldDocs, bands, blockMod, heldType).localCheckpoint()
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        onVerdicts(screenWithHeld(held, batch, threshold, bands), batchId)
-      }
-      .start()
+    IndexCatalog.stream(docs, checkpoint)((batch, id) =>
+      onVerdicts(screenWithHeld(held, batch, threshold, bands), id))
   }
 
   /** Frame sampling: every `step`-th frame index of each video payload,

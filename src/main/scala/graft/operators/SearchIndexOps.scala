@@ -136,78 +136,6 @@ object SearchIndexOps {
       .orderBy(col("n_postings").desc, col("term"))
       .limit(topN)
 
-  /** Index maintenance: rewrite the bucketed tables at `newBuckets`
-    * physical buckets (same swap discipline as
-    * [[LshIndexOps.rebucket]] — temp table, drop, rename). Needed for
-    * the same two reasons: every append adds one file per bucket, so
-    * reads degrade as files accumulate, and the bucket count chosen at
-    * build time caps the pruned read's parallelism forever. Content is
-    * bit-preserved; only layout changes (SearchIndexSpec asserts).
-    * Appends survive a rebucket because they go through `insertInto`,
-    * which writes with each table's own stored layout. Swap discipline: ALL replacement tables
-    * are staged first ([[stageRebucket]]) — readers see the complete
-    * old index throughout the rewrite (SearchIndexSpec reads
-    * mid-stage) — then each is committed by
-    * [[IndexCatalog.swapStaged]]'s rename-first sequence, so a crash
-    * leaves a recovery copy, never a dangling live name. The
-    * reader-visible hole is the rename instants only; the
-    * single-maintainer contract covers them.
-    */
-  def rebucket(spark: SparkSession, prefix: String, newBuckets: Int): Unit =
-    IndexCatalog.rebucket(spark, bucketedTables(prefix), newBuckets)
-
-  /** The family's bucketed tables. */
-  private def bucketedTables(prefix: String): Seq[String] =
-    Seq(s"${prefix}_postings", s"${prefix}_lexicon", s"${prefix}_docs")
-
-  /** Phase 1 of [[rebucket]]: write every table's replacement under a
-    * staged name, touching nothing live. Returns (live, staged) pairs
-    * for [[IndexCatalog.swapStaged]].
-    */
-  private[graft] def stageRebucket(
-      spark: SparkSession,
-      prefix: String,
-      newBuckets: Int,
-  ): Seq[(String, String)] =
-    IndexCatalog.stageRebucket(spark, bucketedTables(prefix), newBuckets)
-
-  /** Append compaction — the maintenance pass between rebuckets: every
-    * append adds one file per touched bucket, so after N appends a
-    * pruned per-term read opens O(N) files per probed bucket.
-    * Rewrites ONLY the tables whose worst bucket exceeds
-    * `maxFilesPerBucket` (staged + rename-first swap at the CURRENT
-    * bucket count — [[IndexCatalog.compactBucketed]]), plus the meta
-    * table when its one-row-file-per-append partials exceed the same
-    * threshold (coalesced to one file; the partial ROWS are preserved
-    * — readers sum them, so results stay bit-identical,
-    * SearchIndexSpec asserts). Returns the rewritten tables; empty
-    * means the layout was already within budget and no data moved.
-    */
-  def compact(spark: SparkSession, prefix: String, maxFilesPerBucket: Int = 4): Seq[String] = {
-    val rewritten =
-      IndexCatalog.compactBucketed(spark, bucketedTables(prefix), maxFilesPerBucket)
-    val meta = s"${prefix}_meta"
-    val metaDone =
-      if (spark.table(meta).inputFiles.length > maxFilesPerBucket) {
-        val rows = spark.table(meta).localCheckpoint()
-        val tmp = s"${meta}_rebucket"
-        spark.sql(s"DROP TABLE IF EXISTS $tmp")
-        rows.coalesce(1).write.mode("overwrite").saveAsTable(tmp)
-        IndexCatalog.swapStaged(spark, Seq((meta, tmp)))
-        Seq(meta)
-      } else Nil
-    rewritten ++ metaDone
-  }
-
-  /** Physical layout health — file counts per index table, the dial
-    * [[compact]] restores. Operational metadata (no oracle: file
-    * layout is execution-dependent), served driver-side from listings.
-    */
-  def fileStats(spark: SparkSession, prefix: String): DataFrame =
-    IndexCatalog.fileStats(
-      spark,
-      bucketedTables(prefix) ++ Seq(s"${prefix}_meta", IndexCatalog.ledgerTable(prefix)))
-
   /** The replay guard's surviving rows: batch minus already-indexed
     * doc_ids. Guard cost is O(batch), not O(index): the anti-join only
     * needs the stored ids that could COLLIDE with this batch, so the
@@ -239,7 +167,9 @@ object SearchIndexOps {
     }
   }
 
-  /** One replay-safe, crash-repairable ingest step.
+  /** One replay-safe, crash-repairable ingest step — the per-batch
+    * step of a continuous index stream ([[IndexCatalog.stream]]), whose
+    * replayed micro-batches it recognizes.
     *
     * Layer 1 — doc-level guard: [[replayGuardFresh]] drops the batch
     * rows whose doc_ids the stored docs table (the membership table,
@@ -281,32 +211,6 @@ object SearchIndexOps {
       }
     }
   }
-
-  /** Continuous ingestion — the streaming face of the persisted index:
-    * every micro-batch of the `docs` stream (doc_id, text) is appended
-    * via [[indexBatch]]. The artifact is the stream's STATE stored
-    * in the warehouse (the [[LshIndexOps.streamingDedup]] discipline):
-    * restarts recover it for free, batch consumers query it
-    * concurrently, and state size scales with storage, not executor
-    * memory. Replayed micro-batches are recognized by indexBatch's
-    * ingest ledger and doc-level guard, and a batch killed mid-append
-    * is repaired table-by-table on replay, so the foreachBatch
-    * at-least-once contract does not double-count tf/df down to the
-    * single-table-append atomicity floor indexBatch documents.
-    */
-  def streamingIndex(
-      spark: SparkSession,
-      prefix: String,
-      docs: DataFrame,
-      checkpoint: String,
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        indexBatch(spark, prefix, batch)
-      }
-      .start()
 
   /** Conjunctive (AND) retrieval from the stored postings — identical
     * semantics (and core) to [[SearchOps.searchAnd]], but the term

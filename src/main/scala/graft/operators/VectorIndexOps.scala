@@ -47,10 +47,10 @@ object VectorIndexOps {
     * form ([[SimilarityOps.assignCells]], right for deriving a
     * standalone assignment frame) costs a full shuffle join of the
     * embeddings table plus a second corpus scan, which recurs PER
-    * MICRO-BATCH under [[streamingIngest]]. This form makes build and
-    * append scan → 1-row broadcast join → project → bucketed write,
-    * with no Exchange on the corpus side (VectorIndexSpec pins the
-    * plan).
+    * MICRO-BATCH of a vector stream ([[ingestBatch]]). This form makes
+    * build and append scan → 1-row broadcast join → project → bucketed
+    * write, with no Exchange on the corpus side (VectorIndexSpec pins
+    * the plan).
     *
     * Arithmetic is bit-identical to assignCells: same
     * Σ(x−y)² fold per centroid, and `array_min` over (dist, cid)
@@ -286,7 +286,7 @@ object VectorIndexOps {
     val tomb = s"${prefix}_tombstones"
     if (!spark.catalog.tableExists(tomb) || spark.table(tomb).isEmpty) Nil
     else {
-      val tables = bucketedTables(spark, prefix)
+      val tables = IndexCatalog.VectorIndex.maintained(spark, prefix)
       IndexCatalog.swapStaged(
         spark, tables.map(t => IndexCatalog.stageTableFrom(spark, t, live(spark, prefix, t))))
       spark.sql(s"TRUNCATE TABLE $tomb")
@@ -554,15 +554,16 @@ object VectorIndexOps {
     SimilarityOps.rankTopK(scored, "cosine", ascending = false, k)
   }
 
-  /** One replay-safe, crash-repairable ingest step — the ingest
-    * ledger ([[IndexCatalog.ledgered]]) on the vector face, keyed by
-    * the foreachBatch id, prefixed with the stream's persistent query
+  /** One replay-safe, crash-repairable ingest step — the per-batch
+    * step of a continuous vector stream ([[IndexCatalog.stream]]) — the
+    * ingest ledger ([[IndexCatalog.ledgered]]) on the vector face, keyed
+    * by the micro-batch id, prefixed with the stream's persistent query
     * id when it runs inside a streaming query. The ledger is the right
     * guard HERE: the vectors table is bucketed by `cell`, so an
     * anti-join on vec_id would shuffle the stored corpus once per
     * micro-batch, while the ledger check is two file-existence checks
     * on the driver (no Spark job, O(1) corpus contact). The query id
-    * and the foreachBatch batch ids are both stable across checkpoint
+    * and the micro-batch ids are both stable across checkpoint
     * replays, so a committed batch replays to a wholesale skip and
     * vec_ids stay unique (VectorIndexSpec replays a batch and asserts
     * it). Epoch ids alone restart at 0 with every fresh checkpoint; the
@@ -587,54 +588,6 @@ object VectorIndexOps {
       repairing => appendVectorsGuarded(spark, prefix, batch, repairing, crashAfter)
     }
   }
-
-  /** Continuous vector ingestion — the streaming face: every
-    * micro-batch of the `vectors` stream (vec_id, embedding) is
-    * assigned against the frozen stored codebook and appended
-    * ([[appendVectors]]), guarded by [[ingestBatch]]'s (query id, batch
-    * id) ledger so checkpoint replays cannot duplicate vec_ids and a
-    * fresh checkpoint over the same index skips nothing. The artifact is
-    * the stream's state in the warehouse (the established
-    * index-as-state discipline).
-    */
-  def streamingIngest(
-      spark: SparkSession,
-      prefix: String,
-      vectors: DataFrame,
-      checkpoint: String,
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatch(spark, prefix, batch, batchId)
-      }
-      .start()
-
-  /** The family's bucketed tables (codes only once published). */
-  private def bucketedTables(spark: SparkSession, prefix: String): Seq[String] =
-    s"${prefix}_vectors" +: Seq(s"${prefix}_codes").filter(spark.catalog.tableExists)
-
-  /** Append compaction — every [[appendVectors]] (and every streaming
-    * micro-batch) adds one file per touched cell bucket, so probed-cell
-    * reads open O(appends) files per cell until this runs. Rewrites
-    * only the tables whose worst bucket exceeds `maxFilesPerBucket`,
-    * at the current bucket count, staged + rename-first swapped
-    * ([[IndexCatalog.compactBucketed]]) so reads are served
-    * throughout. Returns the rewritten tables.
-    */
-  def compact(spark: SparkSession, prefix: String, maxFilesPerBucket: Int = 4): Seq[String] =
-    IndexCatalog.compactBucketed(spark, bucketedTables(spark, prefix), maxFilesPerBucket)
-
-  /** Physical layout health — file counts per index table, the dial
-    * [[compact]] restores (operational metadata; no oracle).
-    */
-  def fileStats(spark: SparkSession, prefix: String): DataFrame =
-    IndexCatalog.fileStats(
-      spark,
-      bucketedTables(spark, prefix)
-        ++ Seq(s"${prefix}_codebook", s"${prefix}_pq_codebook", IndexCatalog.ledgerTable(prefix)),
-    )
 
   /** Literal-cell read — the serving-side primitive: a probe list of
     * cell ids reads ONLY those cells' buckets (static bucket pruning on

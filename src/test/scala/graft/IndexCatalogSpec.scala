@@ -23,7 +23,9 @@ import graft.operators.IndexCatalog
   * sort columns the catalog records for the live table. The bounded
   * key lookup (capped, keyed, present) returns every row up to its cap
   * and None past it, runs no job for a local frame, and sees appends
-  * made after its first read.
+  * made after its first read. Each family's layout stats name its
+  * tables in a fixed order, and `stream` hands each micro-batch over
+  * once, resuming after the last committed batch on a restart.
   */
 class IndexCatalogSpec extends SparkSpec {
 
@@ -294,15 +296,16 @@ class IndexCatalogSpec extends SparkSpec {
     def rows = spark.table(t).collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).sorted.toSeq
     val expected = BucketSpec(8, Seq("a", "b"), Seq("a", "c"))
     val built = rows
+    val one = IndexCatalog.Family(Seq(""))
 
-    IndexCatalog.rebucket(spark, Seq(t), 8)
+    one.rebucket(spark, t, 8)
     assert(layout.contains(expected))
     assert(rows == built)
 
     Seq((3, 4, 1000L)).toDF("a", "b", "c").write.mode("append").insertInto(t)
     spark.catalog.refreshTable(t)
     assert(IndexCatalog.maxFilesPerBucket(spark, t) == 2)
-    assert(IndexCatalog.compactBucketed(spark, Seq(t), 1) == Seq(t))
+    assert(one.compact(spark, t, 1) == Seq(t))
     assert(layout.contains(expected))
     assert(IndexCatalog.maxFilesPerBucket(spark, t) == 1, "compaction writes one file per bucket")
     assert(spark.table(t).inputFiles.length <= 8)
@@ -312,6 +315,69 @@ class IndexCatalogSpec extends SparkSpec {
     val e = intercept[RuntimeException](IndexCatalog.stageTable(spark, plain, 4))
     assert(e.getMessage.contains(plain), e.getMessage)
     assert(!spark.catalog.tableExists(s"${plain}_rebucket"))
+  }
+
+  test("each family's fileStats lists its tables by name, in order") {
+    import spark.implicits._
+    import graft.operators.{LshIndexOps, MediaIndexOps, MultimodalOps, SearchIndexOps, VectorIndexOps}
+    def names(stats: org.apache.spark.sql.DataFrame) = stats.select("table").as[String].collect().toSeq
+    def drop(owner: String, tables: String*): Unit =
+      tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $owner$t"))
+    val docs = Tables.documents(spark, Sf).select("doc_id", "text")
+
+    val lsh = "statslsh"
+    drop(lsh, "_docs", "_bands", "_meta", "_batches")
+    LshIndexOps.writeIndex(docs, 3, 32, 8, buckets = 2, prefix = lsh)
+    LshIndexOps.writeMetaTable(docs, buckets = 2, prefix = lsh)
+    assert(names(IndexCatalog.LshIndex.fileStats(spark, lsh)) ==
+      Seq("_docs", "_bands", "_meta").map(lsh + _))
+
+    val media = "statsmedia"
+    drop(media, "_fps", "_chunks", "_meta", "_batches")
+    val payloads = MultimodalOps.encodeMedia(Tables.documents(spark, Sf))
+    MediaIndexOps.writeIndex(payloads, 49, 6, buckets = 2, prefix = media)
+    MediaIndexOps.writeMetaTable(payloads, buckets = 2, prefix = media)
+    assert(names(IndexCatalog.MediaIndex.fileStats(spark, media)) ==
+      Seq("_fps", "_chunks", "_meta").map(media + _))
+
+    val search = "statssearch"
+    drop(search, "_postings", "_lexicon", "_docs", "_meta", "_batches")
+    SearchIndexOps.writeIndex(docs.filter(col("doc_id") % 2 === 0), buckets = 2, prefix = search)
+    SearchIndexOps.indexBatch(spark, search, docs.filter(col("doc_id") % 2 === 1))
+    assert(names(IndexCatalog.SearchIndex.fileStats(spark, search)) ==
+      Seq("_postings", "_lexicon", "_docs", "_meta", "_batches").map(search + _))
+
+    val vec = "statsvec"
+    drop(vec, "_codebook", "_vectors", "_cellstats", "_pq_codebook", "_codes", "_batches")
+    val emb = Tables.embeddings(spark, Sf)
+    VectorIndexOps.writeIndex(
+      emb.filter(col("vec_id") % 2 === 0), dim = 64, isSeed = col("vec_id") < 8,
+      iters = 2, buckets = 2, prefix = vec)
+    val pqCb = graft.operators.SimilarityOps.trainCodebook(
+      emb, blocks = 4, subDim = 16, isSeed = col("vec_id") < 8, iters = 2)
+    VectorIndexOps.writePqCodes(
+      emb, pqCb, blocks = 4, subDim = 16, nSeeds = 8, buckets = 2, prefix = vec)
+    VectorIndexOps.ingestBatch(spark, vec, emb.filter(col("vec_id") % 2 === 1), batchId = 1L)
+    assert(names(IndexCatalog.VectorIndex.fileStats(spark, vec)) ==
+      Seq("_vectors", "_codes", "_codebook", "_pq_codebook", "_batches").map(vec + _))
+  }
+
+  test("stream hands perBatch each batch id once, and a restart on its checkpoint replays no committed batch") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val in = MemoryStream[Long]
+    val ckpt = java.nio.file.Files.createTempDirectory("catalog_stream").toFile.getAbsolutePath
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Seq[Long])]
+    def run(waves: Seq[Long]*): Unit = {
+      val q = IndexCatalog.stream(in.toDF(), ckpt)((batch, id) =>
+        seen.add(id -> batch.as[Long].collect().toSeq.sorted))
+      try waves.foreach { w => in.addData(w); q.processAllAvailable() }
+      finally q.stop()
+    }
+    run(Seq(1L, 2L), Seq(3L))
+    run(Seq(4L))
+    assert(seen.asScala.toSeq == Seq(0L -> Seq(1L, 2L), 1L -> Seq(3L), 2L -> Seq(4L)))
   }
 
   private def keys(rows: Option[Array[org.apache.spark.sql.Row]]): Option[Seq[Long]] =

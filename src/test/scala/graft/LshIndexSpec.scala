@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{DedupOps, LshIndexOps}
+import graft.operators.{DedupOps, IndexCatalog, LshIndexOps}
 
 /** The persisted LSH index artifact (LshIndexOps): pairs computed from
   * the stored bucketed tables must be IDENTICAL to the single-pass
@@ -317,11 +317,11 @@ class LshIndexSpec extends SparkSpec {
       spark.catalog.refreshTable(t)
       t -> spark.table(t).inputFiles.length
     }.toMap
-    assert(LshIndexOps.fileStats(spark, prefix).count() == 3)
+    assert(IndexCatalog.LshIndex.fileStats(spark, prefix).count() == 3)
     Seq(1, 2).foreach { r =>
       // The second append follows a rebucket of docs and bands: appends
       // take the live spec.
-      if (r == 2) LshIndexOps.rebucket(spark, prefix, 2 * buckets)
+      if (r == 2) IndexCatalog.LshIndex.rebucket(spark, prefix, 2 * buckets)
       val before = files()
       val rowsBefore = spark.table(s"${prefix}_docs").count()
       LshIndexOps.dedupBatchAndGrow(
@@ -355,8 +355,8 @@ class LshIndexSpec extends SparkSpec {
     // appends to one file per bucket and keeps its rows.
     val meta = s"${prefix}_meta"
     val metaRows = spark.table(meta).collect().toSeq.sortBy(_.getLong(0))
-    assert(LshIndexOps.compact(spark, prefix, 1).contains(meta))
-    val stats = LshIndexOps.fileStats(spark, prefix).filter(col("table") === meta).collect()
+    assert(IndexCatalog.LshIndex.compact(spark, prefix, 1).contains(meta))
+    val stats = IndexCatalog.LshIndex.fileStats(spark, prefix).filter(col("table") === meta).collect()
     assert(stats.map(_.getLong(2)).toSeq == Seq(1L), s"$meta not compacted: ${stats.mkString}")
     assert(spark.table(meta).collect().toSeq.sortBy(_.getLong(0)) == metaRows)
   }
@@ -616,10 +616,10 @@ class LshIndexSpec extends SparkSpec {
     assert(before.nonEmpty && numBuckets() == 4)
 
     // Within budget: no rewrite.
-    assert(LshIndexOps.rebucketIfNeeded(spark, prefix, Long.MaxValue).isEmpty)
+    assert(IndexCatalog.LshIndex.rebucketIfNeeded(spark, prefix, Long.MaxValue).isEmpty)
     assert(numBuckets() == 4)
     // A 1-candidate-per-bucket budget forces a rewrite at more buckets.
-    val grown = LshIndexOps.rebucketIfNeeded(spark, prefix, 1L, maxBuckets = 16)
+    val grown = IndexCatalog.LshIndex.rebucketIfNeeded(spark, prefix, 1L, maxBuckets = 16)
     assert(grown.contains(16), s"expected the maxBuckets cap, got $grown")
     assert(numBuckets() == 16)
     assert(pairs() == before, "physical rebucketing must not change pair results")
@@ -637,6 +637,32 @@ class LshIndexSpec extends SparkSpec {
       assert(!joined.queryExecution.executedPlan.toString.contains("Exchange"),
         "rebucketed band self-join must not shuffle")
     }
+  }
+
+  test("maintenance recovers a swap crashed between renames before it lists the index tables") {
+    val prefix = "lshmaintdangle"
+    Seq("_docs", "_docs_old", "_bands", "_meta", "_meta_old", "_batches")
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $prefix$t"))
+    val docs = Tables.documents(spark, Sf).select("doc_id", "text")
+    LshIndexOps.writeIndex(docs, N, K, Bands, buckets = 4, prefix = prefix)
+    LshIndexOps.writeMetaTable(docs, buckets = 4, prefix = prefix)
+    def rows(t: String) = spark.table(s"$prefix$t").collect().map(_.toString).sorted.toSeq
+    def numBuckets(t: String) = IndexCatalog.bucketSpec(spark, s"$prefix$t").numBuckets
+    val metaRows = rows("_meta")
+    val docRows = rows("_docs")
+    // The state a crash between swapStaged's two renames leaves: the
+    // live name gone, `_old` the only copy.
+    spark.sql(s"ALTER TABLE ${prefix}_meta RENAME TO ${prefix}_meta_old")
+    IndexCatalog.LshIndex.rebucket(spark, prefix, 8)
+    assert(!spark.catalog.tableExists(s"${prefix}_meta_old"), "the optional _meta was skipped")
+    assert(numBuckets("_meta") == 8)
+    assert(rows("_meta") == metaRows)
+    // A required table is repaired too, not reported as missing.
+    spark.sql(s"ALTER TABLE ${prefix}_docs RENAME TO ${prefix}_docs_old")
+    IndexCatalog.LshIndex.compact(spark, prefix, 1)
+    assert(!spark.catalog.tableExists(s"${prefix}_docs_old"))
+    assert(numBuckets("_docs") == 8)
+    assert(rows("_docs") == docRows)
   }
 
   test("grow-everything text ingest keeps the cluster artifact bit-equal to a from-scratch rebuild") {

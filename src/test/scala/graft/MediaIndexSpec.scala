@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{MediaIndexOps, MultimodalOps}
+import graft.operators.{IndexCatalog, MediaIndexOps, MultimodalOps}
 
 /** The persisted perceptual-fingerprint index (MediaIndexOps): pairs
   * served from the stored artifact must equal the single-pass operator
@@ -265,12 +265,12 @@ class MediaIndexSpec extends SparkSpec {
     MediaIndexOps.writeIndex(media(), Regions, Bands, buckets = 2, prefix = prefix)
     val before = MediaIndexOps.nearDupPairs(spark, prefix, MaxHamming).collect().toSeq
     // A 1-candidate-per-bucket budget is always exceeded → must rewrite.
-    val grown = MediaIndexOps.rebucketIfNeeded(spark, prefix, candidatesPerBucketBudget = 1L)
+    val grown = IndexCatalog.MediaIndex.rebucketIfNeeded(spark, prefix, candidatesPerBucketBudget = 1L)
     assert(grown.exists(_ > 2), s"expected a bucket-count increase, got $grown")
     assert(MediaIndexOps.nearDupPairs(spark, prefix, MaxHamming).collect().toSeq == before,
       "rebucketing is physical only — pairs must be bit-identical")
     // Within budget afterwards at a generous budget: no further rewrite.
-    assert(MediaIndexOps.rebucketIfNeeded(spark, prefix, candidatesPerBucketBudget = 1000000L).isEmpty)
+    assert(IndexCatalog.MediaIndex.rebucketIfNeeded(spark, prefix, candidatesPerBucketBudget = 1000000L).isEmpty)
   }
 
   test("appends follow the live bucket spec after a rebucket: grown candidate pairs equal an unbucketed read") {
@@ -279,7 +279,7 @@ class MediaIndexSpec extends SparkSpec {
     Seq("_fps", "_chunks", "_meta").foreach(t => spark.sql(s"DROP TABLE IF EXISTS $prefix$t"))
     MediaIndexOps.writeIndex(
       media().filter(col("doc_id") % 5 =!= 0), Regions, Bands, buckets = 4, prefix = prefix)
-    MediaIndexOps.rebucket(spark, prefix, 8)
+    IndexCatalog.MediaIndex.rebucket(spark, prefix, 8)
     def ids() = spark.table(s"${prefix}_fps").select("doc_id").as[Long].collect().toSet
     val before = ids()
     // The append must take the table's live spec, not the build count.
@@ -337,11 +337,12 @@ class MediaIndexSpec extends SparkSpec {
     val in = MemoryStream[(Long, String, Array[Byte])]
     val collected = scala.collection.mutable.Buffer[(Long, Long, Int)]()
     val ckpt = java.nio.file.Files.createTempDirectory("media_stream").toFile.getAbsolutePath
-    val q = MediaIndexOps.streamingDedup(
-      spark, prefix, in.toDF().toDF("doc_id", "media_type", "payload"),
-      Regions, Bands, maxHamming = MaxHamming, checkpoint = ckpt,
-      onDups = (d, _) => collected ++= d.as[(Long, Long, Int)].collect(),
-    )
+    val q = IndexCatalog.stream(in.toDF().toDF("doc_id", "media_type", "payload"), ckpt) {
+      (batch, _) =>
+        collected ++= MediaIndexOps.dedupBatchAndGrow(
+          spark, prefix, batch, Regions, Bands, maxHamming = MaxHamming,
+        ).as[(Long, Long, Int)].collect()
+    }
     // Three arrival waves, ascending doc_id (so every cross-wave match
     // has the new doc as the higher id).
     val waves = streamRows.grouped(streamRows.length / 3 + 1).toSeq
@@ -403,14 +404,14 @@ class MediaIndexSpec extends SparkSpec {
     def rows = spark.table(meta).collect().map(_.toString).sorted.toSeq
     val grown = rows
     assert(IndexCatalog.maxFilesPerBucket(spark, meta) > 1, "the appends added no _meta files")
-    assert(MediaIndexOps.compact(spark, pre, 1).contains(meta))
+    assert(IndexCatalog.MediaIndex.compact(spark, pre, 1).contains(meta))
     assert(IndexCatalog.maxFilesPerBucket(spark, meta) == 1)
     assert(rows == grown)
-    MediaIndexOps.rebucket(spark, pre, 8)
+    IndexCatalog.MediaIndex.rebucket(spark, pre, 8)
     assert(spark.sessionState.catalog.getTableMetadata(TableIdentifier(meta)).bucketSpec
       .contains(BucketSpec(8, Seq("doc_id"), Seq("doc_id"))))
     assert(rows == grown)
-    assert(MediaIndexOps.fileStats(spark, pre).select("table").collect().map(_.getString(0))
+    assert(IndexCatalog.MediaIndex.fileStats(spark, pre).select("table").collect().map(_.getString(0))
       .contains(meta))
   }
 
@@ -425,9 +426,9 @@ class MediaIndexSpec extends SparkSpec {
     MediaIndexOps.dedupBatchAndGrow(
       spark, pre, media().filter(col("doc_id") % 2 === 1), Regions, Bands,
       maxHamming = MaxHamming)
-    assert(MediaIndexOps.compact(spark, pre, 1).contains(s"${pre}_chunks"))
+    assert(IndexCatalog.MediaIndex.compact(spark, pre, 1).contains(s"${pre}_chunks"))
     assert(blockBands(s"${pre}_chunks").contains(Bands.toString), "compaction dropped it")
-    MediaIndexOps.rebucket(spark, pre, 8)
+    IndexCatalog.MediaIndex.rebucket(spark, pre, 8)
     assert(blockBands(s"${pre}_chunks").contains(Bands.toString), "rebucket dropped it")
     // A rebucketed EMPTY index still states its layout, so an
     // index×index sweep needs no max(chunk_idx) derivation (which has
@@ -438,7 +439,7 @@ class MediaIndexSpec extends SparkSpec {
     MediaIndexOps.writeIndex(
       Seq.empty[(Long, String, Array[Byte])].toDF("doc_id", "media_type", "payload"),
       Regions, Bands, buckets = 2, prefix = empty)
-    MediaIndexOps.rebucket(spark, empty, 4)
+    IndexCatalog.MediaIndex.rebucket(spark, empty, 4)
     val vid = MultimodalQueries.fullMediaIndex(spark, Sf, "video")
     assert(MediaIndexOps.frameMatchFromIndexes(spark, empty, vid, MaxHamming).isEmpty)
   }

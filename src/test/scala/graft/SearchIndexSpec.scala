@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{SearchIndexOps, SearchOps}
+import graft.operators.{IndexCatalog, SearchIndexOps, SearchOps}
 
 /** The persisted inverted-index artifact (SearchIndexOps): every read
   * path must equal the corpus-scan operator bit-for-bit, the read-path
@@ -247,7 +247,7 @@ class SearchIndexSpec extends SparkSpec {
       .bucketSpec.map(_.numBuckets).getOrElse(0)
     val before = ranked()
     assert(before.nonEmpty && numBuckets() == 4)
-    SearchIndexOps.rebucket(spark, prefix, newBuckets = 16)
+    IndexCatalog.SearchIndex.rebucket(spark, prefix, newBuckets = 16)
     assert(numBuckets() == 16)
     assert(ranked() == before, "physical rebucketing must not change results")
     val plan = SearchIndexOps.searchAnd(spark, prefix, Terms)
@@ -274,7 +274,7 @@ class SearchIndexSpec extends SparkSpec {
     // Phase 1: the minutes-long part at scale. Every replacement table
     // is staged under a _rebucket name; the live index is untouched, so
     // a reader here — mid-maintenance — gets full, consistent answers.
-    val staged = SearchIndexOps.stageRebucket(spark, prefix, newBuckets = 16)
+    val staged = IndexCatalog.SearchIndex.stageRebucket(spark, prefix, newBuckets = 16)
     assert(SearchIndexOps.searchBm25(spark, prefix, RankTerms, 10).collect().toSeq == before,
       "reads during the staging rewrite must serve the old index bit-for-bit")
     assert(staged.map(_._2).forall(spark.catalog.tableExists),
@@ -305,7 +305,7 @@ class SearchIndexSpec extends SparkSpec {
     build("searchwhole")
     // The process dies after swapStaged renamed postings and before it
     // reached lexicon and docs: the tables now disagree on bucket count.
-    val staged = SearchIndexOps.stageRebucket(spark, "searchhalf", newBuckets = 16)
+    val staged = IndexCatalog.SearchIndex.stageRebucket(spark, "searchhalf", newBuckets = 16)
     IndexCatalog.swapStaged(spark, staged.filter(_._1 == "searchhalf_postings"))
     assert(IndexCatalog.bucketSpec(spark, "searchhalf_postings").numBuckets == 16)
     assert(IndexCatalog.bucketSpec(spark, "searchhalf_lexicon").numBuckets == 4)
@@ -344,7 +344,7 @@ class SearchIndexSpec extends SparkSpec {
     // stage a replacement, re-inject the dangling rename, then swap —
     // the entry recovery restores the live name instead of DROPping the
     // only copy, and the swap completes normally.
-    val staged = SearchIndexOps.stageRebucket(spark, prefix, newBuckets = 8)
+    val staged = IndexCatalog.SearchIndex.stageRebucket(spark, prefix, newBuckets = 8)
     spark.sql(s"ALTER TABLE ${prefix}_postings RENAME TO ${prefix}_postings_old")
     IndexCatalog.swapStaged(spark, staged)
     assert(SearchIndexOps.searchBm25(spark, prefix, RankTerms, 10).collect().toSeq == before,
@@ -366,8 +366,8 @@ class SearchIndexSpec extends SparkSpec {
     SearchIndexOps.writeIndex(seed.toSeq.toDF("doc_id", "text"), buckets = 4, prefix = prefix)
     val in = MemoryStream[(Long, String)]
     val ckpt = java.nio.file.Files.createTempDirectory("search_stream").toFile.getAbsolutePath
-    val q = SearchIndexOps.streamingIndex(
-      spark, prefix, in.toDF().toDF("doc_id", "text"), checkpoint = ckpt)
+    val q = IndexCatalog.stream(in.toDF().toDF("doc_id", "text"), ckpt)((batch, _) =>
+      SearchIndexOps.indexBatch(spark, prefix, batch))
     val waves = streamed.grouped(streamed.length / 2 + 1).toSeq
     try waves.foreach { w => in.addData(w.toSeq); q.processAllAvailable() }
     finally q.stop()
@@ -394,7 +394,7 @@ class SearchIndexSpec extends SparkSpec {
     val before = SearchIndexOps.searchBm25(spark, prefix, RankTerms, 10).collect().toSeq
     assert(IndexCatalog.maxFilesPerBucket(spark, s"${prefix}_postings") > 2,
       "appends must have fragmented the postings buckets (precondition)")
-    val rewritten = SearchIndexOps.compact(spark, prefix, maxFilesPerBucket = 2)
+    val rewritten = IndexCatalog.SearchIndex.compact(spark, prefix, maxFilesPerBucket = 2)
     assert(rewritten.contains(s"${prefix}_postings"), s"postings must be compacted: $rewritten")
     assert(rewritten.contains(s"${prefix}_meta"), s"meta partial files must be coalesced: $rewritten")
     // Bounded: one file per bucket after the rewrite, bucket count kept.
@@ -405,10 +405,10 @@ class SearchIndexSpec extends SparkSpec {
     assert(SearchIndexOps.searchBm25(spark, prefix, RankTerms, 10).collect().toSeq == before,
       "compaction must preserve results bit-for-bit")
     // Within budget now: a second pass must touch nothing.
-    assert(SearchIndexOps.compact(spark, prefix, maxFilesPerBucket = 2).isEmpty,
+    assert(IndexCatalog.SearchIndex.compact(spark, prefix, maxFilesPerBucket = 2).isEmpty,
       "a compacted index must not be rewritten again")
     // The health view reports every table with its physical counts.
-    val stats = SearchIndexOps.fileStats(spark, prefix).collect()
+    val stats = IndexCatalog.SearchIndex.fileStats(spark, prefix).collect()
     assert(stats.length == 4 && stats.forall(_.getLong(1) >= 1), stats.mkString(", "))
     // Appends keep working against the compacted layout.
     import spark.implicits._

@@ -233,7 +233,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming frame match screens video uploads against the stored image index") {
     implicit val sqlCtx = spark.sqlContext
-    import graft.operators.{MediaIndexOps, MultimodalOps}
+    import graft.operators.{IndexCatalog, MediaIndexOps, MultimodalOps}
     val prefix = "framescreen"
     Seq(s"${prefix}_fps", s"${prefix}_chunks", s"${prefix}_batches")
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
@@ -245,11 +245,12 @@ class StreamingSpec extends SparkSpec {
     val in = MemoryStream[(Long, String, Array[Byte])]
     val collected = scala.collection.mutable.Buffer[(Long, Long, Int)]()
     val ckpt = Files.createTempDirectory("frame_screen").toFile.getAbsolutePath
-    val q = MediaIndexOps.streamingFrameMatch(
-      spark, prefix, in.toDF().toDF("doc_id", "media_type", "payload"),
-      regions = 49, blockBands = 6, maxHamming = 5, checkpoint = ckpt,
-      onMatches = (m, _) => collected ++= m.as[(Long, Long, Int)].collect(),
-    )
+    val q = IndexCatalog.stream(in.toDF().toDF("doc_id", "media_type", "payload"), ckpt) {
+      (batch, _) =>
+        collected ++= MediaIndexOps.frameMatchAgainstIndex(
+          spark, prefix, batch, regions = 49, blockBands = 6, maxHamming = 5,
+        ).as[(Long, Long, Int)].collect()
+    }
     val fpsBefore = spark.table(s"${prefix}_fps").count()
     val waves = videoRows.grouped(videoRows.length / 2 + 1).toSeq
     try waves.foreach { w => in.addData(w.toSeq); q.processAllAvailable() }
@@ -295,7 +296,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming upload verdict is batch/stream unified: identical verdicts, index untouched") {
     implicit val sqlCtx = spark.sqlContext
-    import graft.operators.{MediaIndexOps, MultimodalOps}
+    import graft.operators.{IndexCatalog, MediaIndexOps, MultimodalOps}
     val prefix = "uploadverdictstream"
     Seq("_fps", "_chunks", "_meta", "_batches")
       .foreach(sfx => spark.sql(s"DROP TABLE IF EXISTS $prefix$sfx"))
@@ -311,11 +312,12 @@ class StreamingSpec extends SparkSpec {
     val ckpt = Files.createTempDirectory("upload_verdict").toFile.getAbsolutePath
     val (floor, label) = MultimodalOps.imageFloor(16384L)
     val fpsBefore = spark.table(s"${prefix}_fps").count()
-    val q = MediaIndexOps.streamingUploadVerdict(
-      spark, prefix, in.toDF().toDF("doc_id", "media_type", "payload"),
-      regions = 49, blockBands = 6, maxHamming = 5, floor, label, checkpoint = ckpt,
-      onVerdicts = (v, _) => collected ++= v.as[(Long, String, Option[Long])].collect(),
-    )
+    val q = IndexCatalog.stream(in.toDF().toDF("doc_id", "media_type", "payload"), ckpt) {
+      (batch, _) =>
+        collected ++= MediaIndexOps.uploadVerdict(
+          spark, prefix, batch, regions = 49, blockBands = 6, maxHamming = 5, floor, label,
+        ).as[(Long, String, Option[Long])].collect()
+    }
     val waves = arrivals.grouped(arrivals.length / 3 + 1).toSeq
     try waves.foreach { w => in.addData(w.toSeq); q.processAllAvailable() }
     finally q.stop()
@@ -334,7 +336,7 @@ class StreamingSpec extends SparkSpec {
 
   test("TEXT streaming upload verdict is batch/stream unified: identical verdicts, index untouched") {
     implicit val sqlCtx = spark.sqlContext
-    import graft.operators.LshIndexOps
+    import graft.operators.{IndexCatalog, LshIndexOps}
     val prefix = "txuploadstream"
     Seq("_docs", "_bands", "_meta", "_batches")
       .foreach(sfx => spark.sql(s"DROP TABLE IF EXISTS $prefix$sfx"))
@@ -348,11 +350,11 @@ class StreamingSpec extends SparkSpec {
     val collected = scala.collection.mutable.Buffer[(Long, String, Option[Long])]()
     val ckpt = Files.createTempDirectory("tx_upload_verdict").toFile.getAbsolutePath
     val docsBefore = spark.table(s"${prefix}_docs").count()
-    val q = LshIndexOps.streamingUploadVerdict(
-      spark, prefix, in.toDF().toDF("doc_id", "text"),
-      n = 3, k = 32, bands = 8, threshold = 0.8, minTok = 20L, checkpoint = ckpt,
-      onVerdicts = (v, _) => collected ++= v.as[(Long, String, Option[Long])].collect(),
-    )
+    val q = IndexCatalog.stream(in.toDF().toDF("doc_id", "text"), ckpt) { (batch, _) =>
+      collected ++= LshIndexOps.uploadVerdict(
+        spark, prefix, batch, n = 3, k = 32, bands = 8, threshold = 0.8, minTok = 20L,
+      ).as[(Long, String, Option[Long])].collect()
+    }
     val waves = arrivals.grouped(arrivals.length / 3 + 1).toSeq
     try waves.foreach { w => in.addData(w.toSeq); q.processAllAvailable() }
     finally q.stop()
@@ -371,7 +373,7 @@ class StreamingSpec extends SparkSpec {
 
   test("vector-index streaming ingest: union over waves equals the batch face, tombstones honored") {
     implicit val sqlCtx = spark.sqlContext
-    import graft.operators.{SimilarityOps, VectorIndexOps}
+    import graft.operators.{IndexCatalog, SimilarityOps, VectorIndexOps}
     val streamPre = "vecsting"
     val batchPre = "vecbting"
     Seq(streamPre, batchPre).foreach(p =>
@@ -402,8 +404,8 @@ class StreamingSpec extends SparkSpec {
     val waves = Seq(waves0.head, waves0.last :+ reinsert)
     val in = MemoryStream[(Long, Array[Float])]
     val ckpt = Files.createTempDirectory("vec_sting").toFile.getAbsolutePath
-    val q = VectorIndexOps.streamingIngest(
-      spark, streamPre, in.toDF().toDF("vec_id", "embedding"), checkpoint = ckpt)
+    val q = IndexCatalog.stream(in.toDF().toDF("vec_id", "embedding"), ckpt)(
+      VectorIndexOps.ingestBatch(spark, streamPre, _, _))
     try waves.foreach { w => in.addData(w); q.processAllAvailable() }
     finally q.stop()
     assert(q.exception.isEmpty, s"stream failed: ${q.exception}")
@@ -456,9 +458,8 @@ class StreamingSpec extends SparkSpec {
       .as[(Long, Long)].collect().sortBy(identity).toSeq
     val in = MemoryStream[(Long, Long)]
     val ckpt = Files.createTempDirectory("edge_grow").toFile.getAbsolutePath
-    val q = GraphOps.streamingGrowEdges(
-      spark, t, in.toDF().toDF("l_orderkey", "l_partkey"),
-      "l_orderkey", "l_partkey", checkpoint = ckpt)
+    val q = IndexCatalog.stream(in.toDF().toDF("l_orderkey", "l_partkey"), ckpt)((batch, _) =>
+      GraphOps.growEdgeTable(spark, t, batch, "l_orderkey", "l_partkey"))
     try rest.grouped(rest.length / 3 + 1).foreach { w =>
       in.addData(w); q.processAllAvailable()
     } finally q.stop()
@@ -476,7 +477,7 @@ class StreamingSpec extends SparkSpec {
     val membersBefore = spark.table(s"${t}_members").collect().toSeq.sortBy(_.toString)
     assert(IndexCatalog.maxFilesPerBucket(spark, s"${t}_members") > 1,
       "the grow waves must have fragmented the members table for the check to bite")
-    val rewritten = GraphOps.compactEdgeTable(spark, t, maxFilesPerBucket = 1)
+    val rewritten = IndexCatalog.EdgeTable.compact(spark, t, maxFilesPerBucket = 1)
     assert(rewritten.toSet == Set(t, s"${t}_members"),
       s"both fragmented tables must compact: $rewritten")
     assert(IndexCatalog.maxFilesPerBucket(spark, t) == 1,

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{SimilarityOps, VectorIndexOps}
+import graft.operators.{IndexCatalog, SimilarityOps, VectorIndexOps}
 
 /** The persisted IVF vector index (VectorIndexOps): index-served search
   * must equal the on-the-fly trained path bit-for-bit, the read path
@@ -111,8 +111,8 @@ class VectorIndexSpec extends SparkSpec {
       iters = 2, buckets = 4, prefix = prefix)
     val in = MemoryStream[(Long, Array[Float])]
     val ckpt = java.nio.file.Files.createTempDirectory("vec_stream").toFile.getAbsolutePath
-    val q = VectorIndexOps.streamingIngest(
-      spark, prefix, in.toDF().toDF("vec_id", "embedding"), checkpoint = ckpt)
+    val q = IndexCatalog.stream(in.toDF().toDF("vec_id", "embedding"), ckpt)(
+      VectorIndexOps.ingestBatch(spark, prefix, _, _))
     val waves = streamed.grouped(streamed.length / 2 + 1).toSeq
     try waves.foreach { w => in.addData(w.toSeq); q.processAllAvailable() }
     finally q.stop()
@@ -148,8 +148,8 @@ class VectorIndexSpec extends SparkSpec {
     def stream(ids: Seq[Long]): Unit = {
       val in = MemoryStream[(Long, Array[Float])]
       val ckpt = java.nio.file.Files.createTempDirectory("vec_repoint").toFile.getAbsolutePath
-      val q = VectorIndexOps.streamingIngest(
-        spark, prefix, in.toDF().toDF("vec_id", "embedding"), checkpoint = ckpt)
+      val q = IndexCatalog.stream(in.toDF().toDF("vec_id", "embedding"), ckpt)(
+        VectorIndexOps.ingestBatch(spark, prefix, _, _))
       try ids.grouped(2).foreach { w => in.addData(w.map(i => (i, base))); q.processAllAvailable() }
       finally q.stop()
     }
@@ -252,13 +252,13 @@ class VectorIndexSpec extends SparkSpec {
     val before = VectorIndexOps.ivfTopK(spark, prefix, col("vec_id") < 10, K).collect().toSeq
     assert(IndexCatalog.maxFilesPerBucket(spark, s"${prefix}_vectors") > 2,
       "ingest batches must have fragmented the cell buckets (precondition)")
-    val rewritten = VectorIndexOps.compact(spark, prefix, maxFilesPerBucket = 2)
+    val rewritten = IndexCatalog.VectorIndex.compact(spark, prefix, maxFilesPerBucket = 2)
     assert(rewritten == Seq(s"${prefix}_vectors"), s"vectors must be compacted: $rewritten")
     assert(IndexCatalog.maxFilesPerBucket(spark, s"${prefix}_vectors") == 1,
       "compaction must collapse each cell bucket to one file")
     assert(VectorIndexOps.ivfTopK(spark, prefix, col("vec_id") < 10, K).collect().toSeq == before,
       "compaction must preserve search results bit-for-bit")
-    assert(VectorIndexOps.compact(spark, prefix, maxFilesPerBucket = 2).isEmpty,
+    assert(IndexCatalog.VectorIndex.compact(spark, prefix, maxFilesPerBucket = 2).isEmpty,
       "a compacted index must not be rewritten again")
   }
 

@@ -73,21 +73,22 @@ for name, sql in sorted(oracle.items()):
             f"SELECT * FROM '{OUT}/{name}/*.parquet'").fetchdf())
         duck_df = canon(con.execute(sql).fetchdf())
     except Exception as e:
-        print(f"FAIL {name}: load error: {e}")
+        print(f"FAIL {name}: load error: {e}", flush=True)
         n_fail += 1
         continue
     if bad_dec:
         print(f"FAIL {name}: DECIMAL/HUGEINT at query boundary (cast to "
-              f"DOUBLE/BIGINT in query + oracle): {bad_dec}")
+              f"DOUBLE/BIGINT in query + oracle): {bad_dec}", flush=True)
         n_fail += 1
         continue
     if list(spark_df.columns) != list(duck_df.columns):
         print(f"FAIL {name}: columns spark={list(spark_df.columns)} "
-              f"duck={list(duck_df.columns)}")
+              f"duck={list(duck_df.columns)}", flush=True)
         n_fail += 1
         continue
     if len(spark_df) != len(duck_df):
-        print(f"FAIL {name}: rows spark={len(spark_df)} duck={len(duck_df)}")
+        print(f"FAIL {name}: rows spark={len(spark_df)} duck={len(duck_df)}",
+              flush=True)
         n_fail += 1
         continue
     bad = None
@@ -102,10 +103,10 @@ for name, sql in sorted(oracle.items()):
     if bad:
         c, i, x, y = bad
         print(f"FAIL {name}: col={c} row={i} spark={x!r} ({type(x).__name__}) "
-              f"duck={y!r} ({type(y).__name__})")
+              f"duck={y!r} ({type(y).__name__})", flush=True)
         n_fail += 1
     else:
-        print(f"PASS {name} ({len(spark_df)} rows)")
+        print(f"PASS {name} ({len(spark_df)} rows)", flush=True)
         n_pass += 1
 
 print(f"\n{n_pass} passed, {n_fail} failed")
