@@ -40,7 +40,7 @@ import org.apache.spark.sql.types.{BooleanType, StringType, StructField, StructT
   * filter on those keys, pushed into the parquet scan and pruning
   * buckets when the column is the bucket key. Crash-repair presence
   * probes ([[PresenceProbe]], [[present]]), Search's replay guard and
-  * the bounded LSH upload verdict all go through them.
+  * the bounded LSH upload verdict and ingest wave all go through them.
   *
   * A table's bucket and sort columns are stated ONCE, by the build
   * write's `bucketBy`/`sortBy`; from then on the catalog's `BucketSpec`
@@ -73,11 +73,14 @@ private[graft] object IndexCatalog {
     * makes the answer None. A
     * task over its share (a hot key) therefore overflows even when the
     * frame as a whole holds fewer than `cap` rows: the caller's
-    * distributed fallback gives the same answer.
+    * distributed fallback gives the same answer. Only rows passing
+    * `keep` count and are sent; it runs inside the scan task, where a
+    * large key set costs less than an IN list pushed into the parquet
+    * reader (see [[keyed]]).
     */
-  def capped(df: DataFrame, cap: Int): Option[Array[Row]] =
+  def capped(df: DataFrame, cap: Int, keep: Row => Boolean = _ => true): Option[Array[Row]] =
     if (df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
-      Some(df.collect()).filter(_.length <= cap)
+      Some(df.collect().filter(keep)).filter(_.length <= cap)
     else {
       // (overflow, row): the marker carries no row, so the row struct is
       // nullable and its own fields keep the frame's schema.
@@ -87,7 +90,7 @@ private[graft] object IndexCatalog {
       val sent = df
         .mapPartitions { (rows: Iterator[Row]) =>
           val share = cap / TaskContext.get().numPartitions()
-          rows.take(share + 1).zipWithIndex
+          rows.filter(keep).take(share + 1).zipWithIndex
             .map { case (r, i) => if (i < share) Row(false, r) else Row(true, null) }
         }(Encoders.row(marked))
         .collect()
@@ -99,6 +102,15 @@ private[graft] object IndexCatalog {
     * column's type): parquet pushes it down as an `In` and, on the
     * bucket column, the scan reads only the keys' buckets — the same
     * for every caller, and without analysing one literal per key.
+    *
+    * Meant for short key lists. The parquet reader tests a pushed-down
+    * `In` per row, and past a few hundred keys that costs more than the
+    * scan: on a 950-doc LSH index (32 `_bands` files, `local[4]`,
+    * medians of 12 interleaved runs) a ~1,600-key band-key probe read
+    * through here took 270 ms, against 111 ms with the set tested
+    * inside the scan task ([[capped]]'s `keep`) and 112 ms with the IN
+    * pushdown off; pushed as ORed equalities it took 915 ms. At 32 keys
+    * all of them took ~100 ms.
     */
   def keyed(spark: SparkSession, table: String, column: String, keys: Seq[Any]): DataFrame = {
     val t = readLive(spark, table)
@@ -108,13 +120,23 @@ private[graft] object IndexCatalog {
   }
 
   /** True when `table` holds any row whose `column` is one of `keys`.
-    * Refreshes the relation first — an append earlier in the same
+    * Invalidates the relation first — an append earlier in the same
     * repair must be visible to the probe.
     */
   def present(spark: SparkSession, table: String, column: String, keys: Seq[Any]): Boolean = {
-    spark.catalog.refreshTable(table)
+    invalidate(spark, table)
     !keyed(spark, table, column, keys).isEmpty
   }
+
+  /** Drops `spark`'s cached relation of `table`, so its next read lists
+    * the table's files again and sees appends made from any session. It
+    * lists nothing itself: `refreshTable` would list the files at once,
+    * and the next read lists them anyway (20.5 ms against 0.04 ms on a
+    * 613-file bucketed table, `local[4]`, medians of 30).
+    */
+  private def invalidate(spark: SparkSession, table: String): Unit =
+    spark.sessionState.catalog.invalidateCachedTable(
+      spark.sessionState.sqlParser.parseTableIdentifier(table))
 
   /** The ingest ledger's table name for an index family's `owner`
     * (an index prefix, or a growable edge table's name).
@@ -225,15 +247,15 @@ private[graft] object IndexCatalog {
   }
 
   /** Append `rows` to `table` through `insertInto` (the table's own
-    * column order and bucket/sort spec), then refresh it: the session
-    * caches a table's file listing on first read, and without the
-    * refresh the next batch's read of `table` would miss this append.
-    * One write job plus the refresh's listing of `table`; the ingest
-    * ledger's marks do not come through here.
+    * column order and bucket/sort spec), then invalidate it in `spark`
+    * ([[invalidate]]): the session caches a table's file listing on
+    * first read, and `rows` may belong to another session (a stream's
+    * micro-batch), whose write refreshes only its own cache. One write
+    * job; the ingest ledger's marks do not come through here.
     */
   def append(spark: SparkSession, table: String, rows: DataFrame): Unit = {
     rows.write.mode("append").insertInto(table)
-    spark.catalog.refreshTable(table)
+    invalidate(spark, table)
   }
 
   /** `batch` materialised by `localCheckpoint`, with its ledger key:
@@ -358,7 +380,7 @@ private[graft] object IndexCatalog {
     def apply(table: String): Boolean = ids match {
       case Some(ks) => present(spark, table, idCol, ks)
       case None =>
-        spark.catalog.refreshTable(table)
+        invalidate(spark, table)
         !spark.table(table).join(batchIds, Seq(idCol), "left_semi").isEmpty
     }
   }
@@ -644,10 +666,9 @@ private[graft] object IndexCatalog {
         .filter(spark.table(_).inputFiles.length > maxFilesPerBucket)
       swapStaged(spark, picked.map(t => stageTableFrom(spark, t, spark.table(t))) ++
         partials.map { t =>
-          val rows = spark.table(t).localCheckpoint()
           val tmp = s"${t}_rebucket"
           spark.sql(s"DROP TABLE IF EXISTS $tmp")
-          rows.coalesce(1).write.mode("overwrite").saveAsTable(tmp)
+          spark.table(t).coalesce(1).write.mode("overwrite").saveAsTable(tmp)
           (t, tmp)
         })
       picked ++ partials

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
 /** The PERSISTED MinHash-LSH index artifact — the storage-side design
   * that replaces [[DedupOps.minhashLshPairs]]' per-query
@@ -193,24 +193,22 @@ object LshIndexOps {
     * sorted by doc_id.
     *
     * Two plans give the same rows:
-    *   - BOUNDED (small uploads), on the shared key lookup
-    *     ([[IndexCatalog.capped]], [[IndexCatalog.keyed]]): the raw
-    *     batch is collected when it has at most `VerdictProbeRows` (256)
-    *     rows and at most [[IndexCatalog.ProbeIdCap]] band keys (rows ×
-    *     bands), then hashed on the driver — a local input (a
-    *     `Seq.toDF`) costs no job for either step. One scan-only job
-    *     reads the `_meta` rows holding a probe digest and the `_bands`
-    *     rows holding a probe band key (a candidate must match the whole
-    *     (band_idx, band_key) pair, checked on the driver); each task
-    *     sends at most its share of the cap. A second job reads the
-    *     candidates' shingle sets from `_docs`, bucket-pruned on doc_id,
-    *     and verifies Jaccard where it reads them, so only matches reach
-    *     the driver, which folds them into a local frame. The `_docs`
-    *     read and the driver work grow with the probe; the `_meta` and
-    *     `_bands` scans still grow with the index, since they are
-    *     file-scanned in full with the IN filters pushed down (bucket
-    *     pruning needs a single-column bucket key). The tables are read
-    *     when this is called.
+    *   - BOUNDED (small uploads): a batch of at most `VerdictProbeRows`
+    *     (256) rows and at most [[IndexCatalog.ProbeIdCap]] band keys
+    *     (rows × bands) is hashed and collected ([[hashedProbe]]; a
+    *     local input, such as a `Seq.toDF`, folds into its
+    *     `LocalRelation` and runs no job), then matched by the bounded
+    *     matcher the ingest wave shares ([[boundedMatches]]): one
+    *     scan-only job reads the `_meta` rows holding a probe digest and
+    *     the `_bands` rows holding a probe (band_idx, band_key) pair, and
+    *     a second reads the candidates' shingle sets from `_docs`,
+    *     bucket-pruned on doc_id, and verifies Jaccard where it reads
+    *     them, so only matches reach the driver, which folds them into a
+    *     local frame. The `_docs` read and the driver work grow with the
+    *     probe; the `_meta` and `_bands` scans still grow with the index,
+    *     since they are file-scanned in full (bucket pruning needs a
+    *     single-column bucket key). The tables are read when this is
+    *     called.
     *   - DISTRIBUTED: a batch over either cap, or one whose stored hits
     *     or candidate pairs exceed the cap (a hot band key, a digest
     *     many stored docs share), or whose doc_id is not a long, is
@@ -246,110 +244,191 @@ object LshIndexOps {
       threshold: Double,
       minTok: Long,
       cap: Int,
-  ): DataFrame = {
-    // The path is chosen on the raw input, before anything is hashed.
-    val input = batch.select(col("doc_id"), col("text"))
-    val maxRows = math.min(cap / bands, VerdictProbeRows)
-    val local =
-      if (cap < 0 || input.schema("doc_id").dataType != LongType) None
-      else IndexCatalog.capped(input, maxRows)
-    local
-      .flatMap { rows =>
-        val probe = spark.createDataFrame(java.util.Arrays.asList(rows: _*), input.schema)
-        boundedVerdict(spark, prefix, probe, n, k, bands, threshold, minTok, cap)
+  ): DataFrame =
+    hashedProbe(batch, n, k, bands, cap)
+      .flatMap { case (probe, schema) =>
+        boundedVerdict(spark, prefix, probe, schema("doc_id").nullable, threshold, minTok, cap)
       }
       .getOrElse(
         distributedVerdict(spark, prefix, batchFrame(batch, n, k, bands), threshold, minTok))
-  }
 
-  /** The most probe rows the bounded [[uploadVerdict]] takes, set
-    * below the measured crossover with the distributed plan (local[4]
-    * on 4 vCPUs, a local input, Bands 8, 4 buckets, medians of 7). On a
-    * 20,000-doc index the bounded path took 0.44 / 0.50 / 0.74 / 0.91 /
-    * 1.45 s at 4 / 100 / 300 / 500 / 1,000 rows against the distributed
-    * 1.01 / 0.79 / 0.78 / 0.91 / 0.84 s; on an 80,000-doc index 0.39 /
-    * 0.54 / 0.70 s at 4 / 100 / 256 rows against 1.00 / 0.87 / 0.84 s.
-    * Past ~300 rows the band-key IN list and the driver-side hashing
-    * cost more than the distributed plan's fixed jobs.
+  /** The most probe rows the bounded [[uploadVerdict]] and the bounded
+    * [[dedupBatchAndGrow]] wave take: one constant, set below the
+    * lower of their measured crossovers with the distributed plans
+    * (local[4] on 4 vCPUs, Bands 8, 4 buckets).
+    *   - Verdict (a local input, medians of 7, measured when the band
+    *     keys were a pushed-down IN list and the batch was hashed on the
+    *     driver): on a 20,000-doc index the bounded path took 0.44 /
+    *     0.50 / 0.74 / 0.91 / 1.45 s at 4 / 100 / 300 / 500 / 1,000 rows
+    *     against the distributed 1.01 / 0.79 / 0.78 / 0.91 / 0.84 s; on
+    *     an 80,000-doc index 0.39 / 0.54 / 0.70 s at 4 / 100 / 256 rows
+    *     against 1.00 / 0.87 / 0.84 s. The crossover was ~300 rows.
+    *   - Wave (`dedupBatchAndGrow` with its appends, a 4-partition
+    *     non-local batch, 25% near or exact copies of stored docs, the
+    *     two paths alternating, medians of 5, the limit raised for the
+    *     run): from a 20,000-doc index grown to 28,126 over the run, the
+    *     bounded path took 986 / 978 / 885 / 910 ms at 100 / 200 / 256 /
+    *     400 rows against the distributed 1,361 / 1,243 / 1,097 /
+    *     1,083 ms; from a fresh 20,000-doc index, 1,260 / 1,383 ms at
+    *     700 / 1,000 rows against 1,501 / 1,451 ms. The crossover is
+    *     near 1,000 rows.
     */
   private[graft] val VerdictProbeRows = 256
 
-  /** The bounded [[uploadVerdict]] over a local probe frame, or None
-    * when its stored hits or candidate pairs exceed `cap`.
+  /** `batch` hashed as [[batchFrame]] lays it out — (doc_id, sh,
+    * text_md5, n_tok, bk) — and collected with that schema, or None
+    * when `cap` is negative, the doc_id is not a long, or the batch has
+    * more than `VerdictProbeRows` rows or more than `cap` band keys.
+    * One [[IndexCatalog.capped]] collect: a local input runs no job,
+    * any other one job in which each task hashes at most its share of
+    * the rows plus one.
+    */
+  private def hashedProbe(
+      batch: DataFrame,
+      n: Int,
+      k: Int,
+      bands: Int,
+      cap: Int,
+  ): Option[(Array[Row], StructType)] = {
+    val hashed = indexFrame(batch, n, k, bands, metaCols: _*)
+    if (cap < 0 || batch.schema("doc_id").dataType != LongType) None
+    else IndexCatalog.capped(hashed, math.min(cap / bands, VerdictProbeRows)).map(_ -> hashed.schema)
+  }
+
+  /** The bounded [[uploadVerdict]] over a hashed probe, or None when its
+    * stored hits or candidate pairs exceed `cap`.
     */
   private def boundedVerdict(
       spark: SparkSession,
       prefix: String,
-      local: DataFrame,
-      n: Int,
-      k: Int,
-      bands: Int,
+      probe: Array[Row],
+      idNullable: Boolean,
       threshold: Double,
       minTok: Long,
       cap: Int,
   ): Option[DataFrame] = {
-    // (doc_id, sh, text_md5, n_tok, bk); hashing a local frame runs no job.
-    val probe = indexFrame(local, n, k, bands, metaCols: _*).collect()
     val digests = probe.toSeq.filterNot(_.isNullAt(2)).map(_.getString(2)).distinct
-    val keys = probe.toSeq.flatMap(_.getSeq[String](4)).distinct
-    // Digest hits carry band_idx -1; band hits their own band_idx.
-    def scan = IndexCatalog.keyed(spark, s"${prefix}_meta", "text_md5", digests)
-      .select(col("doc_id"), lit(-1).as("band_idx"), col("text_md5").as("key"))
-      .unionByName(
-        IndexCatalog.keyed(spark, s"${prefix}_bands", "band_key", keys)
-          .select(col("doc_id"), col("band_idx"), col("band_key").as("key")))
+    boundedMatches(spark, prefix, probe, ("_meta", "text_md5", digests), threshold, cap, wave = false)
+      .map { case (digestHits, matches) =>
+        val exactOf = digestHits.groupMapReduce(_.getString(2))(_.getLong(0))(math.min)
+        val near = matches
+          .groupMapReduce(_._1)(m => (m._3, m._2)) { (x, y) =>
+            if (x._1 > y._1 || (x._1 == y._1 && x._2 < y._2)) x else y
+          }
+        val best: Map[Long, (String, Long)] = probe.filterNot(_.isNullAt(0)).groupBy(_.getLong(0))
+          .flatMap { case (id, rs) =>
+            val exact = rs.filterNot(_.isNullAt(2)).flatMap(r => exactOf.get(r.getString(2)))
+            if (exact.nonEmpty) Some(id -> ("exact_dup", exact.min))
+            else near.get(id).map { case (_, dupOf) => id -> ("near_dup", dupOf) }
+          }
+        val out = probe.map { r =>
+          val id = if (r.isNullAt(0)) None else Some(r.getLong(0))
+          id.flatMap(best.get) match {
+            case Some((status, dupOf)) => Row(id.get, status, dupOf)
+            case None =>
+              val short = !r.isNullAt(3) && r.getLong(3) < minTok
+              Row(id.map(Long.box).orNull, if (short) "too_short" else "keep", null)
+          }
+        }.sortBy(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))
+        spark.createDataFrame(java.util.Arrays.asList(out: _*), StructType(Seq(
+          StructField("doc_id", LongType, idNullable),
+          StructField("status", StringType, nullable = false),
+          StructField("dup_of", LongType, nullable = true))))
+      }
+  }
+
+  /** The bounded matcher [[boundedVerdict]] and the bounded
+    * [[dedupBatchAndGrow]] wave share, over a hashed probe
+    * ([[hashedProbe]]'s rows): the probe's verified matches against the
+    * stored index, (new_doc_id, dup_of, jaccard) one row per pair of
+    * shingle sets at or above `threshold` (the distributed plans'
+    * multiset), with the `side` lookup's hits (doc_id, -1, key). None
+    * when the stored hits or candidate pairs exceed `cap`.
+    *
+    * One scan-only job reads the `side` rows — `<prefix><table>` rows
+    * whose `column` is one of its keys, through [[IndexCatalog.keyed]]
+    * — and the `_bands` rows holding one of the probe's (band_idx,
+    * band_key) pairs, tested inside the scan task: the ~1,600 keys of a
+    * 200-doc wave pushed into the parquet reader as an IN list cost more
+    * than the scan (see [[IndexCatalog.keyed]]). Each task sends at most
+    * its share of `cap` ([[IndexCatalog.capped]]). A second job reads
+    * the stored candidates' shingle sets and verifies them there
+    * ([[storedJaccard]]); none runs without stored candidates.
+    *
+    * A candidate is a probe doc and a stored doc that share a (band_idx,
+    * band_key) pair; a null doc_id never matches. With `wave`, a
+    * stored doc never matches a probe doc of its own id (a replayed
+    * keeper finds itself stored), and each probe doc also matches every
+    * lower-id probe doc it shares a pair with, verified on the driver.
+    */
+  private def boundedMatches(
+      spark: SparkSession,
+      prefix: String,
+      probe: Array[Row],
+      side: (String, String, Seq[Any]),
+      threshold: Double,
+      cap: Int,
+      wave: Boolean,
+  ): Option[(Array[Row], Seq[(Long, Long, Double)])] = {
+    def pairsOf(r: Row): Seq[(Int, String)] = r.getSeq[String](4).zipWithIndex.map(_.swap)
+    val keys = probe.iterator.flatMap(pairsOf).toSet
+    val (table, column, sideKeys) = side
+    def scan = IndexCatalog.keyed(spark, prefix + table, column, sideKeys)
+      .select(col("doc_id"), lit(-1).as("band_idx"), col(column).cast(StringType).as("key"))
+      .unionByName(IndexCatalog.readLive(spark, s"${prefix}_bands")
+        .select(col("doc_id"), col("band_idx"), col("band_key").as("key")))
     val hits =
       if (probe.isEmpty) Array.empty[Row]
-      else IndexCatalog.capped(scan, cap) match {
+      else IndexCatalog.capped(scan, cap, r => r.getInt(1) < 0 || keys((r.getInt(1), r.getString(2)))) match {
         case Some(rows) => rows
         case None => return None
       }
-    val (digestHits, bandHits) = hits.partition(_.getInt(1) < 0)
-    val exactOf = digestHits.groupMapReduce(_.getString(2))(_.getLong(0))(math.min)
-    val byBand = bandHits.groupMap(r => (r.getInt(1), r.getString(2)))(_.getLong(0))
-    // A null doc_id never matches (the distributed plan's equi-joins).
+    val (sideHits, bandHits) = hits.partition(_.getInt(1) < 0)
     val byId = probe.filterNot(_.isNullAt(0)).groupBy(_.getLong(0))
-    // Candidate pairs, keyed by the stored id: dup_of -> new doc_ids.
-    val pairs = byId.toSeq
-      .flatMap { case (id, rs) =>
-        rs.flatMap(_.getSeq[String](4).zipWithIndex.flatMap { case (key, i) =>
-          byBand.getOrElse((i, key), Array.empty[Long])
-        }).distinct.map(_ -> id)
-      }
-      .groupMap(_._1)(_._2)
-    if (pairs.valuesIterator.map(_.size).sum > cap) return None
+    // Candidate pairs keyed by the matched id: dup_of -> new doc_ids.
+    def candidates(byPair: Map[(Int, String), Seq[Long]], keep: (Long, Long) => Boolean) =
+      byId.toSeq
+        .flatMap { case (id, rs) =>
+          rs.flatMap(pairsOf).flatMap(byPair.getOrElse(_, Nil)).distinct.filter(keep(id, _)).map(_ -> id)
+        }
+        .groupMap(_._1)(_._2)
+    val stored = candidates(
+      bandHits.toSeq.groupMap(r => (r.getInt(1), r.getString(2)))(_.getLong(0)),
+      (id, dupOf) => !wave || dupOf != id)
+    val within =
+      if (!wave) Map.empty[Long, Seq[Long]]
+      else candidates(
+        byId.toSeq.flatMap { case (id, rs) => rs.flatMap(pairsOf).map(_ -> id) }.groupMap(_._1)(_._2),
+        (id, dupOf) => dupOf < id)
+    if ((stored.valuesIterator ++ within.valuesIterator).map(_.size).sum > cap) return None
     val sets = byId.map { case (id, rs) =>
       id -> rs.filterNot(_.isNullAt(1)).map(_.getSeq[Long](1).toArray)
     }
-    val near = storedJaccard(spark, prefix, pairs, sets, threshold)
-      .groupMapReduce(_._1)(m => (m._3, m._2)) { (x, y) =>
-        if (x._1 > y._1 || (x._1 == y._1 && x._2 < y._2)) x else y
-      }
-    val best: Map[Long, (String, Long)] = byId.flatMap { case (id, rs) =>
-      val exact = rs.filterNot(_.isNullAt(2)).flatMap(r => exactOf.get(r.getString(2)))
-      if (exact.nonEmpty) Some(id -> ("exact_dup", exact.min))
-      else near.get(id).map { case (_, dupOf) => id -> ("near_dup", dupOf) }
-    }
-    val out = probe.map { r =>
-      val id = if (r.isNullAt(0)) None else Some(r.getLong(0))
-      id.flatMap(best.get) match {
-        case Some((status, dupOf)) => Row(id.get, status, dupOf)
-        case None =>
-          val short = !r.isNullAt(3) && r.getLong(3) < minTok
-          Row(id.map(Long.box).orNull, if (short) "too_short" else "keep", null)
-      }
-    }.sortBy(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))
-    Some(spark.createDataFrame(java.util.Arrays.asList(out: _*), StructType(Seq(
-      StructField("doc_id", LongType, local.schema("doc_id").nullable),
-      StructField("status", StringType, nullable = false),
-      StructField("dup_of", LongType, nullable = true)))))
+    val inBatch = for {
+      (dupOf, ids) <- within.toSeq
+      id <- ids
+      a <- sets(id).toSeq
+      b <- sets(dupOf).toSeq
+      j = jaccard(a, b)
+      if j >= threshold
+    } yield (id, dupOf, j)
+    Some((sideHits, storedJaccard(spark, prefix, stored, sets, threshold).toSeq ++ inBatch))
+  }
+
+  /** Exact Jaccard of two sorted distinct shingle-hash arrays, by
+    * [[Banding.jaccard]]'s formula.
+    */
+  private def jaccard(a: Array[Long], b: Array[Long]): Double = {
+    val c = graft.expressions.SortedIntersectCount.count(
+      ArrayData.toArrayData(a), ArrayData.toArrayData(b))
+    c.toDouble / (a.length + b.length - c)
   }
 
   /** (new_doc_id, dup_of, jaccard) of the candidate `pairs` (dup_of ->
     * new doc_ids) at or above `threshold`, verified where `_docs` is
     * read (bucket-pruned on the candidate ids), so stored shingle sets
     * never reach the driver. `sets` holds each new doc_id's shingle
-    * sets; the Jaccard is the distributed plan's formula.
+    * sets.
     */
   private def storedJaccard(
       spark: SparkSession,
@@ -366,15 +445,13 @@ object LshIndexOps {
         .mapPartitions { (rows: Iterator[Row]) =>
           rows.flatMap { r =>
             val dupOf = r.getLong(0)
-            val b = ArrayData.toArrayData(r.getSeq[Long](1).toArray)
+            val b = r.getSeq[Long](1).toArray
             for {
               id <- pairs.getOrElse(dupOf, Nil).iterator
-              sh <- sets(id).iterator
-              a = ArrayData.toArrayData(sh)
-              c = graft.expressions.SortedIntersectCount.count(a, b)
-              jaccard = c.toDouble / (a.numElements() + b.numElements() - c)
-              if jaccard >= threshold
-            } yield (id, dupOf, jaccard)
+              a <- sets(id).iterator
+              j = jaccard(a, b)
+              if j >= threshold
+            } yield (id, dupOf, j)
           }
         }(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaDouble))
         .collect()
@@ -546,15 +623,30 @@ object LshIndexOps {
     * rows are at-least-once, like every micro-batch emission — pair
     * with the K1 batch_id-partition pattern for an idempotent sink).
     *
-    * Order of operations matters and is pinned by localCheckpoints: the
-    * dup frame is MATERIALIZED before the append mutates the tables it
-    * reads — a lazy plan would see the batch's own rows in the stored
-    * bands and flag everything as its own duplicate.
+    * Order of operations matters: the dup rows are MATERIALIZED before
+    * the append mutates the tables they read — a lazy plan would see the
+    * batch's own rows in the stored bands and flag everything as its own
+    * duplicate.
     *
-    * Per micro-batch the batch is hashed and materialised once (with
-    * its meta columns), stored and within-batch matches come from one
-    * candidate join and one verify join ([[batchMatches]]), and
-    * [[appendKeepers]] overlaps the bands and meta appends (SCALE.md
+    * Two plans give the same dup rows and the same appends, as the
+    * upload verdict has:
+    *   - BOUNDED (a micro-batch of at most `VerdictProbeRows` rows with a
+    *     long doc_id): the batch is hashed and collected in one job
+    *     ([[hashedProbe]]), and the bounded matcher ([[boundedMatches]])
+    *     reads the stored index in two scan-only jobs, the `_bands` rows
+    *     holding a probe band key together with the batch ids already
+    *     in `_docs`, then the stored candidates' verify. Within-batch
+    *     matches, the kept rows and the dup rows are built on the
+    *     driver; the dup rows come back as a local frame, and the kept
+    *     rows are appended from one task each, so an append adds at most
+    *     one file per bucket. No stored table is shuffled.
+    *   - DISTRIBUTED (a larger batch, one whose hits or candidate pairs
+    *     exceed [[IndexCatalog.ProbeIdCap]], or a non-long doc_id): the
+    *     batch is hashed and materialised once (with its meta columns),
+    *     stored and within-batch matches come from one candidate join
+    *     and one verify join ([[batchMatches]]), which shuffle the stored
+    *     `_bands` and `_docs`, and the keepers are checkpointed.
+    * [[appendKeepers]] then overlaps the bands and meta appends (SCALE.md
     * gives the job count). Appends follow the tables' live bucket spec
     * (see [[IndexCatalog.Family.rebucket]]).
     */
@@ -567,6 +659,73 @@ object LshIndexOps {
       bands: Int,
       threshold: Double,
       crashAfter: String = "",
+  ): DataFrame =
+    dedupBatchAndGrow(spark, prefix, batch, n, k, bands, threshold, crashAfter, IndexCatalog.ProbeIdCap)
+
+  /** [[dedupBatchAndGrow]] with its bounded-path cap, as the verdict's:
+    * the most band keys, stored hits and candidate pairs the driver
+    * takes. A negative cap forces the distributed plan (the specs'
+    * seam).
+    */
+  private[graft] def dedupBatchAndGrow(
+      spark: SparkSession,
+      prefix: String,
+      batch: DataFrame,
+      n: Int,
+      k: Int,
+      bands: Int,
+      threshold: Double,
+      crashAfter: String,
+      cap: Int,
+  ): DataFrame =
+    hashedProbe(batch, n, k, bands, cap)
+      .flatMap { case (probe, schema) => boundedWave(spark, prefix, probe, schema, threshold, crashAfter, cap) }
+      .getOrElse(distributedWave(spark, prefix, batch, n, k, bands, threshold, crashAfter))
+
+  /** The bounded [[dedupBatchAndGrow]] over a hashed batch, or None when
+    * its stored hits or candidate pairs exceed `cap`. Kept are the batch
+    * rows that neither match nor carry an id already in `_docs` (a row
+    * of a null id is kept, as the distributed plan's anti-joins keep
+    * it).
+    */
+  private def boundedWave(
+      spark: SparkSession,
+      prefix: String,
+      probe: Array[Row],
+      schema: StructType,
+      threshold: Double,
+      crashAfter: String,
+      cap: Int,
+  ): Option[DataFrame] = {
+    val ids = probe.iterator.filterNot(_.isNullAt(0)).map(_.getLong(0)).toSeq.distinct
+    boundedMatches(spark, prefix, probe, ("_docs", "doc_id", ids), threshold, cap, wave = true)
+      .map { case (present, dups) =>
+        val out = dups.map(_._1).toSet ++ present.map(_.getLong(0))
+        val kept = probe.filter(r => r.isNullAt(0) || !out(r.getLong(0)))
+        // One task per append: a local frame's scan runs one task per
+        // core, and each task would add its own file to every bucket.
+        val keptRows = spark.createDataFrame(java.util.Arrays.asList(kept: _*), schema).coalesce(1)
+        val key = kept.iterator.filterNot(_.isNullAt(0)).map(_.getLong(0)).minOption
+        appendKeepers(spark, prefix, keptRows, key, crashAfter)
+        spark.createDataFrame(
+          java.util.Arrays.asList(dups.map { case (id, dupOf, j) => Row(id, dupOf, j) }: _*),
+          StructType(Seq(
+            StructField("new_doc_id", LongType, schema("doc_id").nullable),
+            StructField("dup_of", LongType, nullable = true),
+            StructField("jaccard", DoubleType, nullable = true))))
+      }
+  }
+
+  /** The distributed [[dedupBatchAndGrow]]. */
+  private def distributedWave(
+      spark: SparkSession,
+      prefix: String,
+      batch: DataFrame,
+      n: Int,
+      k: Int,
+      bands: Int,
+      threshold: Double,
+      crashAfter: String,
   ): DataFrame = {
     val idx = batchFrame(batch, n, k, bands)
     val docs = spark.table(s"${prefix}_docs")

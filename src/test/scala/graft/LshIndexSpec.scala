@@ -481,9 +481,12 @@ class LshIndexSpec extends SparkSpec {
     assert(distributed > bounded, s"the listener saw $distributed distributed jobs")
   }
 
-  test("a 200-document dedupBatchAndGrow over a 150-document index with _meta runs 14 Spark jobs") {
-    // The ingest ledger and the batch key add none: the ledger's marks
-    // are driver-side files, and the key rides the kept checkpoint.
+  test("a bounded 200-document dedupBatchAndGrow over a 150-document index with _meta runs 6 Spark jobs") {
+    // Hash and collect the batch, read the band hits and the stored ids,
+    // verify the stored candidates, then the bands ‖ meta and docs
+    // appends. The ingest ledger and the batch key add none: the
+    // ledger's marks are driver-side files, and the key is read from
+    // the collected batch.
     val prefix = "lshgrowjobs"
     Seq("_docs", "_bands", "_meta", "_batches")
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $prefix$t"))
@@ -492,10 +495,112 @@ class LshIndexSpec extends SparkSpec {
     LshIndexOps.writeIndex(seed, N, K, Bands, buckets = 4, prefix = prefix)
     LshIndexOps.writeMetaTable(seed, buckets = 4, prefix = prefix)
     val batch = all.filter(col("doc_id") >= 150 && col("doc_id") < 350)
-    val jobs = jobsOf(LshIndexOps.dedupBatchAndGrow(spark, prefix, batch, N, K, Bands, Threshold))
-    assert(jobs == 14, s"the grow ran $jobs Spark jobs")
+    val jobs = jobsOf(
+      LshIndexOps.dedupBatchAndGrow(spark, prefix, batch, N, K, Bands, Threshold).collect())
+    assert(jobs == 6, s"the grow ran $jobs Spark jobs")
     assert(spark.table(s"${prefix}_docs").count() > 150, "the batch admitted no keepers")
     assert(!spark.table(s"${prefix}_batches").filter(col("phase") === "commit").isEmpty)
+  }
+
+  /** Runs each batch of `waves` through a bounded (default cap) and a
+    * forced distributed (cap -1) `dedupBatchAndGrow`, each on its own
+    * copy of [[verdictFixture]]'s index, and asserts the same dup-row
+    * multiset, the path each took, and the same `_docs`, `_bands` and
+    * `_meta` contents after every wave. Returns the dup rows per wave.
+    */
+  private def sameWaves(
+      prefix: String,
+      waves: Seq[org.apache.spark.sql.DataFrame],
+      cap: Int = IndexCatalog.ProbeIdCap,
+      bounded: Boolean = true,
+  ): Seq[Seq[String]] = {
+    val (b, d) = (s"${prefix}b", s"${prefix}d")
+    Seq(b, d).foreach(verdictFixture)
+    waves.zipWithIndex.map { case (wave, i) =>
+      val got = LshIndexOps.dedupBatchAndGrow(spark, b, wave, N, K, Bands, Threshold, "", cap)
+      val want = LshIndexOps.dedupBatchAndGrow(spark, d, wave, N, K, Bands, Threshold, "", -1)
+      assert(got.isLocal == bounded, s"$prefix wave $i: bounded path taken is ${got.isLocal}")
+      assert(!want.isLocal, s"$prefix wave $i: cap -1 must take the distributed plan")
+      assert(got.schema == want.schema, s"$prefix wave $i: schema differs")
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.map(_.toString).sorted
+      val dups = rows(got)
+      assert(dups == rows(want), s"$prefix wave $i: dup rows differ")
+      Seq("_docs", "_bands", "_meta").foreach { t =>
+        val (x, y) = (spark.table(b + t), spark.table(d + t))
+        assert(x.exceptAll(y).isEmpty && y.exceptAll(x).isEmpty, s"$prefix wave $i: $t differs")
+      }
+      dups
+    }
+  }
+
+  test("the bounded and distributed ingest waves give the same dup rows and the same index tables") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    def text(): Array[String] = Array.fill(100)(Iterator.fill(6)(('a' + rnd.nextInt(26)).toChar).mkString)
+    def edit(words: Array[String], at: Int*): String =
+      words.indices.map(i => if (at.contains(i)) s"edit$i" else words(i)).mkString(" ")
+    val (t, b, _) = verdictFixture("lshwavetexts")
+    val (u, v, w, x) = (text(), text(), text(), text())
+    def wave(rows: (Long, String)*) = rows.toDF("doc_id", "text")
+    val first = Seq(600L -> u.mkString(" "), 601L -> edit(t.split(" "), 10))
+    val fixtures: Seq[(String, Seq[org.apache.spark.sql.DataFrame])] = Seq(
+      // The second wave replays the first beside a new keeper of a lower
+      // id, so its ledger key is new: the keeper 600 is stored, and its
+      // own bands are its only stored candidates.
+      "replayed keeper" -> Seq(wave(first: _*), wave((599L -> x.mkString(" ")) +: first: _*)),
+      "within-batch chain" -> Seq(wave(
+        702L -> edit(v, 10, 20), 700L -> v.mkString(" "), 701L -> edit(v, 10), 703L -> w.mkString(" "))),
+      "repeated doc_id" -> Seq(wave(
+        800L -> w.mkString(" "), 800L -> edit(w, 5), 801L -> edit(w, 50), 801L -> "too few tokens",
+        802L -> b)),
+      "null text" -> Seq(wave(900L -> null, 901L -> edit(u, 7), 902L -> null)),
+      "null doc_id" -> Seq(Seq(None -> edit(v, 60), Some(950L) -> edit(v, 61), None -> "a lone null id")
+        .toDF("doc_id", "text")),
+      "all dups" -> Seq(wave(1000L -> t, 1001L -> b, 1002L -> edit(b.split(" "), 50))),
+      "empty" -> Seq(wave()),
+    )
+    fixtures.foreach { case (name, waves) =>
+      val dups = sameWaves("lshwave", waves)
+      assert(!dups.flatten.exists(r => r.split(",")(0).drop(1) == r.split(",")(1)),
+        s"$name: a doc matched itself")
+    }
+  }
+
+  test("a wave over 256 rows or with stored hits over the cap takes the distributed plan, with the same results") {
+    import spark.implicits._
+    val (t, _, _) = verdictFixture("lshwavecap")
+    val docs = Tables.documents(spark, Sf).select("doc_id", "text")
+    def rows(n: Int) = docs.filter(col("doc_id") < n).withColumn("doc_id", col("doc_id") + 2000L)
+    sameWaves("lshwaverows", Seq(rows(LshIndexOps.VerdictProbeRows)))
+    sameWaves("lshwaverows", Seq(rows(LshIndexOps.VerdictProbeRows + 1)), bounded = false)
+    // 500 stored copies of one text: each of its band keys is held by
+    // more stored docs than a 400 cap, so a probe of it overflows.
+    val copies = (3000L until 3500L).map(_ -> t).toDF("doc_id", "text")
+    val hot = Seq(Seq(4000L -> t, 4001L -> "an unrelated arrival").toDF("doc_id", "text"))
+    Seq("lshwavehotb", "lshwavehotd").foreach { p =>
+      verdictFixture(p)
+      LshIndexOps.writeIndex(copies, N, K, Bands, 4, s"${p}src")
+      LshIndexOps.writeMetaTable(copies, 4, s"${p}src")
+    }
+    def grown(prefix: String): Unit = Seq("_bands", "_docs", "_meta").foreach { table =>
+      spark.table(s"${prefix}src$table").write.mode("append").insertInto(prefix + table)
+      spark.catalog.refreshTable(prefix + table)
+    }
+    val cap = 400
+    val (b, d) = ("lshwavehotb", "lshwavehotd")
+    Seq(b, d).foreach(grown)
+    val got = LshIndexOps.dedupBatchAndGrow(spark, b, hot.head, N, K, Bands, Threshold, "", cap)
+    val want = LshIndexOps.dedupBatchAndGrow(spark, d, hot.head, N, K, Bands, Threshold, "", -1)
+    assert(!got.isLocal, "stored hits over the cap must not be collected")
+    assert(got.collect().toSeq.map(_.toString).sorted == want.collect().toSeq.map(_.toString).sorted)
+    Seq("_docs", "_bands", "_meta").foreach { tb =>
+      val (x, y) = (spark.table(b + tb), spark.table(d + tb))
+      assert(x.exceptAll(y).isEmpty && y.exceptAll(x).isEmpty, s"hot key: $tb differs")
+    }
+    // The same probe under the default cap stays bounded.
+    val small = LshIndexOps.dedupBatchAndGrow(spark, b, Seq(4100L -> t).toDF("doc_id", "text"),
+      N, K, Bands, Threshold)
+    assert(small.isLocal, "a probe under the default cap takes the bounded path")
   }
 
   test("a probe over the row cap or stored hits over the cap take the distributed upload verdict") {

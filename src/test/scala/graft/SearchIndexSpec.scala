@@ -417,6 +417,25 @@ class SearchIndexSpec extends SparkSpec {
     assert(spark.table(s"${prefix}_docs").filter(col("doc_id") === 930001L).count() == 1)
   }
 
+  test("a Search _meta compaction writes its coalesced copy in one Spark job") {
+    val prefix = "searchmetacompact"
+    Seq("postings", "lexicon", "docs", "meta").foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${prefix}_$t"))
+    SearchIndexOps.writeIndex(Tables.documents(spark, Sf), buckets = 4, prefix = prefix)
+    IndexCatalog.SearchIndex.compact(spark, prefix, maxFilesPerBucket = 1)
+    // Two zero partials: only `_meta` passes the budget, and every sum
+    // it answers stays the same.
+    val meta = s"${prefix}_meta"
+    (1 to 2).foreach(_ => IndexCatalog.append(spark, meta,
+      spark.table(meta).limit(1).withColumn("n_docs", lit(0L)).withColumn("n_tokens", lit(0L))))
+    val before = SearchIndexOps.searchBm25(spark, prefix, RankTerms, 10).collect().toSeq
+    var rewritten = Seq.empty[String]
+    val jobs = jobsOf { rewritten = IndexCatalog.SearchIndex.compact(spark, prefix, maxFilesPerBucket = 1) }
+    assert(rewritten == Seq(meta), s"only _meta is over budget: $rewritten")
+    assert(jobs == 1, s"the _meta compaction ran $jobs Spark jobs")
+    assert(spark.table(meta).inputFiles.length == 1, "the partials land in one file")
+    assert(SearchIndexOps.searchBm25(spark, prefix, RankTerms, 10).collect().toSeq == before)
+  }
+
   test("a constructed read pins its snapshot: appends land only in reads built after them") {
     import spark.implicits._
     val prefix = "searchsnap"
